@@ -81,24 +81,27 @@ final class GraftLakeCatalog extends TableCatalog
   /** Missing tables surface as the DSv2-contract NoSuchTableException so
     * Spark's resolution paths (which catch exactly that type) can
     * translate it into TABLE_OR_VIEW_NOT_FOUND or probe-and-fallback. */
-  private def load(ident: Identifier, version: Option[Int]): Table =
-    try new GraftLakeTable(GraftLakeSource.delegate(SparkSession.active,
-      rootOf(ident), version, None, Collections.emptyMap[String, String]()),
-      root = Some(rootOf(ident)), version = version,
-      streamRoot = Some(rootOf(ident)))
+  private def load(ident: Identifier, version: Option[Int]): Table = {
+    val spark = SparkSession.active
+    val root = rootOf(ident)
+    val known = LakeTable.versions(spark, root)
+    val meta = version.orElse(known.lastOption).filter(known.contains)
+      .map(LakeTable.manifestMetaAt(spark, root, _))
+    // deletion-vector snapshots stay fully READABLE through the catalog
+    // (Delta semantics — a DV table is not degraded): the raw parquet
+    // delegate would resurrect masked rows, so scans go to the masked
+    // [[GraftDvLakeTable]]. Works for time travel too (each version's
+    // own dv state). Equality deletes keep the delegate's gate below.
+    if (meta.exists(m => LakeTable.dvState(m).nonEmpty &&
+        LakeTable.deleteState(m).isEmpty))
+      return new GraftDvLakeTable(ident.toString, root, version)
+    try new GraftLakeTable(GraftLakeSource.delegate(spark, root, version,
+      None, Collections.emptyMap[String, String]()),
+      root = Some(root), version = version, streamRoot = Some(root))
     catch {
       case _: IllegalStateException =>
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           ident.namespace() :+ ident.name())
-      case e: UnsupportedOperationException
-          if e.getMessage != null &&
-            e.getMessage.contains("deletion vectors") =>
-        // deletion-vector snapshots stay fully READABLE through the
-        // catalog (Delta semantics — a DV table is not degraded): the
-        // raw parquet delegate would resurrect masked rows, so scans
-        // reroute to [[GraftDvScan]], which serves the MASKED frame.
-        // Works for time travel too (each version's own dv state).
-        new GraftDvLakeTable(ident.toString, rootOf(ident), version)
       case e: UnsupportedOperationException if version.isEmpty =>
         // reader-gated state (metadata-only rename/drop, MOR deletes):
         // the table still RESOLVES — name, logical schema, appends, and
@@ -106,8 +109,9 @@ final class GraftLakeCatalog extends TableCatalog
         // only scan building refuses, with the original gate message.
         // Without this, one RENAME COLUMN would brick every subsequent
         // catalog statement at analysis time.
-        new GatedLakeTable(ident.toString, rootOf(ident), e)
+        new GatedLakeTable(ident.toString, root, e)
     }
+  }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
 
@@ -510,22 +514,22 @@ private[sources] final class GraftStagedTable(
   override def abortStagedChanges(): Unit = { batch = None }
 }
 
-/** Catalog table for a snapshot carrying positional deletion vectors:
-  * SQL reads keep working — the scan ([[GraftDvScan]]) serves
-  * [[LakeTable.read]]'s MASKED frame through the DSv2 V1Scan bridge,
-  * so masked rows never resurface and stacked updates/time travel each
-  * see their own version's state. The scan is INDEXED like the normal
-  * delegate: pushed filters run the same manifest-level admission
-  * chain (partition values, min/max stats, bloom indexes —
+/** Catalog table for a snapshot carrying positional deletion vectors —
+  * and the relation [[LakeTable.read]] itself builds for one
+  * ([[LakeTable.nativeDvFrame]]), so the Scala API and SQL read a dv
+  * snapshot through the same scan. Snapshots the native reader serves
+  * ([[LakeTable.nativeDvOk]] — the common shape) scan through
+  * [[GraftDvBatchScan]]: pushed filters run the manifest-level
+  * admission chain (partition values, min/max stats, bloom indexes —
   * [[LakeTable.pruneDirsForFilters]]) before any parquet footer opens,
-  * and re-apply inside the bridged plan so parquet row-group pushdown
-  * engages; the dv anti-join then masks only the surviving groups'
-  * rows ([[LakeTable.readDirsSubset]]). A point probe on a 100 TB
-  * table that took one MOR update scans one group, not N — a single
-  * deletion vector no longer degrades every SQL read to a full scan.
-  * A compaction ([[LakeTable.rewriteDeletes]] or any COW op) restores
-  * the plain delegate. Appends still land through the commit protocol
-  * (dv state changes are NAMED append conflicts). */
+  * and each surviving file's mask applies inside the reader, so masked
+  * rows never resurface and stacked updates/time travel each see their
+  * own version's state. The rare shapes outside it (rename/drop
+  * mappings, ALTER-extended schemas, equality deletes, oversized
+  * masks) keep the V1 bridge [[GraftDvScan]]. A compaction
+  * ([[LakeTable.rewriteDeletes]] or any COW op) restores the plain
+  * delegate. Appends still land through the commit protocol (dv state
+  * changes are NAMED append conflicts). */
 private[sources] final class GraftDvLakeTable(
     identName: String, root: String, version: Option[Int])
     extends Table
@@ -577,8 +581,18 @@ private[sources] final class GraftDvLakeTable(
           "RENAME/DROP COLUMN mappings — rewriteDeletes/compact first")
     () => new GraftDeltaOperation(root, info.command)
   }
-  override def schema(): StructType =
+
+  /** Whether the native reader serves this snapshot — decided once per
+    * table instance, like its schema. */
+  private[sources] lazy val native: Boolean = {
+    val spark = SparkSession.active
+    LakeTable.nativeDvOk(spark, root, LakeTable.manifestMetaAt(spark, root,
+      version.orElse(LakeTable.latestVersion(spark, root)).getOrElse(
+        throw new IllegalStateException(s"no table at $root"))))
+  }
+  private lazy val tableSchema =
     LakeTable.snapshotSchema(SparkSession.active, root, version)
+  override def schema(): StructType = tableSchema
   /** `SHOW TBLPROPERTIES` / DESCRIBE EXTENDED keep working while
     * deletion-vector state pends (and on time-travel snapshots): the
     * committed `prop:` keys read off THIS snapshot's manifest — same
@@ -599,7 +613,7 @@ private[sources] final class GraftDvLakeTable(
         TableCapability.V1_BATCH_WRITE)
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new GraftDvScanBuilder(root, version, schema())
+      : ScanBuilder = new GraftDvScanBuilder(root, version, schema(), native)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new V1Write {
@@ -619,12 +633,16 @@ private[sources] final class GraftDvLakeTable(
 
 /** ScanBuilder for deletion-vector snapshots: records Spark's pushed
   * source filters and required columns, then builds the pruned masked
-  * scan. EVERY filter is also returned as residual, so Spark re-applies
-  * the full predicate above the V1 bridge — the pushdown here is a
-  * strict optimization (fewer groups opened, parquet row-group pruning
-  * inside the bridged plan), never a correctness dependency. */
+  * scan — the native [[GraftDvBatchScan]] when the table's snapshot is
+  * one it serves (`native`, [[LakeTable.nativeDvOk]]), else the V1
+  * bridge [[GraftDvScan]], whose readDirsSubset reproduces the full
+  * read semantics. EVERY filter is also returned as residual, so Spark
+  * re-applies the full predicate above the scan — the pushdown here is
+  * a strict optimization (fewer groups opened, parquet row-group
+  * pruning), never a correctness dependency. */
 private[sources] final class GraftDvScanBuilder(
-    root: String, version: Option[Int], tableSchema: StructType)
+    root: String, version: Option[Int], tableSchema: StructType,
+    native: Boolean)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
@@ -635,53 +653,30 @@ private[sources] final class GraftDvScanBuilder(
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
-    filters // all residual — Spark re-evaluates above the bridge
+    filters // all residual — Spark re-evaluates above the scan
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit = {
     required = requiredSchema
   }
-  override def build(): org.apache.spark.sql.connector.read.Scan = {
-    val spark = SparkSession.active
-    // the NATIVE Batch serves the common dv shape (plain masked scan);
-    // exotic snapshots — rename/drop mappings, ALTER-declared schema
-    // overrides, equality deletes, masks past the ship-with-partition
-    // bound — keep the V1 bridge, whose readDirsSubset reproduces the
-    // full read semantics
-    val meta = version.orElse(LakeTable.latestVersion(spark, root))
-      .map(v => LakeTable.manifestMetaAt(spark, root, v))
-      .getOrElse(Map.empty[String, String])
-    // `schemaext` (not `schema`): a CREATION-declared schema is what
-    // every data file was written and validated against, so the native
-    // reader serves it directly — SQL-created (CREATE TABLE) dv tables
-    // would otherwise carry a schema key forever and never leave the
-    // V1 bridge. Only an ALTER-extended schema (columns beyond the
-    // footers) keeps the bridge's typed-null projection.
-    val nativeOk =
-      LakeTable.colMapAt(meta).isEmpty &&
-      LakeTable.colDropsAt(meta).isEmpty &&
-      LakeTable.deleteState(meta).isEmpty &&
-      !meta.contains("schemaext") &&
-      LakeTable.dvSidecarBytes(spark, root, meta) <=
-        GraftDvBatchScan.MaxMaskBytes
-    if (nativeOk)
-      new GraftDvBatchScan(root, version, tableSchema, required,
-        pushed.toSeq)
+  override def build(): org.apache.spark.sql.connector.read.Scan =
+    if (native)
+      new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq)
     else new GraftDvScan(root, version, required, pushed.toSeq)
-  }
 }
 
-/** The deletion-vector read path for catalog scans: a DSv2
-  * [[org.apache.spark.sql.connector.read.V1Scan]] whose relation
-  * serves [[LakeTable.read]]'s masked frame over the PRUNED group set —
-  * manifest stats/partition/bloom admission first
+/** The fallback deletion-vector read path for the snapshot shapes the
+  * native reader does not serve ([[LakeTable.nativeDvOk]]: rename/drop
+  * mappings, ALTER-extended schemas, equality deletes, oversized
+  * masks): a DSv2 [[org.apache.spark.sql.connector.read.V1Scan]] whose
+  * relation serves [[LakeTable.read]]'s anti-join frame over the PRUNED
+  * group set — manifest stats/partition/bloom admission first
   * ([[LakeTable.pruneDirsForFilters]]), then the lineage-stamped scan
   * of the surviving groups, dv anti-join (broadcast — the dv list is
   * O(masked rows)) and declared-schema projection
   * ([[LakeTable.readDirsSubset]]), with the translatable filters
   * re-applied INSIDE the bridged plan so parquet row-group pushdown
-  * engages. Exactly the frame the Scala API serves, at the indexed
-  * path's cost. */
+  * engages. */
 private[sources] final class GraftDvScan(
     root: String, version: Option[Int], schema0: StructType,
     filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
@@ -693,8 +688,8 @@ private[sources] final class GraftDvScan(
   // The COMMON dv shape no longer takes this path: GraftDvBatchScan
   // (native DSv2 Batch) reports kept bytes and the static planner
   // broadcasts directly — the bridge remains only for exotic snapshots
-  // (rename/drop mappings, declared schema overrides, equality
-  // deletes, oversized masks), where readDirsSubset's full semantics
+  // (rename/drop mappings, ALTER-extended schemas, equality deletes,
+  // oversized masks), where readDirsSubset's full semantics
   // are worth the statistics gap.
   override def readSchema(): StructType = schema0
   override def description(): String =

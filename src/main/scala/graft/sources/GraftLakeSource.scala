@@ -117,10 +117,9 @@ private[sources] object GraftLakeSource {
             "option(\"maskDeletes\", \"true\")")
       // positional deletion vectors gate the raw delegate the same way
       // (raw parquet would resurrect masked rows); the CATALOG path
-      // catches this throw and reroutes to its masked scan
-      // (GraftLakeCatalog.load → GraftDvLakeTable/GraftDvScan), so SQL
-      // reads of dv snapshots keep working — only the pathless
-      // format("graft-lake") read refuses
+      // never gets here for them — GraftLakeCatalog.load serves dv
+      // snapshots through its masked GraftDvLakeTable — so only the
+      // pathless format("graft-lake") read refuses
       if (LakeTable.dvState(
           LakeTable.manifestMetaAt(spark, root, v)).nonEmpty)
         throw new UnsupportedOperationException(

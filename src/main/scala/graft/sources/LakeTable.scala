@@ -561,15 +561,20 @@ object LakeTable {
     }
 
   /** The merged scan schema for a set of group dirs when every group
-    * reports the SAME footer schema (the overwhelmingly common case —
-    * no schema evolution in the snapshot): merging identical schemas
-    * is the identity, so handing Spark this schema skips the
-    * mergeSchema footer JOB at every read while producing the
-    * bit-identical frame. Mixed-schema snapshots return None and take
-    * Spark's own mergeSchema path. Cache misses back-fill in parallel
-    * on the driver — footer reads are independent ~ms I/O. */
+    * reports the SAME footer schema up to nullability (the
+    * overwhelmingly common case — no schema evolution in the snapshot):
+    * merging such schemas is the identity on the all-nullable form,
+    * which is the form Spark's file sources read any schema as, so
+    * handing Spark this schema skips the mergeSchema footer JOB at
+    * every read while producing the bit-identical frame. Nullability
+    * alone differs between groups whenever a writer's plan knew a
+    * column non-null (a MOR update's `lit` SET value). Mixed-schema
+    * snapshots return None and take Spark's own mergeSchema path.
+    * Cache misses back-fill in parallel without a Spark job — footer
+    * reads are independent ~ms I/O. */
   private[sources] def uniformSchemaOf(spark: SparkSession, absDirs: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.asNullable
     val misses = absDirs.filterNot(dirSchemaCache.containsKey)
     if (misses.size > 8) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -580,8 +585,8 @@ object LakeTable {
       finally pool.shutdown()
     }
     absDirs.headOption.flatMap { h =>
-      dirSchema(spark, h).filter(s =>
-        absDirs.drop(1).forall(d => dirSchema(spark, d).contains(s)))
+      dirSchema(spark, h).map(asNullable).filter(s =>
+        absDirs.drop(1).forall(d => dirSchema(spark, d).map(asNullable).contains(s)))
     }
   }
 
@@ -2504,12 +2509,18 @@ object LakeTable {
     * AND bloom index admit `column = value`, then applies the exact
     * filter — the needle-in-100TB path: manifest stats bound the range,
     * the bloom disproves membership group by group, and only the
-    * surviving group(s) open a parquet footer. */
+    * surviving group(s) open a parquet footer. A snapshot the native dv
+    * reader serves is [[read]]'s frame with the filter on top: the
+    * pushed `EqualTo` runs the same partition/stats/bloom admission in
+    * [[pruneDirsForFilters]] and the masks apply inside the reader. */
   def readWhereEq(spark: SparkSession, root: String, column: String,
                   value: Any): DataFrame = {
     val v = latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(s"no table at $root"))
     val meta = manifestMeta(spark, root, v)
+    val native = nativeDvFrame(spark, root, v, meta)
+    if (native.isDefined)
+      return native.get.filter(col(column) === lit(value))
     val eq = org.apache.spark.sql.sources.EqualTo(column, value)
     val kept = readManifest(spark, root, v).filter(dir =>
       partAdmit(meta, dir, eq) && statsAdmit(meta, dir, eq) &&
@@ -2821,20 +2832,35 @@ object LakeTable {
   /** The snapshot's LOGICAL schema without building a read frame when
     * possible: an ALTER/DDL-declared schema (the `schema` manifest key)
     * IS the read projection — served straight from the (cached)
-    * manifest, no O(groups) file listing at analysis time. Tables
-    * without a declared schema (API-created, footer-inferred) fall back
-    * to the full read's schema. */
+    * manifest, no O(groups) file listing at analysis time. Without one,
+    * a snapshot with no column mapping reads as its groups' scan schema
+    * ([[scanDirs]]: the uniform footer schema, cached per group, else
+    * Spark's merged one) — the schema [[read]] returns, without
+    * building a read. Only mapped (or empty) snapshots build the full
+    * read's frame; the native dv reader never serves those, so its
+    * table's schema ([[GraftDvLakeTable]]) never calls back into
+    * [[read]]. */
   private[graft] def snapshotSchema(spark: SparkSession, root: String,
       version: Option[Int] = None)
       : org.apache.spark.sql.types.StructType =
-    schemaOverrideAt(spark, root, version)
-      .getOrElse(read(spark, root, version).schema)
+    schemaOverrideAt(spark, root, version).getOrElse {
+      val dirs = dataDirPaths(spark, root, version)
+      val meta = manifestMeta(spark, root,
+        version.getOrElse(versions(spark, root).last))
+      if (dirs.isEmpty || colMapAt(meta).nonEmpty || colDropsAt(meta).nonEmpty)
+        read(spark, root, version).schema
+      else uniformSchemaOf(spark, dirs).getOrElse(scanDirs(spark, dirs).schema)
+    }
 
   /** Snapshot read; `version = None` → latest (time travel otherwise).
     * mergeSchema handles additive schema evolution: groups written
     * before a column existed read it as null; an ALTER-declared schema
     * additionally projects columns no parquet group carries yet (typed
-    * nulls, declared order). */
+    * nulls, declared order). A deletion-vector snapshot the native
+    * reader serves ([[nativeDvOk]]) reads as ONE scan of the relation
+    * SQL reads too ([[GraftDvLakeTable]]): each file's mask applies in
+    * the reader and pushed filters prune groups by partition, stats and
+    * bloom; the other masked snapshots anti-join their masks. */
   def read(spark: SparkSession, root: String,
            version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = false)
@@ -2879,8 +2905,12 @@ object LakeTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], shaped)
     }
-    val vs = versions(spark, root)
-    val meta = manifestMeta(spark, root, version.getOrElse(vs.last))
+    val v = version.getOrElse(versions(spark, root).last)
+    val meta = manifestMeta(spark, root, v)
+    val native =
+      if (keepLineage || keepDirs.isDefined) None
+      else nativeDvFrame(spark, root, v, meta)
+    if (native.isDefined) return native.get
     val lineage = keepLineage || dvState(meta).nonEmpty
     val raw0 = scanDirs(spark, dirs)
     // lineage stamps FIRST (only the raw scan frame exposes _metadata)
@@ -2902,6 +2932,39 @@ object LakeTable {
       applyDvMask(spark, root, meta, applyDeleteMask(spark, root, meta, shaped))
     if (lineage && !keepLineage) masked.drop(FileCol, PosCol) else masked
   }
+
+  /** Whether the native deletion-vector reader ([[GraftDvBatchScan]])
+    * serves a dv snapshot: no rename/drop mapping, no equality deletes,
+    * no ALTER-extended schema (`schemaext`; a CREATION-declared schema
+    * is what every data file was written and validated against, so it
+    * reads natively), and sidecars within the ship-with-partition bound
+    * [[GraftDvBatchScan.MaxMaskBytes]]. Other shapes keep the V1 bridge
+    * ([[GraftDvScan]]) and [[read]]'s anti-join path. */
+  private[sources] def nativeDvOk(spark: SparkSession, root: String,
+      meta: Map[String, String]): Boolean =
+    colMapAt(meta).isEmpty &&
+      colDropsAt(meta).isEmpty &&
+      deleteState(meta).isEmpty &&
+      !meta.contains("schemaext") &&
+      dvSidecarBytes(spark, root, meta) <= GraftDvBatchScan.MaxMaskBytes
+
+  /** Snapshot `v` as ONE scan of the native deletion-vector reader —
+    * each file's mask applied inside the reader, no lineage columns, no
+    * anti-join — when the reader serves it ([[nativeDvOk]]). None for
+    * snapshots without deletion vectors and for the shapes the
+    * anti-join path keeps. The relation is pinned to `v`: the frame
+    * serves the snapshot it was built on, whatever commits land before
+    * it runs. */
+  private def nativeDvFrame(spark: SparkSession, root: String, v: Int,
+      meta: Map[String, String]): Option[DataFrame] =
+    if (dvState(meta).isEmpty) None
+    else {
+      val t = new GraftDvLakeTable(root, root, Some(v))
+      if (!t.native) None
+      else Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          .create(t, None, None)))
+    }
 
   /** File groups of snapshot `version` admitted by EVERY filter under
     * the manifest's partition values, min/max stats and bloom indexes —
@@ -3502,8 +3565,10 @@ object LakeTable {
     * append the updated rows as a fresh file group, in ONE commit. A
     * point update to one row of a 1 GB file group costs O(matches)
     * bytes: the group is untouched on disk; every read path patches at
-    * scan time ([[read]] anti-joins the (file, pos) list, served by
-    * Spark's `_metadata` pseudo-column at zero extra scan I/O). Because
+    * scan time ([[read]]'s native reader skips each file's masked
+    * positions, [[GraftDvBatchScan]]; lineage reads anti-join the
+    * (file, pos) list, served by Spark's `_metadata` pseudo-column at
+    * zero extra scan I/O). Because
     * the mask names physical positions, the appended replacement rows —
     * and every later append — are never swallowed by it (the flaw a
     * key-equality mask would have). Time travel serves each version's
@@ -3523,7 +3588,8 @@ object LakeTable {
     * Scale: one masked scan to find matches (manifest/stats pruning
     * applies upstream when the caller pre-narrows), one O(matches)
     * stage + sidecar + data write, one manifest line. The read-side
-    * cost until rewrite is one broadcast anti-join per scan — the
+    * cost until rewrite is the masked files' whole-file reads (no
+    * row-group pushdown on them) and a per-file mask decode — the
     * documented MOR trade. */
   def updateWhereMor(spark: SparkSession, root: String,
                      predicate: org.apache.spark.sql.Column,

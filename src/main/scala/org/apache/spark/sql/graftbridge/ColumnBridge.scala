@@ -29,4 +29,10 @@ object ColumnBridge {
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Array[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
+
+  /** `schema` with every field, array element and map value nullable —
+    * the shape Spark's file sources read any data schema as
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

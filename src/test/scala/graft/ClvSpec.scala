@@ -50,24 +50,38 @@ class ClvSpec extends SparkSpec {
 
   // --- BG/NBD on a synthetic ground-truth check --------------------------
 
-  /** Deterministic synthetic BG/NBD cohort via inverse-ish sampling with a
-    * fixed LCG; checks the fit recovers parameters in the right region and
-    * the predictions behave per the model's laws. */
-  private lazy val summaryFixture: IndexedSeq[(Double, Double, Double, Double)] = {
+  /** The reference notebook's own CSV, when it is present. */
+  private lazy val referenceFixture
+      : Option[IndexedSeq[(Double, Double, Double, Double)]] = try {
     // Replay the reference's shipped RFM fixture
     // (/root/reference/_data/Summary_2011.csv, header
     // CustomerID,T1,recency1,FREQUENCY,profit — FIXTURES.md §A1).
     val src = scala.io.Source.fromFile("/root/reference/_data/Summary_2011.csv")
+    Some(rfmRows(src))
+  } catch { case _: java.io.FileNotFoundException => None }
+
+  /** (x=FREQUENCY, tx=recency1, T=T1, m=profit) rows of an RFM summary
+    * CSV with header CustomerID,T1,recency1,FREQUENCY,profit
+    * (FIXTURES.md §A1). */
+  private def rfmRows(src: scala.io.Source)
+      : IndexedSeq[(Double, Double, Double, Double)] =
     try src.getLines().drop(1).map { line =>
       val a = line.split(",")
-      // (x=FREQUENCY, tx=recency1, T=T1, m=profit)
       (a(3).toDouble, a(2).toDouble, a(1).toDouble, a(4).toDouble)
     }.toIndexedSeq
     finally src.close()
-  }
 
-  test("BG/NBD fit on Summary_2011 replay: params positive, finite NLL") {
-    val data = summaryFixture.map(r => (r._1, r._2, r._3))
+  /** The in-repo Summary_2011 fixture ([[Summary2011Fixture]]: the
+    * reference CSV's shape and invariants, generated from a recorded
+    * seed); checks the fit and the predictions behave per the model's
+    * laws. */
+  private lazy val summaryFixture: IndexedSeq[(Double, Double, Double, Double)] =
+    rfmRows(scala.io.Source.fromFile(Summary2011Fixture.path))
+
+  /** BG/NBD fit on `fixture`: positive params that beat a unit start. */
+  private def checkBgNbdFit(
+      fixture: IndexedSeq[(Double, Double, Double, Double)]): Unit = {
+    val data = fixture.map(r => (r._1, r._2, r._3))
     val p = BetaGeoModel.fit(data)
     assert(p.r > 0 && p.alpha > 0 && p.a > 0 && p.b > 0, p.toString)
     // fitted params should beat a unit start on mean log-likelihood
@@ -77,8 +91,11 @@ class ClvSpec extends SparkSpec {
     assert(fitLL > baseLL, s"fit $fitLL vs base $baseLL")
   }
 
-  test("BG/NBD predictions: P(alive) in [0,1], E[Y(t)] >= 0 and monotone in t") {
-    val data = summaryFixture.map(r => (r._1, r._2, r._3))
+  /** BG/NBD predictions on `fixture`: P(alive) in [0,1], E[Y(t)] >= 0
+    * and monotone in t. */
+  private def checkBgNbdPredictions(
+      fixture: IndexedSeq[(Double, Double, Double, Double)]): Unit = {
+    val data = fixture.map(r => (r._1, r._2, r._3))
     val p = BetaGeoModel.fit(data)
     for ((x, tx, t) <- data.take(200)) {
       val pa = p.probAlive(x, tx, t)
@@ -90,8 +107,11 @@ class ClvSpec extends SparkSpec {
     }
   }
 
-  test("Gamma-Gamma fit: conditional profit positive, asymptote to m̄") {
-    val data = summaryFixture
+  /** Gamma-Gamma fit on `fixture`: conditional profit positive,
+    * asymptote to m̄. */
+  private def checkGammaGamma(
+      fixture: IndexedSeq[(Double, Double, Double, Double)]): Unit = {
+    val data = fixture
       .filter(r => r._1 > 1 && r._4 > 0).map(r => (r._1, r._4))
     val g = GammaGammaModel.fit(data)
     assert(g.p > 0 && g.q > 0 && g.v > 0)
@@ -104,13 +124,46 @@ class ClvSpec extends SparkSpec {
     assert(math.abs(e - 100.0) / 100.0 < 0.01, s"asymptote got $e")
   }
 
-  test("CLV is nonnegative and increases with horizon") {
-    val data = summaryFixture.map(r => (r._1, r._2, r._3))
+  /** CLV on `fixture`'s first customer: nonnegative, grows with horizon. */
+  private def checkClvHorizon(
+      fixture: IndexedSeq[(Double, Double, Double, Double)]): Unit = {
+    val data = fixture.map(r => (r._1, r._2, r._3))
     val p = BetaGeoModel.fit(data)
     val (x, tx, t) = data.head
     val c6  = Clv.customerLifetimeValue(p, 50.0, x, tx, t, months = 6)
     val c12 = Clv.customerLifetimeValue(p, 50.0, x, tx, t, months = 12)
     assert(c6 >= 0 && c12 >= c6)
+  }
+
+  test("BG/NBD fit on Summary_2011 replay: params positive, finite NLL") {
+    checkBgNbdFit(summaryFixture)
+  }
+
+  test("BG/NBD predictions: P(alive) in [0,1], E[Y(t)] >= 0 and monotone in t") {
+    checkBgNbdPredictions(summaryFixture)
+  }
+
+  test("Gamma-Gamma fit: conditional profit positive, asymptote to m̄") {
+    checkGammaGamma(summaryFixture)
+  }
+
+  test("CLV is nonnegative and increases with horizon") {
+    checkClvHorizon(summaryFixture)
+  }
+
+  referenceFixture.foreach { reference =>
+    test("BG/NBD fit on the reference's own Summary_2011 CSV") {
+      checkBgNbdFit(reference)
+    }
+    test("BG/NBD predictions on the reference's own Summary_2011 CSV") {
+      checkBgNbdPredictions(reference)
+    }
+    test("Gamma-Gamma fit on the reference's own Summary_2011 CSV") {
+      checkGammaGamma(reference)
+    }
+    test("CLV horizon on the reference's own Summary_2011 CSV") {
+      checkClvHorizon(reference)
+    }
   }
 
   test("BG/NBD fit recovers generating parameters from simulated data") {

@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 /** End-to-end replay of the reference's three-notebook chain
   * (SURVEY.md §5.4): DE (CSV → managed table) → DS (RFM → BG/NBD +
   * Gamma-Gamma fit → per-customer predictions) → SQL (segmentation
-  * dashboard query), on the reference's own shipped fixture. */
+  * dashboard query), on the in-repo Summary_2011 fixture
+  * ([[Summary2011Fixture]]) and, when present, the reference's own CSV. */
 class ReferencePipelineSpec extends SparkSpec {
 
   private val csv = "/root/reference/_data/Summary_2011.csv"
 
-  test("DE -> DS -> SQL chain over Summary_2011 produces a sane dashboard") {
-    assume(new java.io.File(csv).exists())
+  /** The chain over an RFM summary CSV shaped like Summary_2011. */
+  private def dashboardChain(csv: String): Unit = {
     import spark.implicits._
 
     // --- DE: ingest into the catalog (ref DE_data_preparation.py:55-77)
@@ -60,6 +61,15 @@ class ReferencePipelineSpec extends SparkSpec {
       results.unpersist()
     } finally Ingest.dropTable(spark, "summary_2011_e2e")
   }
+
+  test("DE -> DS -> SQL chain over Summary_2011 produces a sane dashboard") {
+    dashboardChain(Summary2011Fixture.path)
+  }
+
+  if (new java.io.File(csv).exists())
+    test("DE -> DS -> SQL chain over the reference's own Summary_2011 CSV") {
+      dashboardChain(csv)
+    }
 
   test("Gamma-Gamma fit recovers generating parameters from simulated data") {
     val (pT, qT, vT) = (3.0, 4.0, 15.0)
