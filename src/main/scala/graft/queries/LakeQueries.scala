@@ -3248,7 +3248,7 @@ object LakeQueries {
     * pre-existing file group byte-identical (`mor_files_untouched` +
     * exactly one replacement group). The post-update SQL read goes
     * through the catalog's dv-masked scan
-    * ([[graft.sources.GraftDvScan]]) — masked rows never resurface —
+    * ([[graft.sources.GraftDvBatchScan]]) — masked rows never resurface —
     * and `VERSION AS OF` still serves the pre-update values. While dv
     * state is pending, the copy-on-write SQL UPDATE path refuses at
     * analysis (no row-level op on a dv snapshot — pinned); after
@@ -3863,7 +3863,8 @@ object LakeQueries {
 
   /** q344: PRUNED deletion-vector catalog scans — the read path that
     * keeps a MOR table indexed: after a SQL point update commits a dv
-    * sidecar, catalog reads route through [[graft.sources.GraftDvScan]],
+    * sidecar, catalog reads route through
+    * [[graft.sources.GraftDvBatchScan]],
     * which runs the SAME manifest stats admission as the normal
     * delegate before opening any parquet footer. On a 4-group clustered
     * table + 1 stats-less replacement group, a point probe scans 2 of 5

@@ -7,12 +7,10 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
-import org.apache.spark.sql.execution.datasources.{FileFormat => DsFileFormat, PartitionedFile}
-import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,12 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * operation's scan skips already-masked rows (they must not re-match
   * a MERGE), so MOR statements stack.
   *
-  * Scan contract: filters are accepted for GROUP pruning only and all
-  * reported residual — Spark re-applies the row-level condition above
-  * the scan (delta semantics need exact rows, the opposite of the
-  * group-replace protocol's carryover contract). Masked files read
-  * whole-file so the sequential row counter IS the dv position space
-  * (the [[GraftDvBatchScan]] recipe, shared mask codec). */
+  * Scan contract: the operation scans through the native dv reader
+  * ([[GraftDvBatchScan]], which appends the row identity); filters are
+  * accepted for group pruning only and all reported residual — Spark
+  * re-applies the row-level condition above the scan (delta semantics
+  * need exact rows, the opposite of the group-replace protocol's
+  * carryover contract). */
 private[sources] final class GraftDeltaOperation(
     root: String, cmd: RowLevelOperation.Command)
     extends RowLevelOperation with SupportsDelta {
@@ -99,130 +97,24 @@ private[sources] final class GraftDeltaScanBuilder(root: String)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan =
-    new GraftDeltaScan(root, tableSchema, required, pushed.toSeq)
-}
-
-/** One partition per live parquet file (group-pruned by the manifest
-  * admission chain); each row is served with its (`__file`, `__pos`)
-  * identity appended on demand and already-masked rows skipped. */
-private[sources] final class GraftDeltaScan(
-    root: String, tableSchema: StructType, required: StructType,
-    filters: Seq[org.apache.spark.sql.sources.Filter])
-    extends Scan with Batch {
-
-  private def spark = SparkSession.active
-
-  private lazy val planned: Seq[String] =
-    LakeTable.pruneDirsForFilters(spark, root, None, filters)._1
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-lake delta scan `$root` (${planned.size} group(s))"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val f = LakeTable.fileSystem(spark, root)
+  /** The native dv reader over the latest snapshot, pinned to the
+    * version resolved here; `__file`/`__pos` come from its lineage
+    * columns and already-masked rows never reach the operation. */
+  override def build(): Scan = {
     val v = LakeTable.latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no table at $root"))
-    val meta = LakeTable.manifestMetaAt(spark, root, v)
-    // same driver-side bound as the native batch builder: masks are
-    // collected to plan per-file skips, and a sidecar set this large
-    // is past due for rewriteDeletes anyway
-    val maskBytes = LakeTable.dvSidecarBytes(spark, root, meta)
+    // same driver-side bound as the native read: masks are collected
+    // to plan per-file skips, and a sidecar set this large is past due
+    // for rewriteDeletes anyway
+    val maskBytes = LakeTable.dvSidecarBytes(spark, root,
+      LakeTable.manifestMetaAt(spark, root, v))
     if (maskBytes > GraftDvBatchScan.MaxMaskBytes)
       throw new UnsupportedOperationException(
         s"graft-lake: row-level MOR op at $root — accumulated dv " +
           s"sidecars ($maskBytes bytes) exceed the driver mask bound " +
           s"(${GraftDvBatchScan.MaxMaskBytes}); run " +
           "LakeTable.rewriteDeletes (or compactDeletes) first")
-    val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
-    planned.flatMap { d =>
-      f.listStatus(new Path(root, d))
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-        .map(st => GraftDeltaFilePartition(st.getPath.toString, st.getLen,
-          masks.getOrElse(st.getPath.toString, null)): InputPartition)
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the reader always consumes the full data row (lineage columns are
-    // computed, data columns projected afterwards) — masked files must
-    // read whole-file anyway for the position counter
-    val dataSchema = tableSchema
-    val readFn = new ParquetFileFormat().buildReaderWithPartitionValues(
-      sparkSession = spark,
-      dataSchema = dataSchema,
-      partitionSchema = StructType(Nil),
-      requiredSchema = dataSchema,
-      filters = Nil,
-      options = Map(DsFileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
-    new GraftDeltaReaderFactory(readFn, dataSchema, required)
-  }
-}
-
-private[sources] final case class GraftDeltaFilePartition(
-    path: String, length: Long, mask: Array[Byte]) extends InputPartition
-
-private[sources] final class GraftDeltaReaderFactory(
-    readFn: PartitionedFile => Iterator[InternalRow],
-    dataSchema: StructType, required: StructType)
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[GraftDeltaFilePartition]
-    val pf = PartitionedFile(
-      new GenericInternalRow(Array.empty[Any]),
-      SparkPath.fromPathString(fp.path), 0, fp.length)
-    val fileU = UTF8String.fromString(fp.path)
-    // output column plan: each required field is either a data-column
-    // ordinal or a computed lineage value
-    val FileIdx = -1; val PosIdx = -2
-    val srcIdx = required.fields.map { f =>
-      if (f.name.equalsIgnoreCase(LakeTable.FileCol)) FileIdx
-      else if (f.name.equalsIgnoreCase(LakeTable.PosCol)) PosIdx
-      else dataSchema.fieldIndex(f.name)
-    }
-    val srcTypes = srcIdx.map {
-      case FileIdx => StringType
-      case PosIdx  => LongType
-      case i       => dataSchema.fields(i).dataType
-    }
-    val cursor =
-      if (fp.mask == null) null else new DvMaskCodec.Cursor(fp.mask)
-    var nextMasked =
-      if (cursor != null && cursor.hasNext) cursor.next() else -1L
-    var pos = -1L
-    val it: Iterator[InternalRow] = readFn(pf).flatMap { r =>
-      pos += 1
-      if (pos == nextMasked) {
-        nextMasked =
-          if (cursor != null && cursor.hasNext) cursor.next() else -1L
-        Iterator.empty
-      } else {
-        val out = new GenericInternalRow(required.length)
-        var i = 0
-        while (i < required.length) {
-          out.update(i, srcIdx(i) match {
-            case FileIdx => fileU
-            case PosIdx  => pos
-            case src     => r.get(src, srcTypes(i))
-          })
-          i += 1
-        }
-        Iterator.single(out: InternalRow)
-      }
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+    new GraftDvBatchScan(root, Some(v), tableSchema, required, pushed.toSeq)
   }
 }
 

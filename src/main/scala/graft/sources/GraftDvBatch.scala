@@ -11,12 +11,15 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.{FileFormat => DsFileFormat}
 import org.apache.spark.sql.functions.{col, collect_set, sort_array}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.util.OptionalLong
 
-/** NATIVE DSv2 Batch for deletion-vector snapshots — the read path of
-  * every common dv snapshot, through SQL ([[GraftDvLakeTable]]) and the
-  * Scala API alike ([[LakeTable.read]] builds the same relation):
+/** The deletion-vector (dv) reader: the one scan that applies a
+  * snapshot's positional masks, for SQL reads ([[GraftDvLakeTable]]),
+  * the Scala API ([[LakeTable.read]], [[LakeTable.readWithLineage]] and
+  * the range/point reads build the same relation) and the SQL
+  * merge-on-read operations' row scan ([[GraftDeltaScanBuilder]]):
   *
   *  - the SAME manifest admission chain prunes file groups before any
   *    footer opens ([[LakeTable.pruneDirsForFilters]] — partition
@@ -26,10 +29,19 @@ import java.util.OptionalLong
   *    pushed for row-group pruning on UNMASKED files;
   *  - the dv mask applies per file IN the reader: each file carries
   *    only ITS masked positions, varint-delta encoded ([[DvMaskCodec]]
-  *    — a sorted position list costs ~1–2 bytes/row), and a masked file
-  *    reads WHOLE, without parquet filter pushdown, so the row counter
-  *    sees every row (position = sequential row index of the
-  *    whole-file scan; files are never split);
+  *    — a sorted position list costs ~1–2 bytes/row), keyed by
+  *    [[LakeTable.fileKey]]; a masked file reads WHOLE, without parquet
+  *    filter pushdown, so the row counter sees every row (position =
+  *    sequential row index of the whole-file scan; files are never
+  *    split);
+  *  - lineage: when the required schema asks for `__file`/`__pos` the
+  *    reader appends each row's file key and position, and then every
+  *    file reads whole, so `__pos` is the row's index in its file;
+  *  - the snapshot's column mapping is a schema mapping: data columns
+  *    read under their PHYSICAL parquet names
+  *    ([[LakeTable.physicalName]]) and report their logical names —
+  *    renamed columns, metadata-only drops, and ALTER-added columns an
+  *    older file lacks (parquet reads a missing column as nulls);
   *  - files pack into partitions by size the way Spark's own file scans
   *    do ([[GraftDvBatchScan.pack]]), so a snapshot of many small groups
   *    runs a handful of tasks, not one per file;
@@ -38,15 +50,13 @@ import java.util.OptionalLong
   *    needed.
   *
   * Spark re-applies the full predicate above the scan (every filter is
-  * returned as residual by the builder), so pushdown here is a strict
-  * optimization. [[GraftDvScanBuilder]] routes the snapshot shapes outside
-  * [[LakeTable.nativeDvOk]] — column rename/drop mappings,
-  * ALTER-extended schemas, equality deletes, masks past
-  * [[GraftDvBatchScan.MaxMaskBytes]] — to the V1 bridge, which
-  * reproduces the full read semantics via [[LakeTable.readDirsSubset]].
-  * Mask state is O(churn), never O(table): the planner ships each
-  * file's own compressed mask with its partition, and
-  * [[LakeTable.rewriteDeletes]] folds masks away.
+  * returned as residual by the builders), so pushdown here is a strict
+  * optimization; filters on a column the mapping renames or hides are
+  * not pushed at all. Snapshots with equality deletes or masks past
+  * [[GraftDvBatchScan.MaxMaskBytes]] stay outside
+  * ([[LakeTable.nativeDvOk]]). Mask state is O(churn), never O(table):
+  * the planner ships each file's own compressed mask with its
+  * partition, and [[LakeTable.rewriteDeletes]] folds masks away.
   */
 private[sources] final class GraftDvBatchScan(
     root: String, version: Option[Int], tableSchema: StructType,
@@ -55,9 +65,26 @@ private[sources] final class GraftDvBatchScan(
 
   private def spark = SparkSession.active
 
+  // resolved once, so groups, masks and column mapping come from one
+  // snapshot even when a commit lands between planning steps
+  private lazy val snapshot: Int =
+    version.orElse(LakeTable.latestVersion(spark, root)).getOrElse(
+      throw new IllegalStateException(s"no table at $root"))
+  private lazy val meta: Map[String, String] =
+    LakeTable.manifestMetaAt(spark, root, snapshot)
+
+  private def physical(name: String): Option[String] =
+    LakeTable.physicalName(meta, name)
+
+  // filters on columns that read under their own name: stats, bloom
+  // and parquet footers all speak physical names
+  private lazy val pushable: Seq[Filter] =
+    filters.filter(_.references.forall(r => physical(r).contains(r)))
+
   // resolved once per scan; planning and statistics share it
   private lazy val pruned: (Seq[String], Int) = {
-    val p = LakeTable.pruneDirsForFilters(spark, root, version, filters)
+    val p = LakeTable.pruneDirsForFilters(spark, root, Some(snapshot),
+      pushable)
     GraftDvScan.lastPrune = Some((p._1.size, p._2))
     p
   }
@@ -68,7 +95,7 @@ private[sources] final class GraftDvBatchScan(
       f.listStatus(new Path(root, d))
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName)
-        .map(st => (st.getPath.toString, st.getLen))
+        .map(st => (LakeTable.fileKey(st.getPath), st.getLen))
     }
   }
 
@@ -90,9 +117,6 @@ private[sources] final class GraftDvBatchScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val meta = LakeTable.manifestMetaAt(spark, root,
-      version.orElse(LakeTable.latestVersion(spark, root)).getOrElse(
-        throw new IllegalStateException(s"no table at $root")))
     val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
     GraftDvBatchScan.pack(spark, keptFiles.map { case (p, len) =>
       GraftDvFile(p, len, masks.getOrElse(p, null))
@@ -100,28 +124,49 @@ private[sources] final class GraftDvBatchScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
+    import GraftDvReaderFactory.{File, Missing, Pos}
+    def lineage(f: StructField) =
+      (f.name.equalsIgnoreCase(LakeTable.FileCol) ||
+        f.name.equalsIgnoreCase(LakeTable.PosCol)) &&
+        !tableSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))
+    // the parquet read: every mapped data column under its physical
+    // name, all nullable (an ALTER-added column is absent from older
+    // files); output column i is parquet column plan(i), a lineage
+    // value, or a column the mapping hides (typed null)
+    val read = requiredSchema.fields.filterNot(lineage).flatMap(f =>
+      physical(f.name).map(p => StructField(p, f.dataType, nullable = true)))
+    var next = 0
+    val plan = requiredSchema.fields.map { f =>
+      if (lineage(f))
+        if (f.name.equalsIgnoreCase(LakeTable.FileCol)) File else Pos
+      else if (physical(f.name).isEmpty) Missing
+      else { next += 1; next - 1 }
+    }
+    val shaped = plan.length != read.length
     def readerFor(pushed: Seq[Filter]) =
       new ParquetFileFormat().buildReaderWithPartitionValues(
         sparkSession = spark,
-        dataSchema = tableSchema,
+        dataSchema = StructType(read),
         partitionSchema = StructType(Nil),
-        requiredSchema = requiredSchema,
+        requiredSchema = StructType(read),
         filters = pushed,
         options = Map(DsFileFormat.OPTION_RETURNING_BATCH -> "false"),
         hadoopConf = spark.sessionState.newHadoopConf())
-    // unmasked files take row-group pruning; masked files read FULLY so
-    // the sequential row counter equals the dv position space
-    new GraftDvReaderFactory(readerFor(filters), readerFor(Nil))
+    // unmasked files take row-group pruning; masked files (and every
+    // file of a lineage read) read FULLY so the sequential row counter
+    // equals the dv position space
+    new GraftDvReaderFactory(readerFor(pushable), readerFor(Nil),
+      if (shaped) plan else null, requiredSchema.fields.map(_.dataType))
   }
 }
 
 private[sources] object GraftDvBatchScan {
 
-  /** Above this many dv sidecar bytes the builder keeps the V1
-    * bridge's distributed anti-join: the native path ships each file's
-    * compressed mask from the driver, and a mask this large (≈ tens of
-    * millions of rows) is past due for [[LakeTable.rewriteDeletes]]
-    * anyway. */
+  /** Above this many dv sidecar bytes reads keep the V1 bridge's
+    * distributed anti-join and SQL merge-on-read operations refuse: the
+    * native path ships each file's compressed mask from the driver, and
+    * a mask this large (≈ tens of millions of rows) is past due for
+    * [[LakeTable.rewriteDeletes]] anyway. */
   private[sources] val MaxMaskBytes: Long = 64L * 1024 * 1024
 
   /** Whole files packed into partitions by size with Spark's own
@@ -134,10 +179,10 @@ private[sources] object GraftDvBatchScan {
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(spark,
       files.map(_.length + openCost).sum)
-    val byPath = files.map(f => SparkPath.fromPathString(f.path) -> f).toMap
+    val byPath = files.map(f => SparkPath.fromUrlString(f.path) -> f).toMap
     val whole = files.sortBy(-_.length).map(f => PartitionedFile(
       new GenericInternalRow(Array.empty[Any]),
-      SparkPath.fromPathString(f.path), 0, f.length))
+      SparkPath.fromUrlString(f.path), 0, f.length))
     FilePartition.getFilePartitions(spark, whole, maxSplit).map(p =>
       GraftDvFilePartition(p.files.map(pf => byPath(pf.filePath))))
   }
@@ -146,14 +191,8 @@ private[sources] object GraftDvBatchScan {
     * one distributed group-collect over the sidecars (O(mask), bounded
     * by [[MaxMaskBytes]] at the builder). */
   private[sources] def loadMasks(spark: SparkSession, root: String,
-      meta: Map[String, String]): Map[String, Array[Byte]] =
-    loadMasksFromRels(spark, root, LakeTable.dvState(meta))
-
-  /** [[loadMasks]] over an explicit sidecar list — the CDF source
-    * reconstructs a sidecar-less dv commit from ONLY the sidecars that
-    * version added. */
-  private[sources] def loadMasksFromRels(spark: SparkSession,
-      root: String, rels: Seq[String]): Map[String, Array[Byte]] = {
+      meta: Map[String, String]): Map[String, Array[Byte]] = {
+    val rels = LakeTable.dvState(meta)
     if (rels.isEmpty) return Map.empty
     // all-binary accumulations (stacked point updates) merge on the
     // driver from the decoded-sidecar cache — zero Spark jobs
@@ -169,11 +208,13 @@ private[sources] object GraftDvBatchScan {
       }.toMap
   }
 
-  /** [[loadMasksFromRels]] keyed (file, op tag): the change feed
-    * classifies each masked row by its own 'U'/'D' tag (update
-    * preimage vs delete), so a clause-matrix MERGE's mixed masks stay
-    * distinguishable. Same driver-side bound contract as
-    * [[loadMasksFromRels]] — callers gate on sidecar bytes. */
+  /** [[loadMasks]] over an explicit sidecar list, keyed (file, op
+    * tag): the change feed reconstructs a sidecar-less dv commit from
+    * ONLY the sidecars that version added, and classifies each masked
+    * row by its own 'U'/'D' tag (update preimage vs delete), so a
+    * clause-matrix MERGE's mixed masks stay distinguishable. Same
+    * driver-side bound contract as [[loadMasks]] — callers gate on
+    * sidecar bytes. */
   private[sources] def loadMasksByOpFromRels(spark: SparkSession,
       root: String, rels: Seq[String])
       : Map[(String, String), Array[Byte]] = {
@@ -192,8 +233,8 @@ private[sources] object GraftDvBatchScan {
 }
 
 /** One data file of a dv scan, read whole (never split: the dv position
-  * space is the whole-file row index). `mask` is null for unmasked
-  * files. */
+  * space is the whole-file row index). `path` is the file's key
+  * ([[LakeTable.fileKey]]); `mask` is null for unmasked files. */
 private[sources] final case class GraftDvFile(
     path: String, length: Long, mask: Array[Byte])
 
@@ -232,6 +273,25 @@ private[sources] object DvMaskCodec {
       i += 1
     }
     n
+  }
+
+  /** The rows of a WHOLE-file read (row i sits at position i) that
+    * `mask` covers (`keepMasked`) or does not cover (a null mask covers
+    * nothing), each handed to `f` with its position — the one
+    * two-pointer walk over a file's rows and its decoded positions. */
+  def walk[B](rows: Iterator[InternalRow], mask: Array[Byte],
+      keepMasked: Boolean)(f: (InternalRow, Long) => B): Iterator[B] = {
+    val cursor = if (mask == null) null else new Cursor(mask)
+    var nextMasked =
+      if (cursor != null && cursor.hasNext) cursor.next() else -1L
+    var pos = -1L
+    rows.filter { _ =>
+      pos += 1
+      val masked = pos == nextMasked
+      if (masked)
+        nextMasked = if (cursor.hasNext) cursor.next() else -1L
+      masked == keepMasked
+    }.map(f(_, pos))
   }
 
   /** Streaming decoder — O(1) memory, positions come back in order. */
@@ -321,31 +381,50 @@ private[sources] object DvBinarySidecar {
 }
 
 /** Reader factory: a partition's files stream in order — unmasked
-  * files through the pushed-filter reader, masked files through the
-  * full-file reader behind a two-pointer skip over their own decoded
-  * position stream. */
+  * files through the pushed-filter reader, masked files (and every file
+  * when lineage is asked for) through the full-file reader behind the
+  * mask walk ([[DvMaskCodec.walk]]). `plan` (null = parquet rows pass
+  * through) names each output column's source: a parquet column
+  * ordinal, [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]]
+  * lineage, or [[GraftDvReaderFactory.Missing]] (typed null). */
 private[sources] final class GraftDvReaderFactory(
     pushedFn: PartitionedFile => Iterator[InternalRow],
-    fullFn: PartitionedFile => Iterator[InternalRow])
+    fullFn: PartitionedFile => Iterator[InternalRow],
+    plan: Array[Int], types: Array[DataType])
     extends PartitionReaderFactory {
+  import GraftDvReaderFactory._
+
+  private val lineage =
+    plan != null && plan.exists(c => c == File || c == Pos)
 
   private def rowsOf(f: GraftDvFile): Iterator[InternalRow] = {
     val pf = PartitionedFile(
       new GenericInternalRow(Array.empty[Any]),
-      SparkPath.fromPathString(f.path), 0, f.length)
-    if (f.mask == null) pushedFn(pf)
-    else {
-      val cursor = new DvMaskCodec.Cursor(f.mask)
-      var nextMasked = if (cursor.hasNext) cursor.next() else -1L
-      var idx = -1L
-      fullFn(pf).filter { _ =>
-        idx += 1
-        if (idx == nextMasked) {
-          nextMasked = if (cursor.hasNext) cursor.next() else -1L
-          false
-        } else true
-      }
+      SparkPath.fromUrlString(f.path), 0, f.length)
+    if (f.mask == null && !lineage) {
+      val rows = pushedFn(pf)
+      if (plan == null) rows else rows.map(shape(_, null, -1L))
+    } else {
+      val file = UTF8String.fromString(f.path)
+      DvMaskCodec.walk(fullFn(pf), f.mask, keepMasked = false)((r, pos) =>
+        if (plan == null) r else shape(r, file, pos))
     }
+  }
+
+  private def shape(r: InternalRow, file: UTF8String,
+      pos: Long): InternalRow = {
+    val out = new GenericInternalRow(plan.length)
+    var i = 0
+    while (i < plan.length) {
+      plan(i) match {
+        case Missing => ()
+        case File    => out.update(i, file)
+        case Pos     => out.update(i, pos)
+        case c       => out.update(i, r.get(c, types(i)))
+      }
+      i += 1
+    }
+    out
   }
 
   override def createReader(p: InputPartition)
@@ -360,4 +439,10 @@ private[sources] final class GraftDvReaderFactory(
       override def close(): Unit = ()
     }
   }
+}
+
+private[sources] object GraftDvReaderFactory {
+  val Missing = -1
+  val File = -2
+  val Pos = -3
 }

@@ -515,21 +515,23 @@ private[sources] final class GraftStagedTable(
 }
 
 /** Catalog table for a snapshot carrying positional deletion vectors —
-  * and the relation [[LakeTable.read]] itself builds for one
-  * ([[LakeTable.nativeDvFrame]]), so the Scala API and SQL read a dv
-  * snapshot through the same scan. Snapshots the native reader serves
-  * ([[LakeTable.nativeDvOk]] — the common shape) scan through
-  * [[GraftDvBatchScan]]: pushed filters run the manifest-level
-  * admission chain (partition values, min/max stats, bloom indexes —
-  * [[LakeTable.pruneDirsForFilters]]) before any parquet footer opens,
-  * and each surviving file's mask applies inside the reader, so masked
-  * rows never resurface and stacked updates/time travel each see their
-  * own version's state. The rare shapes outside it (rename/drop
-  * mappings, ALTER-extended schemas, equality deletes, oversized
-  * masks) keep the V1 bridge [[GraftDvScan]]. A compaction
-  * ([[LakeTable.rewriteDeletes]] or any COW op) restores the plain
-  * delegate. Appends still land through the commit protocol (dv state
-  * changes are NAMED append conflicts). */
+  * and the relation [[LakeTable.read]], [[LakeTable.readWithLineage]]
+  * and the range/point reads build for one ([[LakeTable.nativeDvFrame]];
+  * its `__file`/`__pos` metadata columns carry lineage), so the Scala
+  * API and SQL read a dv snapshot through the same scan. Snapshots the
+  * native reader serves ([[LakeTable.nativeDvOk]] — every shape but
+  * oversized masks) scan through [[GraftDvBatchScan]]: pushed filters
+  * run the manifest-level admission chain (partition values, min/max
+  * stats, bloom indexes — [[LakeTable.pruneDirsForFilters]]) before any
+  * parquet footer opens, each surviving file's mask applies inside the
+  * reader, and the column mapping maps physical names to logical ones,
+  * so masked rows never resurface and stacked updates/time travel each
+  * see their own version's state. Masks past
+  * [[GraftDvBatchScan.MaxMaskBytes]] keep the V1 bridge [[GraftDvScan]]
+  * (equality deletes never reach this table: the catalog gates them).
+  * A compaction ([[LakeTable.rewriteDeletes]] or any COW op) restores
+  * the plain delegate. Appends still land through the commit protocol
+  * (dv state changes are NAMED append conflicts). */
 private[sources] final class GraftDvLakeTable(
     identName: String, root: String, version: Option[Int])
     extends Table
@@ -566,10 +568,10 @@ private[sources] final class GraftDvLakeTable(
           s"deletion-vector snapshot at $root — set " +
           "spark.graft.update.mode=mor (statements stack as dv commits) " +
           "or rewriteDeletes first")
-    // the delta scan reads LOGICAL column names straight off physical
-    // parquet — a rename/drop mapping would silently null the renamed
-    // column and match the wrong rows; refuse like GraftDvScanBuilder's
-    // exotic-snapshot gate until a rewrite materializes the mapping
+    // the delta write lands its new rows under LOGICAL names, which a
+    // rename/drop mapping reads back under physical ones (the renamed
+    // column would read null); refuse until a rewrite materializes the
+    // mapping
     val meta = LakeTable.latestVersion(spark, root)
       .map(v => LakeTable.manifestMetaAt(spark, root, v))
       .getOrElse(Map.empty[String, String])
@@ -632,14 +634,15 @@ private[sources] final class GraftDvLakeTable(
 }
 
 /** ScanBuilder for deletion-vector snapshots: records Spark's pushed
-  * source filters and required columns, then builds the pruned masked
-  * scan — the native [[GraftDvBatchScan]] when the table's snapshot is
-  * one it serves (`native`, [[LakeTable.nativeDvOk]]), else the V1
-  * bridge [[GraftDvScan]], whose readDirsSubset reproduces the full
-  * read semantics. EVERY filter is also returned as residual, so Spark
-  * re-applies the full predicate above the scan — the pushdown here is
-  * a strict optimization (fewer groups opened, parquet row-group
-  * pruning), never a correctness dependency. */
+  * source filters and required columns (lineage metadata columns
+  * included), then builds the pruned masked scan — the native
+  * [[GraftDvBatchScan]] when the table's snapshot is one it serves
+  * (`native`, [[LakeTable.nativeDvOk]]), else, for masks past
+  * [[GraftDvBatchScan.MaxMaskBytes]], the V1 bridge [[GraftDvScan]].
+  * EVERY filter is also returned as residual, so Spark re-applies the
+  * full predicate above the scan — the pushdown here is a strict
+  * optimization (fewer groups opened, parquet row-group pruning), never
+  * a correctness dependency. */
 private[sources] final class GraftDvScanBuilder(
     root: String, version: Option[Int], tableSchema: StructType,
     native: Boolean)
@@ -665,10 +668,10 @@ private[sources] final class GraftDvScanBuilder(
     else new GraftDvScan(root, version, required, pushed.toSeq)
 }
 
-/** The fallback deletion-vector read path for the snapshot shapes the
-  * native reader does not serve ([[LakeTable.nativeDvOk]]: rename/drop
-  * mappings, ALTER-extended schemas, equality deletes, oversized
-  * masks): a DSv2 [[org.apache.spark.sql.connector.read.V1Scan]] whose
+/** The fallback deletion-vector read path for masks past
+  * [[GraftDvBatchScan.MaxMaskBytes]], which the native reader would
+  * have to ship from the driver ([[LakeTable.nativeDvOk]]): a DSv2
+  * [[org.apache.spark.sql.connector.read.V1Scan]] whose
   * relation serves [[LakeTable.read]]'s anti-join frame over the PRUNED
   * group set — manifest stats/partition/bloom admission first
   * ([[LakeTable.pruneDirsForFilters]]), then the lineage-stamped scan
@@ -685,12 +688,10 @@ private[sources] final class GraftDvScan(
   // (Spark's V1ScanWrapper implements no SupportsReportStatistics), so
   // the static planner sees defaultSizeInBytes for a BRIDGE-served
   // snapshot and broadcast protection is AQE's runtime conversion.
-  // The COMMON dv shape no longer takes this path: GraftDvBatchScan
-  // (native DSv2 Batch) reports kept bytes and the static planner
-  // broadcasts directly — the bridge remains only for exotic snapshots
-  // (rename/drop mappings, ALTER-extended schemas, equality deletes,
-  // oversized masks), where readDirsSubset's full semantics
-  // are worth the statistics gap.
+  // Every other dv snapshot reads through GraftDvBatchScan (native
+  // DSv2 Batch), which reports kept bytes so the static planner
+  // broadcasts directly — the bridge remains only for oversized masks,
+  // whose distributed anti-join is worth the statistics gap.
   override def readSchema(): StructType = schema0
   override def description(): String =
     s"GraftDvScan `$root`" + version.fold("")(v => s"@v$v") +

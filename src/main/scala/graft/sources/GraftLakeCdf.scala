@@ -258,8 +258,9 @@ private[sources] final class GraftLakeCdfStream(
           val pre = masksByOp.toSeq
             .sortBy { case ((fp, o), _) => (fp, o) }
             .map { case ((fp, o), m) =>
-              GraftLakeCdfPartition(fp,
-                fs.getFileStatus(new Path(fp)).getLen, v,
+              val path = LakeTable.pathOfKey(fp)
+              GraftLakeCdfPartition(path.toString,
+                fs.getFileStatus(path).getLen, v,
                 fromSidecar = false,
                 tag = if (o == "D") "delete" else "update_preimage",
                 mask = m)
@@ -338,7 +339,8 @@ private[sources] final class GraftLakeCdfStream(
               }.toDF("__mf", "__mp")
               val matchedKeys =
                 if (masks.isEmpty) Array.empty[String]
-                else sp.read.parquet(masks.keys.toSeq.sorted: _*)
+                else sp.read.parquet(masks.keys.toSeq.sorted
+                    .map(LakeTable.pathOfKey(_).toString): _*)
                   .withColumn("__mf", fcol("_metadata.file_path"))
                   .withColumn("__mp", fcol("_metadata.row_index"))
                   .join(pairs, Seq("__mf", "__mp"), "left_semi")
@@ -430,24 +432,13 @@ private[sources] final class GraftLakeCdfReaderFactory(
         out
       }
       else {
-        val base0 = dataFn(pf)
         // dv preimages: keep EXACTLY the masked positions (the reader
         // scans the whole file, so the row counter is the dv position
-        // space — same recipe as GraftDvBatchScan, inverted)
+        // space — GraftDvBatchScan's mask walk, inverted)
         val base =
-          if (fp.mask == null) base0
-          else {
-            val cursor = new DvMaskCodec.Cursor(fp.mask)
-            var nextMasked = if (cursor.hasNext) cursor.next() else -1L
-            var idx = -1L
-            base0.filter { _ =>
-              idx += 1
-              if (idx == nextMasked) {
-                nextMasked = if (cursor.hasNext) cursor.next() else -1L
-                true
-              } else false
-            }
-          }
+          if (fp.mask == null) dataFn(pf)
+          else DvMaskCodec.walk(dataFn(pf), fp.mask, keepMasked = true)(
+            (r, _) => r)
         val tagU = UTF8String.fromString(fp.tag)
         val postU = UTF8String.fromString("update_postimage")
         val keySet: java.util.HashSet[String] =

@@ -492,8 +492,7 @@ object LakeTable {
   // ParquetOutputWriter machinery ([[GraftLocalParquetWrite]]), no job.
   // Anything larger or lineage-backed takes the classic job path.
 
-  private val LocalWriteMaxRows =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_WRITE_MAX_ROWS", "20000").toInt
+  private val LocalWriteMaxRows = 20000
 
   /** The batch's rows + schema when its optimized plan is a driver-
     * resident LocalRelation of at most [[LocalWriteMaxRows]] rows.
@@ -592,10 +591,10 @@ object LakeTable {
 
   /** Threshold above which Spark launches a listing JOB for multi-path
     * scans. Driver-side listing of ≤10⁴ local-FS group dirs is faster
-    * than a job round; on object stores at larger dir counts the job
-    * wins — hence a conf, not a constant. */
-  private val ListingJobThreshold =
-    sys.env.getOrElse("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "10000").toInt
+    * than a job round; past that many dirs (and on object stores,
+    * where each LIST is a round trip) Spark's parallel listing job
+    * takes over. */
+  private val ListingJobThreshold = 10000
 
   /** Run `body` (an eager multi-dir scan construction) with the
     * parallel-listing threshold raised to [[ListingJobThreshold]] so
@@ -748,7 +747,7 @@ object LakeTable {
               // the removed key)
               (k.startsWith("prop:") &&
                 !meta0.get("op").contains("unset-tblproperties")) ||
-              k == "cdf" || k == "schemaext") &&
+              k == "cdf") &&
               !meta0.contains(k) }
           meta0 ++ schema ++ checks
         }
@@ -757,10 +756,9 @@ object LakeTable {
     // delta-encode against the previous resolved state when possible —
     // the manifest write (and its read) is then O(change), not
     // O(groups); reorders and shrink-below-full cases keep full format
-    val prevState = timedA("cv:resolvePrev") {
+    val prevState =
       if (v <= 1) None
       else scala.util.Try(resolveState(spark, root, v - 1)).toOption
-    }
     val fullLines = meta.toSeq.sorted.map { case (k, v2) => s"#$k=$v2" } ++
       dataDirs
     val bodyLines = prevState.flatMap(encodeDelta(_, dataDirs, meta)) match {
@@ -769,20 +767,18 @@ object LakeTable {
       case _ => fullLines
     }
     val body = bodyLines.mkString("\n")
-    timedA("cv:write") {
-      localNio(f, tmp) match {
-        case Some(tp) =>
-          java.nio.file.Files.createDirectories(tp.getParent)
-          java.nio.file.Files.write(tp,
-            body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-        case None =>
-          f.mkdirs(versionsDir(root))
-          val out = f.create(tmp, false)
-          try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-      }
+    localNio(f, tmp) match {
+      case Some(tp) =>
+        java.nio.file.Files.createDirectories(tp.getParent)
+        java.nio.file.Files.write(tp,
+          body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+      case None =>
+        f.mkdirs(versionsDir(root))
+        val out = f.create(tmp, false)
+        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
     }
     val dest = manifestPath(root, v)
     // THE conflict point. On the local filesystem Hadoop's rename is
@@ -986,23 +982,15 @@ object LakeTable {
         case _ => () // key exprs did not fold — take the staged path
       }
     }
-    def timed[A](tag: String)(body: => A): A =
-      if (!sys.env.contains("SPARK_GRAFT_TIMING")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"    [pwrite] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        r
-      }
     val anyNull = keyExprs.map(_.isNull).reduce(_ || _)
     val anyLong = keyExprs.map(e =>
       length(e.cast("string")) > 100).reduce(_ || _)
     // one validation job, not one per gate — at one commit per
     // micro-batch the per-append job count is the latency floor
-    val gates = timed("gates agg")(df.agg(
+    val gates = df.agg(
       coalesce(max(when(anyNull, 1).otherwise(0)), lit(0)).as("nulls"),
       coalesce(max(when(anyLong, 1).otherwise(0)), lit(0)).as("long"))
-      .head())
+      .head()
     if (gates.getInt(0) > 0)
       throw new IllegalArgumentException(
         s"null value in partition column(s) ${partCols.mkString(",")} " +
@@ -1028,17 +1016,16 @@ object LakeTable {
       // close, so the task count is the parallelism of that
       val width = math.max(spark.sparkContext.defaultParallelism,
         spark.sessionState.conf.numShufflePartitions)
-      timed("staged write")(
-        df.withColumn("__gpart", concat_ws("-",
-            keyExprs.map(e => hex(e.cast("string").cast("binary"))): _*))
-          .repartition(width, col("__gpart"))
-          .write.partitionBy("__gpart").parquet(staged.toString))
+      df.withColumn("__gpart", concat_ws("-",
+          keyExprs.map(e => hex(e.cast("string").cast("binary"))): _*))
+        .repartition(width, col("__gpart"))
+        .write.partitionBy("__gpart").parquet(staged.toString)
       val subs = f.listStatus(staged).map(_.getPath)
         .filter(_.getName.startsWith("__gpart=")).sortBy(_.getName)
       val localRoot =
         if ("file".equalsIgnoreCase(Option(new Path(root).toUri.getScheme)
             .getOrElse(f.getUri.getScheme))) Some(root) else None
-      timed("moves+decode")(subs.zipWithIndex.map { case (sub, i) =>
+      subs.zipWithIndex.map { case (sub, i) =>
         val dir = s"data/$uuid-p$i"
         // local fast path: one nio move per dir — Hadoop's LocalFS
         // rename costs ~10-20 ms of checksum bookkeeping per call,
@@ -1077,7 +1064,7 @@ object LakeTable {
         // the group-schema cache so the first read skips footer I/O
         cacheDirSchema(new Path(root, dir).toString, df.schema)
         dir -> comps.mkString(PartSep)
-      }.toSeq)
+      }.toSeq
     } finally f.delete(staged, true)
   }
 
@@ -1403,18 +1390,6 @@ object LakeTable {
              statsCols: Seq[String] = Nil): Int =
     appendInternal(spark, root, df, statsCols, Map.empty)
 
-  /** SPARK_GRAFT_TIMING-gated phase timer for the append fixed-cost
-    * anatomy (ProfileR16 `append`); dormant in normal runs. */
-  private def timedA[A](tag: String)(body: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"    [append] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   private def appendInternal(spark: SparkSession, root: String,
                              df: DataFrame, statsCols: Seq[String],
                              extraMeta: Map[String, String]): Int = {
@@ -1422,21 +1397,17 @@ object LakeTable {
     // after appendPrepare would orphan the freshly written data dir,
     // breaking the 'a refused append leaves no orphan' contract the
     // conflict path upholds
-    timedA("statscol gate") {
-      latestVersion(spark, root).foreach { cur =>
-        val meta = manifestMeta(spark, root, cur)
-        statsCols.foreach(c => requireNotRenamed(meta, c, "stats collection"))
-      }
+    latestVersion(spark, root).foreach { cur =>
+      val meta = manifestMeta(spark, root, cur)
+      statsCols.foreach(c => requireNotRenamed(meta, c, "stats collection"))
     }
-    val (base, parts) = timedA("prepareParts")(
-      appendPrepareParts(spark, root, df))
-    val stats = timedA("statsMeta")(parts.flatMap { case (d, _) =>
-      statsMeta(spark, root, d, statsCols) }.toMap)
+    val (base, parts) = appendPrepareParts(spark, root, df)
+    val stats = parts.flatMap { case (d, _) =>
+      statsMeta(spark, root, d, statsCols) }.toMap
     val partMeta = parts.collect {
       case (d, Some(pv)) => s"part:$d" -> pv }.toMap
-    timedA("commitAppendMulti")(
-      commitAppendMulti(spark, root, base, parts.map(_._1),
-        stats ++ partMeta ++ extraMeta))
+    commitAppendMulti(spark, root, base, parts.map(_._1),
+      stats ++ partMeta ++ extraMeta)
   }
 
   /** `COPY INTO` — Databricks' idempotent bulk-ingest verb, the Scala
@@ -1579,11 +1550,11 @@ object LakeTable {
       df: DataFrame): (Int, Seq[(String, Option[String])]) = {
     val cur = latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(s"no table at $root"))
-    val meta = timedA("manifestMeta")(manifestMeta(spark, root, cur))
+    val meta = manifestMeta(spark, root, cur)
     // write-defaults materialize FIRST so every gate below validates
     // the rows exactly as they will land on disk
-    val filled0 = timedA("defaults+gen")(applyGenerated(spark, root, meta,
-      applyWriteDefaults(spark, root, meta, df)))
+    val filled0 = applyGenerated(spark, root, meta,
+      applyWriteDefaults(spark, root, meta, df))
     // identity stamping SECOND: the batch lands once in a staging dir
     // (the statsMeta rule — a nondeterministic lineage must not
     // disagree between the count pass and the stamp pass, or ids could
@@ -1603,11 +1574,10 @@ object LakeTable {
         (stampIdentity(spark, staged, c, step, hwm), Some(rel))
     }
     try {
-      timedA("constraints")(enforceConstraints(spark, root, cur, filled))
+      enforceConstraints(spark, root, cur, filled)
       // UNIQUE admission: batch-internal dups + one probe of the live
       // snapshot (bloom-prunable at scale), before any byte lands
-      timedA("unique")(
-        enforceUnique(meta, filled, Some(read(spark, root)), "by append"))
+      enforceUnique(meta, filled, Some(read(spark, root)), "by append")
       // a batch naming a metadata-only-dropped physical column would
       // write bytes every read must then hide — refuse it loudly
       filled.columns.find(c => colDropsAt(meta).exists(_.equalsIgnoreCase(c)))
@@ -1617,7 +1587,7 @@ object LakeTable {
       // incoming batches arrive in LOGICAL names (constraints above see
       // them that way); files land in PHYSICAL names so every group in
       // the table shares one on-disk schema under a rename mapping
-      val physical = timedA("toPhysical")(toPhysical(meta, filled))
+      val physical = toPhysical(meta, filled)
       // bucket layouts route by hash id; identity layouts by value
       val parts = bucketSpecAt(meta) match {
         case Some((bc, n)) =>
@@ -1627,8 +1597,7 @@ object LakeTable {
             .map { case (d, id) => (d, Some(id.toString)) }
         case None => partColsAt(meta) match {
           case Seq() =>
-            Seq((timedA("writeDataFiles")(
-              writeDataFiles(spark, root, physical)), None))
+            Seq((writeDataFiles(spark, root, physical), None))
           case pcs =>
             pcs.foreach(pc =>
               require(physical.columns.exists(_.equalsIgnoreCase(pc)),
@@ -1723,22 +1692,21 @@ object LakeTable {
     // base snapshot (a winner that moved the mark is a named conflict
     // in assertAppendCommutes, so a rebase can never commit a stale
     // mark)
-    val idExtra: Map[String, String] = timedA("idExtra")(
+    val idExtra: Map[String, String] =
       identityAt(manifestMeta(spark, root, base)) match {
         case Some((c, start, step, hwm)) =>
           val n = if (dirs.isEmpty) 0L else mine.count()
           Map(s"identity:$c" -> s"$start,$step,${hwm + step * n}")
         case None => Map.empty
-      })
+      }
     var attempt = base
     var tries = 0
     while (true) {
-      val carried = timedA("carried")(
-        manifestMeta(spark, root, attempt).filter {
-          case (k, _) => appendCarries(k) })
-      try return timedA("commitVersion")(commitVersion(spark, root, attempt + 1,
-        timedA("readManifest")(readManifest(spark, root, attempt)) ++ dirs,
-        Map("op" -> "append") ++ carried ++ extraMeta ++ idExtra))
+      val carried = manifestMeta(spark, root, attempt).filter {
+        case (k, _) => appendCarries(k) }
+      try return commitVersion(spark, root, attempt + 1,
+        readManifest(spark, root, attempt) ++ dirs,
+        Map("op" -> "append") ++ carried ++ extraMeta ++ idExtra)
       catch { case e: ConcurrentCommitException =>
         tries += 1
         if (tries > MaxCommitRetries) {
@@ -2371,41 +2339,34 @@ object LakeTable {
   /** Data-skipping read: scans only the file groups whose stats admit
     * `column ∈ [lo, hi]`, then applies the exact filter. At scale this is
     * the manifest-level pruning layer ABOVE parquet row-group pruning —
-    * skipped groups cost zero file opens. */
-  def readWhere(spark: SparkSession, root: String, column: String,
-                lo: Double, hi: Double): DataFrame = {
-    val dirs = selectGroups(spark, root, column, lo, hi)
-      .map(d => new Path(root, d).toString)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read(spark, root).schema)
-    else {
-      val v = latestVersion(spark, root).get
-      val meta = manifestMeta(spark, root, v)
-      // same contract as readWhereEq: a renamed filter column finds no
-      // physical stat keys and admits every group (no pruning, still
-      // correct); the colmap projection restores the LOGICAL shape —
-      // renamed columns resolve, metadata-only drops stay dropped
-      maskedGroupRead(spark, root, meta, dirs)
-        .filter(col(column).cast("double").between(lo, hi))
-    }
-  }
-
-  /** Raw group paths → masked logical frame (rename mapping, equality
-    * deletes, deletion vectors) — the pruned-read sibling of [[read]],
-    * shared by [[readWhere]]/[[readWhereEq]]. Stats/bloom pruning stays
+    * skipped groups cost zero file opens. A snapshot the native dv
+    * reader serves is [[read]]'s frame with the band on top, its bounds
+    * pushed into [[pruneDirsForFilters]]' admission chain; other
+    * snapshots read the admitted groups through [[readDirsSubset]].
+    * Either way a renamed filter column finds no physical stat keys and
+    * admits every group (no pruning, still correct), and pruning stays
     * CONSERVATIVE under masks: a mask only removes rows, so a group
     * admitted by its (pre-mask) stats over-admits, never lies. */
-  private def maskedGroupRead(spark: SparkSession, root: String,
-                              meta: Map[String, String],
-                              dirPaths: Seq[String]): DataFrame = {
-    val hasDv = dvState(meta).nonEmpty
-    val raw0 = scanDirs(spark, dirPaths)
-    val raw = if (hasDv) withLineageCols(raw0) else raw0
-    val m = applyDvMask(spark, root, meta,
-      applyDeleteMask(spark, root, meta, applyColMap(meta, raw)))
-    if (hasDv) m.drop(FileCol, PosCol) else m
+  def readWhere(spark: SparkSession, root: String, column: String,
+                lo: Double, hi: Double): DataFrame = {
+    val v = latestVersion(spark, root)
+      .getOrElse(throw new IllegalStateException(s"no table at $root"))
+    val band = col(column).cast("double").between(lo, hi)
+    nativeDvFrame(spark, root, v, manifestMeta(spark, root, v)) match {
+      case Some(df) =>
+        // Catalyst unwraps the cast for narrower integral and float
+        // columns, so the band pushes as is; a long column's cast is
+        // lossy and stays put, but below 2^53 every long converts
+        // exactly, so long bounds select the same rows and push
+        val exact = Seq(lo, hi).forall(b => math.abs(b) < (1L << 53))
+        val long = df.schema.find(_.name.equalsIgnoreCase(column))
+          .exists(_.dataType == org.apache.spark.sql.types.LongType)
+        if (long && exact) df.filter(col(column) >= math.ceil(lo).toLong &&
+          col(column) <= math.floor(hi).toLong && band)
+        else df.filter(band)
+      case None => readDirsSubset(spark, root, Some(v),
+        selectGroups(spark, root, column, lo, hi).toSet).filter(band)
+    }
   }
 
   /** Build per-file-group Bloom-filter indexes for `cols` over the
@@ -2517,25 +2478,13 @@ object LakeTable {
                   value: Any): DataFrame = {
     val v = latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(s"no table at $root"))
-    val meta = manifestMeta(spark, root, v)
-    val native = nativeDvFrame(spark, root, v, meta)
-    if (native.isDefined)
-      return native.get.filter(col(column) === lit(value))
-    val eq = org.apache.spark.sql.sources.EqualTo(column, value)
-    val kept = readManifest(spark, root, v).filter(dir =>
-      partAdmit(meta, dir, eq) && statsAdmit(meta, dir, eq) &&
-        bloomAdmit(spark, root, meta, dir, eq))
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read(spark, root).schema)
-    else
-      // a renamed column simply finds no physical stat/bloom keys and
-      // admits every group — no pruning, still correct; the colmap
-      // projection restores the logical shape before the exact filter
-      maskedGroupRead(spark, root, meta,
-        kept.map(d => new Path(root, d).toString))
-        .filter(col(column) === lit(value))
+    // a renamed column simply finds no physical stat/bloom keys and
+    // admits every group — no pruning, still correct; the subset read
+    // restores the logical shape before the exact filter
+    nativeDvFrame(spark, root, v, manifestMeta(spark, root, v))
+      .getOrElse(readDirsSubset(spark, root, Some(v),
+        selectGroupsEq(spark, root, column, value).toSet))
+      .filter(col(column) === lit(value))
   }
 
   /** File groups an equality probe on `column = value` would scan —
@@ -2612,13 +2561,8 @@ object LakeTable {
     // subset here once DROPPED the MOR delete list, silently
     // resurrecting deleted rows on the next read (regression-tested)
     val carried = carryMeta(manifestMeta(spark, root, v)) - "schema"
-    // `schemaext` marks a schema that now EXTENDS the parquet footers
-    // (the new columns exist in no file yet) — the dv native-batch
-    // gate distinguishes this from a creation-declared schema, which
-    // every data file was validated against and reads natively
     commitVersion(spark, root, v + 1, readManifest(spark, root, v),
-      carried + ("op" -> "add-columns") + ("schema" -> evolved.json) +
-        ("schemaext" -> "1"))
+      carried + ("op" -> "add-columns") + ("schema" -> evolved.json))
   }
 
   // ---- column rename via column mapping (Delta's name-mapping) -------
@@ -2632,22 +2576,16 @@ object LakeTable {
         val Array(p, l) = kv.split("=", 2); (p, l)
       }
 
-  /** Physical → logical projection of a raw frame: renamed columns
-    * take their logical names, metadata-only-dropped columns (recorded
-    * by PHYSICAL name, which a drop removes from the rename map) are
-    * projected out. No-op without renames/drops — the common path pays
-    * nothing. */
+  /** Physical → logical projection of a raw frame ([[logicalName]]):
+    * renamed columns take their logical names, metadata-only-dropped
+    * columns (recorded by PHYSICAL name, which a drop removes from the
+    * rename map) are projected out. No-op without renames/drops — the
+    * common path pays nothing. */
   private def applyColMap(meta: Map[String, String],
-                          df: DataFrame): DataFrame = {
-    val renamed = colMapAt(meta).foldLeft(df) { case (d, (phys, log)) =>
-      if (d.columns.exists(_.equalsIgnoreCase(phys)))
-        d.withColumnRenamed(phys, log)
-      else d
-    }
-    colDropsAt(meta).foldLeft(renamed) { (d, c) =>
-      if (d.columns.exists(_.equalsIgnoreCase(c))) d.drop(c) else d
-    }
-  }
+                          df: DataFrame): DataFrame =
+    if (colMapAt(meta).isEmpty && colDropsAt(meta).isEmpty) df
+    else df.select(df.columns.toSeq.flatMap(c => logicalName(meta, c)
+      .map(df.col("`" + c.replace("`", "``") + "`").as(_))): _*)
 
   /** Logical → physical projection of an incoming batch (the write-side
     * inverse of [[applyColMap]]) — appended files always carry PHYSICAL
@@ -2664,6 +2602,28 @@ object LakeTable {
     * still present in the physical files until a rewrite. */
   private[sources] def colDropsAt(meta: Map[String, String]): Seq[String] =
     meta.get("coldrop").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+
+  /** The logical name a PHYSICAL parquet column reads as under a
+    * snapshot's column mapping: a renamed column its logical name, a
+    * metadata-only drop None, any other column itself. */
+  private[sources] def logicalName(meta: Map[String, String],
+      physical: String): Option[String] =
+    if (colDropsAt(meta).exists(_.equalsIgnoreCase(physical))) None
+    else Some(colMapAt(meta).find(_._1.equalsIgnoreCase(physical))
+      .fold(physical)(_._2))
+
+  /** The inverse of [[logicalName]]: the parquet column a LOGICAL column
+    * reads from. None when the mapping took that physical name away (it
+    * was renamed from or dropped) — the column then reads as typed
+    * nulls, as [[read]]'s declared-schema projection has it. */
+  private[sources] def physicalName(meta: Map[String, String],
+      logical: String): Option[String] = {
+    val renamed = colMapAt(meta)
+    renamed.find(_._2.equalsIgnoreCase(logical)).map(_._1).orElse(
+      if (renamed.exists(_._1.equalsIgnoreCase(logical)) ||
+          colDropsAt(meta).exists(_.equalsIgnoreCase(logical))) None
+      else Some(logical))
+  }
 
   /** Refuse a rename/drop of a column any committed metadata binds by
     * name — CHECK constraints, the MOR delete key, stats/bloom/ANN
@@ -2829,27 +2789,30 @@ object LakeTable {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  /** The snapshot's LOGICAL schema without building a read frame when
-    * possible: an ALTER/DDL-declared schema (the `schema` manifest key)
-    * IS the read projection — served straight from the (cached)
-    * manifest, no O(groups) file listing at analysis time. Without one,
-    * a snapshot with no column mapping reads as its groups' scan schema
-    * ([[scanDirs]]: the uniform footer schema, cached per group, else
-    * Spark's merged one) — the schema [[read]] returns, without
-    * building a read. Only mapped (or empty) snapshots build the full
-    * read's frame; the native dv reader never serves those, so its
-    * table's schema ([[GraftDvLakeTable]]) never calls back into
-    * [[read]]. */
+  /** The snapshot's LOGICAL schema without building a read frame: an
+    * ALTER/DDL-declared schema (the `schema` manifest key) IS the read
+    * projection — served straight from the (cached) manifest, no
+    * O(groups) file listing at analysis time. Without one, the groups'
+    * scan schema ([[scanDirs]]: the uniform footer schema, cached per
+    * group, else Spark's merged one) under the column mapping — renamed
+    * columns take their logical names, metadata-only drops leave — the
+    * schema [[read]] returns. Only an empty snapshot asks [[read]]
+    * (which demands a declared schema); the native dv reader's table
+    * ([[GraftDvLakeTable]]) therefore never calls back into [[read]]. */
   private[graft] def snapshotSchema(spark: SparkSession, root: String,
       version: Option[Int] = None)
       : org.apache.spark.sql.types.StructType =
     schemaOverrideAt(spark, root, version).getOrElse {
       val dirs = dataDirPaths(spark, root, version)
-      val meta = manifestMeta(spark, root,
-        version.getOrElse(versions(spark, root).last))
-      if (dirs.isEmpty || colMapAt(meta).nonEmpty || colDropsAt(meta).nonEmpty)
-        read(spark, root, version).schema
-      else uniformSchemaOf(spark, dirs).getOrElse(scanDirs(spark, dirs).schema)
+      if (dirs.isEmpty) read(spark, root, version).schema
+      else {
+        val meta = manifestMeta(spark, root,
+          version.getOrElse(versions(spark, root).last))
+        val footers =
+          uniformSchemaOf(spark, dirs).getOrElse(scanDirs(spark, dirs).schema)
+        org.apache.spark.sql.types.StructType(footers.fields.flatMap(f =>
+          logicalName(meta, f.name).map(n => f.copy(name = n))))
+      }
     }
 
   /** Snapshot read; `version = None` → latest (time travel otherwise).
@@ -2857,20 +2820,24 @@ object LakeTable {
     * before a column existed read it as null; an ALTER-declared schema
     * additionally projects columns no parquet group carries yet (typed
     * nulls, declared order). A deletion-vector snapshot the native
-    * reader serves ([[nativeDvOk]]) reads as ONE scan of the relation
-    * SQL reads too ([[GraftDvLakeTable]]): each file's mask applies in
-    * the reader and pushed filters prune groups by partition, stats and
-    * bloom; the other masked snapshots anti-join their masks. */
+    * reader serves ([[nativeDvOk]] — every column mapping and declared
+    * schema included) reads as ONE scan of the relation SQL reads too
+    * ([[GraftDvLakeTable]]): each file's mask applies in the reader and
+    * pushed filters prune groups by partition, stats and bloom; only
+    * equality deletes and oversized masks anti-join their masks. */
   def read(spark: SparkSession, root: String,
            version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = false)
 
   /** [[read]] plus row LINEAGE: every row also carries `__file` (its
-    * physical parquet path) and `__pos` (its row index within that
-    * file) — the positional identity deletion vectors key on, served
-    * by Spark's `_metadata` pseudo-column at zero extra I/O. Masks and
-    * projections apply exactly as in [[read]]. */
-  private[sources] def readWithLineage(spark: SparkSession, root: String,
+    * parquet file's key, [[fileKey]]) and `__pos` (its row index within
+    * that file) — the positional identity deletion vectors key on. A
+    * snapshot inside [[nativeDvOk]] serves them from the native dv
+    * reader's `__file`/`__pos` metadata columns (the relation
+    * merge-on-read staging and the SQL row-level scan share); the rest
+    * from Spark's `_metadata` pseudo-column. Masks and projections apply
+    * exactly as in [[read]]. */
+  private[graft] def readWithLineage(spark: SparkSession, root: String,
       version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = true)
 
@@ -2908,8 +2875,8 @@ object LakeTable {
     val v = version.getOrElse(versions(spark, root).last)
     val meta = manifestMeta(spark, root, v)
     val native =
-      if (keepLineage || keepDirs.isDefined) None
-      else nativeDvFrame(spark, root, v, meta)
+      if (keepDirs.isDefined) None
+      else nativeDvFrame(spark, root, v, meta, keepLineage)
     if (native.isDefined) return native.get
     val lineage = keepLineage || dvState(meta).nonEmpty
     val raw0 = scanDirs(spark, dirs)
@@ -2934,36 +2901,35 @@ object LakeTable {
   }
 
   /** Whether the native deletion-vector reader ([[GraftDvBatchScan]])
-    * serves a dv snapshot: no rename/drop mapping, no equality deletes,
-    * no ALTER-extended schema (`schemaext`; a CREATION-declared schema
-    * is what every data file was written and validated against, so it
-    * reads natively), and sidecars within the ship-with-partition bound
-    * [[GraftDvBatchScan.MaxMaskBytes]]. Other shapes keep the V1 bridge
-    * ([[GraftDvScan]]) and [[read]]'s anti-join path. */
+    * serves a dv snapshot: no equality deletes, and sidecars within the
+    * ship-with-partition bound [[GraftDvBatchScan.MaxMaskBytes]]. Column
+    * mappings and declared schemas are the reader's schema mapping. The
+    * other shapes keep the V1 bridge ([[GraftDvScan]]) and [[read]]'s
+    * anti-join path. */
   private[sources] def nativeDvOk(spark: SparkSession, root: String,
       meta: Map[String, String]): Boolean =
-    colMapAt(meta).isEmpty &&
-      colDropsAt(meta).isEmpty &&
-      deleteState(meta).isEmpty &&
-      !meta.contains("schemaext") &&
+    deleteState(meta).isEmpty &&
       dvSidecarBytes(spark, root, meta) <= GraftDvBatchScan.MaxMaskBytes
 
   /** Snapshot `v` as ONE scan of the native deletion-vector reader —
-    * each file's mask applied inside the reader, no lineage columns, no
-    * anti-join — when the reader serves it ([[nativeDvOk]]). None for
-    * snapshots without deletion vectors and for the shapes the
-    * anti-join path keeps. The relation is pinned to `v`: the frame
-    * serves the snapshot it was built on, whatever commits land before
-    * it runs. */
+    * each file's mask applied inside the reader, no anti-join, plus the
+    * reader's `__file`/`__pos` columns when `lineage` — when the reader
+    * serves it ([[nativeDvOk]]). None for snapshots without deletion
+    * vectors and for the shapes the anti-join path keeps. The relation
+    * is pinned to `v`: the frame serves the snapshot it was built on,
+    * whatever commits land before it runs. */
   private def nativeDvFrame(spark: SparkSession, root: String, v: Int,
-      meta: Map[String, String]): Option[DataFrame] =
+      meta: Map[String, String], lineage: Boolean = false): Option[DataFrame] =
     if (dvState(meta).isEmpty) None
     else {
       val t = new GraftDvLakeTable(root, root, Some(v))
       if (!t.native) None
-      else Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
-        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-          .create(t, None, None)))
+      else {
+        val rel = org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2Relation.create(t, None, None)
+        Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+          if (lineage) rel.withMetadataColumns() else rel))
+      }
     }
 
   /** File groups of snapshot `version` admitted by EVERY filter under
@@ -3565,10 +3531,8 @@ object LakeTable {
     * append the updated rows as a fresh file group, in ONE commit. A
     * point update to one row of a 1 GB file group costs O(matches)
     * bytes: the group is untouched on disk; every read path patches at
-    * scan time ([[read]]'s native reader skips each file's masked
-    * positions, [[GraftDvBatchScan]]; lineage reads anti-join the
-    * (file, pos) list, served by Spark's `_metadata` pseudo-column at
-    * zero extra scan I/O). Because
+    * scan time ([[read]]'s and [[readWithLineage]]'s native reader
+    * skips each file's masked positions, [[GraftDvBatchScan]]). Because
     * the mask names physical positions, the appended replacement rows —
     * and every later append — are never swallowed by it (the flaw a
     * key-equality mask would have). Time travel serves each version's
@@ -4067,9 +4031,10 @@ object LakeTable {
 
   /** POSITIONAL deletion-vector state of a manifest (Delta's deletion
     * vectors / Iceberg's position deletes): sidecar parquet dirs under
-    * `_deletes/dv-*`, each holding (`__file` absolute parquet path,
-    * `__pos` row index within it, `__op` 'U'pdate|'D'elete — the op
-    * tag feeds CDC classification only; masking ignores it). Unlike
+    * `_deletes/dv-*`, each holding (`__file` the data file's key
+    * ([[fileKey]]), `__pos` row index within it, `__op` 'U'pdate |
+    * 'D'elete — the op tag feeds CDC classification only; masking
+    * ignores it). Unlike
     * the table-wide EQUALITY delete ([[deleteState]]), a positional
     * mask names a row's physical identity, so rows appended AFTER the
     * mask are never affected — which is what lets a MOR UPDATE commit
@@ -4082,9 +4047,22 @@ object LakeTable {
   private[sources] val FileCol = "__file"
   private[sources] val PosCol = "__pos"
 
+  /** The one spelling of a data file's path in dv masks and `__file`
+    * values: the URL-encoded form Spark's `_metadata.file_path` yields,
+    * so masks written from any read path match on any other, whatever
+    * characters the table root holds. Re-parsed from the path's string
+    * form, because a listed path's URI may carry an empty authority
+    * (`file:///`) where Spark's has none (`file:/`). [[pathOfKey]]
+    * inverts it. */
+  private[sources] def fileKey(p: Path): String =
+    org.apache.spark.paths.SparkPath.fromPathString(p.toString).urlEncoded
+
+  private[sources] def pathOfKey(key: String): Path =
+    org.apache.spark.paths.SparkPath.fromUrlString(key).toPath
+
   /** Stamp row lineage onto a frame read DIRECTLY from parquet files:
-    * the absolute file path and the row index within it, from Spark's
-    * `_metadata` pseudo-column — zero extra I/O, and exactly the
+    * the file's key ([[fileKey]]) and the row index within it, from
+    * Spark's `_metadata` pseudo-column — zero extra I/O, and exactly the
     * identity the deletion-vector sidecars key on. Must run on the raw
     * scan frame, before any projection hides the metadata column. */
   private def withLineageCols(df: DataFrame): DataFrame = df
@@ -4093,7 +4071,10 @@ object LakeTable {
 
   /** Anti-join a lineage-carrying frame against the snapshot's
     * deletion vectors — a no-op for tables without them. The dv list
-    * is tiny (O(masked rows)); the planner broadcasts it. */
+    * is tiny (O(masked rows)); the planner broadcasts it. Only the
+    * snapshots outside [[nativeDvOk]] (equality deletes, oversized
+    * masks) and [[changes]]' churn reads take it; every other masked
+    * frame is the native reader's. */
   private def applyDvMask(spark: SparkSession, root: String,
                           meta: Map[String, String],
                           df: DataFrame): DataFrame =

@@ -29,16 +29,7 @@ object GraftLocalParquetWrite {
     * `destDir` (created if needed). Returns the written file's path. */
   def writeFile(spark: SparkSession, destDir: String, schema: StructType,
                 rows: Iterator[InternalRow]): String = {
-    def timed[A](tag: String)(body: => A): A =
-      if (!sys.env.contains("SPARK_GRAFT_TIMING")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"    [lwrite] $tag%-14s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        r
-      }
-    val job = timed("job conf")(
-      Job.getInstance(spark.sessionState.newHadoopConf()))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
     // local destinations write through RawLocalFileSystem: the default
     // ChecksumFileSystem wrapper spends most of the writer-open cost on
     // the .crc sidecar machinery (measured ~13 ms/open → ~5 ms), and
@@ -51,8 +42,8 @@ object GraftLocalParquetWrite {
         classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
       job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     }
-    val factory = timed("prepareWrite")(new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, schema))
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
     val attempt = new TaskAttemptID(
       new TaskID(new JobID(java.util.UUID.randomUUID().toString, 0),
         TaskType.MAP, 0), 0)
@@ -63,9 +54,9 @@ object GraftLocalParquetWrite {
     val file = new org.apache.hadoop.fs.Path(dir,
       s"part-00000-${java.util.UUID.randomUUID()}" +
         factory.getFileExtension(ctx)).toString
-    val writer = timed("newInstance")(factory.newInstance(file, schema, ctx))
+    val writer = factory.newInstance(file, schema, ctx)
     try rows.foreach(writer.write)
-    finally timed("write+close")(writer.close())
+    finally writer.close()
     file
   }
 }

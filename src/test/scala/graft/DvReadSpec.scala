@@ -7,10 +7,12 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Masked reads of deletion-vector snapshots: the Scala API and SQL
-  * both read the common dv snapshot through the native reader
-  * (`GraftDvBatchScan`) in one scan job — no footer-schema job, no
-  * anti-join — with files packed into few partitions. */
+/** Masked reads of deletion-vector snapshots: the Scala API (plain,
+  * lineage, range and point reads) and SQL read dv snapshots through
+  * the native reader (`GraftDvBatchScan`) in one scan job — no
+  * footer-schema job, no anti-join — with files packed into few
+  * partitions, column mappings and declared schemas included, and masks
+  * keyed by one spelling of each file's path. */
 class DvReadSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -20,13 +22,23 @@ class DvReadSpec extends SparkSpec {
   private def rows(keys: Seq[Long], s: Long => String): DataFrame =
     spark.createDataFrame(keys.map(k => Row(k, s(k))).asJava, Schema)
 
-  private def withWarehouse(catalog: String)(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dv_read").toString
+  /** A catalog over a fresh warehouse dir, `sub` below a temp dir. */
+  private def withWarehouse(catalog: String, sub: String = "")(
+      f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dv_read")
+    val wh = dir.resolve(sub).toString
     spark.conf.set(s"spark.sql.catalog.$catalog",
       "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$catalog.warehouse", dir)
-    try f(dir)
-    finally graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(dir))
+    spark.conf.set(s"spark.sql.catalog.$catalog.warehouse", wh)
+    try f(wh)
+    finally graft.util.Tmp.deleteRecursively(dir)
+  }
+
+  /** `df`, after checking its plan reads through the native reader. */
+  private def native(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftDvBatchScan"), plan)
+    df
   }
 
   private def sorted(df: DataFrame): Seq[(Long, String)] =
@@ -153,7 +165,7 @@ class DvReadSpec extends SparkSpec {
 
   test("the Scala API and SQL agree on a dv snapshot, latest and " +
     "VERSION AS OF, through the native reader; a renamed column reads " +
-    "through the bridge") {
+    "through it too") {
     withWarehouse("lakeDvr") { wh =>
       val root = s"$wh/t"
       LakeTable.create(spark, root, rows(0L until 40L, k => s"a$k"))
@@ -162,11 +174,6 @@ class DvReadSpec extends SparkSpec {
         Map("s" -> lit("U")))
       LakeTable.append(spark, root, rows(60L until 70L, k => s"c$k"))
       LakeTable.deleteWhereDv(spark, root, col("k") % 9L === 0L)
-      def native(df: DataFrame): DataFrame = {
-        assert(df.queryExecution.executedPlan.toString
-          .contains("GraftDvBatchScan"), df.queryExecution.executedPlan)
-        df
-      }
       val api = sorted(native(LakeTable.read(spark, root)))
       assert(api.size == 70 - 8)
       assert(api == sorted(native(spark.sql("SELECT * FROM lakeDvr.t"))))
@@ -181,8 +188,8 @@ class DvReadSpec extends SparkSpec {
       assert(old.size == 60 && old.count(_._2 == "U") == 5)
       assert(old == sorted(native(spark.sql(
         s"SELECT * FROM lakeDvr.t VERSION AS OF $vUpd"))))
-      // a rename mapping is outside the native reader: the API takes
-      // the anti-join read, SQL the V1 bridge, and both still mask
+      // a rename mapping is the native reader's schema mapping: the API
+      // and SQL both read it through GraftDvBatchScan, and both mask
       LakeTable.renameColumn(spark, root, "s", "label")
       val renamedApi = LakeTable.read(spark, root)
       val renamedSql = spark.sql("SELECT * FROM lakeDvr.t")
@@ -190,8 +197,7 @@ class DvReadSpec extends SparkSpec {
       assert(renamedSql.columns.toSeq == Seq("k", "label"))
       assert(sorted(renamedApi) == api && sorted(renamedSql) == api)
       val sqlPlan = renamedSql.queryExecution.executedPlan.toString
-      assert(sqlPlan.contains("GraftDvScan") &&
-        !sqlPlan.contains("GraftDvBatchScan"), sqlPlan)
+      assert(sqlPlan.contains("GraftDvBatchScan"), sqlPlan)
     }
   }
 
@@ -218,5 +224,158 @@ class DvReadSpec extends SparkSpec {
       assert(triples(api) == expected)
       assert(triples(sql) == expected)
     }
+  }
+
+  test("a table root holding a space and a '%' keeps its masks: API and " +
+    "SQL merge-on-read deletes hide their rows from LakeTable.read and " +
+    "SQL, and a following updateWhereMor brings none back") {
+    withWarehouse("lakeDvk", "dv a%b") { wh =>
+      val root = s"$wh/t"
+      LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      def check(want: Seq[(Long, String)]): Unit = {
+        assert(sorted(native(LakeTable.read(spark, root))) == want)
+        assert(sorted(native(spark.sql("SELECT * FROM lakeDvk.t"))) == want)
+      }
+      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
+      val afterApi = (0L until 20L).filter(_ % 7L != 0L)
+      check(afterApi.map(k => (k, s"a$k")))
+      withConf("spark.graft.update.mode" -> "mor")(
+        spark.sql("DELETE FROM lakeDvk.t WHERE k IN (3, 4)"))
+      assert(LakeTable.history(spark, root).last._2 == "delete-dv")
+      val afterSql = afterApi.filterNot(Set(3L, 4L))
+      check(afterSql.map(k => (k, s"a$k")))
+      LakeTable.updateWhereMor(spark, root, col("k") < 10L,
+        Map("s" -> lit("U")))
+      check(afterSql.map(k => (k, if (k < 10L) "U" else s"a$k")))
+    }
+  }
+
+  test("readWithLineage on a dv snapshot packed into one partition: " +
+    "(__file, __pos) equal _metadata.file_path/row_index of a raw " +
+    "parquet read, under pushdown-eligible filters") {
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_lin").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blockSize = conf.get("parquet.block.size")
+    try {
+      // small row groups, sorted keys: a pushed range skips row groups
+      // of the unmasked files
+      conf.setInt("parquet.block.size", 2048)
+      LakeTable.create(spark, root,
+        rows(0L until 3000L, k => f"s$k%06d").coalesce(1))
+      LakeTable.append(spark, root,
+        rows(3000L until 6000L, k => f"t$k%06d").coalesce(1))
+      // masks in the first group's file only; the update adds a group
+      LakeTable.deleteWhereDv(spark, root,
+        col("k") % 97L === 5L && col("k") < 3000L)
+      LakeTable.updateWhereMor(spark, root, col("k") === 11L,
+        Map("s" -> lit("U")))
+      val rowGroups = LakeTable.dataDirPaths(spark, root).take(2).map { d =>
+        val file = new java.io.File(d).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(file.toString), conf))
+        try r.getFooter.getBlocks.size finally r.close()
+      }
+      assert(rowGroups.forall(_ > 1), s"row groups per file: $rowGroups")
+      val raw = spark.read.parquet(LakeTable.dataDirPaths(spark, root): _*)
+        .select(col("k"), col("s"), col("_metadata.file_path").as("f"),
+          col("_metadata.row_index").as("p"))
+      def triples(df: DataFrame): Seq[(Long, String, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+          .toSeq.sorted
+      withConf("spark.sql.files.maxPartitionBytes" -> "1g",
+          "spark.sql.files.minPartitionNum" -> "1") {
+        Seq(col("k") >= 2500L && col("k") < 3500L, col("k") > 5900L,
+            col("k") === 11L, col("s") === "t004242", lit(true)).foreach { p =>
+          val lin = LakeTable.readWithLineage(spark, root).filter(p)
+          assert(lin.columns.toSeq == Seq("k", "s", "__file", "__pos"))
+          assert(scanOf(native(lin)).inputRDD.getNumPartitions == 1)
+          val want = raw.filter(p)
+            .filter(!(col("k") % 97L === 5L && col("k") < 3000L))
+            .filter(!(col("k") === 11L && col("s") =!= "U"))
+          assert(triples(lin.select("k", "__file", "__pos")) ==
+            triples(want.select("k", "f", "p")), s"filter $p")
+        }
+      }
+    } finally {
+      if (blockSize == null) conf.unset("parquet.block.size")
+      else conf.set("parquet.block.size", blockSize)
+      graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
+    }
+  }
+
+  test("renamed+dropped and ALTER-extended dv snapshots read through " +
+    "GraftDvBatchScan on the API and SQL; readWhere/readWhereEq on a " +
+    "renamed column return the right rows") {
+    withWarehouse("lakeDvx") { wh =>
+      val root = s"$wh/t"
+      val three = StructType(Schema.fields :+ StructField("x", LongType))
+      LakeTable.create(spark, root, spark.createDataFrame(
+        (0L until 30L).map(k => Row(k, s"a$k", k * 10L)).asJava, three))
+      LakeTable.deleteWhereDv(spark, root, col("k") % 5L === 0L)
+      LakeTable.renameColumn(spark, root, "s", "label")
+      LakeTable.dropColumn(spark, root, "x")
+      // a rename onto the physical name the first one freed: logical
+      // `s` now reads physical `k`, logical `label` physical `s`
+      LakeTable.renameColumn(spark, root, "k", "s")
+      val want = (0L until 30L).filter(_ % 5L != 0L).map(k => (k, s"a$k"))
+      Seq(LakeTable.read(spark, root), spark.sql("SELECT * FROM lakeDvx.t"))
+        .foreach { df =>
+          assert(df.columns.toSeq == Seq("s", "label"))
+          assert(sorted(native(df)) == want)
+        }
+      assert(sorted(native(LakeTable.readWhere(spark, root, "s", 7, 12))) ==
+        want.filter(r => r._1 >= 7L && r._1 <= 12L))
+      assert(sorted(native(LakeTable.readWhereEq(spark, root, "s", 13L))) ==
+        Seq((13L, "a13")))
+      assert(sorted(native(
+        LakeTable.readWhereEq(spark, root, "label", "a13"))) ==
+        Seq((13L, "a13")))
+      assert(LakeTable.readWhereEq(spark, root, "label", "a10").count() == 0L)
+      assert(sorted(native(spark.sql(
+        "SELECT * FROM lakeDvx.t WHERE label = 'a13' OR s = 4"))) ==
+        Seq((4L, "a4"), (13L, "a13")))
+      // ALTER-extended: the added columns are absent from older files
+      val ext = s"$wh/e"
+      LakeTable.create(spark, ext, rows(0L until 20L, k => s"a$k"))
+      LakeTable.deleteWhereDv(spark, ext, col("k") % 3L === 0L)
+      LakeTable.evolveSchema(spark, ext, StructType(Seq(
+        StructField("note", StringType), StructField("score", LongType))))
+      LakeTable.append(spark, ext, spark.createDataFrame(Seq(
+        Row(100L, "b100", "n", 7L)).asJava, StructType(Schema.fields ++ Seq(
+          StructField("note", StringType), StructField("score", LongType)))))
+      LakeTable.deleteWhereDv(spark, ext, col("k") === 1L)
+      def quads(df: DataFrame): Seq[(Long, String, String, Option[Long])] =
+        native(df).collect().map(r => (r.getLong(0), r.getString(1),
+          r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Long])))
+          .toSeq.sortBy(_._1)
+      val wantExt = (0L until 20L).filter(k => k % 3L != 0L && k != 1L)
+        .map(k => (k, s"a$k", null: String, Option.empty[Long])) :+
+        ((100L, "b100", "n", Some(7L)))
+      assert(quads(LakeTable.read(spark, ext)) == wantExt)
+      assert(quads(spark.sql("SELECT * FROM lakeDvx.e")) == wantExt)
+      assert(quads(spark.sql("SELECT * FROM lakeDvx.e WHERE score = 7")) ==
+        Seq((100L, "b100", "n", Some(7L))))
+    }
+  }
+
+  test("readWhere on a dv snapshot reads through the native reader and " +
+    "prunes groups by min/max stats on long and int columns") {
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_rw").toString
+    try {
+      import spark.implicits._
+      LakeTable.createClustered(spark, root,
+        (1L to 100L).map(i => (i, i.toInt)).toDF("id", "n"), "id",
+        numGroups = 4, statsCols = Seq("id", "n"))
+      LakeTable.deleteWhereDv(spark, root, col("id") === 15L)
+      Seq("id", "n").foreach { c =>
+        graft.sources.GraftDvScan.lastPrune = None
+        val df = native(LakeTable.readWhere(spark, root, c, 9.5, 20.5))
+        assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
+          (10L to 20L).filter(_ != 15L), c)
+        assert(graft.sources.GraftDvScan.lastPrune.contains((1, 4)), c)
+      }
+    } finally graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
   }
 }

@@ -1326,9 +1326,8 @@ class GraftLakeCatalogSpec extends SparkSpec {
         spark.conf.unset("spark.sql.adaptive.enabled")
         spark.catalog.dropTempView("sb_fact")
       }
-      // exotic snapshots keep the V1 bridge: an ALTER-declared schema
-      // routes the scan back through GraftDvScan (typed-null projection
-      // is readDirsSubset's job) and still reads right
+      // an ALTER-declared schema reads through the native batch: the
+      // added column is absent from every file and reads as typed nulls
       LakeTable.evolveSchema(spark, dimRoot,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("note",
@@ -1336,9 +1335,9 @@ class GraftLakeCatalogSpec extends SparkSpec {
       val again = spark.sql("SELECT count(*), count(note) FROM lakeSb.dim")
       val r2 = again.head()
       assert(r2.getLong(0) == 50L && r2.getLong(1) == 0L)
-      assert(!again.queryExecution.executedPlan.toString
+      assert(again.queryExecution.executedPlan.toString
         .contains("GraftDvBatchScan"),
-        "declared-schema snapshots must take the V1 bridge")
+        "declared-schema snapshots must take the native batch")
     }
   }
 
@@ -1428,14 +1427,14 @@ class GraftLakeCatalogSpec extends SparkSpec {
         .contains("GraftDvBatchScan"),
         "SQL-created dv tables must take the native batch, not the " +
           "V1 bridge:\n" + q.queryExecution.executedPlan)
-      // an ALTER-extended schema still reroutes to the bridge
+      // an ALTER-extended schema reads through the native batch too
       LakeTable.evolveSchema(spark, s"$wh/d",
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("note",
             org.apache.spark.sql.types.StringType))))
       val q2 = spark.sql("SELECT count(note) FROM lakeNs.d")
       assert(q2.head().getLong(0) == 0L)
-      assert(!q2.queryExecution.executedPlan.toString
+      assert(q2.queryExecution.executedPlan.toString
         .contains("GraftDvBatchScan"))
     }
   }
