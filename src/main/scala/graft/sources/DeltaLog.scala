@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pointer, written every [[CheckpointInterval]] commits) so log replay
   * is bounded by the checkpoint interval instead of O(commits):
   * snapshot reconstruction seeds from the newest checkpoint at or below
-  * the requested version and replays only the JSON tail. It does NOT
+  * the requested version and replays only the JSON tail. Writers never
+  * replay: a checkpoint's `add` rows come from the manifest's data dirs,
+  * listed on the driver like the per-commit mirror. It does NOT
   * implement the Delta kernel's DV / column-mapping features or
   * multi-writer log coordination (the manifest's atomic rename stays
   * the single-writer commit point; no Delta jars exist in this
@@ -33,17 +35,17 @@ object DeltaLog {
   /** Checkpoint row shape (classic form): exactly one non-null action
     * column per row; field names/shapes follow the Delta spec so a
     * log-walking reader recognizes them. */
-  private[sources] case class CpProtocol(minReaderVersion: Int,
-                                         minWriterVersion: Int)
-  private[sources] case class CpFormat(provider: String,
-                                       options: Map[String, String])
-  private[sources] case class CpMetaData(id: String, format: CpFormat,
+  private[graft] case class CpProtocol(minReaderVersion: Int,
+                                       minWriterVersion: Int)
+  private[graft] case class CpFormat(provider: String,
+                                     options: Map[String, String])
+  private[graft] case class CpMetaData(id: String, format: CpFormat,
       schemaString: String, partitionColumns: Seq[String],
       configuration: Map[String, String], createdTime: Long)
-  private[sources] case class CpAdd(path: String,
+  private[graft] case class CpAdd(path: String,
       partitionValues: Map[String, String], size: Long,
       modificationTime: Long, dataChange: Boolean)
-  private[sources] case class CpRow(protocol: Option[CpProtocol],
+  private[graft] case class CpRow(protocol: Option[CpProtocol],
       metaData: Option[CpMetaData], add: Option[CpAdd])
 
   private def fs(spark: SparkSession, root: String): FileSystem =
@@ -57,6 +59,10 @@ object DeltaLog {
 
   private def checkpointPath(root: String, deltaV: Long) =
     new Path(logDir(root), f"$deltaV%020d.checkpoint.parquet")
+
+  /** Existence probe: NIO on local mounts ([[LakeTable.localNio]]). */
+  private def exists(f: FileSystem, p: Path): Boolean =
+    LakeTable.localNio(f, p).fold(f.exists(p))(java.nio.file.Files.exists(_))
 
   private def readText(f: FileSystem, p: Path): String =
     LakeTable.localNio(f, p) match {
@@ -136,7 +142,11 @@ object DeltaLog {
     * for files new in this version, `remove` for files dropped, plus
     * `protocol` + `metaData` on the first commit. Idempotent per
     * version (existing log file wins — a replayed commit after a crash
-    * between manifest rename and log write re-lands identically). */
+    * between manifest rename and log write re-lands identically). Every
+    * [[CheckpointInterval]]-th version also lands a checkpoint, built
+    * from the manifest on the driver ([[writeCheckpoint]]). Neither
+    * step launches a Spark job, save the v1 schema of a table created
+    * over foreign parquet. */
   private[sources] def mirrorCommit(spark: SparkSession, root: String,
                                     manifestV: Int, prevDirs: Seq[String],
                                     curDirs: Seq[String],
@@ -145,7 +155,7 @@ object DeltaLog {
     val f = fs(spark, root)
     val dest = logPath(root, manifestV - 1L)
     val destNio = LakeTable.localNio(f, dest)
-    if (destNio.fold(f.exists(dest))(java.nio.file.Files.exists(_))) return
+    if (exists(f, dest)) return
     // data dirs are write-once: the file-level diff is exactly the
     // dir-level diff, so list ONLY the changed dirs — O(churn) fs ops
     // per mirrored commit, never O(groups)
@@ -159,14 +169,17 @@ object DeltaLog {
     val header: Seq[String] =
       if (manifestV == 1) {
         // schemaString: the manifest-declared schema when present
-        // (CREATE TABLE without data has no parquet to read), else
-        // Spark's StructType JSON read from the data just written (one
-        // footer read; never re-runs input lineage)
-        // every group shares one schema by construction — reading ONE
-        // dir's footer is the whole answer (listing all of them made
-        // the v1 mirror O(groups) on a many-partition create)
-        val schemaJson = declaredSchema.getOrElse(spark.read
-          .parquet(new Path(root, curDirs.head).toString).schema.json)
+        // (CREATE TABLE without data has no parquet to read), else the
+        // schema Spark reads the data just written as. Every group
+        // shares one schema by construction, so ONE dir's answer is
+        // the whole answer. The footer-schema cache gives it in the
+        // nullable form Spark reads it as, with no schema job; foreign
+        // parquet, whose footer lacks Spark's schema, asks Spark.
+        val schemaJson = declaredSchema.getOrElse {
+          val dir = new Path(root, curDirs.head).toString
+          LakeTable.uniformSchemaOf(spark, Seq(dir))
+            .getOrElse(spark.read.parquet(dir).schema).json
+        }
         Seq(
           """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
           s"""{"metaData":{"id":"${java.util.UUID.randomUUID()}","format":{"provider":"parquet","options":{}},"schemaString":"${escape(schemaJson)}","partitionColumns":[],"configuration":{},"createdTime":$now}}""")
@@ -231,7 +244,7 @@ object DeltaLog {
   private def metaDataInfo(spark: SparkSession, root: String): CpMetaData = {
     val f = fs(spark, root)
     val v0 = logPath(root, 0L)
-    if (f.exists(v0)) {
+    if (exists(f, v0)) {
       val line = readText(f, v0).split("\n")
         .find(_.contains(""""metaData":{""")).getOrElse(
           sys.error(s"no metaData action in $v0"))
@@ -256,77 +269,107 @@ object DeltaLog {
     }
   }
 
+  /** `CpRow`'s encoder, derived once per JVM: deriving it by reflection
+    * costs ~60-90 ms per call (~320 ms on the first). */
+  private lazy val cpRowEncoder =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[CpRow]()
+
   /** Write a classic-form checkpoint at `deltaV` (default: latest):
     * one parquet file holding the full action snapshot — protocol,
     * metaData, and one `add` per active file — plus the
     * `_last_checkpoint` pointer. Idempotent per version. Replay cost
     * from then on is the JSON tail after the checkpoint, not the whole
     * log — the piece that keeps a long-lived table's reads O(interval)
-    * instead of O(commits). */
+    * instead of O(commits).
+    *
+    * The snapshot is derived from the manifest, not by replaying the
+    * log: the active files at delta version `v` are the files of
+    * manifest version `v + 1`'s data dirs. Data dirs are write-once and
+    * every mirrored commit is exactly the file diff of its dirs, so the
+    * listing equals the replay (and repairs a version whose mirror a
+    * crash skipped). Bounded checkpoints are written on the driver, so
+    * the checkpointing commit costs about what an ordinary one does.
+    * Readers still replay checkpoint + JSON tail ([[activeFiles]]). */
   def writeCheckpoint(spark: SparkSession, root: String,
                       deltaV: Option[Long] = None): Unit = {
     val f = fs(spark, root)
-    val vs = versions(spark, root) ++ checkpointVersions(spark, root)
-    require(vs.nonEmpty, s"no _delta_log at $root")
-    val v = deltaV.getOrElse(vs.max)
-    val dest = checkpointPath(root, v)
-    if (f.exists(dest)) return
-    // snapshot at v via (checkpoint-aware) replay; sizes/mtimes from
-    // the live files — they are active, so they exist. NIO attributes
-    // on local mounts: Hadoop getFileStatus is ~1-2 ms per file and
-    // this loop is O(active files) per checkpoint.
-    val adds = activeFiles(spark, root, v).sorted.map { p =>
-      val fp = new Path(root, p)
-      LakeTable.localNio(f, fp) match {
-        case Some(np) =>
-          val at = java.nio.file.Files.readAttributes(np,
-            classOf[java.nio.file.attribute.BasicFileAttributes])
-          CpAdd(p, Map.empty, at.size(), at.lastModifiedTime().toMillis,
-            dataChange = true)
-        case None =>
-          val st = f.getFileStatus(fp)
-          CpAdd(p, Map.empty, st.getLen, st.getModificationTime,
-            dataChange = true)
-      }
+    val v = deltaV.getOrElse {
+      val vs = versions(spark, root) ++ checkpointVersions(spark, root)
+      require(vs.nonEmpty, s"no _delta_log at $root")
+      vs.max
     }
+    val dest = checkpointPath(root, v)
+    if (exists(f, dest)) return
+    val adds = LakeTable.dataDirsAt(spark, root, (v + 1).toInt)
+      .flatMap(listDataFiles(spark, root, _)).sortBy(_._1)
+      .map { case (p, size, mtime) =>
+        CpAdd(p, Map.empty, size, mtime, dataChange = true)
+      }
     val meta = metaDataInfo(spark, root)
     val rows: Seq[CpRow] =
       CpRow(Some(CpProtocol(1, 2)), None, None) +:
         CpRow(None, Some(meta), None) +:
         adds.map(a => CpRow(None, None, Some(a)))
-    import spark.implicits._
     val tmp = new Path(logDir(root), s".cp-tmp-$v-${System.nanoTime()}")
     // bounded checkpoints (the overwhelmingly common case) write the
     // one parquet file driver-side — the rows are driver-resident by
     // construction, and a coalesce(1) write JOB is ~0.2-0.4 s of pure
-    // scheduler overhead per 10th commit (guide §1.2 / the
-    // GraftLocalParquetWrite discipline); unbounded snapshots keep the
-    // job path.
-    val ds = rows.toDS()
-    val part = ds.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.data.lengthCompare(100000) <= 0 =>
+    // scheduler overhead per 10th commit (the GraftLocalParquetWrite
+    // discipline); unbounded snapshots keep the job path.
+    val part =
+      if (rows.lengthCompare(100000) <= 0) {
+        // the serializer reuses its output row; the writer consumes
+        // each row before the next is produced
+        val ser = cpRowEncoder.createSerializer()
         new Path(org.apache.spark.sql.execution.datasources.parquet
-          .GraftLocalParquetWrite.writeFile(spark, tmp.toString, l.schema,
-            l.data.iterator))
-      case _ =>
-        ds.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          .GraftLocalParquetWrite.writeFile(spark, tmp.toString,
+            cpRowEncoder.schema, rows.iterator.map(ser)))
+      } else {
+        spark.createDataset(rows)(cpRowEncoder).coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
         f.listStatus(tmp).map(_.getPath)
           .find(p => p.getName.startsWith("part-") &&
             p.getName.endsWith(".parquet"))
           .getOrElse(sys.error(s"no part file under $tmp"))
-    }
+      }
     // atomic rename; a loser (concurrent checkpointer won) cleans up
     if (!f.rename(part, dest)) { f.delete(tmp, true); return }
     f.delete(tmp, true)
+    publishLastCheckpoint(f, root, v, rows.length)
+  }
+
+  /** Point `_last_checkpoint` at checkpoint `v` unless it already names
+    * a newer one, so an explicit checkpoint of an older version never
+    * moves the pointer backwards. Local mounts replace the pointer in
+    * one atomic rename, so it never vanishes; other filesystems keep
+    * Hadoop's delete + rename. */
+  private def publishLastCheckpoint(f: FileSystem, root: String, v: Long,
+                                    size: Int): Unit = {
     val lc = new Path(logDir(root), "_last_checkpoint")
-    val lcTmp = new Path(logDir(root), s".lc-tmp-${System.nanoTime()}")
-    val out = f.create(lcTmp, true)
-    try out.write(s"""{"version":$v,"size":${rows.length}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(lc, false)
-    if (!f.rename(lcTmp, lc)) f.delete(lcTmp, false)
+    val current = scala.util.Try(readText(f, lc)).toOption
+      .flatMap(""""version":(\d+)""".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong)
+    if (current.exists(_ > v)) return
+    val body = s"""{"version":$v,"size":$size}"""
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val tmp = new Path(logDir(root), s".lc-tmp-${System.nanoTime()}")
+    LakeTable.localNio(f, lc) match {
+      case Some(lp) =>
+        import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+        val tp = lp.resolveSibling(tmp.getName)
+        Files.write(tp, body, StandardOpenOption.CREATE_NEW,
+          StandardOpenOption.WRITE)
+        // Hadoop's local FS verifies a pointer against the checksum
+        // sidecar it wrote with it; a stale one would fail its reads
+        Files.deleteIfExists(lp.resolveSibling("._last_checkpoint.crc"))
+        Files.move(tp, lp, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      case None =>
+        val out = f.create(tmp, true)
+        try out.write(body) finally out.close()
+        f.delete(lc, false)
+        if (!f.rename(tmp, lc)) f.delete(tmp, false)
+    }
   }
 
   /** Delta versions present in the log, ascending (0-based). */

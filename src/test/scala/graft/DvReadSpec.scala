@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.LakeTable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -47,50 +46,6 @@ class DvReadSpec extends SparkSpec {
   private def withConf[A](kv: (String, String)*)(body: => A): A = {
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
-  /** Spark jobs `body` launches, counted by a SparkListener. A marker
-    * job run afterwards flushes the listener bus: events arrive in
-    * order, so once the marker's start is seen every earlier job start
-    * has been counted. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val prop = "graft.dvreadspec.phase"
-    val counted = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
-          case Some("body") => counted.incrementAndGet()
-          case Some("marker") => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(prop, "body")
-      val out = try body finally sc.setLocalProperty(prop, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(prop, null)
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, counted.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** The Spark schema a group's writer recorded in its first file's
-    * footer. */
-  private def footerSchema(dir: String): StructType = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val file = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toString), conf))
-    try org.apache.spark.sql.types.DataType.fromJson(
-        r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-      .asInstanceOf[StructType]
-    finally r.close()
   }
 
   private def parquetFiles(root: String): Int =

@@ -122,6 +122,127 @@ class LakeTableSpec extends SparkSpec {
       // manifest v10 = delta v9 → auto checkpoint at 9
       assert(DeltaLog.checkpointVersions(spark, root) == Seq(9L))
       assert(DeltaLog.read(spark, root).count() == 10)
+      // an explicit checkpoint of an older version leaves the pointer
+      // at the newest one
+      def lastCheckpoint = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, "_delta_log", "_last_checkpoint")))
+      assert(lastCheckpoint.contains(""""version":9"""))
+      DeltaLog.writeCheckpoint(spark, root, Some(3L))
+      assert(DeltaLog.checkpointVersions(spark, root) == Seq(3L, 9L))
+      assert(lastCheckpoint.contains(""""version":9"""))
+      assert(DeltaLog.read(spark, root).count() == 10)
+    }
+  }
+
+  /** Active files (path, size, mtime) at delta version `upTo`, by
+    * replaying the JSON commits 0..upTo. */
+  private def replayAdds(root: String, upTo: Long): Seq[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    (0L to upTo).foldLeft(Map.empty[String, (Long, Long)]) { (acc, v) =>
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(root,
+          "_delta_log", f"$v%020d.json")).asScala.foldLeft(acc) { (m, line) =>
+        val n = om.readTree(line)
+        if (n.has("add")) {
+          val a = n.get("add")
+          m + (a.get("path").asText -> ((a.get("size").asLong,
+            a.get("modificationTime").asLong)))
+        } else if (n.has("remove")) m - n.get("remove").get("path").asText
+        else m
+      }
+    }.toSeq.map { case (p, (size, mtime)) => (p, size, mtime) }.sorted
+  }
+
+  /** The `add` rows (path, size, mtime) of the checkpoint at `v`. */
+  private def checkpointAdds(root: String, v: Long): Seq[(String, Long, Long)] =
+    spark.read.parquet(java.nio.file.Paths.get(root, "_delta_log",
+        f"$v%020d.checkpoint.parquet").toString)
+      .where(col("add").isNotNull)
+      .select("add.path", "add.size", "add.modificationTime").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+  test("checkpoints list the manifest's files: equal to the JSON replay") {
+    withTable { root =>
+      import graft.sources.DeltaLog
+      import spark.implicits._
+      def batch(ids: Long*) = ids.map(i => (i, s"r$i")).toDF("id", "tag")
+      LakeTable.create(spark, root, batch(1L, 2L, 3L))
+      LakeTable.append(spark, root, batch(4L))
+      LakeTable.append(spark, root, batch(5L, 6L))
+      LakeTable.merge(spark, root, Seq((2L, "m2"), (7L, "m7"))
+        .toDF("id", "tag"), "id")
+      LakeTable.deleteWhere(spark, root, col("id") === 1L)
+      LakeTable.append(spark, root, batch(8L))
+      LakeTable.restore(spark, root, 3)
+      LakeTable.append(spark, root, batch(9L))
+      LakeTable.merge(spark, root, Seq((4L, "m4")).toDF("id", "tag"), "id")
+      LakeTable.append(spark, root, batch(10L))
+      // the chain really removes files and re-adds old dirs
+      val log = (0 to 9).map(v => new String(java.nio.file.Files
+        .readAllBytes(java.nio.file.Paths.get(root, "_delta_log",
+          f"$v%020d.json"))))
+      assert(log(4).contains(""""remove":{"path":""""))
+      assert(log(6).contains(""""add":{"path":"""") &&
+        log(6).contains(""""remove":{"path":""""))
+      assert(DeltaLog.checkpointVersions(spark, root) == Seq(9L))
+      assert(checkpointAdds(root, 9L) == replayAdds(root, 9L))
+      assert(footerSchema(s"$root/_delta_log") ==
+        org.apache.spark.sql.Encoders.product[DeltaLog.CpRow].schema)
+      // an explicit checkpoint of an older version lists that version
+      DeltaLog.writeCheckpoint(spark, root, Some(4L))
+      assert(checkpointAdds(root, 4L) == replayAdds(root, 4L))
+      assert(checkpointAdds(root, 4L) != checkpointAdds(root, 9L))
+    }
+  }
+
+  test("checkpointing appends of a local batch launch no Spark job") {
+    withTable { root =>
+      import graft.sources.DeltaLog
+      import spark.implicits._
+      def batch(i: Int) = Seq((i.toLong, s"r$i")).toDF("id", "tag")
+      LakeTable.create(spark, root, batch(0))
+      // every 10th commit checkpoints; from the 20th on, a log replay
+      // would have to read the previous checkpoint
+      val jobs = (1 to 19).flatMap { i =>
+        val (v, n) = jobsDuring(LakeTable.append(spark, root, batch(i)))
+        if (v % DeltaLog.CheckpointInterval == 0) Some(v -> n) else None
+      }
+      assert(jobs == Seq(10 -> 0, 20 -> 0))
+      assert(DeltaLog.checkpointVersions(spark, root) == Seq(9L, 19L))
+      assert(DeltaLog.read(spark, root).count() == 20)
+    }
+  }
+
+  test("create's metaData schemaString is the schema Spark reads the data as") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val nested = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("ts", TimestampType),
+      StructField("pt", StructType(Seq(
+        StructField("x", DoubleType, nullable = false),
+        StructField("tags", ArrayType(StringType, containsNull = false))))),
+      StructField("m", MapType(StringType, IntegerType,
+        valueContainsNull = false))))
+    val nestedRows = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
+        Row(1.5, Seq("a", "b")), Map("k" -> 1))), nested)
+    val batches = Seq(
+      "local" -> Seq((1L, "a", 10.0)).toDF("id", "name", "v"),
+      "parquet" -> Tables.load(spark, sf, "nation"),
+      "nested" -> nestedRows)
+    for ((label, df) <- batches) withTable { root =>
+      LakeTable.create(spark, root, df)
+      val v0 = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(root,
+        "_delta_log", "00000000000000000000.json"))
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val nodes = (0 until v0.size).map(i => om.readTree(v0.get(i)))
+      val schemaString = nodes.find(_.has("metaData")).get
+        .get("metaData").get("schemaString").asText
+      val addPath = nodes.find(_.has("add")).get.get("add").get("path").asText
+      val dir = new org.apache.hadoop.fs.Path(root, addPath).getParent.toString
+      assert(schemaString == spark.read.parquet(dir).schema.json, label)
     }
   }
 
