@@ -5,6 +5,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -24,6 +25,13 @@ import java.util.OptionalLong
   *  - the SAME manifest admission chain prunes file groups before any
   *    footer opens ([[LakeTable.pruneDirsForFilters]] — partition
   *    values, min/max stats, bloom);
+  *  - the surviving groups' files (each group dir listed once per JVM,
+  *    [[GraftDvBatchScan.listGroup]]) are skipped when their parquet
+  *    footer's row-group stats rule every row group out under the
+  *    pushed filters ([[GraftDvBatchScan.footerSkip]]): the STATISTICS
+  *    check each task's parquet reader runs after opening the file,
+  *    done on the driver before the open, on footers cached per file
+  *    identity — so a point read opens the files that can hold its key;
   *  - surviving files read through Spark's parquet reader (vectorized
   *    underneath for atomic schemas) with the translatable filters
   *    pushed for row-group pruning on UNMASKED files;
@@ -45,15 +53,22 @@ import java.util.OptionalLong
   *  - files pack into partitions by size the way Spark's own file scans
   *    do ([[GraftDvBatchScan.pack]]), so a snapshot of many small groups
   *    runs a handful of tasks, not one per file;
+  *  - planning runs once per scan: Spark asks for the partitions and
+  *    the reader factory more than once per query, and both are lazy
+  *    vals here (masks load once); the factory builds only the parquet
+  *    readers its files use — each build broadcasts the Hadoop conf;
   *  - [[SupportsReportStatistics]] reports the kept files' byte size,
   *    so the STATIC planner broadcasts a small dv dimension — no AQE
-  *    needed.
+  *    needed;
+  *  - driver metrics on the executed scan ([[GraftDvScanMetrics]]):
+  *    files after manifest admission, files kept by footer stats,
+  *    footer-cache misses and parquet readers built.
   *
   * Spark re-applies the full predicate above the scan (every filter is
-  * returned as residual by the builders), so pushdown here is a strict
-  * optimization; filters on a column the mapping renames or hides are
-  * not pushed at all. Snapshots with equality deletes or masks past
-  * [[GraftDvBatchScan.MaxMaskBytes]] stay outside
+  * returned as residual by the builders), so pushdown and skipping here
+  * are strict optimizations; filters on a column the mapping renames or
+  * hides are not pushed at all. Snapshots with equality deletes or masks
+  * past [[GraftDvBatchScan.MaxMaskBytes]] stay outside
   * ([[LakeTable.nativeDvOk]]). Mask state is O(churn), never O(table):
   * the planner ships each file's own compressed mask with its
   * partition, and [[LakeTable.rewriteDeletes]] folds masks away.
@@ -62,6 +77,7 @@ private[sources] final class GraftDvBatchScan(
     root: String, version: Option[Int], tableSchema: StructType,
     requiredSchema: StructType, filters: Seq[Filter])
     extends Scan with Batch with SupportsReportStatistics {
+  import GraftDvBatchScan.Listed
 
   private def spark = SparkSession.active
 
@@ -81,6 +97,11 @@ private[sources] final class GraftDvBatchScan(
   private lazy val pushable: Seq[Filter] =
     filters.filter(_.references.forall(r => physical(r).contains(r)))
 
+  // the filters parquet sees (footer skipping and row-group pruning),
+  // under Spark's own switch for parquet pushdown
+  private lazy val parquetFilters: Seq[Filter] =
+    if (spark.sessionState.conf.parquetFilterPushDown) pushable else Nil
+
   // resolved once per scan; planning and statistics share it
   private lazy val pruned: (Seq[String], Int) = {
     val p = LakeTable.pruneDirsForFilters(spark, root, Some(snapshot),
@@ -89,15 +110,28 @@ private[sources] final class GraftDvBatchScan(
     p
   }
 
-  private lazy val keptFiles: Seq[(String, Long)] = {
-    val f = LakeTable.fileSystem(spark, root)
-    pruned._1.flatMap { d =>
-      f.listStatus(new Path(root, d))
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-        .map(st => (LakeTable.fileKey(st.getPath), st.getLen))
+  private lazy val admitted: Seq[Listed] = pruned._1.flatMap(d =>
+    GraftDvBatchScan.listGroup(spark, new Path(root, d).toString))
+
+  @volatile private var footerMisses = 0
+  @volatile private var readersBuilt = 0
+
+  private lazy val keptFiles: Seq[Listed] =
+    if (parquetFilters.isEmpty) admitted
+    else {
+      val (kept, misses) =
+        GraftDvBatchScan.footerSkip(spark, admitted, parquetFilters)
+      footerMisses = misses
+      kept
     }
+
+  private lazy val files: Seq[GraftDvFile] = {
+    val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
+    keptFiles.map(f => GraftDvFile(f.key, f.length, masks.getOrElse(f.key, null)))
   }
+
+  private lazy val partitions: Array[InputPartition] =
+    GraftDvBatchScan.pack(spark, files).toArray
 
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
@@ -105,25 +139,29 @@ private[sources] final class GraftDvBatchScan(
     s"GraftDvBatchScan `$root`" + version.fold("")(v => s"@v$v") +
       (if (filters.isEmpty) "" else filters.mkString(" [", ", ", "]"))
 
-  /** Kept bytes — post-pushdown, so a dim pruned to a sliver reports a
-    * sliver; numRows left empty (footer reads aren't worth it, the
+  /** Kept bytes — after manifest admission and footer skipping, so a
+    * dim pruned to a sliver reports a sliver; numRows left empty (the
     * byte size is what the broadcast threshold consumes). */
   override def estimateStatistics(): Statistics = {
-    val bytes = math.max(1L, keptFiles.map(_._2).sum)
+    val bytes = math.max(1L, keptFiles.map(_.length).sum)
     new Statistics {
       override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
       override def numRows(): OptionalLong = OptionalLong.empty()
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
-    GraftDvBatchScan.pack(spark, keptFiles.map { case (p, len) =>
-      GraftDvFile(p, len, masks.getOrElse(p, null))
-    }).toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    GraftDvScanMetrics.all
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    GraftDvScanMetrics.values(admitted.size, keptFiles.size, footerMisses,
+      readersBuilt)
+
+  private lazy val readerFactory: GraftDvReaderFactory = {
     import GraftDvReaderFactory.{File, Missing, Pos}
     def lineage(f: StructField) =
       (f.name.equalsIgnoreCase(LakeTable.FileCol) ||
@@ -142,8 +180,8 @@ private[sources] final class GraftDvBatchScan(
       else if (physical(f.name).isEmpty) Missing
       else { next += 1; next - 1 }
     }
-    val shaped = plan.length != read.length
-    def readerFor(pushed: Seq[Filter]) =
+    def readerFor(pushed: Seq[Filter]) = {
+      readersBuilt += 1
       new ParquetFileFormat().buildReaderWithPartitionValues(
         sparkSession = spark,
         dataSchema = StructType(read),
@@ -152,15 +190,27 @@ private[sources] final class GraftDvBatchScan(
         filters = pushed,
         options = Map(DsFileFormat.OPTION_RETURNING_BATCH -> "false"),
         hadoopConf = spark.sessionState.newHadoopConf())
+    }
     // unmasked files take row-group pruning; masked files (and every
     // file of a lineage read) read FULLY so the sequential row counter
-    // equals the dv position space
-    new GraftDvReaderFactory(readerFor(pushable), readerFor(Nil),
-      if (shaped) plan else null, requiredSchema.fields.map(_.dataType))
+    // equals the dv position space. Only the readers some kept file
+    // uses are built, and one serves both when nothing is pushed.
+    val lineageRead = plan.exists(c => c == File || c == Pos)
+    lazy val full = readerFor(Nil)
+    val pushedFn =
+      if (lineageRead || !files.exists(_.mask == null)) None
+      else Some(if (parquetFilters.isEmpty) full else readerFor(parquetFilters))
+    val fullFn =
+      if (lineageRead && files.nonEmpty || files.exists(_.mask != null))
+        Some(full)
+      else None
+    new GraftDvReaderFactory(pushedFn, fullFn,
+      if (plan.length != read.length) plan else null,
+      requiredSchema.fields.map(_.dataType))
   }
 }
 
-private[sources] object GraftDvBatchScan {
+private[graft] object GraftDvBatchScan {
 
   /** Above this many dv sidecar bytes reads keep the V1 bridge's
     * distributed anti-join and SQL merge-on-read operations refuse: the
@@ -168,6 +218,111 @@ private[sources] object GraftDvBatchScan {
     * a mask this large (≈ tens of millions of rows) is past due for
     * [[LakeTable.rewriteDeletes]] anyway. */
   private[sources] val MaxMaskBytes: Long = 64L * 1024 * 1024
+
+  /** A listed data file: its key ([[LakeTable.fileKey]]), byte length
+    * and modification time — together the identity its footer is cached
+    * under. */
+  private[graft] final case class Listed(key: String, length: Long,
+      mtime: Long)
+
+  /** The parquet files of each committed group dir, by absolute dir.
+    * Group dirs are write-once (staged delta writes rename and sweep
+    * before the commit names the dir), so a listing never goes stale; a
+    * dir deleted since (vacuum) fails the read when its files open. */
+  private val listingCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[Listed]]()
+
+  /** Footers with row groups, by file identity: a file rewritten at the
+    * same path differs in length or mtime and misses. */
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[
+    Listed, org.apache.parquet.hadoop.metadata.ParquetMetadata]()
+
+  /** The parquet files of the group dir `absDir`, sorted by name. */
+  private[sources] def listGroup(spark: SparkSession,
+      absDir: String): Seq[Listed] =
+    Option(listingCache.get(absDir)).getOrElse {
+      val p = new Path(absDir)
+      val listed = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+        .map(st => Listed(LakeTable.fileKey(st.getPath), st.getLen,
+          st.getModificationTime))
+        .toSeq
+      if (listingCache.size > 100000) listingCache.clear()
+      listingCache.put(absDir, listed)
+      listed
+    }
+
+  /** The footers of `files` and how many missed the cache. Misses read
+    * with options built on the Spark context's Hadoop conf
+    * (`ParquetReadOptions.builder()` would make a fresh `Configuration`
+    * and re-parse the Hadoop XML, ~16 ms a footer against ~0.5 ms). */
+  private[graft] def footers(spark: SparkSession, files: Seq[Listed])
+      : (Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata], Int) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    def read(f: Listed) = {
+      val st = new org.apache.hadoop.fs.FileStatus(f.length, false, 1, 0,
+        f.mtime, LakeTable.pathOfKey(f.key))
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        opts)
+      val footer = try r.getFooter finally r.close()
+      if (footerCache.size > 20000) footerCache.clear()
+      footerCache.put(f, footer)
+      f -> footer
+    }
+    val cached = files.map(f => f -> footerCache.get(f))
+    val misses = cached.collect { case (f, null) => f }
+    val fresh = LakeTable.onDriver(misses)(read).toMap
+    (cached.map { case (f, m) => if (m == null) fresh(f) else m },
+      misses.size)
+  }
+
+  /** The files of `files` whose footer row-group stats admit `filters`
+    * (drop a file when parquet-mr's STATISTICS-level row-group filter
+    * keeps none of its row groups), and the footer-cache misses. The
+    * predicate is Spark's own ([[ParquetFilters]] under the session
+    * conf, the rebase spec from the footer, as [[ParquetFileFormat]]
+    * builds it per task), built once per distinct file schema — the
+    * same check each task's reader runs after opening the file, so it
+    * never drops a row a task would have returned. Files whose
+    * predicate cannot be built or checked are kept. */
+  private[sources] def footerSkip(spark: SparkSession, files: Seq[Listed],
+      filters: Seq[Filter]): (Seq[Listed], Int) = {
+    import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+    import org.apache.parquet.schema.MessageType
+    import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetOptions}
+    val conf = spark.sessionState.conf
+    val rebaseMode =
+      new ParquetOptions(Map.empty[String, String], conf).datetimeRebaseModeInRead
+    val predicates =
+      scala.collection.mutable.HashMap[(MessageType, RebaseSpec), Option[FilterPredicate]]()
+    val (footerList, misses) = footers(spark, files)
+    val kept = files.zip(footerList).filter { case (_, footer) =>
+      val fmd = footer.getFileMetaData
+      val kv = fmd.getKeyValueMetaData
+      val rebase = DataSourceUtils.datetimeRebaseSpec(kv.get, rebaseMode)
+      val predicate = predicates.getOrElseUpdate((fmd.getSchema, rebase),
+        scala.util.Try {
+          val pf = new ParquetFilters(fmd.getSchema,
+            conf.parquetFilterPushDownDate, conf.parquetFilterPushDownTimestamp,
+            conf.parquetFilterPushDownDecimal,
+            conf.parquetFilterPushDownStringPredicate,
+            conf.parquetFilterPushDownInFilterThreshold,
+            conf.caseSensitiveAnalysis, rebase)
+          filters.flatMap(pf.createFilter).reduceOption(FilterApi.and)
+        }.toOption.flatten)
+      predicate.forall(p => scala.util.Try(!RowGroupFilter.filterRowGroups(
+        FilterCompat.get(p), footer.getBlocks, fmd.getSchema).isEmpty)
+        .getOrElse(true))
+    }.map(_._1)
+    (kept, misses)
+  }
 
   /** Whole files packed into partitions by size with Spark's own
     * file-scan packing (`FilePartition.maxSplitBytes` and
@@ -383,13 +538,14 @@ private[sources] object DvBinarySidecar {
 /** Reader factory: a partition's files stream in order — unmasked
   * files through the pushed-filter reader, masked files (and every file
   * when lineage is asked for) through the full-file reader behind the
-  * mask walk ([[DvMaskCodec.walk]]). `plan` (null = parquet rows pass
-  * through) names each output column's source: a parquet column
-  * ordinal, [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]]
-  * lineage, or [[GraftDvReaderFactory.Missing]] (typed null). */
+  * mask walk ([[DvMaskCodec.walk]]). A reader no file of the scan uses
+  * is None. `plan` (null = parquet rows pass through) names each output
+  * column's source: a parquet column ordinal,
+  * [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]] lineage,
+  * or [[GraftDvReaderFactory.Missing]] (typed null). */
 private[sources] final class GraftDvReaderFactory(
-    pushedFn: PartitionedFile => Iterator[InternalRow],
-    fullFn: PartitionedFile => Iterator[InternalRow],
+    pushedFn: Option[PartitionedFile => Iterator[InternalRow]],
+    fullFn: Option[PartitionedFile => Iterator[InternalRow]],
     plan: Array[Int], types: Array[DataType])
     extends PartitionReaderFactory {
   import GraftDvReaderFactory._
@@ -402,11 +558,11 @@ private[sources] final class GraftDvReaderFactory(
       new GenericInternalRow(Array.empty[Any]),
       SparkPath.fromUrlString(f.path), 0, f.length)
     if (f.mask == null && !lineage) {
-      val rows = pushedFn(pf)
+      val rows = pushedFn.get(pf)
       if (plan == null) rows else rows.map(shape(_, null, -1L))
     } else {
       val file = UTF8String.fromString(f.path)
-      DvMaskCodec.walk(fullFn(pf), f.mask, keepMasked = false)((r, pos) =>
+      DvMaskCodec.walk(fullFn.get(pf), f.mask, keepMasked = false)((r, pos) =>
         if (plan == null) r else shape(r, file, pos))
     }
   }
@@ -420,7 +576,8 @@ private[sources] final class GraftDvReaderFactory(
         case Missing => ()
         case File    => out.update(i, file)
         case Pos     => out.update(i, pos)
-        case c       => out.update(i, r.get(c, types(i)))
+        // a columnar row's get() reads a null slot as a zero value
+        case c       => if (!r.isNullAt(c)) out.update(i, r.get(c, types(i)))
       }
       i += 1
     }
@@ -445,4 +602,40 @@ private[sources] object GraftDvReaderFactory {
   val Missing = -1
   val File = -2
   val Pos = -3
+}
+
+/** Driver metrics of [[GraftDvBatchScan]], read off the executed scan's
+  * SQL metrics. Spark instantiates each metric class by name, so each
+  * is its own no-argument class. */
+private[graft] object GraftDvScanMetrics {
+  val FilesAdmitted = "graftDvFilesAdmitted"
+  val FilesKept = "graftDvFilesKept"
+  val FooterMisses = "graftDvFooterMisses"
+  val ReadersBuilt = "graftDvReadersBuilt"
+
+  sealed abstract class Metric(n: String, d: String) extends CustomSumMetric {
+    override def name(): String = n
+    override def description(): String = d
+  }
+  final class FilesAdmittedMetric
+      extends Metric(FilesAdmitted, "files after manifest admission")
+  final class FilesKeptMetric
+      extends Metric(FilesKept, "files kept by footer stats")
+  final class FooterMissesMetric
+      extends Metric(FooterMisses, "footer cache misses")
+  final class ReadersBuiltMetric
+      extends Metric(ReadersBuilt, "parquet readers built")
+
+  def all: Array[CustomMetric] = Array(new FilesAdmittedMetric,
+    new FilesKeptMetric, new FooterMissesMetric, new ReadersBuiltMetric)
+
+  def values(admitted: Long, kept: Long, misses: Long,
+      readers: Long): Array[CustomTaskMetric] =
+    Seq(FilesAdmitted -> admitted, FilesKept -> kept,
+      FooterMisses -> misses, ReadersBuilt -> readers).map { case (n, v) =>
+      new CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }: CustomTaskMetric
+    }.toArray
 }

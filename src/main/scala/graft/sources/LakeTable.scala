@@ -574,20 +574,26 @@ object LakeTable {
   private[sources] def uniformSchemaOf(spark: SparkSession, absDirs: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.asNullable
-    val misses = absDirs.filterNot(dirSchemaCache.containsKey)
-    if (misses.size > 8) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, misses.size))
-      try misses.map(d => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { dirSchema(spark, d); () }
-      })).foreach(_.get())
-      finally pool.shutdown()
-    }
+    onDriver(absDirs.filterNot(dirSchemaCache.containsKey))(dirSchema(spark, _))
     absDirs.headOption.flatMap { h =>
       dirSchema(spark, h).map(asNullable).filter(s =>
         absDirs.drop(1).forall(d => dirSchema(spark, d).map(asNullable).contains(s)))
     }
   }
+
+  /** `f` over `xs` on the driver, results in order: one by one for up
+    * to 8 items, else on a pool of up to 16 threads — for independent
+    * ~ms footer reads, which need no Spark job. */
+  private[sources] def onDriver[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 8) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, xs.size))
+      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = f(x)
+      })).map(_.get())
+      finally pool.shutdown()
+    }
 
   /** Threshold above which Spark launches a listing JOB for multi-path
     * scans. Driver-side listing of ≤10⁴ local-FS group dirs is faster
