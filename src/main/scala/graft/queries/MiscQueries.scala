@@ -852,9 +852,8 @@ object MiscQueries {
     * At 100 TB this is THE fact⋈dim pattern: "revenue for the dim rows
     * matching X" touches the matching partitions' files, not the whole
     * fact table. The oracle restates the join as a plain row filter. */
-  /** Shared q115 scaffold (also used by PlanDump's interior-plan dump
-    * and ScaleOpsSpec's DPP assertion, so the evidence and the test
-    * describe exactly the oracle-checked query): write the year-
+  /** Shared q115 scaffold (also used by ScaleOpsSpec's DPP assertion,
+    * so the test describes exactly the oracle-checked query): write the year-
     * partitioned fact + the year→era dim under `tmp`, return the
     * era-filtered join. */
   private[graft] def dppJoinedFrame(s: SparkSession, dir: String,

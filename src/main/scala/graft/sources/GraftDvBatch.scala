@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,12 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.{FileFormat => DsFileFormat}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileRead
 import org.apache.spark.sql.functions.{col, collect_set, sort_array}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import java.util.OptionalLong
 
 /** The deletion-vector (dv) reader: the one scan that applies a
@@ -32,9 +35,13 @@ import java.util.OptionalLong
   *    check each task's parquet reader runs after opening the file,
   *    done on the driver before the open, on footers cached per file
   *    identity — so a point read opens the files that can hold its key;
-  *  - surviving files read through Spark's parquet reader (vectorized
-  *    underneath for atomic schemas) with the translatable filters
-  *    pushed for row-group pruning on UNMASKED files;
+  *  - surviving files read the way Spark's parquet reader reads them
+  *    ([[GraftParquetFileRead]]: vectorized where Spark would vectorize)
+  *    with the translatable filters pushed for row-group pruning on
+  *    UNMASKED files — but each task copies the Hadoop conf once per
+  *    distinct pushed predicate, not once per file, and takes each
+  *    file's footer from the footer cache (reading and caching it on a
+  *    miss), so a re-read opens no footer;
   *  - the dv mask applies per file IN the reader: each file carries
   *    only ITS masked positions, varint-delta encoded ([[DvMaskCodec]]
   *    — a sorted position list costs ~1–2 bytes/row), keyed by
@@ -55,14 +62,16 @@ import java.util.OptionalLong
   *    runs a handful of tasks, not one per file;
   *  - planning runs once per scan: Spark asks for the partitions and
   *    the reader factory more than once per query, and both are lazy
-  *    vals here (masks load once); the factory builds only the parquet
-  *    readers its files use — each build broadcasts the Hadoop conf;
+  *    vals here (masks load once); the prepared Hadoop conf is broadcast
+  *    once per distinct conf and Spark context, not per scan
+  *    ([[GraftDvBatchScan.confBroadcast]]);
   *  - [[SupportsReportStatistics]] reports the kept files' byte size,
   *    so the STATIC planner broadcasts a small dv dimension — no AQE
   *    needed;
-  *  - driver metrics on the executed scan ([[GraftDvScanMetrics]]):
-  *    files after manifest admission, files kept by footer stats,
-  *    footer-cache misses and parquet readers built.
+  *  - metrics on the executed scan ([[GraftDvScanMetrics]]): files
+  *    after manifest admission, files kept by footer stats, driver
+  *    footer-cache misses and conf broadcasts; footers read and conf
+  *    copies made by the tasks.
   *
   * Spark re-applies the full predicate above the scan (every filter is
   * returned as residual by the builders), so pushdown and skipping here
@@ -111,10 +120,10 @@ private[sources] final class GraftDvBatchScan(
   }
 
   private lazy val admitted: Seq[Listed] = pruned._1.flatMap(d =>
-    GraftDvBatchScan.listGroup(spark, new Path(root, d).toString))
+    GraftDvBatchScan.listGroup(spark, LakeTable.groupDir(root, d)))
 
   @volatile private var footerMisses = 0
-  @volatile private var readersBuilt = 0
+  @volatile private var confBroadcasts = 0
 
   private lazy val keptFiles: Seq[Listed] =
     if (parquetFilters.isEmpty) admitted
@@ -127,7 +136,7 @@ private[sources] final class GraftDvBatchScan(
 
   private lazy val files: Seq[GraftDvFile] = {
     val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
-    keptFiles.map(f => GraftDvFile(f.key, f.length, masks.getOrElse(f.key, null)))
+    keptFiles.map(f => GraftDvFile(f, masks.getOrElse(f.key, null)))
   }
 
   private lazy val partitions: Array[InputPartition] =
@@ -158,8 +167,11 @@ private[sources] final class GraftDvBatchScan(
     GraftDvScanMetrics.all
 
   override def reportDriverMetrics(): Array[CustomTaskMetric] =
-    GraftDvScanMetrics.values(admitted.size, keptFiles.size, footerMisses,
-      readersBuilt)
+    GraftDvScanMetrics.values(
+      GraftDvScanMetrics.FilesAdmitted -> admitted.size.toLong,
+      GraftDvScanMetrics.FilesKept -> keptFiles.size.toLong,
+      GraftDvScanMetrics.FooterMisses -> footerMisses.toLong,
+      GraftDvScanMetrics.ConfBroadcasts -> confBroadcasts.toLong)
 
   private lazy val readerFactory: GraftDvReaderFactory = {
     import GraftDvReaderFactory.{File, Missing, Pos}
@@ -180,31 +192,21 @@ private[sources] final class GraftDvBatchScan(
       else if (physical(f.name).isEmpty) Missing
       else { next += 1; next - 1 }
     }
-    def readerFor(pushed: Seq[Filter]) = {
-      readersBuilt += 1
-      new ParquetFileFormat().buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = StructType(read),
-        partitionSchema = StructType(Nil),
-        requiredSchema = StructType(read),
-        filters = pushed,
-        options = Map(DsFileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConf())
-    }
     // unmasked files take row-group pruning; masked files (and every
     // file of a lineage read) read FULLY so the sequential row counter
-    // equals the dv position space. Only the readers some kept file
-    // uses are built, and one serves both when nothing is pushed.
+    // equals the dv position space. A scan that kept no file runs no
+    // task and needs no conf.
     val lineageRead = plan.exists(c => c == File || c == Pos)
-    lazy val full = readerFor(Nil)
-    val pushedFn =
-      if (lineageRead || !files.exists(_.mask == null)) None
-      else Some(if (parquetFilters.isEmpty) full else readerFor(parquetFilters))
-    val fullFn =
-      if (lineageRead && files.nonEmpty || files.exists(_.mask != null))
-        Some(full)
-      else None
-    new GraftDvReaderFactory(pushedFn, fullFn,
+    val conf =
+      if (files.isEmpty) null
+      else {
+        val (b, made) = GraftDvBatchScan.confBroadcast(spark)
+        if (made) confBroadcasts = 1
+        b
+      }
+    new GraftDvReaderFactory(
+      GraftParquetFileRead(spark.sessionState.conf, StructType(read)), conf,
+      if (lineageRead) Nil else parquetFilters,
       if (plan.length != read.length) plan else null,
       requiredSchema.fields.map(_.dataType))
   }
@@ -223,7 +225,10 @@ private[graft] object GraftDvBatchScan {
     * and modification time — together the identity its footer is cached
     * under. */
   private[graft] final case class Listed(key: String, length: Long,
-      mtime: Long)
+      mtime: Long) {
+    def status: FileStatus =
+      new FileStatus(length, false, 1, 0, mtime, LakeTable.pathOfKey(key))
+  }
 
   /** The parquet files of each committed group dir, by absolute dir.
     * Group dirs are write-once (staged delta writes rename and sweep
@@ -233,9 +238,54 @@ private[graft] object GraftDvBatchScan {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Listed]]()
 
   /** Footers with row groups, by file identity: a file rewritten at the
-    * same path differs in length or mtime and misses. */
-  private val footerCache = new java.util.concurrent.ConcurrentHashMap[
-    Listed, org.apache.parquet.hadoop.metadata.ParquetMetadata]()
+    * same path differs in length or mtime and misses. Files are
+    * immutable, so the driver's footer-stats skipping and the tasks'
+    * readers share it; in a JVM of its own an executor fills its own. */
+  private[sources] val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[Listed, ParquetMetadata]()
+
+  /** Broadcasts of the prepared Hadoop conf, by Spark context and what
+    * the conf is made of (the context's Hadoop conf and the session's
+    * SQL confs, in full); access-ordered, the least recent dropped past
+    * [[MaxConfBroadcasts]]. */
+  private type ConfKey =
+    (SparkContext, java.util.Map[String, String], Map[String, String])
+  private val confBroadcasts = new java.util.LinkedHashMap[ConfKey,
+      Broadcast[SerializableConfiguration]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[ConfKey,
+        Broadcast[SerializableConfiguration]]): Boolean =
+      size() > MaxConfBroadcasts
+  }
+  private val MaxConfBroadcasts = 8
+
+  /** The broadcast of the session's Hadoop conf prepared for parquet
+    * reads ([[GraftParquetFileRead.setupConf]]), and whether this call
+    * made it. Spark's reader broadcasts the conf (~1,000 keys, ~13 ms)
+    * on every build; here one broadcast serves every scan whose
+    * prepared conf is made of the same confs, so a changed session or
+    * Hadoop setting gets a new one. Entries of a stopped context are
+    * dropped before the lookup. */
+  private[sources] def confBroadcast(spark: SparkSession)
+      : (Broadcast[SerializableConfiguration], Boolean) = {
+    // newHadoopConf is the context's Hadoop conf plus the session's SQL
+    // confs, and setupConf reads only SQL confs: the two determine the
+    // prepared conf, which is built only on a miss
+    val hadoop = new java.util.HashMap[String, String]()
+    spark.sparkContext.hadoopConfiguration.iterator()
+      .forEachRemaining(e => hadoop.put(e.getKey, e.getValue))
+    val key: ConfKey =
+      (spark.sparkContext, hadoop, spark.sessionState.conf.getAllConfs)
+    confBroadcasts.synchronized {
+      confBroadcasts.keySet().removeIf(_._1.isStopped)
+      Option(confBroadcasts.get(key)).map(_ -> false).getOrElse {
+        val conf = spark.sessionState.newHadoopConf()
+        GraftParquetFileRead.setupConf(conf, spark.sessionState.conf)
+        val b = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+        confBroadcasts.put(key, b)
+        (b, true)
+      }
+    }
+  }
 
   /** The parquet files of the group dir `absDir`, sorted by name. */
   private[sources] def listGroup(spark: SparkSession,
@@ -254,23 +304,26 @@ private[graft] object GraftDvBatchScan {
       listed
     }
 
+  /** Caches `footer`, row groups included, as `f`'s. */
+  private[sources] def cacheFooter(f: Listed, footer: ParquetMetadata): Unit = {
+    if (footerCache.size > 20000) footerCache.clear()
+    footerCache.put(f, footer)
+  }
+
   /** The footers of `files` and how many missed the cache. Misses read
     * with options built on the Spark context's Hadoop conf
     * (`ParquetReadOptions.builder()` would make a fresh `Configuration`
     * and re-parse the Hadoop XML, ~16 ms a footer against ~0.5 ms). */
   private[graft] def footers(spark: SparkSession, files: Seq[Listed])
-      : (Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata], Int) = {
+      : (Seq[ParquetMetadata], Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
     lazy val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     def read(f: Listed) = {
-      val st = new org.apache.hadoop.fs.FileStatus(f.length, false, 1, 0,
-        f.mtime, LakeTable.pathOfKey(f.key))
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f.status, conf),
         opts)
       val footer = try r.getFooter finally r.close()
-      if (footerCache.size > 20000) footerCache.clear()
-      footerCache.put(f, footer)
+      cacheFooter(f, footer)
       f -> footer
     }
     val cached = files.map(f => f -> footerCache.get(f))
@@ -283,40 +336,29 @@ private[graft] object GraftDvBatchScan {
   /** The files of `files` whose footer row-group stats admit `filters`
     * (drop a file when parquet-mr's STATISTICS-level row-group filter
     * keeps none of its row groups), and the footer-cache misses. The
-    * predicate is Spark's own ([[ParquetFilters]] under the session
-    * conf, the rebase spec from the footer, as [[ParquetFileFormat]]
-    * builds it per task), built once per distinct file schema — the
-    * same check each task's reader runs after opening the file, so it
-    * never drops a row a task would have returned. Files whose
-    * predicate cannot be built or checked are kept. */
+    * predicate is the one each task's reader pushes
+    * ([[GraftParquetFileRead.predicate]]: Spark's [[ParquetFilters]]
+    * under the session conf, the rebase spec from the footer), built
+    * once per distinct file schema — the same check the task's parquet
+    * reader runs after opening the file, so it never drops a row a task
+    * would have returned. Files whose predicate cannot be built or
+    * checked are kept. */
   private[sources] def footerSkip(spark: SparkSession, files: Seq[Listed],
       filters: Seq[Filter]): (Seq[Listed], Int) = {
     import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+    import org.apache.parquet.filter2.predicate.FilterPredicate
     import org.apache.parquet.schema.MessageType
     import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-    import org.apache.spark.sql.execution.datasources.DataSourceUtils
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetOptions}
-    val conf = spark.sessionState.conf
-    val rebaseMode =
-      new ParquetOptions(Map.empty[String, String], conf).datetimeRebaseModeInRead
+    val read = GraftParquetFileRead(spark.sessionState.conf, new StructType())
     val predicates =
       scala.collection.mutable.HashMap[(MessageType, RebaseSpec), Option[FilterPredicate]]()
     val (footerList, misses) = footers(spark, files)
     val kept = files.zip(footerList).filter { case (_, footer) =>
       val fmd = footer.getFileMetaData
-      val kv = fmd.getKeyValueMetaData
-      val rebase = DataSourceUtils.datetimeRebaseSpec(kv.get, rebaseMode)
+      val rebase = read.rebaseSpecs(footer)._1
       val predicate = predicates.getOrElseUpdate((fmd.getSchema, rebase),
-        scala.util.Try {
-          val pf = new ParquetFilters(fmd.getSchema,
-            conf.parquetFilterPushDownDate, conf.parquetFilterPushDownTimestamp,
-            conf.parquetFilterPushDownDecimal,
-            conf.parquetFilterPushDownStringPredicate,
-            conf.parquetFilterPushDownInFilterThreshold,
-            conf.caseSensitiveAnalysis, rebase)
-          filters.flatMap(pf.createFilter).reduceOption(FilterApi.and)
-        }.toOption.flatten)
+        scala.util.Try(read.predicate(fmd.getSchema, rebase, filters))
+          .toOption.flatten)
       predicate.forall(p => scala.util.Try(!RowGroupFilter.filterRowGroups(
         FilterCompat.get(p), footer.getBlocks, fmd.getSchema).isEmpty)
         .getOrElse(true))
@@ -388,10 +430,14 @@ private[graft] object GraftDvBatchScan {
 }
 
 /** One data file of a dv scan, read whole (never split: the dv position
-  * space is the whole-file row index). `path` is the file's key
-  * ([[LakeTable.fileKey]]); `mask` is null for unmasked files. */
+  * space is the whole-file row index): its listing (key
+  * [[LakeTable.fileKey]], length, mtime — its footer's cache identity)
+  * and its `mask`, null for unmasked files. */
 private[sources] final case class GraftDvFile(
-    path: String, length: Long, mask: Array[Byte])
+    file: GraftDvBatchScan.Listed, mask: Array[Byte]) {
+  def path: String = file.key
+  def length: Long = file.length
+}
 
 /** The whole files one task reads, in order ([[GraftDvBatchScan.pack]]);
   * each keeps its own mask. */
@@ -535,37 +581,25 @@ private[sources] object DvBinarySidecar {
   }
 }
 
-/** Reader factory: a partition's files stream in order — unmasked
-  * files through the pushed-filter reader, masked files (and every file
-  * when lineage is asked for) through the full-file reader behind the
-  * mask walk ([[DvMaskCodec.walk]]). A reader no file of the scan uses
-  * is None. `plan` (null = parquet rows pass through) names each output
-  * column's source: a parquet column ordinal,
+/** Reader factory: a partition's files stream in order, each read
+  * whole by the task's one [[GraftParquetFileRead.Task]] over the
+  * broadcast conf — unmasked files with `pushed` pushed for row-group
+  * pruning, masked files (and every file when lineage is asked for)
+  * without, behind the mask walk ([[DvMaskCodec.walk]]). Each file's
+  * footer comes from [[GraftDvBatchScan.footerCache]]; a miss reads it
+  * off the file's open stream and caches it. `plan` (null = parquet
+  * rows pass through) names each output column's source: a parquet
+  * column ordinal,
   * [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]] lineage,
   * or [[GraftDvReaderFactory.Missing]] (typed null). */
 private[sources] final class GraftDvReaderFactory(
-    pushedFn: Option[PartitionedFile => Iterator[InternalRow]],
-    fullFn: Option[PartitionedFile => Iterator[InternalRow]],
-    plan: Array[Int], types: Array[DataType])
+    read: GraftParquetFileRead, conf: Broadcast[SerializableConfiguration],
+    pushed: Seq[Filter], plan: Array[Int], types: Array[DataType])
     extends PartitionReaderFactory {
   import GraftDvReaderFactory._
 
   private val lineage =
     plan != null && plan.exists(c => c == File || c == Pos)
-
-  private def rowsOf(f: GraftDvFile): Iterator[InternalRow] = {
-    val pf = PartitionedFile(
-      new GenericInternalRow(Array.empty[Any]),
-      SparkPath.fromUrlString(f.path), 0, f.length)
-    if (f.mask == null && !lineage) {
-      val rows = pushedFn.get(pf)
-      if (plan == null) rows else rows.map(shape(_, null, -1L))
-    } else {
-      val file = UTF8String.fromString(f.path)
-      DvMaskCodec.walk(fullFn.get(pf), f.mask, keepMasked = false)((r, pos) =>
-        if (plan == null) r else shape(r, file, pos))
-    }
-  }
 
   private def shape(r: InternalRow, file: UTF8String,
       pos: Long): InternalRow = {
@@ -585,16 +619,46 @@ private[sources] final class GraftDvReaderFactory(
   }
 
   override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val it = p.asInstanceOf[GraftDvFilePartition].files.iterator
-      .flatMap(rowsOf)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
+      : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private val task = new read.Task(conf.value.value, pushed)
+    private var footerReads = 0L
+    private val pending = p.asInstanceOf[GraftDvFilePartition].files.iterator
+    private var rows: Iterator[InternalRow] = Iterator.empty
+    private var open: java.io.Closeable = null
+    private var cur: InternalRow = _
+
+    private def rowsOf(f: GraftDvFile): Iterator[InternalRow] = {
+      val cached = GraftDvBatchScan.footerCache.get(f.file)
+      if (cached == null) footerReads += 1
+      // parquet-mr's reader reads the footer again itself
+      if (!read.vectorized) footerReads += 1
+      val push = f.mask == null && !lineage
+      val (it, handle) = task.open(f.file.status, cached, push)(
+        GraftDvBatchScan.cacheFooter(f.file, _))
+      open = handle
+      if (push) {
+        if (plan == null) it else it.map(shape(_, null, -1L))
+      } else {
+        val file = UTF8String.fromString(f.path)
+        DvMaskCodec.walk(it, f.mask, keepMasked = false)((r, pos) =>
+          if (plan == null) r else shape(r, file, pos))
+      }
     }
+
+    override def next(): Boolean = {
+      while (!rows.hasNext && pending.hasNext) {
+        close()
+        rows = rowsOf(pending.next())
+      }
+      if (rows.hasNext) { cur = rows.next(); true } else false
+    }
+    override def get(): InternalRow = cur
+    override def close(): Unit =
+      if (open != null) { open.close(); open = null }
+    override def currentMetricsValues(): Array[CustomTaskMetric] =
+      GraftDvScanMetrics.values(
+        GraftDvScanMetrics.TaskFooterReads -> footerReads,
+        GraftDvScanMetrics.TaskConfCopies -> task.confCopies)
   }
 }
 
@@ -604,14 +668,18 @@ private[sources] object GraftDvReaderFactory {
   val Pos = -3
 }
 
-/** Driver metrics of [[GraftDvBatchScan]], read off the executed scan's
-  * SQL metrics. Spark instantiates each metric class by name, so each
+/** Metrics of [[GraftDvBatchScan]], read off the executed scan's SQL
+  * metrics: the driver's ([[GraftDvBatchScan.reportDriverMetrics]]) and
+  * the tasks' (their partition readers' `currentMetricsValues`, summed
+  * over tasks). Spark instantiates each metric class by name, so each
   * is its own no-argument class. */
 private[graft] object GraftDvScanMetrics {
   val FilesAdmitted = "graftDvFilesAdmitted"
   val FilesKept = "graftDvFilesKept"
   val FooterMisses = "graftDvFooterMisses"
-  val ReadersBuilt = "graftDvReadersBuilt"
+  val ConfBroadcasts = "graftDvConfBroadcasts"
+  val TaskFooterReads = "graftDvTaskFooterReads"
+  val TaskConfCopies = "graftDvTaskConfCopies"
 
   sealed abstract class Metric(n: String, d: String) extends CustomSumMetric {
     override def name(): String = n
@@ -623,16 +691,19 @@ private[graft] object GraftDvScanMetrics {
       extends Metric(FilesKept, "files kept by footer stats")
   final class FooterMissesMetric
       extends Metric(FooterMisses, "footer cache misses")
-  final class ReadersBuiltMetric
-      extends Metric(ReadersBuilt, "parquet readers built")
+  final class ConfBroadcastsMetric
+      extends Metric(ConfBroadcasts, "Hadoop conf broadcasts")
+  final class TaskFooterReadsMetric
+      extends Metric(TaskFooterReads, "footers read by tasks")
+  final class TaskConfCopiesMetric
+      extends Metric(TaskConfCopies, "Hadoop conf copies by tasks")
 
   def all: Array[CustomMetric] = Array(new FilesAdmittedMetric,
-    new FilesKeptMetric, new FooterMissesMetric, new ReadersBuiltMetric)
+    new FilesKeptMetric, new FooterMissesMetric, new ConfBroadcastsMetric,
+    new TaskFooterReadsMetric, new TaskConfCopiesMetric)
 
-  def values(admitted: Long, kept: Long, misses: Long,
-      readers: Long): Array[CustomTaskMetric] =
-    Seq(FilesAdmitted -> admitted, FilesKept -> kept,
-      FooterMisses -> misses, ReadersBuilt -> readers).map { case (n, v) =>
+  def values(vs: (String, Long)*): Array[CustomTaskMetric] =
+    vs.map { case (n, v) =>
       new CustomTaskMetric {
         override def name(): String = n
         override def value(): Long = v

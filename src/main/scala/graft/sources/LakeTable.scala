@@ -88,14 +88,28 @@ object LakeTable {
       meta: Map[String, String]): Long =
     dvSidecarBytesForRels(spark, root, dvState(meta))
 
+  /** On-disk bytes of committed dv sidecars, by (root, rel). Sidecars
+    * are write-once like group dirs ([[GraftDvBatchScan.listGroup]]), so
+    * a count never goes stale; a sidecar deleted since (vacuum) fails
+    * the read when its masks load. Bounded like the group listings. */
+  private val sidecarBytes =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+
+  /** [[dvSidecarBytes]] over committed sidecar rels: each rel is listed
+    * once per JVM ([[sidecarBytes]]). */
   private[sources] def dvSidecarBytesForRels(spark: SparkSession,
       root: String, rels: Seq[String]): Long = {
-    val f = fs(spark, root)
+    lazy val f = fs(spark, root)
     rels.foldLeft(0L) { (acc, r) =>
       if (acc == Long.MaxValue) acc
-      else scala.util.Try(
-        acc + f.listStatus(new Path(root, r)).filter(_.isFile)
-          .map(_.getLen).sum).getOrElse(Long.MaxValue)
+      else Option(sidecarBytes.get((root, r))).map(acc + _)
+        .getOrElse(scala.util.Try {
+          val n = f.listStatus(new Path(root, r)).filter(_.isFile)
+            .map(_.getLen).sum
+          if (sidecarBytes.size > 100000) sidecarBytes.clear()
+          sidecarBytes.put((root, r), n)
+          acc + n
+        }.getOrElse(Long.MaxValue))
     }
   }
 
@@ -2510,13 +2524,36 @@ object LakeTable {
     * latest) — the metadata half of the read path, shared by [[read]]
     * and the DSv2 connector ([[GraftLakeSource]]). */
   def dataDirPaths(spark: SparkSession, root: String,
-                   version: Option[Int] = None): Seq[String] = {
+                   version: Option[Int] = None): Seq[String] =
+    readManifest(spark, root, existingVersion(spark, root, version))
+      .map(groupDir(root, _))
+
+  /** `new Path(root, rel).toString`, memoized: the URI parse costs
+    * ~10 µs and every read resolves each group dir of its snapshot
+    * (schema, listing). A pure function of its arguments, so never
+    * stale; bounded like the group listings. */
+  private[sources] def groupDir(root: String, rel: String): String = {
+    val key = (root, rel)
+    Option(groupDirs.get(key)).getOrElse {
+      val abs = new Path(root, rel).toString
+      if (groupDirs.size > 100000) groupDirs.clear()
+      groupDirs.put(key, abs)
+      abs
+    }
+  }
+  private val groupDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** `version`, or the latest when None; fails when there is no table
+    * at `root` or no such version. */
+  private def existingVersion(spark: SparkSession, root: String,
+      version: Option[Int]): Int = {
     val vs = versions(spark, root)
     if (vs.isEmpty) throw new IllegalStateException(s"no table at $root")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v),
       s"version $v does not exist at $root (have ${vs.mkString(",")})")
-    readManifest(spark, root, v).map(d => new Path(root, d).toString)
+    v
   }
 
   /** CREATE TABLE without data: version 1 lists no file groups and
@@ -2850,18 +2887,20 @@ object LakeTable {
   private def readInternal(spark: SparkSession, root: String,
       version: Option[Int], keepLineage: Boolean,
       keepDirs: Option[Set[String]] = None): DataFrame = {
-    val dirs = keepDirs match {
-      case None => dataDirPaths(spark, root, version)
-      case Some(rels) =>
-        val v = version.getOrElse(versions(spark, root).last)
-        readManifest(spark, root, v).filter(rels)
-          .map(d => new Path(root, d).toString)
+    val v = existingVersion(spark, root, version)
+    val rels = readManifest(spark, root, v)
+    val meta = manifestMeta(spark, root, v)
+    // a non-empty snapshot the native dv reader serves needs no
+    // data-dir paths (an empty one takes the declared-schema branch)
+    if (keepDirs.isEmpty && rels.nonEmpty) {
+      val native = nativeDvFrame(spark, root, v, meta, keepLineage)
+      if (native.isDefined) return native.get
     }
+    val dirs = keepDirs.fold(rels)(rels.filter).map(groupDir(root, _))
     // a PRUNED read of a non-empty snapshot that kept zero groups is an
     // empty frame in the full read's shape (the empty-snapshot branch
     // below demands a declared schema the table may not have)
-    if (dirs.isEmpty && keepDirs.isDefined &&
-        dataDirPaths(spark, root, version).nonEmpty) {
+    if (dirs.isEmpty && rels.nonEmpty) {
       val schema = readInternal(spark, root, version, keepLineage).schema
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
@@ -2878,12 +2917,6 @@ object LakeTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], shaped)
     }
-    val v = version.getOrElse(versions(spark, root).last)
-    val meta = manifestMeta(spark, root, v)
-    val native =
-      if (keepDirs.isDefined) None
-      else nativeDvFrame(spark, root, v, meta, keepLineage)
-    if (native.isDefined) return native.get
     val lineage = keepLineage || dvState(meta).nonEmpty
     val raw0 = scanDirs(spark, dirs)
     // lineage stamps FIRST (only the raw scan frame exposes _metadata)

@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 /** File skipping and per-scan planning in the deletion-vector reader
   * (`GraftDvBatchScan`): files whose footer row-group stats rule out
   * the pushed filters are never opened, skipping never changes a
-  * result, and each scan builds only the parquet readers it uses. The
-  * counts come from the executed scan's driver metrics. */
+  * result, tasks copy the Hadoop conf once per distinct pushed
+  * predicate and take footers from the cache, and one conf broadcast
+  * serves every scan under the same conf. The counts come from the
+  * executed scan's driver and task metrics. */
 class DvSkipSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -45,14 +47,19 @@ class DvSkipSpec extends SparkSpec {
     case q: QueryStageExec => scans(q.plan)
   }.flatten
 
-  /** The dv scan's driver metrics of an executed `df`. */
+  private val Partitions = "partitions"
+
+  /** The dv scan's metrics of an executed `df`, driver and task, and
+    * its partition count under [[Partitions]]. */
   private def metrics(df: DataFrame): Map[String, Long] = {
     val dv = scans(df.queryExecution.executedPlan)
       .filter(_.scan.description().startsWith("GraftDvBatchScan"))
     assert(dv.size == 1, df.queryExecution.executedPlan)
     Seq(GraftDvScanMetrics.FilesAdmitted, GraftDvScanMetrics.FilesKept,
-      GraftDvScanMetrics.FooterMisses, GraftDvScanMetrics.ReadersBuilt)
-      .map(n => n -> dv.head.metrics(n).value).toMap
+      GraftDvScanMetrics.FooterMisses, GraftDvScanMetrics.ConfBroadcasts,
+      GraftDvScanMetrics.TaskFooterReads, GraftDvScanMetrics.TaskConfCopies)
+      .map(n => n -> dv.head.metrics(n).value).toMap +
+      (Partitions -> dv.head.batch.planInputPartitions().length.toLong)
   }
 
   /** `body`'s result and the input records its tasks read. A marker
@@ -217,34 +224,57 @@ class DvSkipSpec extends SparkSpec {
       assert(m(GraftDvScanMetrics.FilesKept) >= 1 &&
         m(GraftDvScanMetrics.FilesKept) <= 2, m)
       assert(m(GraftDvScanMetrics.FooterMisses) == 41, m)
-      assert(m(GraftDvScanMetrics.ReadersBuilt) == 1, m)
+      // the tasks open the kept files on the footers skipping read
+      assert(m(GraftDvScanMetrics.TaskFooterReads) == 0, m)
+      assert(m(GraftDvScanMetrics.TaskConfCopies) == m(Partitions), m)
+      assert(m(GraftDvScanMetrics.ConfBroadcasts) <= 1, m)
       assert(read == 20L * m(GraftDvScanMetrics.FilesKept),
         s"tasks read $read records for $m")
 
-      // another point read: every footer comes from the cache
+      // another point read: every footer comes from the cache, and the
+      // conf broadcast is the first read's
       val again = LakeTable.readWhereEq(spark, root, "k", 507L)
       assert(again.collect().map(_.getLong(0)).toSeq == Seq(507L))
-      assert(metrics(again)(GraftDvScanMetrics.FooterMisses) == 0)
+      val ma = metrics(again)
+      assert(ma(GraftDvScanMetrics.FooterMisses) == 0, ma)
+      assert(ma(GraftDvScanMetrics.TaskFooterReads) == 0, ma)
+      assert(ma(GraftDvScanMetrics.ConfBroadcasts) == 0, ma)
 
-      // unfiltered: masked and unmasked files share one reader
+      // unfiltered: masked and unmasked files, one conf copy per task
       val full = LakeTable.read(spark, root)
       assert(full.collect().length == 819)
-      assert(metrics(full)(GraftDvScanMetrics.ReadersBuilt) == 1)
-      assert(metrics(full)(GraftDvScanMetrics.FilesKept) == 41)
-      // a masked and an unmasked file kept under a filter: two readers
+      val mf = metrics(full)
+      assert(mf(GraftDvScanMetrics.FilesKept) == 41, mf)
+      assert(mf(GraftDvScanMetrics.TaskConfCopies) == mf(Partitions), mf)
+      assert(mf(Partitions) < 41, mf)
+      assert(mf(GraftDvScanMetrics.TaskFooterReads) == 0, mf)
+      // a masked and an unmasked file kept under a filter: one copy
+      // without the predicate, one with it
       val both = LakeTable.read(spark, root).filter(col("k") <= 25L)
       assert(both.collect().length == 25)
       assert(metrics(both)(GraftDvScanMetrics.FilesKept) == 2)
-      assert(metrics(both)(GraftDvScanMetrics.ReadersBuilt) == 2)
-      // a lineage read reads every file whole: one reader
+      assert(metrics(both)(GraftDvScanMetrics.TaskConfCopies) == 2)
+      // every file kept under a filter, one of them masked: at most one
+      // copy per task and distinct predicate, where a copy per file
+      // would make 41
+      val all = LakeTable.read(spark, root).filter(col("k") >= 0L)
+      assert(all.collect().length == 819)
+      val mall = metrics(all)
+      assert(mall(GraftDvScanMetrics.FilesKept) == 41, mall)
+      assert(mall(GraftDvScanMetrics.TaskConfCopies) <= 2 * mall(Partitions), mall)
+      assert(2 * mall(Partitions) < 41, mall)
+      // a lineage read reads every file whole: one copy per task
       val lin = LakeTable.readWithLineage(spark, root).filter(col("k") <= 25L)
       assert(lin.collect().length == 25)
-      assert(metrics(lin)(GraftDvScanMetrics.ReadersBuilt) == 1)
-      // nothing can match: no file kept, no reader built
+      val ml = metrics(lin)
+      assert(ml(GraftDvScanMetrics.TaskConfCopies) == ml(Partitions), ml)
+      // nothing can match: no file kept, no conf broadcast or copy
       val none = LakeTable.readWhereEq(spark, root, "k", 100000L)
       assert(none.collect().isEmpty)
-      assert(metrics(none)(GraftDvScanMetrics.FilesKept) == 0)
-      assert(metrics(none)(GraftDvScanMetrics.ReadersBuilt) == 0)
+      val mn = metrics(none)
+      assert(mn(GraftDvScanMetrics.FilesKept) == 0, mn)
+      assert(mn(GraftDvScanMetrics.ConfBroadcasts) == 0, mn)
+      assert(mn(GraftDvScanMetrics.TaskConfCopies) == 0, mn)
     }
   }
 
@@ -330,6 +360,157 @@ class DvSkipSpec extends SparkSpec {
       LakeTable.vacuum(spark, root, keepVersions = 1)
       intercept[Exception](LakeTable.read(spark, root, Some(v)).collect())
       assert(LakeTable.read(spark, root).count() == 39L)
+    }
+    withRoot { root =>
+      // a deleted dv sidecar whose byte count was cached
+      LakeTable.create(spark, root, rows(0L until 30L, k => s"a$k"))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 3L)
+      assert(LakeTable.read(spark, root).collect().length == 29)
+      val sidecars = new java.io.File(root, "_deletes").listFiles()
+        .filter(_.getName.endsWith(".bin"))
+      assert(sidecars.length == 1)
+      sidecars.foreach(_.delete())
+      intercept[Exception](LakeTable.read(spark, root).collect())
+      intercept[Exception](LakeTable.readWhereEq(spark, root, "k", 7L).collect())
+    }
+  }
+
+  test("the dv reader reads nested columns alike over the vectorized " +
+    "reader and parquet-mr: API, SQL and lineage reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dv_nested")
+    val wh = dir.toString
+    spark.conf.set("spark.sql.catalog.lakeNest", "graft.sources.GraftLakeCatalog")
+    spark.conf.set("spark.sql.catalog.lakeNest.warehouse", wh)
+    try {
+      val root = s"$wh/t"
+      def rowsOf(lo: Long, hi: Long) = spark.range(lo, hi).select(
+        col("id").as("k"),
+        when(col("id") % 7L === 0L, lit(null)).otherwise(struct(
+          (col("id") * 2L).cast("int").as("a"),
+          format_string("s%d", col("id")).as("b"))).as("st"),
+        when(col("id") % 5L === 0L, lit(null)).otherwise(array(
+          col("id").cast("int"), lit(null).cast("int"),
+          (col("id") + 1L).cast("int"))).as("arr"))
+      LakeTable.create(spark, root, rowsOf(0L, 50L).coalesce(1))
+      (1 until 4).foreach(g =>
+        LakeTable.append(spark, root, rowsOf(g * 50L, g * 50L + 50L).coalesce(1)))
+      LakeTable.deleteWhereDv(spark, root, col("k") % 10L === 3L)
+      val expected = lines(rowsOf(0L, 200L).filter(col("k") % 10L =!= 3L))
+      val readSchema = LakeTable.read(spark, root).schema
+      def reads(): Seq[Seq[String]] = Seq(
+        lines(LakeTable.read(spark, root)),
+        lines(spark.sql("SELECT * FROM lakeNest.t")),
+        lines(LakeTable.readWithLineage(spark, root)
+          .drop("__file", "__pos")),
+        lines(LakeTable.readWithLineage(spark, root)
+          .select("__file", "__pos", "k")),
+        lines(LakeTable.read(spark, root).filter(col("k") > 120L)))
+      val on = reads()
+      val off = withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
+        assert(!org.apache.spark.sql.execution.datasources.parquet
+          .GraftParquetFileRead(spark.sessionState.conf, readSchema).vectorized)
+        reads()
+      }
+      assert(on == off)
+      assert(on(0) == expected)
+      assert(on(1) == expected)
+      assert(on(2) == expected)
+      assert(on(3).size == expected.size)
+      assert(on(4) == expected.filter(_.split('|')(0).toLong > 120L))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.lakeNest")
+      spark.conf.unset("spark.sql.catalog.lakeNest.warehouse")
+      graft.util.Tmp.deleteRecursively(dir)
+    }
+  }
+
+  test("each read of one snapshot honors its own conf: parquet filter " +
+    "pushdown and the INT96 rebase mode") {
+    withRoot { root =>
+      // a conf no other read shares, so this test's broadcasts are its
+      // own; pushdown set explicitly, as withConf restores it
+      withConf("spark.graft.dvskipspec.nonce" -> java.util.UUID.randomUUID().toString,
+          "spark.sql.parquet.filterPushdown" -> "true") {
+        LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+        (1 until 6).foreach(g => LakeTable.append(spark, root,
+          rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
+        LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
+        def point() = {
+          val df = LakeTable.readWhereEq(spark, root, "k", 63L)
+          assert(df.collect().map(_.getString(1)).toSeq == Seq("a63"))
+          metrics(df)
+        }
+        val on = point()
+        assert(on(GraftDvScanMetrics.FilesKept) < on(GraftDvScanMetrics.FilesAdmitted), on)
+        assert(on(GraftDvScanMetrics.ConfBroadcasts) == 1, on)
+        val off = withConf("spark.sql.parquet.filterPushdown" -> "false")(point())
+        assert(off(GraftDvScanMetrics.FilesKept) == 6, off)
+        assert(off(GraftDvScanMetrics.ConfBroadcasts) == 1, off)
+        val back = point()
+        assert(back(GraftDvScanMetrics.FilesKept) == on(GraftDvScanMetrics.FilesKept), back)
+        assert(back(GraftDvScanMetrics.ConfBroadcasts) == 0, back)
+      }
+    }
+    withRoot { root =>
+      // INT96 values of a file no Spark wrote (no version key in its
+      // footer) rebase under the session's mode
+      val mode = "spark.sql.parquet.int96RebaseModeInRead"
+      val day = java.time.LocalDate.of(1000, 1, 1)
+      withConf(mode -> "CORRECTED") {
+        LakeTable.create(spark, root, spark.range(3).select(col("id").as("k"),
+          timestamp_seconds(lit(0L)).as("ts")).coalesce(1))
+        val group = new java.io.File(LakeTable.dataDirPaths(spark, root).head)
+        val target = group.listFiles().filter(_.getName.endsWith(".parquet")).head
+        group.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+        val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+          "message m { optional int64 k; optional int96 ts; }")
+        val tmp = java.nio.file.Paths.get(root + "-int96.parquet")
+        val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+          .builder(new org.apache.hadoop.fs.Path(tmp.toUri))
+          .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+        val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        val int96 = java.nio.ByteBuffer.allocate(12)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          .putLong(0L).putInt((day.toEpochDay + 2440588L).toInt).array()
+        try (0L until 3L).foreach(k => w.write(groups.newGroup().append("k", k)
+          .append("ts", org.apache.parquet.io.api.Binary.fromConstantByteArray(int96))))
+        finally w.close()
+        java.nio.file.Files.move(tmp, target.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        LakeTable.deleteWhereDv(spark, root, col("k") === 1L)
+      }
+      def ts(): Seq[String] = LakeTable.read(spark, root).orderBy("k")
+        .select(col("ts").cast("string")).collect().map(_.getString(0)).toSeq
+      val corrected = withConf(mode -> "CORRECTED")(ts())
+      assert(corrected == Seq.fill(2)("1000-01-01 00:00:00"))
+      val legacy = withConf(mode -> "LEGACY")(ts())
+      assert(legacy.size == 2 && legacy.forall(_ != corrected.head), legacy)
+      val failed = withConf(mode -> "EXCEPTION")(intercept[Exception](ts()))
+      assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+        .exists(_.getClass.getSimpleName == "SparkUpgradeException"), failed)
+      assert(withConf(mode -> "CORRECTED")(ts()) == corrected)
+    }
+  }
+
+  test("a second read of a snapshot reads no footer in its tasks and " +
+    "makes no conf broadcast") {
+    withRoot { root =>
+      LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      (1 until 6).foreach(g => LakeTable.append(spark, root,
+        rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
+      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
+      // an unfiltered read skips nothing, so its tasks read the footers
+      val first = LakeTable.read(spark, root)
+      assert(first.collect().length == 102)
+      val m1 = metrics(first)
+      assert(m1(GraftDvScanMetrics.FooterMisses) == 0, m1)
+      assert(m1(GraftDvScanMetrics.TaskFooterReads) == 6, m1)
+      val second = LakeTable.read(spark, root)
+      assert(lines(second) == lines(first))
+      val m2 = metrics(second)
+      assert(m2(GraftDvScanMetrics.TaskFooterReads) == 0, m2)
+      assert(m2(GraftDvScanMetrics.ConfBroadcasts) == 0, m2)
+      assert(m2(GraftDvScanMetrics.TaskConfCopies) == m2(Partitions), m2)
     }
   }
 }
