@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.sources.{LakeAnnIndex, LakeMinHashIndex, LakeTable}
+import graft.sources.{GraftDvScanMetrics, LakeAnnIndex, LakeMinHashIndex, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -3896,13 +3896,16 @@ object LakeQueries {
           s.sql(s"UPDATE $cat.t SET n_chars = n_chars + 1000000 " +
             s"WHERE doc_id = $minId")
         }
+        // (value, groups admitted, groups total), off the dv scan's
+        // metrics
         def probe(sql: String): (Long, Long, Long) = {
-          graft.sources.GraftDvScan.lastPrune = None
-          val v = s.sql(sql).head().getLong(0)
-          val (kept, total) = graft.sources.GraftDvScan.lastPrune
-            .getOrElse(throw new IllegalStateException(
-              "catalog read did not route through GraftDvScan"))
-          (v, kept.toLong, total.toLong)
+          val df = s.sql(sql)
+          val v = df.collect().head.getLong(0)
+          val m = GraftDvScanMetrics.of(df).getOrElse(
+            throw new IllegalStateException(
+              "catalog read did not route through GraftDvBatchScan"))
+          (v, m(GraftDvScanMetrics.GroupsAdmitted),
+            m(GraftDvScanMetrics.GroupsTotal))
         }
         val (hitVal, hitKept, hitTotal) = probe(
           s"SELECT n_chars FROM $cat.t WHERE doc_id = $minId")
@@ -3914,11 +3917,12 @@ object LakeQueries {
           s"SELECT sum(n_chars) FROM $cat.t")
         val nTotal = s.sql(s"SELECT count(*) FROM $cat.t")
           .head().getLong(0)
-        // the pre-update snapshot takes the PLAIN indexed delegate
-        graft.sources.GraftDvScan.lastPrune = None
-        val ttMin = s.sql(s"SELECT n_chars FROM $cat.t VERSION AS OF 1 " +
-          s"WHERE doc_id = $minId").head().getLong(0)
-        val ttPlain = graft.sources.GraftDvScan.lastPrune.isEmpty
+        // the pre-update snapshot takes the PLAIN indexed delegate: no
+        // dv scan in its plan
+        val tt = s.sql(s"SELECT n_chars FROM $cat.t VERSION AS OF 1 " +
+          s"WHERE doc_id = $minId")
+        val ttMin = tt.collect().head.getLong(0)
+        val ttPlain = GraftDvScanMetrics.of(tt).isEmpty
         // NATIVE statistics (the r14 weak item's companion fix): the dv
         // snapshot reports its kept bytes through the native DSv2
         // Batch, so with AQE DISABLED the STATIC planner broadcasts the

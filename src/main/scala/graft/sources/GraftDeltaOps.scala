@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * operation's scan skips already-masked rows (they must not re-match
   * a MERGE), so MOR statements stack.
   *
-  * Scan contract: the operation scans through the native dv reader
+  * Scan contract: the operation scans through the dv reader
   * ([[GraftDvBatchScan]], which appends the row identity); filters are
   * accepted for group pruning only and all reported residual — Spark
   * re-applies the row-level condition above the scan (delta semantics
@@ -97,23 +97,12 @@ private[sources] final class GraftDeltaScanBuilder(root: String)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** The native dv reader over the latest snapshot, pinned to the
-    * version resolved here; `__file`/`__pos` come from its lineage
-    * columns and already-masked rows never reach the operation. */
+  /** The dv reader over the latest snapshot, pinned to the version
+    * resolved here; `__file`/`__pos` come from its lineage columns and
+    * already-masked rows never reach the operation. */
   override def build(): Scan = {
     val v = LakeTable.latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no table at $root"))
-    // same driver-side bound as the native read: masks are collected
-    // to plan per-file skips, and a sidecar set this large is past due
-    // for rewriteDeletes anyway
-    val maskBytes = LakeTable.dvSidecarBytes(spark, root,
-      LakeTable.manifestMetaAt(spark, root, v))
-    if (maskBytes > GraftDvBatchScan.MaxMaskBytes)
-      throw new UnsupportedOperationException(
-        s"graft-lake: row-level MOR op at $root — accumulated dv " +
-          s"sidecars ($maskBytes bytes) exceed the driver mask bound " +
-          s"(${GraftDvBatchScan.MaxMaskBytes}); run " +
-          "LakeTable.rewriteDeletes (or compactDeletes) first")
     new GraftDvBatchScan(root, Some(v), tableSchema, required, pushed.toSeq)
   }
 }

@@ -5,14 +5,16 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileRead
-import org.apache.spark.sql.functions.{col, collect_set, sort_array}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -42,13 +44,15 @@ import java.util.OptionalLong
   *    distinct pushed predicate, not once per file, and takes each
   *    file's footer from the footer cache (reading and caching it on a
   *    miss), so a re-read opens no footer;
-  *  - the dv mask applies per file IN the reader: each file carries
-  *    only ITS masked positions, varint-delta encoded ([[DvMaskCodec]]
-  *    — a sorted position list costs ~1–2 bytes/row), keyed by
-  *    [[LakeTable.fileKey]]; a masked file reads WHOLE, without parquet
-  *    filter pushdown, so the row counter sees every row (position =
-  *    sequential row index of the whole-file scan; files are never
-  *    split);
+  *  - the dv mask applies per file IN the reader: each task builds the
+  *    masks of ITS partition's files before opening the first, from the
+  *    snapshot's sidecars ([[GraftDvSidecars]]: `.bin` sidecars through
+  *    the decoded-sidecar cache, parquet sidecar parts read with the
+  *    task's file keys pushed), so no mask passes through the driver and
+  *    a mask of any size reads the same way; a masked file reads WHOLE,
+  *    without parquet filter pushdown, so the row counter sees every
+  *    row (position = sequential row index of the whole-file scan;
+  *    files are never split);
   *  - lineage: when the required schema asks for `__file`/`__pos` the
   *    reader appends each row's file key and position, and then every
   *    file reads whole, so `__pos` is the row's index in its file;
@@ -62,25 +66,24 @@ import java.util.OptionalLong
   *    runs a handful of tasks, not one per file;
   *  - planning runs once per scan: Spark asks for the partitions and
   *    the reader factory more than once per query, and both are lazy
-  *    vals here (masks load once); the prepared Hadoop conf is broadcast
-  *    once per distinct conf and Spark context, not per scan
+  *    vals here; the prepared Hadoop conf is broadcast once per distinct
+  *    conf and Spark context, not per scan
   *    ([[GraftDvBatchScan.confBroadcast]]);
   *  - [[SupportsReportStatistics]] reports the kept files' byte size,
   *    so the STATIC planner broadcasts a small dv dimension — no AQE
   *    needed;
-  *  - metrics on the executed scan ([[GraftDvScanMetrics]]): files
-  *    after manifest admission, files kept by footer stats, driver
-  *    footer-cache misses and conf broadcasts; footers read and conf
-  *    copies made by the tasks.
+  *  - metrics on the executed scan ([[GraftDvScanMetrics]]): groups
+  *    admitted by the manifest and in the snapshot, files after manifest
+  *    admission, files kept by footer stats, driver footer-cache misses
+  *    and conf broadcasts; footers read and conf copies made by the
+  *    tasks.
   *
   * Spark re-applies the full predicate above the scan (every filter is
   * returned as residual by the builders), so pushdown and skipping here
   * are strict optimizations; filters on a column the mapping renames or
-  * hides are not pushed at all. Snapshots with equality deletes or masks
-  * past [[GraftDvBatchScan.MaxMaskBytes]] stay outside
-  * ([[LakeTable.nativeDvOk]]). Mask state is O(churn), never O(table):
-  * the planner ships each file's own compressed mask with its
-  * partition, and [[LakeTable.rewriteDeletes]] folds masks away.
+  * hides are not pushed at all. Snapshots with equality deletes stay
+  * outside ([[LakeTable.nativeDvOk]]). A sidecar the snapshot names but
+  * the filesystem lacks fails the read with an error naming it.
   */
 private[sources] final class GraftDvBatchScan(
     root: String, version: Option[Int], tableSchema: StructType,
@@ -112,12 +115,8 @@ private[sources] final class GraftDvBatchScan(
     if (spark.sessionState.conf.parquetFilterPushDown) pushable else Nil
 
   // resolved once per scan; planning and statistics share it
-  private lazy val pruned: (Seq[String], Int) = {
-    val p = LakeTable.pruneDirsForFilters(spark, root, Some(snapshot),
-      pushable)
-    GraftDvScan.lastPrune = Some((p._1.size, p._2))
-    p
-  }
+  private lazy val pruned: (Seq[String], Int) =
+    LakeTable.pruneDirsForFilters(spark, root, Some(snapshot), pushable)
 
   private lazy val admitted: Seq[Listed] = pruned._1.flatMap(d =>
     GraftDvBatchScan.listGroup(spark, LakeTable.groupDir(root, d)))
@@ -125,7 +124,7 @@ private[sources] final class GraftDvBatchScan(
   @volatile private var footerMisses = 0
   @volatile private var confBroadcasts = 0
 
-  private lazy val keptFiles: Seq[Listed] =
+  private lazy val files: Seq[Listed] =
     if (parquetFilters.isEmpty) admitted
     else {
       val (kept, misses) =
@@ -133,11 +132,6 @@ private[sources] final class GraftDvBatchScan(
       footerMisses = misses
       kept
     }
-
-  private lazy val files: Seq[GraftDvFile] = {
-    val masks = GraftDvBatchScan.loadMasks(spark, root, meta)
-    keptFiles.map(f => GraftDvFile(f, masks.getOrElse(f.key, null)))
-  }
 
   private lazy val partitions: Array[InputPartition] =
     GraftDvBatchScan.pack(spark, files).toArray
@@ -152,7 +146,7 @@ private[sources] final class GraftDvBatchScan(
     * dim pruned to a sliver reports a sliver; numRows left empty (the
     * byte size is what the broadcast threshold consumes). */
   override def estimateStatistics(): Statistics = {
-    val bytes = math.max(1L, keptFiles.map(_.length).sum)
+    val bytes = math.max(1L, files.map(_.length).sum)
     new Statistics {
       override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
       override def numRows(): OptionalLong = OptionalLong.empty()
@@ -168,8 +162,10 @@ private[sources] final class GraftDvBatchScan(
 
   override def reportDriverMetrics(): Array[CustomTaskMetric] =
     GraftDvScanMetrics.values(
+      GraftDvScanMetrics.GroupsAdmitted -> pruned._1.size.toLong,
+      GraftDvScanMetrics.GroupsTotal -> pruned._2.toLong,
       GraftDvScanMetrics.FilesAdmitted -> admitted.size.toLong,
-      GraftDvScanMetrics.FilesKept -> keptFiles.size.toLong,
+      GraftDvScanMetrics.FilesKept -> files.size.toLong,
       GraftDvScanMetrics.FooterMisses -> footerMisses.toLong,
       GraftDvScanMetrics.ConfBroadcasts -> confBroadcasts.toLong)
 
@@ -195,7 +191,7 @@ private[sources] final class GraftDvBatchScan(
     // unmasked files take row-group pruning; masked files (and every
     // file of a lineage read) read FULLY so the sequential row counter
     // equals the dv position space. A scan that kept no file runs no
-    // task and needs no conf.
+    // task and needs neither conf nor sidecars.
     val lineageRead = plan.exists(c => c == File || c == Pos)
     val conf =
       if (files.isEmpty) null
@@ -204,22 +200,24 @@ private[sources] final class GraftDvBatchScan(
         if (made) confBroadcasts = 1
         b
       }
+    val rels = LakeTable.dvState(meta)
+    val sidecars =
+      if (files.isEmpty || rels.isEmpty) null
+      else {
+        val (bins, dirs) = rels.partition(_.endsWith(".bin"))
+        GraftDvSidecars(root, bins.toArray,
+          dirs.flatMap(GraftDvBatchScan.listSidecar(spark, root, _)).toArray,
+          GraftParquetFileRead(spark.sessionState.conf, GraftDvSidecars.Schema))
+      }
     new GraftDvReaderFactory(
       GraftParquetFileRead(spark.sessionState.conf, StructType(read)), conf,
       if (lineageRead) Nil else parquetFilters,
       if (plan.length != read.length) plan else null,
-      requiredSchema.fields.map(_.dataType))
+      requiredSchema.fields.map(_.dataType), sidecars)
   }
 }
 
 private[graft] object GraftDvBatchScan {
-
-  /** Above this many dv sidecar bytes reads keep the V1 bridge's
-    * distributed anti-join and SQL merge-on-read operations refuse: the
-    * native path ships each file's compressed mask from the driver, and
-    * a mask this large (≈ tens of millions of rows) is past due for
-    * [[LakeTable.rewriteDeletes]] anyway. */
-  private[sources] val MaxMaskBytes: Long = 64L * 1024 * 1024
 
   /** A listed data file: its key ([[LakeTable.fileKey]]), byte length
     * and modification time — together the identity its footer is cached
@@ -304,6 +302,17 @@ private[graft] object GraftDvBatchScan {
       listed
     }
 
+  /** The part files of the parquet dv sidecar dir `rel` under `root`.
+    * Sidecars are write-once like group dirs, so [[listGroup]]'s
+    * listing serves them; a dir that is gone fails with an error naming
+    * the sidecar ([[LakeTable.sidecarMissing]]). */
+  private[sources] def listSidecar(spark: SparkSession, root: String,
+      rel: String): Seq[Listed] =
+    try listGroup(spark, new Path(root, rel).toString)
+    catch { case e: java.io.FileNotFoundException =>
+      throw LakeTable.sidecarMissing(root, rel, e)
+    }
+
   /** Caches `footer`, row groups included, as `f`'s. */
   private[sources] def cacheFooter(f: Listed, footer: ParquetMetadata): Unit = {
     if (footerCache.size > 20000) footerCache.clear()
@@ -334,26 +343,33 @@ private[graft] object GraftDvBatchScan {
   }
 
   /** The files of `files` whose footer row-group stats admit `filters`
-    * (drop a file when parquet-mr's STATISTICS-level row-group filter
-    * keeps none of its row groups), and the footer-cache misses. The
-    * predicate is the one each task's reader pushes
-    * ([[GraftParquetFileRead.predicate]]: Spark's [[ParquetFilters]]
-    * under the session conf, the rebase spec from the footer), built
-    * once per distinct file schema — the same check the task's parquet
-    * reader runs after opening the file, so it never drops a row a task
-    * would have returned. Files whose predicate cannot be built or
-    * checked are kept. */
+    * ([[Admits]]), and the footer-cache misses. */
   private[sources] def footerSkip(spark: SparkSession, files: Seq[Listed],
       filters: Seq[Filter]): (Seq[Listed], Int) = {
+    val admit = new Admits(
+      GraftParquetFileRead(spark.sessionState.conf, new StructType()), filters)
+    val (footerList, misses) = footers(spark, files)
+    (files.zip(footerList).filter(f => admit(f._2)).map(_._1), misses)
+  }
+
+  /** Whether parquet-mr's STATISTICS-level row-group filter keeps any
+    * row group of a footer under `filters`. The predicate is the one a
+    * task's reader pushes ([[GraftParquetFileRead.predicate]]: Spark's
+    * [[ParquetFilters]] under the session conf, the rebase spec from the
+    * footer), built once per distinct file schema — the same check the
+    * task's parquet reader runs after opening the file, so it never
+    * drops a row a task would have returned. A footer whose predicate
+    * cannot be built or checked is admitted. */
+  private[sources] final class Admits(read: GraftParquetFileRead,
+      filters: Seq[Filter]) extends (ParquetMetadata => Boolean) {
     import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
     import org.apache.parquet.filter2.predicate.FilterPredicate
     import org.apache.parquet.schema.MessageType
     import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-    val read = GraftParquetFileRead(spark.sessionState.conf, new StructType())
-    val predicates =
-      scala.collection.mutable.HashMap[(MessageType, RebaseSpec), Option[FilterPredicate]]()
-    val (footerList, misses) = footers(spark, files)
-    val kept = files.zip(footerList).filter { case (_, footer) =>
+    private val predicates = scala.collection.mutable.HashMap[
+      (MessageType, RebaseSpec), Option[FilterPredicate]]()
+
+    override def apply(footer: ParquetMetadata): Boolean = {
       val fmd = footer.getFileMetaData
       val rebase = read.rebaseSpecs(footer)._1
       val predicate = predicates.getOrElseUpdate((fmd.getSchema, rebase),
@@ -362,93 +378,42 @@ private[graft] object GraftDvBatchScan {
       predicate.forall(p => scala.util.Try(!RowGroupFilter.filterRowGroups(
         FilterCompat.get(p), footer.getBlocks, fmd.getSchema).isEmpty)
         .getOrElse(true))
-    }.map(_._1)
-    (kept, misses)
+    }
   }
 
   /** Whole files packed into partitions by size with Spark's own
     * file-scan packing (`FilePartition.maxSplitBytes` and
     * `getFilePartitions`, largest file first): the same target size,
     * open cost and partition-count settings as a parquet scan, except
-    * that no file is split. Each file keeps its own mask. */
+    * that no file is split. */
   private[sources] def pack(spark: SparkSession,
-      files: Seq[GraftDvFile]): Seq[GraftDvFilePartition] = {
+      files: Seq[Listed]): Seq[GraftDvFilePartition] = {
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(spark,
       files.map(_.length + openCost).sum)
-    val byPath = files.map(f => SparkPath.fromUrlString(f.path) -> f).toMap
+    val byPath = files.map(f => SparkPath.fromUrlString(f.key) -> f).toMap
     val whole = files.sortBy(-_.length).map(f => PartitionedFile(
       new GenericInternalRow(Array.empty[Any]),
-      SparkPath.fromUrlString(f.path), 0, f.length))
+      SparkPath.fromUrlString(f.key), 0, f.length))
     FilePartition.getFilePartitions(spark, whole, maxSplit).map(p =>
       GraftDvFilePartition(p.files.map(pf => byPath(pf.filePath))))
   }
-
-  /** Per-FILE masked positions of a snapshot, varint-delta encoded —
-    * one distributed group-collect over the sidecars (O(mask), bounded
-    * by [[MaxMaskBytes]] at the builder). */
-  private[sources] def loadMasks(spark: SparkSession, root: String,
-      meta: Map[String, String]): Map[String, Array[Byte]] = {
-    val rels = LakeTable.dvState(meta)
-    if (rels.isEmpty) return Map.empty
-    // all-binary accumulations (stacked point updates) merge on the
-    // driver from the decoded-sidecar cache — zero Spark jobs
-    val merged = LakeTable.binMasksMerged(spark, root, rels)
-    if (merged.isDefined) return merged.get
-    LakeTable.dvMaskFrame(spark, root, rels)
-      .groupBy(col(LakeTable.FileCol))
-      .agg(sort_array(collect_set(col(LakeTable.PosCol))).as("ps"))
-      .collect()
-      .map { r =>
-        r.getString(0) -> DvMaskCodec.encode(
-          r.getSeq[Long](1).toArray)
-      }.toMap
-  }
-
-  /** [[loadMasks]] over an explicit sidecar list, keyed (file, op
-    * tag): the change feed reconstructs a sidecar-less dv commit from
-    * ONLY the sidecars that version added, and classifies each masked
-    * row by its own 'U'/'D' tag (update preimage vs delete), so a
-    * clause-matrix MERGE's mixed masks stay distinguishable. Same
-    * driver-side bound contract as [[loadMasks]] — callers gate on
-    * sidecar bytes. */
-  private[sources] def loadMasksByOpFromRels(spark: SparkSession,
-      root: String, rels: Seq[String])
-      : Map[(String, String), Array[Byte]] = {
-    if (rels.isEmpty) return Map.empty
-    val merged = LakeTable.binMasksMergedByOp(spark, root, rels)
-    if (merged.isDefined) return merged.get
-    LakeTable.dvMaskFrame(spark, root, rels)
-      .groupBy(col(LakeTable.FileCol), col("__op"))
-      .agg(sort_array(collect_set(col(LakeTable.PosCol))).as("ps"))
-      .collect()
-      .map { r =>
-        (r.getString(0), r.getString(1)) -> DvMaskCodec.encode(
-          r.getSeq[Long](2).toArray)
-      }.toMap
-  }
 }
 
-/** One data file of a dv scan, read whole (never split: the dv position
-  * space is the whole-file row index): its listing (key
-  * [[LakeTable.fileKey]], length, mtime — its footer's cache identity)
-  * and its `mask`, null for unmasked files. */
-private[sources] final case class GraftDvFile(
-    file: GraftDvBatchScan.Listed, mask: Array[Byte]) {
-  def path: String = file.key
-  def length: Long = file.length
-}
-
-/** The whole files one task reads, in order ([[GraftDvBatchScan.pack]]);
-  * each keeps its own mask. */
+/** The whole files one task reads, in order ([[GraftDvBatchScan.pack]]):
+  * each one's key ([[LakeTable.fileKey]]), length and mtime — its
+  * footer's cache identity. The dv position space is a file's
+  * whole-file row index, so no file is split. */
 private[sources] final case class GraftDvFilePartition(
-    files: Array[GraftDvFile]) extends InputPartition
+    files: Array[GraftDvBatchScan.Listed]) extends InputPartition
 
 /** Varint(LEB128)-encoded gaps of a strictly-increasing non-negative
   * position list: gap₀ = p₀ + 1, gapᵢ = pᵢ − pᵢ₋₁ (all ≥ 1). Point
   * masks cost a couple of bytes; a dense masked run costs ~1 byte/row
-  * — the roaring-lite encoding that keeps shipped masks O(churn). */
+  * — the roaring-lite encoding that keeps masks O(churn). */
 private[sources] object DvMaskCodec {
+  /** Encodes an ascending position list; a repeated position is
+    * written once. */
   def encode(sorted: Array[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(
       math.max(16, sorted.length * 2))
@@ -456,10 +421,12 @@ private[sources] object DvMaskCodec {
     var i = 0
     while (i < sorted.length) {
       var d = sorted(i) - prev
-      while ((d & ~0x7fL) != 0L) {
-        out.write(((d & 0x7fL) | 0x80L).toInt); d >>>= 7
+      if (d != 0L) {
+        while ((d & ~0x7fL) != 0L) {
+          out.write(((d & 0x7fL) | 0x80L).toInt); d >>>= 7
+        }
+        out.write(d.toInt)
       }
-      out.write(d.toInt)
       prev = sorted(i); i += 1
     }
     out.toByteArray
@@ -581,20 +548,95 @@ private[sources] object DvBinarySidecar {
   }
 }
 
+/** A snapshot's deletion-vector sidecars as its scan's tasks read them:
+  * the table root, its `.bin` sidecar rels ([[DvBinarySidecar]]) and
+  * the part files of its parquet sidecar dirs, listed once on the
+  * driver ([[GraftDvBatchScan.listSidecar]]). `read` reads a part's
+  * (`__file`, `__pos`) columns. */
+private[sources] final case class GraftDvSidecars(root: String,
+    bins: Array[String], parts: Array[GraftDvBatchScan.Listed],
+    read: GraftParquetFileRead) {
+
+  /** One task's masks for the data files `keys`, by key; files with no
+    * masked position are absent. Built on first use, after which
+    * `footerReads` and `confCopies` count the parquet sidecar footers
+    * it read and the Hadoop conf copies it made. */
+  final class Load(shared: org.apache.hadoop.conf.Configuration,
+      keys: Array[String]) {
+    import org.apache.spark.sql.sources.In
+    var footerReads = 0L
+    private val filters = Seq(In(LakeTable.FileCol, keys.toArray[Any]))
+    private val task = new read.Task(shared, filters)
+    def confCopies: Long = task.confCopies
+
+    lazy val masks: Map[String, Array[Byte]] = {
+      val byKey = keys.map(k => UTF8String.fromString(k) -> k).toMap
+      val keySet = keys.toSet
+      val positions = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      def add(k: String, p: Long): Unit =
+        positions.getOrElseUpdate(k, new scala.collection.mutable.ArrayBuilder.ofLong) += p
+      if (bins.nonEmpty) {
+        val fs = new Path(root).getFileSystem(shared)
+        bins.foreach(rel => LakeTable.readBinSidecar(fs, root, rel).foreach {
+          case (k, _, mask) if keySet(k) =>
+            val c = new DvMaskCodec.Cursor(mask)
+            while (c.hasNext) add(k, c.next())
+          case _ => ()
+        })
+      }
+      // the keys are pushed for row-group pruning, so a part whose
+      // `__file` stats hold none of them opens no more once its footer
+      // is cached
+      lazy val admit = new GraftDvBatchScan.Admits(read, filters)
+      parts.foreach { part =>
+        val cached = GraftDvBatchScan.footerCache.get(part)
+        if (cached == null || admit(cached)) {
+          if (cached == null) footerReads += 1
+          if (!read.vectorized) footerReads += 1
+          val (rows, handle) = try task.open(part.status, cached, push = true)(
+            GraftDvBatchScan.cacheFooter(part, _))
+          catch { case e: java.io.FileNotFoundException =>
+            throw LakeTable.sidecarMissing(root, part.key, e)
+          }
+          try rows.foreach { r =>
+            val k = byKey.getOrElse(r.getUTF8String(0), null)
+            if (k != null) add(k, r.getLong(1))
+          } finally handle.close()
+        }
+      }
+      positions.iterator.map { case (k, b) =>
+        val ps = b.result()
+        java.util.Arrays.sort(ps)
+        k -> DvMaskCodec.encode(ps)
+      }.toMap
+    }
+  }
+}
+
+private[sources] object GraftDvSidecars {
+  /** The columns a parquet sidecar's part is read for. */
+  val Schema: StructType = StructType(Seq(
+    StructField(LakeTable.FileCol, org.apache.spark.sql.types.StringType),
+    StructField(LakeTable.PosCol, org.apache.spark.sql.types.LongType)))
+}
+
 /** Reader factory: a partition's files stream in order, each read
   * whole by the task's one [[GraftParquetFileRead.Task]] over the
   * broadcast conf — unmasked files with `pushed` pushed for row-group
   * pruning, masked files (and every file when lineage is asked for)
-  * without, behind the mask walk ([[DvMaskCodec.walk]]). Each file's
-  * footer comes from [[GraftDvBatchScan.footerCache]]; a miss reads it
-  * off the file's open stream and caches it. `plan` (null = parquet
-  * rows pass through) names each output column's source: a parquet
-  * column ordinal,
-  * [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]] lineage,
-  * or [[GraftDvReaderFactory.Missing]] (typed null). */
+  * without, behind the mask walk ([[DvMaskCodec.walk]]). Before its
+  * first file opens, the task loads the masks of its files from
+  * `sidecars` (null: the snapshot has none). Each file's footer comes
+  * from [[GraftDvBatchScan.footerCache]]; a miss reads it off the
+  * file's open stream and caches it. `plan` (null = parquet rows pass
+  * through) names each output column's source: a parquet column
+  * ordinal, [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]]
+  * lineage, or [[GraftDvReaderFactory.Missing]] (typed null). */
 private[sources] final class GraftDvReaderFactory(
     read: GraftParquetFileRead, conf: Broadcast[SerializableConfiguration],
-    pushed: Seq[Filter], plan: Array[Int], types: Array[DataType])
+    pushed: Seq[Filter], plan: Array[Int], types: Array[DataType],
+    sidecars: GraftDvSidecars)
     extends PartitionReaderFactory {
   import GraftDvReaderFactory._
 
@@ -622,25 +664,30 @@ private[sources] final class GraftDvReaderFactory(
       : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
     private val task = new read.Task(conf.value.value, pushed)
     private var footerReads = 0L
-    private val pending = p.asInstanceOf[GraftDvFilePartition].files.iterator
+    private val files = p.asInstanceOf[GraftDvFilePartition].files
+    private val masks =
+      if (sidecars == null) null
+      else new sidecars.Load(conf.value.value, files.map(_.key))
+    private val pending = files.iterator
     private var rows: Iterator[InternalRow] = Iterator.empty
     private var open: java.io.Closeable = null
     private var cur: InternalRow = _
 
-    private def rowsOf(f: GraftDvFile): Iterator[InternalRow] = {
-      val cached = GraftDvBatchScan.footerCache.get(f.file)
+    private def rowsOf(f: GraftDvBatchScan.Listed): Iterator[InternalRow] = {
+      val mask = if (masks == null) null else masks.masks.getOrElse(f.key, null)
+      val cached = GraftDvBatchScan.footerCache.get(f)
       if (cached == null) footerReads += 1
       // parquet-mr's reader reads the footer again itself
       if (!read.vectorized) footerReads += 1
-      val push = f.mask == null && !lineage
-      val (it, handle) = task.open(f.file.status, cached, push)(
-        GraftDvBatchScan.cacheFooter(f.file, _))
+      val push = mask == null && !lineage
+      val (it, handle) = task.open(f.status, cached, push)(
+        GraftDvBatchScan.cacheFooter(f, _))
       open = handle
       if (push) {
         if (plan == null) it else it.map(shape(_, null, -1L))
       } else {
-        val file = UTF8String.fromString(f.path)
-        DvMaskCodec.walk(it, f.mask, keepMasked = false)((r, pos) =>
+        val file = UTF8String.fromString(f.key)
+        DvMaskCodec.walk(it, mask, keepMasked = false)((r, pos) =>
           if (plan == null) r else shape(r, file, pos))
       }
     }
@@ -657,8 +704,10 @@ private[sources] final class GraftDvReaderFactory(
       if (open != null) { open.close(); open = null }
     override def currentMetricsValues(): Array[CustomTaskMetric] =
       GraftDvScanMetrics.values(
-        GraftDvScanMetrics.TaskFooterReads -> footerReads,
-        GraftDvScanMetrics.TaskConfCopies -> task.confCopies)
+        GraftDvScanMetrics.TaskFooterReads -> (footerReads +
+          (if (masks == null) 0L else masks.footerReads)),
+        GraftDvScanMetrics.TaskConfCopies -> (task.confCopies +
+          (if (masks == null) 0L else masks.confCopies)))
   }
 }
 
@@ -674,6 +723,8 @@ private[sources] object GraftDvReaderFactory {
   * over tasks). Spark instantiates each metric class by name, so each
   * is its own no-argument class. */
 private[graft] object GraftDvScanMetrics {
+  val GroupsAdmitted = "graftDvGroupsAdmitted"
+  val GroupsTotal = "graftDvGroupsTotal"
   val FilesAdmitted = "graftDvFilesAdmitted"
   val FilesKept = "graftDvFilesKept"
   val FooterMisses = "graftDvFooterMisses"
@@ -685,6 +736,10 @@ private[graft] object GraftDvScanMetrics {
     override def name(): String = n
     override def description(): String = d
   }
+  final class GroupsAdmittedMetric
+      extends Metric(GroupsAdmitted, "groups admitted by the manifest")
+  final class GroupsTotalMetric
+      extends Metric(GroupsTotal, "groups in the snapshot")
   final class FilesAdmittedMetric
       extends Metric(FilesAdmitted, "files after manifest admission")
   final class FilesKeptMetric
@@ -698,7 +753,8 @@ private[graft] object GraftDvScanMetrics {
   final class TaskConfCopiesMetric
       extends Metric(TaskConfCopies, "Hadoop conf copies by tasks")
 
-  def all: Array[CustomMetric] = Array(new FilesAdmittedMetric,
+  def all: Array[CustomMetric] = Array(new GroupsAdmittedMetric,
+    new GroupsTotalMetric, new FilesAdmittedMetric,
     new FilesKeptMetric, new FooterMissesMetric, new ConfBroadcastsMetric,
     new TaskFooterReadsMetric, new TaskConfCopiesMetric)
 
@@ -709,4 +765,23 @@ private[graft] object GraftDvScanMetrics {
         override def value(): Long = v
       }: CustomTaskMetric
     }.toArray
+
+  /** The dv scans of an executed plan, AQE stages included. */
+  def scans(p: SparkPlan): Seq[BatchScanExec] = p.collect {
+    case b: BatchScanExec if b.scan.isInstanceOf[GraftDvBatchScan] => Seq(b)
+    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    case q: QueryStageExec => scans(q.plan)
+  }.flatten
+
+  /** Every metric of the one dv scan of `df`'s executed plan, by name:
+    * read after `df` has run (the driver's are posted when its scan
+    * executes, the tasks' summed as they end). None when the plan holds
+    * no dv scan; more than one is an error. */
+  def of(df: DataFrame): Option[Map[String, Long]] =
+    scans(df.queryExecution.executedPlan) match {
+      case Seq() => None
+      case Seq(b) => Some(all.map(m => m.name() -> b.metrics(m.name()).value).toMap)
+      case bs => throw new IllegalStateException(
+        s"${bs.size} dv scans in ${df.queryExecution.executedPlan}")
+    }
 }

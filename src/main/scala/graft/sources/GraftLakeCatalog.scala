@@ -518,20 +518,18 @@ private[sources] final class GraftStagedTable(
   * and the relation [[LakeTable.read]], [[LakeTable.readWithLineage]]
   * and the range/point reads build for one ([[LakeTable.nativeDvFrame]];
   * its `__file`/`__pos` metadata columns carry lineage), so the Scala
-  * API and SQL read a dv snapshot through the same scan. Snapshots the
-  * native reader serves ([[LakeTable.nativeDvOk]] — every shape but
-  * oversized masks) scan through [[GraftDvBatchScan]]: pushed filters
-  * run the manifest-level admission chain (partition values, min/max
-  * stats, bloom indexes — [[LakeTable.pruneDirsForFilters]]) before any
-  * parquet footer opens, each surviving file's mask applies inside the
-  * reader, and the column mapping maps physical names to logical ones,
-  * so masked rows never resurface and stacked updates/time travel each
-  * see their own version's state. Masks past
-  * [[GraftDvBatchScan.MaxMaskBytes]] keep the V1 bridge [[GraftDvScan]]
-  * (equality deletes never reach this table: the catalog gates them).
-  * A compaction ([[LakeTable.rewriteDeletes]] or any COW op) restores
-  * the plain delegate. Appends still land through the commit protocol
-  * (dv state changes are NAMED append conflicts). */
+  * API and SQL read a dv snapshot through the same scan,
+  * [[GraftDvBatchScan]], whatever its mask size: pushed filters run the
+  * manifest-level admission chain (partition values, min/max stats,
+  * bloom indexes — [[LakeTable.pruneDirsForFilters]]) before any
+  * parquet footer opens, each task loads and applies its own files'
+  * masks inside the reader, and the column mapping maps physical names
+  * to logical ones, so masked rows never resurface and stacked
+  * updates/time travel each see their own version's state (equality
+  * deletes never reach this table: the catalog gates them). A
+  * compaction ([[LakeTable.rewriteDeletes]] or any COW op) restores the
+  * plain delegate. Appends still land through the commit protocol (dv
+  * state changes are NAMED append conflicts). */
 private[sources] final class GraftDvLakeTable(
     identName: String, root: String, version: Option[Int])
     extends Table
@@ -584,14 +582,6 @@ private[sources] final class GraftDvLakeTable(
     () => new GraftDeltaOperation(root, info.command)
   }
 
-  /** Whether the native reader serves this snapshot — decided once per
-    * table instance, like its schema. */
-  private[sources] lazy val native: Boolean = {
-    val spark = SparkSession.active
-    LakeTable.nativeDvOk(spark, root, LakeTable.manifestMetaAt(spark, root,
-      version.orElse(LakeTable.latestVersion(spark, root)).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))))
-  }
   private lazy val tableSchema =
     LakeTable.snapshotSchema(SparkSession.active, root, version)
   override def schema(): StructType = tableSchema
@@ -615,7 +605,7 @@ private[sources] final class GraftDvLakeTable(
         TableCapability.V1_BATCH_WRITE)
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new GraftDvScanBuilder(root, version, schema(), native)
+      : ScanBuilder = new GraftDvScanBuilder(root, version, schema())
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new V1Write {
@@ -635,17 +625,13 @@ private[sources] final class GraftDvLakeTable(
 
 /** ScanBuilder for deletion-vector snapshots: records Spark's pushed
   * source filters and required columns (lineage metadata columns
-  * included), then builds the pruned masked scan — the native
-  * [[GraftDvBatchScan]] when the table's snapshot is one it serves
-  * (`native`, [[LakeTable.nativeDvOk]]), else, for masks past
-  * [[GraftDvBatchScan.MaxMaskBytes]], the V1 bridge [[GraftDvScan]].
+  * included), then builds the pruned masked scan, [[GraftDvBatchScan]].
   * EVERY filter is also returned as residual, so Spark re-applies the
   * full predicate above the scan — the pushdown here is a strict
   * optimization (fewer groups opened, parquet row-group pruning), never
   * a correctness dependency. */
 private[sources] final class GraftDvScanBuilder(
-    root: String, version: Option[Int], tableSchema: StructType,
-    native: Boolean)
+    root: String, version: Option[Int], tableSchema: StructType)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
@@ -663,101 +649,7 @@ private[sources] final class GraftDvScanBuilder(
     required = requiredSchema
   }
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    if (native)
-      new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq)
-    else new GraftDvScan(root, version, required, pushed.toSeq)
-}
-
-/** The fallback deletion-vector read path for masks past
-  * [[GraftDvBatchScan.MaxMaskBytes]], which the native reader would
-  * have to ship from the driver ([[LakeTable.nativeDvOk]]): a DSv2
-  * [[org.apache.spark.sql.connector.read.V1Scan]] whose
-  * relation serves [[LakeTable.read]]'s anti-join frame over the PRUNED
-  * group set — manifest stats/partition/bloom admission first
-  * ([[LakeTable.pruneDirsForFilters]]), then the lineage-stamped scan
-  * of the surviving groups, dv anti-join (broadcast — the dv list is
-  * O(masked rows)) and declared-schema projection
-  * ([[LakeTable.readDirsSubset]]), with the translatable filters
-  * re-applied INSIDE the bridged plan so parquet row-group pushdown
-  * engages. */
-private[sources] final class GraftDvScan(
-    root: String, version: Option[Int], schema0: StructType,
-    filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-    extends org.apache.spark.sql.connector.read.V1Scan {
-  // Join-strategy note: the V1 bridge swallows connector statistics
-  // (Spark's V1ScanWrapper implements no SupportsReportStatistics), so
-  // the static planner sees defaultSizeInBytes for a BRIDGE-served
-  // snapshot and broadcast protection is AQE's runtime conversion.
-  // Every other dv snapshot reads through GraftDvBatchScan (native
-  // DSv2 Batch), which reports kept bytes so the static planner
-  // broadcasts directly — the bridge remains only for oversized masks,
-  // whose distributed anti-join is worth the statistics gap.
-  override def readSchema(): StructType = schema0
-  override def description(): String =
-    s"GraftDvScan `$root`" + version.fold("")(v => s"@v$v") +
-      (if (filters.isEmpty) "" else filters.mkString(" [", ", ", "]"))
-  override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-      with org.apache.spark.sql.sources.TableScan](
-      context: org.apache.spark.sql.SQLContext): T =
-    new org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan {
-      override def sqlContext: org.apache.spark.sql.SQLContext = context
-      override def schema: StructType = schema0
-      override def buildScan()
-          : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-        val spark = context.sparkSession
-        val (kept, total) =
-          LakeTable.pruneDirsForFilters(spark, root, version, filters)
-        GraftDvScan.lastPrune = Some((kept.size, total))
-        val masked = LakeTable.readDirsSubset(spark, root, version,
-          kept.toSet)
-        val filtered = filters.flatMap(GraftDvScan.toColumn)
-          .foldLeft(masked)(_.filter(_))
-        val projected =
-          if (schema0.fieldNames.sameElements(filtered.columns)) filtered
-          else filtered.select(schema0.fieldNames.toIndexedSeq.map(
-            org.apache.spark.sql.functions.col): _*)
-        projected.rdd
-      }
-    }.asInstanceOf[T]
-}
-
-private[graft] object GraftDvScan {
-  import org.apache.spark.sql.{Column => SCol}
-  import org.apache.spark.sql.functions.{col, lit}
-  import org.apache.spark.sql.sources._
-
-  /** (kept, total) file-group counts of the most recent dv scan in this
-    * JVM — a test/inspection observable (the V1 bridge has no metrics
-    * channel), same role as
-    * [[GraftLakeStreamableScan.runtimePrunedTo]]. */
-  @volatile private[graft] var lastPrune: Option[(Int, Int)] = None
-
-  /** Source filters → Column, for re-applying inside the bridged plan
-    * (untranslatable shapes are skipped — Spark evaluates the full
-    * predicate above the bridge regardless). */
-  private[sources] def toColumn(f: Filter): Option[SCol] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, p)   => Some(col(a).startsWith(p))
-    case StringEndsWith(a, p)     => Some(col(a).endsWith(p))
-    case StringContains(a, p)     => Some(col(a).contains(p))
-    case And(l, r) =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
-    case Or(l, r) =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case Not(c)        => toColumn(c).map(!_)
-    case AlwaysTrue()  => Some(lit(true))
-    case AlwaysFalse() => Some(lit(false))
-    case _ => None
-  }
+    new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq)
 }
 
 /** A resolvable-but-scan-gated table: stands in for a snapshot whose

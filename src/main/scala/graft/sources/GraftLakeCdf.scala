@@ -242,19 +242,19 @@ private[sources] final class GraftLakeCdfStream(
           val op = meta("op")
           val newRels = LakeTable.dvState(meta)
             .filterNot(LakeTable.dvState(prevMeta).toSet)
-          // driver-side bound, like the native batch builder's: the
-          // reconstruction decodes these masks (and for keyed merges
-          // collects distinct matched keys) on the driver
+          // driver-side bound: the reconstruction decodes these masks
+          // (and for keyed merges collects distinct matched keys) on
+          // the driver
           val newBytes =
             LakeTable.dvSidecarBytesForRels(spark, root, newRels)
-          if (newBytes > GraftDvBatchScan.MaxMaskBytes)
+          if (newBytes > GraftLakeCdfStream.MaxMaskBytes)
             throw new UnsupportedOperationException(
               s"graft-lake-cdf: version $v of $root added $newBytes " +
                 "bytes of dv sidecars — past the driver reconstruction " +
-                s"bound (${GraftDvBatchScan.MaxMaskBytes}); enable the " +
+                s"bound (${GraftLakeCdfStream.MaxMaskBytes}); enable the " +
                 "feed (LakeTable.enableChangeFeed) before mass merges")
           val masksByOp =
-            GraftDvBatchScan.loadMasksByOpFromRels(spark, root, newRels)
+            GraftLakeCdfStream.masksByOp(spark, root, newRels)
           val pre = masksByOp.toSeq
             .sortBy { case ((fp, o), _) => (fp, o) }
             .map { case ((fp, o), m) =>
@@ -390,6 +390,54 @@ private[sources] final class GraftLakeCdfStream(
       readerFor(dataSchema), readerFor(sidecarSchema),
       dataSchema, sidecarSchema)
   }
+}
+
+private[sources] object GraftLakeCdfStream {
+
+  /** Above this many bytes of dv sidecars added by one version, the
+    * feed refuses to reconstruct it: the reconstruction builds the
+    * version's masks on the driver, and a mask this large (≈ tens of
+    * millions of rows) belongs in a change sidecar. */
+  val MaxMaskBytes: Long = 64L * 1024 * 1024
+
+  /** The masks of the sidecars `rels`, per (data file key, op tag) and
+    * built on the driver: the feed classifies each masked row by its
+    * own 'U'/'D' tag (update preimage vs delete), so a clause-matrix
+    * MERGE's mixed masks stay apart. `.bin`-only sets decode from the
+    * decoded-sidecar cache with no Spark job; others take one
+    * group-collect over [[LakeTable.dvMaskFrame]]. Callers bound the
+    * sidecar bytes first ([[MaxMaskBytes]]). */
+  def masksByOp(spark: SparkSession, root: String, rels: Seq[String])
+      : Map[(String, String), Array[Byte]] =
+    if (rels.isEmpty) Map.empty
+    else if (rels.forall(_.endsWith(".bin"))) {
+      val f = LakeTable.fileSystem(spark, root)
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[(String, String), scala.collection.mutable.ArrayBuilder.ofLong]
+      rels.foreach { r =>
+        LakeTable.readBinSidecar(f, root, r).foreach { case (fp, op, mask) =>
+          val buf = acc.getOrElseUpdate((fp, op),
+            new scala.collection.mutable.ArrayBuilder.ofLong)
+          val c = new DvMaskCodec.Cursor(mask)
+          while (c.hasNext) buf += c.next()
+        }
+      }
+      acc.iterator.map { case (k, buf) =>
+        val ps = buf.result()
+        java.util.Arrays.sort(ps)
+        k -> DvMaskCodec.encode(ps)
+      }.toMap
+    } else {
+      import org.apache.spark.sql.functions.{col, collect_set, sort_array}
+      LakeTable.dvMaskFrame(spark, root, rels)
+        .groupBy(col(LakeTable.FileCol), col("__op"))
+        .agg(sort_array(collect_set(col(LakeTable.PosCol))).as("ps"))
+        .collect()
+        .map { r =>
+          (r.getString(0), r.getString(1)) -> DvMaskCodec.encode(
+            r.getSeq[Long](2).toArray)
+        }.toMap
+    }
 }
 
 /** One CDF file read. `fromSidecar` rows carry their own tag in-file;

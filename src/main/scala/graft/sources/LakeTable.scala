@@ -81,13 +81,6 @@ object LakeTable {
   private[sources] def fileSystem(spark: SparkSession,
                                   root: String): FileSystem = fs(spark, root)
 
-  /** Total on-disk bytes of a snapshot's dv sidecars — the native dv
-    * batch's mask-shipping budget ([[GraftDvBatchScan]]). Missing dirs
-    * count as unbounded (fall back to the distributed mask join). */
-  private[sources] def dvSidecarBytes(spark: SparkSession, root: String,
-      meta: Map[String, String]): Long =
-    dvSidecarBytesForRels(spark, root, dvState(meta))
-
   /** On-disk bytes of committed dv sidecars, by (root, rel). Sidecars
     * are write-once like group dirs ([[GraftDvBatchScan.listGroup]]), so
     * a count never goes stale; a sidecar deleted since (vacuum) fails
@@ -95,22 +88,35 @@ object LakeTable {
   private val sidecarBytes =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
 
-  /** [[dvSidecarBytes]] over committed sidecar rels: each rel is listed
-    * once per JVM ([[sidecarBytes]]). */
+  /** Total on-disk bytes of the committed dv sidecars `rels`, each rel
+    * listed once per JVM ([[sidecarBytes]]); a missing sidecar fails
+    * with [[sidecarMissing]]. */
   private[sources] def dvSidecarBytesForRels(spark: SparkSession,
       root: String, rels: Seq[String]): Long = {
     lazy val f = fs(spark, root)
-    rels.foldLeft(0L) { (acc, r) =>
-      if (acc == Long.MaxValue) acc
-      else Option(sidecarBytes.get((root, r))).map(acc + _)
-        .getOrElse(scala.util.Try {
-          val n = f.listStatus(new Path(root, r)).filter(_.isFile)
+    rels.map { r =>
+      Option(sidecarBytes.get((root, r))).map(_.longValue).getOrElse {
+        val n = try f.listStatus(new Path(root, r)).filter(_.isFile)
             .map(_.getLen).sum
-          if (sidecarBytes.size > 100000) sidecarBytes.clear()
-          sidecarBytes.put((root, r), n)
-          acc + n
-        }.getOrElse(Long.MaxValue))
-    }
+          catch { case e: java.io.FileNotFoundException =>
+            throw sidecarMissing(root, r, e)
+          }
+        if (sidecarBytes.size > 100000) sidecarBytes.clear()
+        sidecarBytes.put((root, r), n)
+        n
+      }
+    }.sum
+  }
+
+  /** The error for a dv sidecar (`rel` under `root`, or one file of
+    * it) that a snapshot names but the filesystem no longer holds:
+    * deleted by hand, or vacuumed under a version still read. */
+  private[sources] def sidecarMissing(root: String, rel: String,
+      cause: Throwable): java.io.FileNotFoundException = {
+    val e = new java.io.FileNotFoundException(
+      s"graft-lake: deletion-vector sidecar $rel of $root is missing")
+    e.initCause(cause)
+    e
   }
 
   private def versionsDir(root: String) = new Path(root, "_versions")
@@ -2359,14 +2365,15 @@ object LakeTable {
   /** Data-skipping read: scans only the file groups whose stats admit
     * `column ∈ [lo, hi]`, then applies the exact filter. At scale this is
     * the manifest-level pruning layer ABOVE parquet row-group pruning —
-    * skipped groups cost zero file opens. A snapshot the native dv
-    * reader serves is [[read]]'s frame with the band on top, its bounds
-    * pushed into [[pruneDirsForFilters]]' admission chain; other
-    * snapshots read the admitted groups through [[readDirsSubset]].
-    * Either way a renamed filter column finds no physical stat keys and
-    * admits every group (no pruning, still correct), and pruning stays
-    * CONSERVATIVE under masks: a mask only removes rows, so a group
-    * admitted by its (pre-mask) stats over-admits, never lies. */
+    * skipped groups cost zero file opens. A snapshot the dv reader
+    * serves ([[nativeDvOk]]) is [[read]]'s frame with the band on top,
+    * its bounds pushed into [[pruneDirsForFilters]]' admission chain;
+    * other snapshots read the admitted groups through
+    * [[readDirsSubset]]. Either way a renamed filter column finds no
+    * physical stat keys and admits every group (no pruning, still
+    * correct), and pruning stays CONSERVATIVE under masks: a mask only
+    * removes rows, so a group admitted by its (pre-mask) stats
+    * over-admits, never lies. */
   def readWhere(spark: SparkSession, root: String, column: String,
                 lo: Double, hi: Double): DataFrame = {
     val v = latestVersion(spark, root)
@@ -2490,10 +2497,10 @@ object LakeTable {
     * AND bloom index admit `column = value`, then applies the exact
     * filter — the needle-in-100TB path: manifest stats bound the range,
     * the bloom disproves membership group by group, and only the
-    * surviving group(s) open a parquet footer. A snapshot the native dv
-    * reader serves is [[read]]'s frame with the filter on top: the
-    * pushed `EqualTo` runs the same partition/stats/bloom admission in
-    * [[pruneDirsForFilters]] and the masks apply inside the reader. */
+    * surviving group(s) open a parquet footer. A snapshot the dv reader
+    * serves ([[nativeDvOk]]) is [[read]]'s frame with the filter on top:
+    * the pushed `EqualTo` runs the same partition/stats/bloom admission
+    * in [[pruneDirsForFilters]] and the masks apply inside the reader. */
   def readWhereEq(spark: SparkSession, root: String, column: String,
                   value: Any): DataFrame = {
     val v = latestVersion(spark, root)
@@ -2862,12 +2869,13 @@ object LakeTable {
     * mergeSchema handles additive schema evolution: groups written
     * before a column existed read it as null; an ALTER-declared schema
     * additionally projects columns no parquet group carries yet (typed
-    * nulls, declared order). A deletion-vector snapshot the native
-    * reader serves ([[nativeDvOk]] — every column mapping and declared
-    * schema included) reads as ONE scan of the relation SQL reads too
-    * ([[GraftDvLakeTable]]): each file's mask applies in the reader and
-    * pushed filters prune groups by partition, stats and bloom; only
-    * equality deletes and oversized masks anti-join their masks. */
+    * nulls, declared order). A deletion-vector snapshot without
+    * equality deletes ([[nativeDvOk]] — every mask size, column mapping
+    * and declared schema included) reads as ONE scan of the relation SQL
+    * reads too ([[GraftDvLakeTable]]): each task applies its files'
+    * masks in the reader and pushed filters prune groups by partition,
+    * stats and bloom; only equality-delete snapshots anti-join their
+    * masks. */
   def read(spark: SparkSession, root: String,
            version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = false)
@@ -2875,11 +2883,11 @@ object LakeTable {
   /** [[read]] plus row LINEAGE: every row also carries `__file` (its
     * parquet file's key, [[fileKey]]) and `__pos` (its row index within
     * that file) — the positional identity deletion vectors key on. A
-    * snapshot inside [[nativeDvOk]] serves them from the native dv
-    * reader's `__file`/`__pos` metadata columns (the relation
-    * merge-on-read staging and the SQL row-level scan share); the rest
-    * from Spark's `_metadata` pseudo-column. Masks and projections apply
-    * exactly as in [[read]]. */
+    * snapshot inside [[nativeDvOk]] serves them from the dv reader's
+    * `__file`/`__pos` metadata columns (the relation merge-on-read
+    * staging and the SQL row-level scan share); the rest from Spark's
+    * `_metadata` pseudo-column. Masks and projections apply exactly as
+    * in [[read]]. */
   private[graft] def readWithLineage(spark: SparkSession, root: String,
       version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = true)
@@ -2890,8 +2898,8 @@ object LakeTable {
     val v = existingVersion(spark, root, version)
     val rels = readManifest(spark, root, v)
     val meta = manifestMeta(spark, root, v)
-    // a non-empty snapshot the native dv reader serves needs no
-    // data-dir paths (an empty one takes the declared-schema branch)
+    // a non-empty snapshot the dv reader serves needs no data-dir
+    // paths (an empty one takes the declared-schema branch)
     if (keepDirs.isEmpty && rels.nonEmpty) {
       val native = nativeDvFrame(spark, root, v, meta, keepLineage)
       if (native.isDefined) return native.get
@@ -2939,36 +2947,30 @@ object LakeTable {
     if (lineage && !keepLineage) masked.drop(FileCol, PosCol) else masked
   }
 
-  /** Whether the native deletion-vector reader ([[GraftDvBatchScan]])
-    * serves a dv snapshot: no equality deletes, and sidecars within the
-    * ship-with-partition bound [[GraftDvBatchScan.MaxMaskBytes]]. Column
-    * mappings and declared schemas are the reader's schema mapping. The
-    * other shapes keep the V1 bridge ([[GraftDvScan]]) and [[read]]'s
-    * anti-join path. */
-  private[sources] def nativeDvOk(spark: SparkSession, root: String,
-      meta: Map[String, String]): Boolean =
-    deleteState(meta).isEmpty &&
-      dvSidecarBytes(spark, root, meta) <= GraftDvBatchScan.MaxMaskBytes
+  /** Whether the deletion-vector reader ([[GraftDvBatchScan]]) serves
+    * a snapshot: it has deletion vectors and no equality deletes,
+    * whatever its mask size (each task loads its own files' masks).
+    * Column mappings and declared schemas are the reader's schema
+    * mapping. Equality-delete snapshots keep [[read]]'s anti-join
+    * path. */
+  private[sources] def nativeDvOk(meta: Map[String, String]): Boolean =
+    dvState(meta).nonEmpty && deleteState(meta).isEmpty
 
-  /** Snapshot `v` as ONE scan of the native deletion-vector reader —
-    * each file's mask applied inside the reader, no anti-join, plus the
+  /** Snapshot `v` as ONE scan of the deletion-vector reader — each
+    * file's mask applied inside the reader, no anti-join, plus the
     * reader's `__file`/`__pos` columns when `lineage` — when the reader
-    * serves it ([[nativeDvOk]]). None for snapshots without deletion
-    * vectors and for the shapes the anti-join path keeps. The relation
-    * is pinned to `v`: the frame serves the snapshot it was built on,
-    * whatever commits land before it runs. */
+    * serves it ([[nativeDvOk]]); None otherwise. The relation is pinned
+    * to `v`: the frame serves the snapshot it was built on, whatever
+    * commits land before it runs. */
   private def nativeDvFrame(spark: SparkSession, root: String, v: Int,
       meta: Map[String, String], lineage: Boolean = false): Option[DataFrame] =
-    if (dvState(meta).isEmpty) None
+    if (!nativeDvOk(meta)) None
     else {
-      val t = new GraftDvLakeTable(root, root, Some(v))
-      if (!t.native) None
-      else {
-        val rel = org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2Relation.create(t, None, None)
-        Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
-          if (lineage) rel.withMetadataColumns() else rel))
-      }
+      val rel = org.apache.spark.sql.execution.datasources.v2
+        .DataSourceV2Relation.create(new GraftDvLakeTable(root, root, Some(v)),
+          None, None)
+      Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+        if (lineage) rel.withMetadataColumns() else rel))
     }
 
   /** File groups of snapshot `version` admitted by EVERY filter under
@@ -3856,10 +3858,6 @@ object LakeTable {
     * parquet so writes, reads and folds stay distributed. */
   private val DvBinaryMaxRows = 100000L
 
-  /** The (file, pos, op) rows of a snapshot's dv sidecars — parquet
-    * dirs read distributed, compact `.bin` sidecars decoded driver-side
-    * (small by the write threshold) — as ONE DataFrame. */
-
   /** Decoded binary dv sidecars keyed by FILE identity (path, mtime,
     * length) — sidecars are immutable once committed, so a lifecycle's
     * repeated scans of a masked table stop re-reading and re-decoding
@@ -3873,7 +3871,10 @@ object LakeTable {
   private[sources] def readBinSidecar(f: FileSystem, root: String,
       rel: String): Seq[(String, String, Array[Byte])] = {
     val p = new Path(root, rel)
-    val st = f.getFileStatus(p)
+    val st = try f.getFileStatus(p)
+      catch { case e: java.io.FileNotFoundException =>
+        throw sidecarMissing(root, rel, e)
+      }
     val key = (p.toString, st.getModificationTime, st.getLen)
     val hit = dvBinCache.get(key)
     if (hit != null) hit
@@ -3885,54 +3886,9 @@ object LakeTable {
     }
   }
 
-  /** The per-file MERGED masks of an all-binary sidecar list, decoded
-    * and deduplicated entirely on the driver — no Spark job at all for
-    * the common stacked-point-update shape. None when any sidecar is a
-    * parquet dir (those merge distributed via [[dvMaskFrame]]). */
-  private[sources] def binMasksMerged(spark: SparkSession, root: String,
-      rels: Seq[String]): Option[Map[String, Array[Byte]]] =
-    if (rels.isEmpty || !rels.forall(_.endsWith(".bin"))) None
-    else {
-      val f = fs(spark, root)
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-      rels.foreach { r =>
-        readBinSidecar(f, root, r).foreach { case (fp, _, mask) =>
-          val buf = acc.getOrElseUpdate(fp,
-            scala.collection.mutable.ArrayBuffer.empty[Long])
-          val c = new DvMaskCodec.Cursor(mask)
-          while (c.hasNext) buf += c.next()
-        }
-      }
-      Some(acc.iterator.map { case (fp, buf) =>
-        fp -> DvMaskCodec.encode(buf.toArray.distinct.sorted)
-      }.toMap)
-    }
-
-  /** [[binMasksMerged]] keyed (file, op) — the change feed classifies
-    * each masked row by its own 'U'/'D' tag, so a clause-matrix MERGE's
-    * mixed masks must not collapse. */
-  private[sources] def binMasksMergedByOp(spark: SparkSession,
-      root: String, rels: Seq[String])
-      : Option[Map[(String, String), Array[Byte]]] =
-    if (rels.isEmpty || !rels.forall(_.endsWith(".bin"))) None
-    else {
-      val f = fs(spark, root)
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), scala.collection.mutable.ArrayBuffer[Long]]
-      rels.foreach { r =>
-        readBinSidecar(f, root, r).foreach { case (fp, op, mask) =>
-          val buf = acc.getOrElseUpdate((fp, op),
-            scala.collection.mutable.ArrayBuffer.empty[Long])
-          val c = new DvMaskCodec.Cursor(mask)
-          while (c.hasNext) buf += c.next()
-        }
-      }
-      Some(acc.iterator.map { case (k, buf) =>
-        k -> DvMaskCodec.encode(buf.toArray.distinct.sorted)
-      }.toMap)
-    }
-
+  /** The (file, pos, op) rows of a snapshot's dv sidecars — parquet
+    * dirs read distributed, compact `.bin` sidecars decoded driver-side
+    * (small by the write threshold) — as ONE DataFrame. */
   private[sources] def dvMaskFrame(spark: SparkSession, root: String,
       rels: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType,
@@ -4010,13 +3966,12 @@ object LakeTable {
     val dvRel = s"_deletes/dv-${java.util.UUID.randomUUID()}"
     val parts = math.max(1L,
       (nMatches + DvSidecarRowsPerFile - 1) / DvSidecarRowsPerFile).toInt
-    // coalesce can only REDUCE partition count — a staged frame that
-    // arrives narrower than the computed width must repartition or the
-    // broad write still funnels through its few tasks
-    val sized =
-      if (parts > keyed.rdd.getNumPartitions) keyed.repartition(parts)
-      else keyed.coalesce(parts)
-    sized.write.parquet(new Path(root, dvRel).toString)
+    // ranges of `__file`, sorted by (file, pos): each part's `__file`
+    // stats cover a narrow key range, so a reading task skips the parts
+    // that hold none of its files (GraftDvSidecars)
+    keyed.repartitionByRange(parts, col(FileCol))
+      .sortWithinPartitions(FileCol, PosCol)
+      .write.parquet(new Path(root, dvRel).toString)
     dvRel
   }
 
@@ -4110,10 +4065,10 @@ object LakeTable {
 
   /** Anti-join a lineage-carrying frame against the snapshot's
     * deletion vectors — a no-op for tables without them. The dv list
-    * is tiny (O(masked rows)); the planner broadcasts it. Only the
-    * snapshots outside [[nativeDvOk]] (equality deletes, oversized
-    * masks) and [[changes]]' churn reads take it; every other masked
-    * frame is the native reader's. */
+    * is tiny (O(masked rows)); the planner broadcasts it. Only
+    * equality-delete snapshots (outside [[nativeDvOk]]) and
+    * [[changes]]' churn reads take it; every other masked frame is the
+    * dv reader's. */
   private def applyDvMask(spark: SparkSession, root: String,
                           meta: Map[String, String],
                           df: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.LakeTable
+import graft.sources.{GraftDvScanMetrics, LakeTable}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -325,12 +325,153 @@ class DvReadSpec extends SparkSpec {
         numGroups = 4, statsCols = Seq("id", "n"))
       LakeTable.deleteWhereDv(spark, root, col("id") === 15L)
       Seq("id", "n").foreach { c =>
-        graft.sources.GraftDvScan.lastPrune = None
         val df = native(LakeTable.readWhere(spark, root, c, 9.5, 20.5))
         assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
           (10L to 20L).filter(_ != 15L), c)
-        assert(graft.sources.GraftDvScan.lastPrune.contains((1, 4)), c)
+        val m = GraftDvScanMetrics.of(df).get
+        assert((m(GraftDvScanMetrics.GroupsAdmitted),
+          m(GraftDvScanMetrics.GroupsTotal)) == ((1L, 4L)), c)
       }
     } finally graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+
+  /** `from until until` as (k, s = "a" + k), in `files` files. */
+  private def keyed(from: Long, until: Long, files: Int): DataFrame =
+    spark.range(from, until, 1, files).select(col("id").as("k"),
+      concat(lit("a"), col("id").cast("string")).as("s"))
+
+  /** The dv sidecar rels of version `v`. */
+  private def dvRels(root: String, v: Int): Seq[String] =
+    LakeTable.manifestMetaAt(spark, root, v).get("dv").toSeq
+      .flatMap(_.split(","))
+
+  /** Every message of `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+
+  test("masks mixing a .bin sidecar with parquet sidecars (SQL delta " +
+    "MERGE, a >100,000-row deleteWhereDv) load in the reading tasks: " +
+    "API, SQL and lineage reads agree one file per task and in one " +
+    "partition, and a point read runs 1 job, count(*) 2") {
+    withWarehouse("lakeDvj") { wh =>
+      val root = s"$wh/t"
+      LakeTable.create(spark, root, keyed(0L, 60000L, 2))
+      LakeTable.append(spark, root, keyed(60000L, 120000L, 2))
+      LakeTable.append(spark, root, keyed(120000L, 180000L, 2))
+      LakeTable.updateWhereMor(spark, root, col("k") === 7L,
+        Map("s" -> lit("U")))
+      LakeTable.deleteWhereDv(spark, root, col("k") % 10L < 6L)
+      val src = (0L to 40L) ++ (200000L to 200005L)
+      spark.createDataFrame(src.map(k => Row(k)).asJava,
+        StructType(Seq(StructField("k", LongType))))
+        .createOrReplaceTempView("dvj_src")
+      // a clause matrix the parser does not take: Spark's row-level
+      // MERGE plan runs the delta operation, whose tasks write a parquet
+      // sidecar; it masks files the two sidecars above mask too (the
+      // update's replacement row among them)
+      try withConf("spark.graft.update.mode" -> "mor")(spark.sql(
+        """MERGE INTO lakeDvj.t t USING dvj_src s ON t.k = s.k
+          |WHEN MATCHED AND t.k <= 8 THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET s = 'M'
+          |WHEN NOT MATCHED THEN INSERT (k, s) VALUES (s.k, 'N')
+          |WHEN NOT MATCHED BY SOURCE AND t.k % 1000 = 9 THEN DELETE
+          |""".stripMargin))
+      finally spark.catalog.dropTempView("dvj_src")
+      val v = LakeTable.versions(spark, root).last
+      assert(LakeTable.history(spark, root).last._2 == "merge-mor")
+      val rels = dvRels(root, v)
+      assert(rels.size == 3 && rels.count(_.endsWith(".bin")) == 1, rels)
+      val before = ((0L until 180000L).map(k => k -> s"a$k").toMap +
+        (7L -> "U")).filterNot(_._1 % 10L < 6L)
+      val srcSet = src.toSet
+      val want = (before.toSeq.flatMap { case (k, s) =>
+        if (srcSet(k)) (if (k <= 8L) None else Some(k -> "M"))
+        else if (k % 1000L == 9L) None
+        else Some(k -> s)
+      } ++ src.filterNot(before.contains).map(_ -> "N")).sorted
+      val raw = spark.read.parquet(LakeTable.dataDirPaths(spark, root): _*)
+        .select(col("_metadata.file_path"), col("_metadata.row_index"),
+          col("k"), col("s"))
+        .collect().map(r => (r.getString(0), r.getLong(1)) ->
+          (r.getLong(2), r.getString(3))).toMap
+      def check(): Unit = {
+        assert(sorted(native(LakeTable.read(spark, root))) == want)
+        assert(sorted(native(spark.sql("SELECT * FROM lakeDvj.t"))) == want)
+        val lin = native(LakeTable.readWithLineage(spark, root)).collect()
+          .map(r => (r.getString(2), r.getLong(3)) -> (r.getLong(0), r.getString(1)))
+        // each row sits at its own (file, position) of the raw files
+        lin.foreach { case (at, row) => assert(raw.get(at).contains(row), at) }
+        assert(lin.map(_._2).toSeq.sorted == want)
+      }
+      withConf("spark.sql.files.maxPartitionBytes" -> "1")(check())
+      withConf("spark.sql.files.maxPartitionBytes" -> "1g",
+        "spark.sql.files.minPartitionNum" -> "1")(check())
+      val (point, pointJobs) = jobsDuring(
+        spark.sql("SELECT * FROM lakeDvj.t WHERE k = 19").collect())
+      assert(point.map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((19L, "M")))
+      assert(pointJobs == 1, s"$pointJobs jobs for a point read")
+      val (n, countJobs) = jobsDuring(
+        spark.sql("SELECT count(*) FROM lakeDvj.t").collect().head.getLong(0))
+      assert(n == want.size.toLong)
+      assert(countJobs == 2, s"$countJobs jobs for count(*)")
+      val (apiPoint, apiJobs) = jobsDuring(
+        LakeTable.readWhereEq(spark, root, "k", 1009L).collect())
+      assert(apiPoint.isEmpty)
+      assert(apiJobs == 1, s"$apiJobs jobs for an API point read")
+    }
+  }
+
+  test("a missing .bin or parquet dv sidecar fails API, SQL and change " +
+    "feed reads with an error naming it") {
+    withWarehouse("lakeDvg") { wh =>
+      val root = s"$wh/t"
+      LakeTable.create(spark, root, keyed(0L, 120000L, 2))
+      val vBin = LakeTable.updateWhereMor(spark, root, col("k") === 7L,
+        Map("s" -> lit("U")))
+      val vPq = LakeTable.deleteWhereDv(spark, root, col("k") % 10L < 9L)
+      val Seq(bin, pq) = dvRels(root, vPq)
+      assert(bin.endsWith(".bin") && !pq.endsWith(".bin"), Seq(bin, pq))
+      val wantBin = (0L until 120000L).map(k =>
+        k -> (if (k == 7L) "U" else s"a$k"))
+      // reads before the deletion fill the listing and sidecar caches
+      assert(sorted(LakeTable.read(spark, root, Some(vBin))) == wantBin)
+      assert(sorted(LakeTable.read(spark, root, Some(vPq))) ==
+        wantBin.filter(_._1 % 10L == 9L))
+      def fails(rel: String, v: Int): Unit = {
+        val reads = Seq(
+          () => LakeTable.read(spark, root, Some(v)).collect(),
+          () => spark.sql(s"SELECT * FROM lakeDvg.t VERSION AS OF $v").collect(),
+          () => spark.sql(s"SELECT count(*) FROM lakeDvg.t VERSION AS OF $v")
+            .collect())
+        reads.foreach { read =>
+          val m = messages(intercept[Exception](read()))
+          assert(m.contains(rel) && m.contains("is missing"), m)
+        }
+      }
+      val aside = java.nio.file.Files.createTempDirectory("graft_dv_aside")
+      try {
+        val binFile = java.nio.file.Paths.get(root, bin)
+        java.nio.file.Files.move(binFile, aside.resolve("dv.bin"))
+        fails(bin, vBin)
+        fails(bin, vPq)
+        // the change feed names the missing sidecar, not a byte bound
+        val q = spark.readStream.format("graft-lake-cdf")
+          .option("startingVersion", vBin.toLong).load(root)
+          .writeStream.format("memory").queryName("dvg_cdf")
+          .outputMode("append").start()
+        try {
+          val m = messages(intercept[Exception](q.processAllAvailable()))
+          assert(m.contains(bin) && m.contains("is missing"), m)
+          assert(!m.contains(Long.MaxValue.toString), m)
+        } finally { q.stop(); spark.catalog.dropTempView("dvg_cdf") }
+        java.nio.file.Files.move(aside.resolve("dv.bin"), binFile)
+        graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root, pq))
+        fails(pq, vPq)
+        // the version before the parquet sidecar still reads
+        assert(sorted(LakeTable.read(spark, root, Some(vBin))) == wantBin)
+      } finally graft.util.Tmp.deleteRecursively(aside)
+    }
   }
 }

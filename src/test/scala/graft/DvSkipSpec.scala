@@ -3,9 +3,6 @@ package graft
 import graft.sources.{GraftDvBatchScan, GraftDvScanMetrics, LakeTable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -40,25 +37,14 @@ class DvSkipSpec extends SparkSpec {
     finally graft.util.Tmp.deleteRecursively(dir)
   }
 
-  /** v2 scans of an executed plan, AQE stages included. */
-  private def scans(p: SparkPlan): Seq[BatchScanExec] = p.collect {
-    case b: BatchScanExec => Seq(b)
-    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-    case q: QueryStageExec => scans(q.plan)
-  }.flatten
-
   private val Partitions = "partitions"
 
   /** The dv scan's metrics of an executed `df`, driver and task, and
     * its partition count under [[Partitions]]. */
   private def metrics(df: DataFrame): Map[String, Long] = {
-    val dv = scans(df.queryExecution.executedPlan)
-      .filter(_.scan.description().startsWith("GraftDvBatchScan"))
+    val dv = GraftDvScanMetrics.scans(df.queryExecution.executedPlan)
     assert(dv.size == 1, df.queryExecution.executedPlan)
-    Seq(GraftDvScanMetrics.FilesAdmitted, GraftDvScanMetrics.FilesKept,
-      GraftDvScanMetrics.FooterMisses, GraftDvScanMetrics.ConfBroadcasts,
-      GraftDvScanMetrics.TaskFooterReads, GraftDvScanMetrics.TaskConfCopies)
-      .map(n => n -> dv.head.metrics(n).value).toMap +
+    GraftDvScanMetrics.of(df).get +
       (Partitions -> dv.head.batch.planInputPartitions().length.toLong)
   }
 

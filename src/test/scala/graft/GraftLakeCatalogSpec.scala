@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.LakeTable
+import graft.sources.{GraftDvScanMetrics, LakeTable}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** SQL-catalog path of the DSv2 surface ([[graft.sources.GraftLakeCatalog]]):
@@ -838,7 +839,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
         val dirsAfter = LakeTable.dataDirPaths(spark, root)
         assert(LakeTable.dataDirPaths(spark, root, Some(v.toInt - 1))
           .forall(d => dirsAfter.contains(d)))
-        // the catalog read serves the MASKED frame (GraftDvScan) …
+        // the catalog read serves the MASKED frame (GraftDvBatchScan) …
         assert(spark.sql(
           "SELECT sum(v) FROM lakeMu.t WHERE id <= 3").head().getLong(0)
           == (10L + 20L + 30L) * 2)
@@ -1188,37 +1189,41 @@ class GraftLakeCatalogSpec extends SparkSpec {
       try spark.sql("UPDATE lakeDp.t SET v = v + 1 WHERE id = 5")
       finally spark.conf.unset("spark.graft.update.mode")
       assert(LakeTable.history(spark, root).last._2 == "update-mor")
-      def prune(): (Int, Int) = {
-        val p = graft.sources.GraftDvScan.lastPrune
-        graft.sources.GraftDvScan.lastPrune = None
-        p.getOrElse(fail("catalog read did not route through GraftDvScan"))
+      // (groups admitted, groups total) of the executed query's dv scan,
+      // and its rows
+      def prune(sql: String): ((Long, Long), Array[Row]) = {
+        val df = spark.sql(sql)
+        val rows = df.collect()
+        val m = GraftDvScanMetrics.of(df).getOrElse(
+          fail("catalog read did not route through GraftDvBatchScan"))
+        ((m(GraftDvScanMetrics.GroupsAdmitted),
+          m(GraftDvScanMetrics.GroupsTotal)), rows)
       }
       // point probe on an UNTOUCHED key: its clustered group + the
       // stats-less replacement group are admitted; the other 3 prune
-      val r80 = spark.sql("SELECT v FROM lakeDp.t WHERE id = 80").head()
-      assert(r80.getLong(0) == 800L)
-      val (kept80, total80) = prune()
+      val ((kept80, total80), r80) =
+        prune("SELECT v FROM lakeDp.t WHERE id = 80")
+      assert(r80.head.getLong(0) == 800L)
       assert(total80 == 5, s"expected 4 clustered + 1 replacement groups, got $total80")
       assert(kept80 == 2, s"point probe should scan 2 of 5 groups, got $kept80")
       // point probe on the UPDATED key: masked original never
       // resurfaces; the replacement row serves
-      val r5 = spark.sql("SELECT v FROM lakeDp.t WHERE id = 5").collect()
+      val (p5, r5) = prune("SELECT v FROM lakeDp.t WHERE id = 5")
       assert(r5.map(_.getLong(0)).toSeq == Seq(51L))
-      assert(prune()._1 == 2)
+      assert(p5._1 == 2)
       // unfiltered aggregate still reads everything, masked
-      assert(spark.sql("SELECT count(*), sum(v) FROM lakeDp.t").head()
-        .getLong(0) == 100)
-      assert(prune() == ((5, 5)))
+      val (pAll, rAll) = prune("SELECT count(*), sum(v) FROM lakeDp.t")
+      assert(rAll.head.getLong(0) == 100)
+      assert(pAll == ((5L, 5L)))
       // a probe outside every range keeps only the stats-less group
-      assert(spark.sql("SELECT count(*) FROM lakeDp.t WHERE id = -1")
-        .head().getLong(0) == 0)
-      assert(prune()._1 == 1)
+      val (pMiss, rMiss) = prune("SELECT count(*) FROM lakeDp.t WHERE id = -1")
+      assert(rMiss.head.getLong(0) == 0)
+      assert(pMiss._1 == 1)
       // time travel: the pre-update snapshot has 4 groups, no dv — it
-      // takes the NORMAL indexed delegate (no GraftDvScan involved)
-      assert(spark.sql(
-        "SELECT v FROM lakeDp.t VERSION AS OF 1 WHERE id = 5")
-        .head().getLong(0) == 50L)
-      assert(graft.sources.GraftDvScan.lastPrune.isEmpty)
+      // takes the NORMAL indexed delegate (no dv scan in its plan)
+      val tt = spark.sql("SELECT v FROM lakeDp.t VERSION AS OF 1 WHERE id = 5")
+      assert(tt.collect().head.getLong(0) == 50L)
+      assert(GraftDvScanMetrics.of(tt).isEmpty)
       // stacked update: the second masks the first's replacement row
       spark.conf.set("spark.graft.update.mode", "mor")
       try spark.sql("UPDATE lakeDp.t SET v = v + 100 WHERE id = 5")
@@ -1425,8 +1430,8 @@ class GraftLakeCatalogSpec extends SparkSpec {
       assert(r.getLong(0) == 50L && r.getLong(1) == 50L)
       assert(q.queryExecution.executedPlan.toString
         .contains("GraftDvBatchScan"),
-        "SQL-created dv tables must take the native batch, not the " +
-          "V1 bridge:\n" + q.queryExecution.executedPlan)
+        "SQL-created dv tables must take the native batch:\n" +
+          q.queryExecution.executedPlan)
       // an ALTER-extended schema reads through the native batch too
       LakeTable.evolveSchema(spark, s"$wh/d",
         org.apache.spark.sql.types.StructType(Seq(
