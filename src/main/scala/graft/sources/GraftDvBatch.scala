@@ -46,10 +46,10 @@ import java.util.OptionalLong
   *    miss), so a re-read opens no footer;
   *  - the dv mask applies per file IN the reader: each task builds the
   *    masks of ITS partition's files before opening the first, from the
-  *    snapshot's sidecars ([[GraftDvSidecars]]: `.bin` sidecars through
-  *    the decoded-sidecar cache, parquet sidecar parts read with the
-  *    task's file keys pushed), so no mask passes through the driver and
-  *    a mask of any size reads the same way; a masked file reads WHOLE,
+  *    snapshot's sidecars ([[GraftDvSidecars]]: each `.bin` sidecar and
+  *    parquet sidecar part read and decoded once per JVM, shared by its
+  *    tasks), so no mask passes through the driver and a mask of any
+  *    size reads the same way; a masked file reads WHOLE,
   *    without parquet filter pushdown, so the row counter sees every
   *    row (position = sequential row index of the whole-file scan;
   *    files are never split);
@@ -200,13 +200,12 @@ private[sources] final class GraftDvBatchScan(
         if (made) confBroadcasts = 1
         b
       }
-    val rels = LakeTable.dvState(meta)
     val sidecars =
-      if (files.isEmpty || rels.isEmpty) null
+      if (files.isEmpty) null
       else {
-        val (bins, dirs) = rels.partition(_.endsWith(".bin"))
-        GraftDvSidecars(root, bins.toArray,
-          dirs.flatMap(GraftDvBatchScan.listSidecar(spark, root, _)).toArray,
+        val (bins, parts) =
+          GraftDvBatchScan.sidecarFiles(spark, root, LakeTable.dvState(meta))
+        GraftDvSidecars(root, bins.toArray, parts.toArray,
           GraftParquetFileRead(spark.sessionState.conf, GraftDvSidecars.Schema))
       }
     new GraftDvReaderFactory(
@@ -226,6 +225,10 @@ private[graft] object GraftDvBatchScan {
       mtime: Long) {
     def status: FileStatus =
       new FileStatus(length, false, 1, 0, mtime, LakeTable.pathOfKey(key))
+  }
+  private[graft] object Listed {
+    def apply(st: FileStatus): Listed = Listed(LakeTable.fileKey(st.getPath),
+      st.getLen, st.getModificationTime)
   }
 
   /** The parquet files of each committed group dir, by absolute dir.
@@ -294,24 +297,29 @@ private[graft] object GraftDvBatchScan {
         .listStatus(p)
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName)
-        .map(st => Listed(LakeTable.fileKey(st.getPath), st.getLen,
-          st.getModificationTime))
+        .map(Listed(_))
         .toSeq
       if (listingCache.size > 100000) listingCache.clear()
       listingCache.put(absDir, listed)
       listed
     }
 
-  /** The part files of the parquet dv sidecar dir `rel` under `root`.
-    * Sidecars are write-once like group dirs, so [[listGroup]]'s
-    * listing serves them; a dir that is gone fails with an error naming
-    * the sidecar ([[LakeTable.sidecarMissing]]). */
-  private[sources] def listSidecar(spark: SparkSession, root: String,
-      rel: String): Seq[Listed] =
-    try listGroup(spark, new Path(root, rel).toString)
-    catch { case e: java.io.FileNotFoundException =>
-      throw LakeTable.sidecarMissing(root, rel, e)
-    }
+  /** The files of the dv sidecars `rels` under `root`: the `.bin`
+    * sidecars, and the part files of the parquet sidecar dirs. Each
+    * sidecar is checked to exist on every call, one status a sidecar,
+    * and a missing one fails with an error naming it
+    * ([[LakeTable.sidecarMissing]]); sidecars are write-once like group
+    * dirs, so [[listGroup]]'s listing serves the parts. */
+  private[sources] def sidecarFiles(spark: SparkSession, root: String,
+      rels: Seq[String]): (Seq[Listed], Seq[Listed]) = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (bins, dirs) = rels.map(rel =>
+      try fs.getFileStatus(new Path(root, rel))
+      catch { case e: java.io.FileNotFoundException =>
+        throw LakeTable.sidecarMissing(root, rel, e)
+      }).partition(_.isFile)
+    (bins.map(Listed(_)), dirs.flatMap(d => listGroup(spark, d.getPath.toString)))
+  }
 
   /** Caches `footer`, row groups included, as `f`'s. */
   private[sources] def cacheFooter(f: Listed, footer: ParquetMetadata): Unit = {
@@ -343,33 +351,26 @@ private[graft] object GraftDvBatchScan {
   }
 
   /** The files of `files` whose footer row-group stats admit `filters`
-    * ([[Admits]]), and the footer-cache misses. */
+    * (drop a file when parquet-mr's STATISTICS-level row-group filter
+    * keeps none of its row groups), and the footer-cache misses. The
+    * predicate is the one each task's reader pushes
+    * ([[GraftParquetFileRead.predicate]]: Spark's [[ParquetFilters]]
+    * under the session conf, the rebase spec from the footer), built
+    * once per distinct file schema — the same check the task's parquet
+    * reader runs after opening the file, so it never drops a row a task
+    * would have returned. Files whose predicate cannot be built or
+    * checked are kept. */
   private[sources] def footerSkip(spark: SparkSession, files: Seq[Listed],
       filters: Seq[Filter]): (Seq[Listed], Int) = {
-    val admit = new Admits(
-      GraftParquetFileRead(spark.sessionState.conf, new StructType()), filters)
-    val (footerList, misses) = footers(spark, files)
-    (files.zip(footerList).filter(f => admit(f._2)).map(_._1), misses)
-  }
-
-  /** Whether parquet-mr's STATISTICS-level row-group filter keeps any
-    * row group of a footer under `filters`. The predicate is the one a
-    * task's reader pushes ([[GraftParquetFileRead.predicate]]: Spark's
-    * [[ParquetFilters]] under the session conf, the rebase spec from the
-    * footer), built once per distinct file schema — the same check the
-    * task's parquet reader runs after opening the file, so it never
-    * drops a row a task would have returned. A footer whose predicate
-    * cannot be built or checked is admitted. */
-  private[sources] final class Admits(read: GraftParquetFileRead,
-      filters: Seq[Filter]) extends (ParquetMetadata => Boolean) {
     import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
     import org.apache.parquet.filter2.predicate.FilterPredicate
     import org.apache.parquet.schema.MessageType
     import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-    private val predicates = scala.collection.mutable.HashMap[
-      (MessageType, RebaseSpec), Option[FilterPredicate]]()
-
-    override def apply(footer: ParquetMetadata): Boolean = {
+    val read = GraftParquetFileRead(spark.sessionState.conf, new StructType())
+    val predicates =
+      scala.collection.mutable.HashMap[(MessageType, RebaseSpec), Option[FilterPredicate]]()
+    val (footerList, misses) = footers(spark, files)
+    val kept = files.zip(footerList).filter { case (_, footer) =>
       val fmd = footer.getFileMetaData
       val rebase = read.rebaseSpecs(footer)._1
       val predicate = predicates.getOrElseUpdate((fmd.getSchema, rebase),
@@ -378,7 +379,8 @@ private[graft] object GraftDvBatchScan {
       predicate.forall(p => scala.util.Try(!RowGroupFilter.filterRowGroups(
         FilterCompat.get(p), footer.getBlocks, fmd.getSchema).isEmpty)
         .getOrElse(true))
-    }
+    }.map(_._1)
+    (kept, misses)
   }
 
   /** Whole files packed into partitions by size with Spark's own
@@ -549,76 +551,125 @@ private[sources] object DvBinarySidecar {
 }
 
 /** A snapshot's deletion-vector sidecars as its scan's tasks read them:
-  * the table root, its `.bin` sidecar rels ([[DvBinarySidecar]]) and
-  * the part files of its parquet sidecar dirs, listed once on the
-  * driver ([[GraftDvBatchScan.listSidecar]]). `read` reads a part's
-  * (`__file`, `__pos`) columns. */
+  * the table root, its `.bin` sidecar files ([[DvBinarySidecar]]) and
+  * the part files of its parquet sidecar dirs, found on the driver
+  * once per scan ([[GraftDvBatchScan.sidecarFiles]]). `read` reads a
+  * part's (`__file`, `__pos`, `__op`) columns. */
 private[sources] final case class GraftDvSidecars(root: String,
-    bins: Array[String], parts: Array[GraftDvBatchScan.Listed],
-    read: GraftParquetFileRead) {
+    bins: Array[GraftDvBatchScan.Listed],
+    parts: Array[GraftDvBatchScan.Listed], read: GraftParquetFileRead) {
 
   /** One task's masks for the data files `keys`, by key; files with no
-    * masked position are absent. Built on first use, after which
-    * `footerReads` and `confCopies` count the parquet sidecar footers
-    * it read and the Hadoop conf copies it made. */
+    * masked position are absent. Built on first use from each sidecar
+    * file's entries in [[GraftDvSidecars.decoded]] (a miss reads the
+    * file), after which `footerReads` and `confCopies` count the
+    * parquet sidecar footers it read and the Hadoop conf copies it
+    * made. */
   final class Load(shared: org.apache.hadoop.conf.Configuration,
       keys: Array[String]) {
-    import org.apache.spark.sql.sources.In
+    import GraftDvSidecars.{Entries, decoded, sortedMask, union}
     var footerReads = 0L
-    private val filters = Seq(In(LakeTable.FileCol, keys.toArray[Any]))
-    private val task = new read.Task(shared, filters)
+    private val task = new read.Task(shared, Nil)
     def confCopies: Long = task.confCopies
 
+    private def missing(f: GraftDvBatchScan.Listed, e: Throwable) =
+      LakeTable.sidecarMissing(root, f.key, e)
+
+    private def readBin(f: GraftDvBatchScan.Listed): Entries = {
+      val path = LakeTable.pathOfKey(f.key)
+      try DvBinarySidecar.read(path.getFileSystem(shared), path)
+      catch { case e: java.io.FileNotFoundException => throw missing(f, e) }
+    }
+
+    private def readPart(f: GraftDvBatchScan.Listed): Entries = {
+      val cached = GraftDvBatchScan.footerCache.get(f)
+      if (cached == null) footerReads += 1
+      if (!read.vectorized) footerReads += 1
+      val (rows, handle) =
+        try task.open(f.status, cached, push = false)(
+          GraftDvBatchScan.cacheFooter(f, _))
+        catch { case e: java.io.FileNotFoundException => throw missing(f, e) }
+      val byKey = scala.collection.mutable.HashMap
+        .empty[(String, String), scala.collection.mutable.ArrayBuilder.ofLong]
+      try rows.foreach(r => byKey.getOrElseUpdate((r.getString(0),
+        r.getString(2)), new scala.collection.mutable.ArrayBuilder.ofLong) +=
+        r.getLong(1))
+      finally handle.close()
+      byKey.iterator.map { case ((k, op), b) =>
+        (k, op, sortedMask(b.result())) }.toSeq
+    }
+
     lazy val masks: Map[String, Array[Byte]] = {
-      val byKey = keys.map(k => UTF8String.fromString(k) -> k).toMap
-      val keySet = keys.toSet
-      val positions = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-      def add(k: String, p: Long): Unit =
-        positions.getOrElseUpdate(k, new scala.collection.mutable.ArrayBuilder.ofLong) += p
-      if (bins.nonEmpty) {
-        val fs = new Path(root).getFileSystem(shared)
-        bins.foreach(rel => LakeTable.readBinSidecar(fs, root, rel).foreach {
-          case (k, _, mask) if keySet(k) =>
-            val c = new DvMaskCodec.Cursor(mask)
-            while (c.hasNext) add(k, c.next())
-          case _ => ()
-        })
-      }
-      // the keys are pushed for row-group pruning, so a part whose
-      // `__file` stats hold none of them opens no more once its footer
-      // is cached
-      lazy val admit = new GraftDvBatchScan.Admits(read, filters)
-      parts.foreach { part =>
-        val cached = GraftDvBatchScan.footerCache.get(part)
-        if (cached == null || admit(cached)) {
-          if (cached == null) footerReads += 1
-          if (!read.vectorized) footerReads += 1
-          val (rows, handle) = try task.open(part.status, cached, push = true)(
-            GraftDvBatchScan.cacheFooter(part, _))
-          catch { case e: java.io.FileNotFoundException =>
-            throw LakeTable.sidecarMissing(root, part.key, e)
-          }
-          try rows.foreach { r =>
-            val k = byKey.getOrElse(r.getUTF8String(0), null)
-            if (k != null) add(k, r.getLong(1))
-          } finally handle.close()
-        }
-      }
-      positions.iterator.map { case (k, b) =>
-        val ps = b.result()
-        java.util.Arrays.sort(ps)
-        k -> DvMaskCodec.encode(ps)
-      }.toMap
+      val mine = keys.toSet
+      (bins.iterator.flatMap(f => decoded(f)(readBin(f))) ++
+        parts.iterator.flatMap(f => decoded(f)(readPart(f))))
+        .filter(e => mine(e._1)).toSeq
+        .groupBy(_._1).map { case (k, es) => k -> union(es.map(_._3)) }
     }
   }
 }
 
 private[sources] object GraftDvSidecars {
+  /** A sidecar file's masks: (data file key, op tag, encoded mask). */
+  type Entries = Seq[(String, String, Array[Byte])]
+
   /** The columns a parquet sidecar's part is read for. */
   val Schema: StructType = StructType(Seq(
     StructField(LakeTable.FileCol, org.apache.spark.sql.types.StringType),
-    StructField(LakeTable.PosCol, org.apache.spark.sql.types.LongType)))
+    StructField(LakeTable.PosCol, org.apache.spark.sql.types.LongType),
+    StructField("__op", org.apache.spark.sql.types.StringType)))
+
+  private def sortedMask(ps: Array[Long]): Array[Byte] = {
+    java.util.Arrays.sort(ps)
+    DvMaskCodec.encode(ps)
+  }
+
+  /** The union of encoded masks of one data file. */
+  private def union(masks: Seq[Array[Byte]]): Array[Byte] =
+    if (masks.size == 1) masks.head
+    else {
+      val all = new scala.collection.mutable.ArrayBuilder.ofLong
+      masks.foreach { m =>
+        val c = new DvMaskCodec.Cursor(m)
+        while (c.hasNext) all += c.next()
+      }
+      sortedMask(all.result())
+    }
+
+  private final class Slot { @volatile var entries: Entries = _ }
+
+  /** Decoded sidecar files (a `.bin` sidecar or one parquet sidecar
+    * part) by file identity. Sidecars are write-once, so the tasks and
+    * driver reads of a JVM share one read and decode of each — a
+    * concurrent miss waits for the one reading — and a re-read decodes
+    * nothing. Bounded by the entries' approximate heap size: past
+    * [[MaxDecodedBytes]] the cache clears wholesale, so masks larger
+    * than that decode more than once per JVM. */
+  private val slots = new java.util.concurrent.ConcurrentHashMap[
+    GraftDvBatchScan.Listed, Slot]()
+  private val decodedBytes = new java.util.concurrent.atomic.AtomicLong()
+  private val MaxDecodedBytes = 128L << 20
+
+  /** The entries of sidecar file `f` from the cache, `load`ed on a miss. */
+  private[sources] def decoded(f: GraftDvBatchScan.Listed)(
+      load: => Entries): Entries = {
+    val slot = slots.computeIfAbsent(f, _ => new Slot)
+    val hit = slot.entries
+    if (hit != null) hit
+    else slot.synchronized {
+      if (slot.entries == null) {
+        val es = load
+        val bytes = es.iterator.map(e => 2L * e._1.length + e._3.length + 64).sum
+        if (decodedBytes.addAndGet(bytes) > MaxDecodedBytes) {
+          slots.clear()
+          decodedBytes.set(bytes)
+          slots.put(f, slot)
+        }
+        slot.entries = es
+      }
+      slot.entries
+    }
+  }
 }
 
 /** Reader factory: a partition's files stream in order, each read
@@ -627,9 +678,9 @@ private[sources] object GraftDvSidecars {
   * pruning, masked files (and every file when lineage is asked for)
   * without, behind the mask walk ([[DvMaskCodec.walk]]). Before its
   * first file opens, the task loads the masks of its files from
-  * `sidecars` (null: the snapshot has none). Each file's footer comes
-  * from [[GraftDvBatchScan.footerCache]]; a miss reads it off the
-  * file's open stream and caches it. `plan` (null = parquet rows pass
+  * `sidecars` (null only in a scan that kept no file: it runs no task).
+  * Each file's footer comes from [[GraftDvBatchScan.footerCache]]; a
+  * miss reads it off the file's open stream and caches it. `plan` (null = parquet rows pass
   * through) names each output column's source: a parquet column
   * ordinal, [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]]
   * lineage, or [[GraftDvReaderFactory.Missing]] (typed null). */
@@ -665,16 +716,14 @@ private[sources] final class GraftDvReaderFactory(
     private val task = new read.Task(conf.value.value, pushed)
     private var footerReads = 0L
     private val files = p.asInstanceOf[GraftDvFilePartition].files
-    private val masks =
-      if (sidecars == null) null
-      else new sidecars.Load(conf.value.value, files.map(_.key))
+    private val masks = new sidecars.Load(conf.value.value, files.map(_.key))
     private val pending = files.iterator
     private var rows: Iterator[InternalRow] = Iterator.empty
     private var open: java.io.Closeable = null
     private var cur: InternalRow = _
 
     private def rowsOf(f: GraftDvBatchScan.Listed): Iterator[InternalRow] = {
-      val mask = if (masks == null) null else masks.masks.getOrElse(f.key, null)
+      val mask = masks.masks.getOrElse(f.key, null)
       val cached = GraftDvBatchScan.footerCache.get(f)
       if (cached == null) footerReads += 1
       // parquet-mr's reader reads the footer again itself
@@ -704,10 +753,8 @@ private[sources] final class GraftDvReaderFactory(
       if (open != null) { open.close(); open = null }
     override def currentMetricsValues(): Array[CustomTaskMetric] =
       GraftDvScanMetrics.values(
-        GraftDvScanMetrics.TaskFooterReads -> (footerReads +
-          (if (masks == null) 0L else masks.footerReads)),
-        GraftDvScanMetrics.TaskConfCopies -> (task.confCopies +
-          (if (masks == null) 0L else masks.confCopies)))
+        GraftDvScanMetrics.TaskFooterReads -> (footerReads + masks.footerReads),
+        GraftDvScanMetrics.TaskConfCopies -> (task.confCopies + masks.confCopies))
   }
 }
 

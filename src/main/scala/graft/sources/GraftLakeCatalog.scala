@@ -92,8 +92,7 @@ final class GraftLakeCatalog extends TableCatalog
     // delegate would resurrect masked rows, so scans go to the masked
     // [[GraftDvLakeTable]]. Works for time travel too (each version's
     // own dv state). Equality deletes keep the delegate's gate below.
-    if (meta.exists(m => LakeTable.dvState(m).nonEmpty &&
-        LakeTable.deleteState(m).isEmpty))
+    if (meta.exists(LakeTable.nativeDvOk))
       return new GraftDvLakeTable(ident.toString, root, version)
     try new GraftLakeTable(GraftLakeSource.delegate(spark, root, version,
       None, Collections.emptyMap[String, String]()),

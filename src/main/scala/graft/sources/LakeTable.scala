@@ -3858,16 +3858,9 @@ object LakeTable {
     * parquet so writes, reads and folds stay distributed. */
   private val DvBinaryMaxRows = 100000L
 
-  /** Decoded binary dv sidecars keyed by FILE identity (path, mtime,
-    * length) — sidecars are immutable once committed, so a lifecycle's
-    * repeated scans of a masked table stop re-reading and re-decoding
-    * every accumulated `.bin` from the filesystem (the [[resolveCache]]
-    * pattern). Bounded: entries are ≤ [[DvBinaryMaxRows]] encoded rows
-    * each and the map clears wholesale past 256 sidecars. */
-  private val dvBinCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Seq[(String, String, Array[Byte])]]()
-
-  /** [[DvBinarySidecar.read]] through [[dvBinCache]]. */
+  /** [[DvBinarySidecar.read]] of `rel` under `root` through the
+    * decoded-sidecar cache ([[GraftDvSidecars.decoded]]); a missing
+    * sidecar fails with [[sidecarMissing]]. */
   private[sources] def readBinSidecar(f: FileSystem, root: String,
       rel: String): Seq[(String, String, Array[Byte])] = {
     val p = new Path(root, rel)
@@ -3875,15 +3868,8 @@ object LakeTable {
       catch { case e: java.io.FileNotFoundException =>
         throw sidecarMissing(root, rel, e)
       }
-    val key = (p.toString, st.getModificationTime, st.getLen)
-    val hit = dvBinCache.get(key)
-    if (hit != null) hit
-    else {
-      val v = DvBinarySidecar.read(f, p)
-      if (dvBinCache.size > 256) dvBinCache.clear()
-      dvBinCache.put(key, v)
-      v
-    }
+    GraftDvSidecars.decoded(GraftDvBatchScan.Listed(st))(
+      DvBinarySidecar.read(f, p))
   }
 
   /** The (file, pos, op) rows of a snapshot's dv sidecars — parquet
@@ -3966,12 +3952,13 @@ object LakeTable {
     val dvRel = s"_deletes/dv-${java.util.UUID.randomUUID()}"
     val parts = math.max(1L,
       (nMatches + DvSidecarRowsPerFile - 1) / DvSidecarRowsPerFile).toInt
-    // ranges of `__file`, sorted by (file, pos): each part's `__file`
-    // stats cover a narrow key range, so a reading task skips the parts
-    // that hold none of its files (GraftDvSidecars)
-    keyed.repartitionByRange(parts, col(FileCol))
-      .sortWithinPartitions(FileCol, PosCol)
-      .write.parquet(new Path(root, dvRel).toString)
+    // coalesce can only REDUCE partition count — a staged frame that
+    // arrives narrower than the computed width must repartition or the
+    // broad write still funnels through its few tasks
+    val sized =
+      if (parts > keyed.rdd.getNumPartitions) keyed.repartition(parts)
+      else keyed.coalesce(parts)
+    sized.write.parquet(new Path(root, dvRel).toString)
     dvRel
   }
 
