@@ -3590,12 +3590,13 @@ object LakeTable {
     * partitions). Version-collision races fail fast (rewrite-class op).
     * Returns the committed version — unchanged when nothing matches.
     *
-    * Scale: one masked scan to find matches (manifest/stats pruning
-    * applies upstream when the caller pre-narrows), one O(matches)
-    * stage + sidecar + data write, one manifest line. The read-side
-    * cost until rewrite is the masked files' whole-file reads (no
-    * row-group pushdown on them) and a per-file mask decode — the
-    * documented MOR trade. */
+    * Scale: one bounded collect of the masked scan stages the matches
+    * ([[withStagedMatches]]); up to [[LocalWriteMaxRows]] of them, the
+    * sidecar, replacement and CDC rows are written from the driver, so
+    * a point update runs only the collect's jobs. More matches add a
+    * parquet stage dir and distributed writes. The read-side cost
+    * until rewrite is the masked files' whole-file reads (no row-group
+    * pushdown on them) and a per-file mask decode — the MOR trade. */
   def updateWhereMor(spark: SparkSession, root: String,
                      predicate: org.apache.spark.sql.Column,
                      set: Map[String, org.apache.spark.sql.Column]): Int = {
@@ -3625,24 +3626,9 @@ object LakeTable {
           s"no column '$c' at $root"))
       (f.name, e.cast(f.dataType))
     }
-    // stage the matched rows ONCE (the statsMeta rule: the dv keys and
-    // the replacement rows must describe the SAME rows even under a
-    // nondeterministic predicate/lineage)
-    val stageRel = s"data/.updstage-${java.util.UUID.randomUUID()}"
-    readWithLineage(spark, root)
-      .filter(coalesce(predicate, lit(false)))
-      .write.parquet(new Path(root, stageRel).toString)
-    try {
-      val stagedDist = spark.read.parquet(new Path(root, stageRel).toString)
-      val nMatches = stagedDist.count()
+    withStagedMatches(spark, root, readWithLineage(spark, root)
+        .filter(coalesce(predicate, lit(false)))) { (staged, nMatches) =>
       if (nMatches == 0) return v
-      // small matched sets continue as a driver-resident LocalRelation
-      // (the deleteWhereDv rule): the dv sidecar, the replacement-row
-      // write and the CDC union are all bounded by the match count, and
-      // Catalyst folds the SET projections into the LocalRelation so
-      // they keep the driver write fast paths. Big matches unchanged.
-      val staged = if (nMatches <= LocalWriteMaxRows)
-        graft.util.LocalFrame.materialize(stagedDist) else stagedDist
       // the replacement rows: SETs applied, generated columns dropped
       // then re-materialized, gates in exactly the append order —
       // EVERY gate runs before any sidecar or data byte lands, so a
@@ -3686,7 +3672,7 @@ object LakeTable {
             carryMeta(meta) ++ partMeta ++ extra +
               ("dv" -> list) + ("op" -> "update-mor"))
       }
-    } finally fs(spark, root).delete(new Path(root, stageRel), true)
+    }
   }
 
   /** Merge-on-read MERGE (upsert) via positional deletion vectors —
@@ -3700,7 +3686,9 @@ object LakeTable {
     * them against the surviving (masked-minus-matched) snapshot; CDC
     * pairs update_preimage/update_postimage for matched keys and tags
     * fresh keys `insert`; time travel/stacking/rewrite behave exactly
-    * as [[updateWhereMor]]. Returns the committed version. */
+    * as [[updateWhereMor]], which stages matches the same way (a point
+    * merge of driver-resident `updates` adds one key broadcast).
+    * Returns the committed version. */
   def mergeMor(spark: SparkSession, root: String,
                updates: DataFrame, key: String,
                extraMeta: Map[String, String] = Map.empty): Int = {
@@ -3718,22 +3706,10 @@ object LakeTable {
     require(updates.columns.exists(_.equalsIgnoreCase(key)),
       s"mergeMor: updates carry no key column '$key'")
     enforceConstraints(spark, root, v, updates)
-    // stage matched current rows ONCE (dv keys + CDC preimages must
-    // describe the same rows)
-    val stageRel = s"data/.mrgstage-${java.util.UUID.randomUUID()}"
-    readWithLineage(spark, root)
-      .join(updates.select(col(key)).distinct(), Seq(key), "left_semi")
-      .write.parquet(new Path(root, stageRel).toString)
-    try {
-      val stagedDist = spark.read.parquet(new Path(root, stageRel).toString)
-      val nMatches = stagedDist.count()
-      // small matched sets continue as a driver-resident LocalRelation
-      // (the deleteWhereDv rule): the dv sidecar, the matched-key
-      // probes and the CDC union are bounded by the match count, and
-      // the localized frame keeps the driver write fast paths. Big
-      // matches keep the distributed frame unchanged.
-      val staged = if (nMatches <= LocalWriteMaxRows)
-        graft.util.LocalFrame.materialize(stagedDist) else stagedDist
+    // a left-semi join repeats no left row: no distinct on the keys
+    withStagedMatches(spark, root, readWithLineage(spark, root)
+        .join(updates.select(col(key)), Seq(key), "left_semi")) {
+        (staged, nMatches) =>
       if (uniqueColsAt(meta).nonEmpty) {
         val survivors = readWithLineage(spark, root)
           .join(staged.select(col(FileCol), col(PosCol)),
@@ -3775,7 +3751,7 @@ object LakeTable {
               .find(_.name.equalsIgnoreCase(key)).fold(key)(_.name)) +
             ("op" -> "merge-mor"))
       }
-    } finally fs(spark, root).delete(new Path(root, stageRel), true)
+    }
   }
 
   /** Merge-on-read DELETE by POSITION (the deletion-vector sibling of
@@ -3788,8 +3764,9 @@ object LakeTable {
     * paths patch at scan time; CDC (when enabled) emits `delete` rows;
     * [[rewriteDeletes]]/any COW op materializes. NULL-predicate rows
     * KEEP (SQL DELETE semantics). Returns the committed version —
-    * unchanged when nothing matches. Cost: one masked scan +
-    * O(matches) sidecar bytes — the GDPR point-delete at 100 TB. */
+    * unchanged when nothing matches. Cost: the matches staged as in
+    * [[updateWhereMor]] + O(matches) sidecar bytes — the GDPR
+    * point-delete at 100 TB. */
   def deleteWhereDv(spark: SparkSession, root: String,
                     predicate: org.apache.spark.sql.Column): Int = {
     val v = latestVersion(spark, root)
@@ -3803,23 +3780,9 @@ object LakeTable {
         n.equalsIgnoreCase(FileCol) || n.equalsIgnoreCase(PosCol)),
       s"table at $root carries a reserved lineage column name " +
         s"($FileCol/$PosCol)")
-    // stage matched rows ONCE (statsMeta rule: dv keys and CDC rows
-    // must describe the same rows under a nondeterministic predicate)
-    val stageRel = s"data/.delstage-${java.util.UUID.randomUUID()}"
-    readWithLineage(spark, root)
-      .filter(coalesce(predicate, lit(false)))
-      .write.parquet(new Path(root, stageRel).toString)
-    try {
-      val stagedDist = spark.read.parquet(new Path(root, stageRel).toString)
-      val nMatches = stagedDist.count()
+    withStagedMatches(spark, root, readWithLineage(spark, root)
+        .filter(coalesce(predicate, lit(false)))) { (staged, nMatches) =>
       if (nMatches == 0) return v
-      // small matched sets continue as a driver-resident LocalRelation:
-      // every downstream consumer (dv sidecar, CDC rows) is bounded by
-      // the match count, and the localized frame turns their write/agg
-      // jobs into the driver fast paths (one collect replaces 2-3 job
-      // rounds; big matches keep the distributed frame unchanged)
-      val staged = if (nMatches <= LocalWriteMaxRows)
-        graft.util.LocalFrame.materialize(stagedDist) else stagedDist
       val dvRel = writeDvSidecar(spark, root,
         staged.select(col(FileCol), col(PosCol), lit("D").as("__op")),
         nMatches)
@@ -3830,7 +3793,28 @@ object LakeTable {
         commitVersion(spark, root, v + 1, readManifest(spark, root, v),
           carryMeta(meta) ++ extra + ("dv" -> list) + ("op" -> "delete-dv"))
       }
-    } finally fs(spark, root).delete(new Path(root, stageRel), true)
+    }
+  }
+
+  /** Run `body` over a MOR mutation's matched rows and their count,
+    * staged ONCE so the dv keys, replacement and CDC rows describe the
+    * SAME rows under a nondeterministic predicate. One bounded collect
+    * evaluates each input partition once; up to [[LocalWriteMaxRows]]
+    * rows it IS the stage, a driver LocalRelation that keeps the driver
+    * write paths. More matches re-run the scan into a parquet stage
+    * dir `data/.mstage-*`, read back and dropped after `body`. */
+  private def withStagedMatches(spark: SparkSession, root: String,
+      matches: DataFrame)(body: (DataFrame, Long) => Int): Int = {
+    val probe = matches.limit(LocalWriteMaxRows + 1).collect()
+    if (probe.length <= LocalWriteMaxRows)
+      return body(graft.util.LocalFrame.of(spark, probe, matches.schema),
+        probe.length.toLong)
+    val stage = new Path(root, s"data/.mstage-${java.util.UUID.randomUUID()}")
+    matches.write.parquet(stage.toString)
+    try {
+      val staged = spark.read.parquet(stage.toString)
+      body(staged, staged.count())
+    } finally fs(spark, root).delete(stage, true)
   }
 
   /** Materialize accumulated merge-on-read deletes: one masked read →
@@ -3980,10 +3964,6 @@ object LakeTable {
     require(rels.size >= 2,
       s"compactDeletes at $root needs at least 2 deletion-vector " +
         s"sidecars to fold, have ${rels.size}")
-    // (file, pos) is unique across sidecars — a masked row never
-    // reappears in a later masked read, so no later commit can re-mask
-    // it — making distinct a pure safety net for hand-edited state
-    val merged = dvMaskFrame(spark, root, rels).distinct()
     // size the fold's write without a count job: binary sidecars know
     // their exact row counts (cheap driver decode), parquet inputs
     // bound at DvSidecarRowsPerFile per file (dedup only shrinks) —
@@ -3995,8 +3975,14 @@ object LakeTable {
     val binRows = bins.map(r =>
       readBinSidecar(f, root, r)
         .map { case (_, _, m) => DvMaskCodec.count(m).toLong }.sum).sum
-    val dvRel = writeDvSidecar(spark, root, merged,
-      nParquetFiles.toLong * DvSidecarRowsPerFile + binRows)
+    val nRows = nParquetFiles.toLong * DvSidecarRowsPerFile + binRows
+    // (file, pos) is unique across sidecars — a masked row never
+    // reappears in a later masked read, so no later commit can re-mask
+    // it — making dedup a safety net for hand-edited state. A `.bin`
+    // fold dedups on the driver (no job); only parquet pays distinct's
+    val masks = dvMaskFrame(spark, root, rels)
+    val dvRel = writeDvSidecar(spark, root,
+      if (nRows <= DvBinaryMaxRows) masks else masks.distinct(), nRows)
     commitVersion(spark, root, v + 1, readManifest(spark, root, v),
       carryMeta(meta) + ("dv" -> dvRel) + ("op" -> "compact-deletes"))
   }

@@ -32,14 +32,22 @@ abstract class SparkSpec extends AnyFunSuite {
     * order, so once the marker's start is seen every earlier job start
     * has been counted. */
   protected def jobsDuring[A](body: => A): (A, Int) = {
+    val (out, jobs) = jobSitesDuring(body)
+    (out, jobs.size)
+  }
+
+  /** The Spark jobs `body` launches, each as the names and call-site
+    * details of its stages, one string per job. */
+  protected def jobSitesDuring[A](body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val prop = "graft.sparkspec.phase"
-    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
-          case Some("body") => counted.incrementAndGet()
+          case Some("body") => jobs.add(e.stageInfos
+            .map(s => s"${s.name}\n${s.details}").mkString("\n"))
           case Some("marker") => marker.countDown()
           case _ =>
         }
@@ -51,7 +59,8 @@ abstract class SparkSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(prop, null)
       assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, counted.get())
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
