@@ -22,14 +22,16 @@ import org.apache.spark.util.SerializableConfiguration
 import java.util.OptionalLong
 
 /** The deletion-vector (dv) reader: the one scan that applies a
-  * snapshot's positional masks, for SQL reads ([[GraftDvLakeTable]]),
-  * the Scala API ([[LakeTable.read]], [[LakeTable.readWithLineage]] and
-  * the range/point reads build the same relation) and the SQL
+  * snapshot's delete state — positional masks and equality-delete keys
+  * — for SQL reads ([[GraftDvLakeTable]]), the Scala API
+  * ([[LakeTable.read]], [[LakeTable.readWithLineage]], the range/point
+  * reads and [[LakeTable.changes]] build the same relation) and the SQL
   * merge-on-read operations' row scan ([[GraftDeltaScanBuilder]]):
   *
   *  - the SAME manifest admission chain prunes file groups before any
   *    footer opens ([[LakeTable.pruneDirsForFilters]] — partition
-  *    values, min/max stats, bloom);
+  *    values, min/max stats, bloom), within `dirs` when the relation
+  *    names a subset of the snapshot's groups;
   *  - the surviving groups' files (each group dir listed once per JVM,
   *    [[GraftDvBatchScan.listGroup]]) are skipped when their parquet
   *    footer's row-group stats rule every row group out under the
@@ -53,6 +55,13 @@ import java.util.OptionalLong
   *    without parquet filter pushdown, so the row counter sees every
   *    row (position = sequential row index of the whole-file scan;
   *    files are never split);
+  *  - equality deletes ([[LakeTable.deleteWhereMor]]) apply per row in
+  *    the same tasks: each `_deletes/del-*` part's keys are decoded
+  *    once per JVM into the same cache ([[GraftDvSidecars.keysOf]]),
+  *    the key column is read even when the query does not ask for it,
+  *    and a row whose key is in the set is dropped ([[DeleteKeys]]:
+  *    a join's key equality). A snapshot without them reads no
+  *    extra column and tests no row;
   *  - lineage: when the required schema asks for `__file`/`__pos` the
   *    reader appends each row's file key and position, and then every
   *    file reads whole, so `__pos` is the row's index in its file;
@@ -81,13 +90,13 @@ import java.util.OptionalLong
   * Spark re-applies the full predicate above the scan (every filter is
   * returned as residual by the builders), so pushdown and skipping here
   * are strict optimizations; filters on a column the mapping renames or
-  * hides are not pushed at all. Snapshots with equality deletes stay
-  * outside ([[LakeTable.nativeDvOk]]). A sidecar the snapshot names but
-  * the filesystem lacks fails the read with an error naming it.
+  * hides are not pushed at all. A sidecar the snapshot names but the
+  * filesystem lacks fails the read with an error naming it.
   */
 private[sources] final class GraftDvBatchScan(
     root: String, version: Option[Int], tableSchema: StructType,
-    requiredSchema: StructType, filters: Seq[Filter])
+    requiredSchema: StructType, filters: Seq[Filter],
+    dirs: Option[Set[String]] = None)
     extends Scan with Batch with SupportsReportStatistics {
   import GraftDvBatchScan.Listed
 
@@ -115,8 +124,11 @@ private[sources] final class GraftDvBatchScan(
     if (spark.sessionState.conf.parquetFilterPushDown) pushable else Nil
 
   // resolved once per scan; planning and statistics share it
-  private lazy val pruned: (Seq[String], Int) =
-    LakeTable.pruneDirsForFilters(spark, root, Some(snapshot), pushable)
+  private lazy val pruned: (Seq[String], Int) = {
+    val (kept, total) =
+      LakeTable.pruneDirsForFilters(spark, root, Some(snapshot), pushable)
+    (dirs.fold(kept)(ds => kept.filter(ds)), total)
+  }
 
   private lazy val admitted: Seq[Listed] = pruned._1.flatMap(d =>
     GraftDvBatchScan.listGroup(spark, LakeTable.groupDir(root, d)))
@@ -179,8 +191,17 @@ private[sources] final class GraftDvBatchScan(
     // name, all nullable (an ALTER-added column is absent from older
     // files); output column i is parquet column plan(i), a lineage
     // value, or a column the mapping hides (typed null)
-    val read = requiredSchema.fields.filterNot(lineage).flatMap(f =>
+    val asked = requiredSchema.fields.filterNot(lineage).flatMap(f =>
       physical(f.name).map(p => StructField(p, f.dataType, nullable = true)))
+    // the equality-delete key (never renamed or dropped: the manifest
+    // binds it), read at parquet ordinal keyAt under its physical name
+    // and appended when the query does not ask for it
+    val deletes = GraftDvBatchScan.deletesOf(root, meta, tableSchema)
+    val key = deletes.map(d =>
+      StructField(physical(d._1.name).get, d._1.dataType, nullable = true))
+    val read = key.fold(asked)(k =>
+      if (asked.exists(_.name.equalsIgnoreCase(k.name))) asked else asked :+ k)
+    val keyAt = key.fold(-1)(k => read.indexWhere(_.name.equalsIgnoreCase(k.name)))
     var next = 0
     val plan = requiredSchema.fields.map { f =>
       if (lineage(f))
@@ -202,17 +223,12 @@ private[sources] final class GraftDvBatchScan(
       }
     val sidecars =
       if (files.isEmpty) null
-      else {
-        val (bins, parts) =
-          GraftDvBatchScan.sidecarFiles(spark, root, LakeTable.dvState(meta))
-        GraftDvSidecars(root, bins.toArray, parts.toArray,
-          GraftParquetFileRead(spark.sessionState.conf, GraftDvSidecars.Schema))
-      }
+      else GraftDvBatchScan.sidecars(spark, root, LakeTable.dvState(meta), deletes)
     new GraftDvReaderFactory(
       GraftParquetFileRead(spark.sessionState.conf, StructType(read)), conf,
       if (lineageRead) Nil else parquetFilters,
-      if (plan.length != read.length) plan else null,
-      requiredSchema.fields.map(_.dataType), sidecars)
+      if (plan.sameElements(read.indices)) null else plan,
+      requiredSchema.fields.map(_.dataType), sidecars, keyAt)
   }
 }
 
@@ -304,22 +320,61 @@ private[graft] object GraftDvBatchScan {
       listed
     }
 
-  /** The files of the dv sidecars `rels` under `root`: the `.bin`
-    * sidecars, and the part files of the parquet sidecar dirs. Each
+  /** The files of the sidecars `rels` under `root`: each `.bin`
+    * sidecar, and the part files of each parquet sidecar dir. Each
     * sidecar is checked to exist on every call, one status a sidecar,
     * and a missing one fails with an error naming it
     * ([[LakeTable.sidecarMissing]]); sidecars are write-once like group
     * dirs, so [[listGroup]]'s listing serves the parts. */
-  private[sources] def sidecarFiles(spark: SparkSession, root: String,
-      rels: Seq[String]): (Seq[Listed], Seq[Listed]) = {
+  private def sidecarFiles(spark: SparkSession, root: String,
+      rels: Seq[String]): Seq[Listed] = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (bins, dirs) = rels.map(rel =>
-      try fs.getFileStatus(new Path(root, rel))
-      catch { case e: java.io.FileNotFoundException =>
-        throw LakeTable.sidecarMissing(root, rel, e)
-      }).partition(_.isFile)
-    (bins.map(Listed(_)), dirs.flatMap(d => listGroup(spark, d.getPath.toString)))
+    rels.flatMap { rel =>
+      val st = try fs.getFileStatus(new Path(root, rel))
+        catch { case e: java.io.FileNotFoundException =>
+          throw LakeTable.sidecarMissing(root, rel, e)
+        }
+      if (st.isFile) Seq(Listed(st)) else listGroup(spark, st.getPath.toString)
+    }
   }
+
+  /** The sidecars of dv state `dv` and of the equality deletes `deletes`
+    * (the key as the parts hold it, and their dirs) under `root`, read
+    * under the session's parquet settings. */
+  private[sources] def sidecars(spark: SparkSession, root: String,
+      dv: Seq[String], deletes: Option[(StructField, Seq[String])])
+      : GraftDvSidecars = {
+    val conf = spark.sessionState.conf
+    GraftDvSidecars(root, sidecarFiles(spark, root, dv).toArray,
+      GraftParquetFileRead(conf, GraftDvSidecars.Schema),
+      deletes.fold(Array.empty[Listed])(d => sidecarFiles(spark, root, d._2).toArray),
+      deletes.map(d => GraftParquetFileRead(conf, StructType(Seq(d._1)))).orNull)
+  }
+
+  /** A driver-side [[GraftDvSidecars.Load]] of `s`, over the session's
+    * prepared conf ([[confBroadcast]]). */
+  private[sources] def load(spark: SparkSession, s: GraftDvSidecars): s.Load =
+    new s.Load(confBroadcast(spark)._1.value.value)
+
+  /** The equality deletes of snapshot `meta`: the key as a field of the
+    * snapshot's logical `schema`, named as the manifest (and the parts)
+    * name it, and the deletes' dirs. */
+  private[sources] def deletesOf(root: String, meta: Map[String, String],
+      schema: StructType): Option[(StructField, Seq[String])] =
+    LakeTable.deleteState(meta).map { case (k, rels) =>
+      val key = schema.find(_.name.equalsIgnoreCase(k)).getOrElse(
+        throw new IllegalStateException(s"delete key '$k' not in the table at $root"))
+      (StructField(k, key.dataType), rels)
+    }
+
+  /** The equality-delete keys of snapshot `meta` ([[deletesOf]]) with
+    * the key's name, decoded on the driver through the per-JVM cache
+    * the scan's tasks use; None without equality deletes. */
+  private[sources] def deleteKeys(spark: SparkSession, root: String,
+      meta: Map[String, String], schema: StructType)
+      : Option[(String, DeleteKeys)] =
+    deletesOf(root, meta, schema).map(d =>
+      d._1.name -> load(spark, sidecars(spark, root, Nil, Some(d))).deleted)
 
   /** Caches `footer`, row groups included, as `f`'s. */
   private[sources] def cacheFooter(f: Listed, footer: ParquetMetadata): Unit = {
@@ -465,7 +520,7 @@ private[sources] object DvMaskCodec {
   }
 
   /** Streaming decoder — O(1) memory, positions come back in order. */
-  final class Cursor(bytes: Array[Byte]) {
+  final class Cursor(bytes: Array[Byte]) extends Iterator[Long] {
     private var i = 0
     private var cur = -1L
     def hasNext: Boolean = i < bytes.length
@@ -550,62 +605,104 @@ private[sources] object DvBinarySidecar {
   }
 }
 
-/** A snapshot's deletion-vector sidecars as its scan's tasks read them:
-  * the table root, its `.bin` sidecar files ([[DvBinarySidecar]]) and
-  * the part files of its parquet sidecar dirs, found on the driver
-  * once per scan ([[GraftDvBatchScan.sidecarFiles]]). `read` reads a
-  * part's (`__file`, `__pos`, `__op`) columns. */
+/** A snapshot's delete-state sidecars as its scan's tasks read them:
+  * the table root, its dv sidecar files (`.bin` sidecars,
+  * [[DvBinarySidecar]], and the parts of parquet sidecar dirs) and the
+  * parts of its equality-delete dirs (`keyParts`), found on the driver
+  * once per scan ([[GraftDvBatchScan.sidecars]]). `read` reads a dv
+  * part's (`__file`, `__pos`, `__op`) columns, `keyRead` an equality
+  * part's one key column (null without equality deletes). */
 private[sources] final case class GraftDvSidecars(root: String,
-    bins: Array[GraftDvBatchScan.Listed],
-    parts: Array[GraftDvBatchScan.Listed], read: GraftParquetFileRead) {
+    dv: Array[GraftDvBatchScan.Listed], read: GraftParquetFileRead,
+    keyParts: Array[GraftDvBatchScan.Listed], keyRead: GraftParquetFileRead) {
 
-  /** One task's masks for the data files `keys`, by key; files with no
-    * masked position are absent. Built on first use from each sidecar
-    * file's entries in [[GraftDvSidecars.decoded]] (a miss reads the
-    * file), after which `footerReads` and `confCopies` count the
-    * parquet sidecar footers it read and the Hadoop conf copies it
-    * made. */
-  final class Load(shared: org.apache.hadoop.conf.Configuration,
-      keys: Array[String]) {
-    import GraftDvSidecars.{Entries, decoded, sortedMask, union}
+  /** One task's reads of the sidecars over the broadcast conf `shared`:
+    * each sidecar file's decode comes from [[GraftDvSidecars]]' per-JVM
+    * cache (a miss reads the file), after which `footerReads` and
+    * `confCopies` count the parquet sidecar footers it read and the
+    * Hadoop conf copies it made. */
+  final class Load(shared: org.apache.hadoop.conf.Configuration) {
+    import GraftDvBatchScan.Listed
+    import GraftDvSidecars.{Entries, decoded, keysOf, sortedMask, union}
     var footerReads = 0L
     private val task = new read.Task(shared, Nil)
-    def confCopies: Long = task.confCopies
+    private val keyTask = if (keyRead == null) null else new keyRead.Task(shared, Nil)
+    def confCopies: Long =
+      task.confCopies + (if (keyTask == null) 0L else keyTask.confCopies)
 
-    private def missing(f: GraftDvBatchScan.Listed, e: Throwable) =
+    private def missing(f: Listed, e: Throwable) =
       LakeTable.sidecarMissing(root, f.key, e)
 
-    private def readBin(f: GraftDvBatchScan.Listed): Entries = {
+    private def readBin(f: Listed): Entries = {
       val path = LakeTable.pathOfKey(f.key)
       try DvBinarySidecar.read(path.getFileSystem(shared), path)
       catch { case e: java.io.FileNotFoundException => throw missing(f, e) }
     }
 
-    private def readPart(f: GraftDvBatchScan.Listed): Entries = {
+    /** Each row of the parquet sidecar part `f`, handed to `each`; `open`
+      * opens it over its cached footer (null on a miss). */
+    private def scan(f: Listed, vectorized: Boolean,
+        open: ParquetMetadata => (Iterator[InternalRow], java.io.Closeable))(
+        each: InternalRow => Unit): Unit = {
       val cached = GraftDvBatchScan.footerCache.get(f)
       if (cached == null) footerReads += 1
-      if (!read.vectorized) footerReads += 1
+      if (!vectorized) footerReads += 1
       val (rows, handle) =
-        try task.open(f.status, cached, push = false)(
-          GraftDvBatchScan.cacheFooter(f, _))
+        try open(cached)
         catch { case e: java.io.FileNotFoundException => throw missing(f, e) }
+      try rows.foreach(each) finally handle.close()
+    }
+
+    private def readPart(f: Listed): Entries = {
       val byKey = scala.collection.mutable.HashMap
         .empty[(String, String), scala.collection.mutable.ArrayBuilder.ofLong]
-      try rows.foreach(r => byKey.getOrElseUpdate((r.getString(0),
-        r.getString(2)), new scala.collection.mutable.ArrayBuilder.ofLong) +=
-        r.getLong(1))
-      finally handle.close()
+      scan(f, read.vectorized, task.open(f.status, _, push = false)(
+          GraftDvBatchScan.cacheFooter(f, _))) { r =>
+        byKey.getOrElseUpdate((r.getString(0), r.getString(2)),
+          new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
+      }
       byKey.iterator.map { case ((k, op), b) =>
         (k, op, sortedMask(b.result())) }.toSeq
     }
 
-    lazy val masks: Map[String, Array[Byte]] = {
+    private def readKeys(f: Listed): java.util.Set[Any] = {
+      val t = keyRead.schema.head.dataType
+      val keys = new java.util.HashSet[Any]()
+      scan(f, keyRead.vectorized, keyTask.open(f.status, _, push = false)(
+          GraftDvBatchScan.cacheFooter(f, _))) { r =>
+        // a columnar row's strings point into its reused buffers
+        if (!r.isNullAt(0)) keys.add(DeleteKeys.norm(r.get(0, t) match {
+          case s: UTF8String => s.copy()
+          case v => v
+        }))
+      }
+      keys
+    }
+
+    /** The entries of dv sidecar file `f`, a `.bin` sidecar or a
+      * parquet part. */
+    def entries(f: Listed): Entries =
+      decoded(f)(if (f.key.endsWith(".bin")) readBin(f) else readPart(f))
+
+    /** The masks of the data files `keys`, by key; files with no masked
+      * position are absent. */
+    def masks(keys: Array[String]): Map[String, Array[Byte]] = {
       val mine = keys.toSet
-      (bins.iterator.flatMap(f => decoded(f)(readBin(f))) ++
-        parts.iterator.flatMap(f => decoded(f)(readPart(f))))
-        .filter(e => mine(e._1)).toSeq
+      dv.iterator.flatMap(entries).filter(e => mine(e._1)).toSeq
         .groupBy(_._1).map { case (k, es) => k -> union(es.map(_._3)) }
     }
+
+    /** The snapshot's equality-delete keys, the union of its parts';
+      * null without equality deletes. */
+    lazy val deleted: DeleteKeys =
+      if (keyRead == null) null
+      else keyParts.map(f => keysOf(f)(readKeys(f))) match {
+        case Array(one) => new DeleteKeys(one)
+        case sets =>
+          val all = new java.util.HashSet[Any](sets.map(_.size).sum * 4 / 3 + 16)
+          sets.foreach(all.addAll)
+          new DeleteKeys(all)
+      }
   }
 }
 
@@ -625,50 +722,80 @@ private[sources] object GraftDvSidecars {
   }
 
   /** The union of encoded masks of one data file. */
-  private def union(masks: Seq[Array[Byte]]): Array[Byte] =
+  private[sources] def union(masks: Seq[Array[Byte]]): Array[Byte] =
     if (masks.size == 1) masks.head
-    else {
-      val all = new scala.collection.mutable.ArrayBuilder.ofLong
-      masks.foreach { m =>
-        val c = new DvMaskCodec.Cursor(m)
-        while (c.hasNext) all += c.next()
-      }
-      sortedMask(all.result())
-    }
+    else sortedMask(masks.flatMap(new DvMaskCodec.Cursor(_)).toArray)
 
-  private final class Slot { @volatile var entries: Entries = _ }
+  private final class Slot { @volatile var value: AnyRef = _ }
 
-  /** Decoded sidecar files (a `.bin` sidecar or one parquet sidecar
-    * part) by file identity. Sidecars are write-once, so the tasks and
-    * driver reads of a JVM share one read and decode of each — a
-    * concurrent miss waits for the one reading — and a re-read decodes
-    * nothing. Bounded by the entries' approximate heap size: past
-    * [[MaxDecodedBytes]] the cache clears wholesale, so masks larger
-    * than that decode more than once per JVM. */
+  /** Decoded sidecar files (a `.bin` sidecar, one parquet dv sidecar
+    * part or one equality-delete part) by file identity. Sidecars are
+    * write-once, so the tasks and driver reads of a JVM share one read
+    * and decode of each — a concurrent miss waits for the one reading —
+    * and a re-read decodes nothing. Bounded by the decodes' approximate
+    * heap size: past [[MaxDecodedBytes]] the cache clears wholesale, so
+    * delete state larger than that decodes more than once per JVM. */
   private val slots = new java.util.concurrent.ConcurrentHashMap[
     GraftDvBatchScan.Listed, Slot]()
   private val decodedBytes = new java.util.concurrent.atomic.AtomicLong()
   private val MaxDecodedBytes = 128L << 20
 
-  /** The entries of sidecar file `f` from the cache, `load`ed on a miss. */
-  private[sources] def decoded(f: GraftDvBatchScan.Listed)(
-      load: => Entries): Entries = {
+  private def cached[T <: AnyRef](f: GraftDvBatchScan.Listed)(load: => T)(
+      bytes: T => Long): T = {
     val slot = slots.computeIfAbsent(f, _ => new Slot)
-    val hit = slot.entries
-    if (hit != null) hit
+    val hit = slot.value
+    if (hit != null) hit.asInstanceOf[T]
     else slot.synchronized {
-      if (slot.entries == null) {
-        val es = load
-        val bytes = es.iterator.map(e => 2L * e._1.length + e._3.length + 64).sum
-        if (decodedBytes.addAndGet(bytes) > MaxDecodedBytes) {
+      if (slot.value == null) {
+        val v = load
+        val n = bytes(v)
+        if (decodedBytes.addAndGet(n) > MaxDecodedBytes) {
           slots.clear()
-          decodedBytes.set(bytes)
+          decodedBytes.set(n)
           slots.put(f, slot)
         }
-        slot.entries = es
+        slot.value = v
       }
-      slot.entries
+      slot.value.asInstanceOf[T]
     }
+  }
+
+  /** The entries of dv sidecar file `f` from the cache, `load`ed on a miss. */
+  private[sources] def decoded(f: GraftDvBatchScan.Listed)(
+      load: => Entries): Entries =
+    cached(f)(load)(_.iterator.map(e => 2L * e._1.length + e._3.length + 64).sum)
+
+  /** The keys of equality-delete part `f` from the cache, `load`ed on a
+    * miss. */
+  private[sources] def keysOf(f: GraftDvBatchScan.Listed)(
+      load: => java.util.Set[Any]): java.util.Set[Any] = {
+    import scala.jdk.CollectionConverters._
+    cached(f)(load)(_.asScala.iterator.map {
+      case s: UTF8String => 64L + s.numBytes
+      case _ => 64L
+    }.sum)
+  }
+}
+
+/** Equality-delete keys under a join's key equality: a null key
+  * never matches, binary keys compare by content, and `-0.0` equals
+  * `0.0` and NaN equals NaN (Spark normalizes floating join keys the
+  * same way). Serializable: the micro-batch stream ships it to its
+  * tasks. */
+private[sources] final class DeleteKeys(keys: java.util.Set[Any])
+    extends Serializable {
+  def contains(v: Any): Boolean = v != null && keys.contains(DeleteKeys.norm(v))
+}
+
+private[sources] object DeleteKeys {
+  /** A catalyst value in the form the set holds: binary as a
+    * content-compared [[UTF8String]] over its bytes, `-0.0` as `0.0`
+    * (NaNs compare equal under `Double.equals` already). */
+  def norm(v: Any): Any = v match {
+    case b: Array[Byte] => UTF8String.fromBytes(b)
+    case d: Double => if (d == 0.0d) 0.0d else d
+    case f: Float => if (f == 0.0f) 0.0f else f
+    case _ => v
   }
 }
 
@@ -678,7 +805,9 @@ private[sources] object GraftDvSidecars {
   * pruning, masked files (and every file when lineage is asked for)
   * without, behind the mask walk ([[DvMaskCodec.walk]]). Before its
   * first file opens, the task loads the masks of its files from
-  * `sidecars` (null only in a scan that kept no file: it runs no task).
+  * `sidecars` (null only in a scan that kept no file: it runs no task);
+  * when `keyAt` names the parquet column of an equality-delete key,
+  * rows whose key the snapshot deletes are dropped after the walk.
   * Each file's footer comes from [[GraftDvBatchScan.footerCache]]; a
   * miss reads it off the file's open stream and caches it. `plan` (null = parquet rows pass
   * through) names each output column's source: a parquet column
@@ -687,12 +816,14 @@ private[sources] object GraftDvSidecars {
 private[sources] final class GraftDvReaderFactory(
     read: GraftParquetFileRead, conf: Broadcast[SerializableConfiguration],
     pushed: Seq[Filter], plan: Array[Int], types: Array[DataType],
-    sidecars: GraftDvSidecars)
+    sidecars: GraftDvSidecars, keyAt: Int)
     extends PartitionReaderFactory {
   import GraftDvReaderFactory._
 
   private val lineage =
     plan != null && plan.exists(c => c == File || c == Pos)
+
+  private val keyType = if (keyAt < 0) null else read.schema(keyAt).dataType
 
   private def shape(r: InternalRow, file: UTF8String,
       pos: Long): InternalRow = {
@@ -716,14 +847,19 @@ private[sources] final class GraftDvReaderFactory(
     private val task = new read.Task(conf.value.value, pushed)
     private var footerReads = 0L
     private val files = p.asInstanceOf[GraftDvFilePartition].files
-    private val masks = new sidecars.Load(conf.value.value, files.map(_.key))
+    private val load = new sidecars.Load(conf.value.value)
+    private lazy val masks = load.masks(files.map(_.key))
     private val pending = files.iterator
     private var rows: Iterator[InternalRow] = Iterator.empty
     private var open: java.io.Closeable = null
     private var cur: InternalRow = _
 
+    private def deleted(r: InternalRow): Boolean =
+      keyAt >= 0 && !r.isNullAt(keyAt) &&
+        load.deleted.contains(r.get(keyAt, keyType))
+
     private def rowsOf(f: GraftDvBatchScan.Listed): Iterator[InternalRow] = {
-      val mask = masks.masks.getOrElse(f.key, null)
+      val mask = masks.getOrElse(f.key, null)
       val cached = GraftDvBatchScan.footerCache.get(f)
       if (cached == null) footerReads += 1
       // parquet-mr's reader reads the footer again itself
@@ -733,11 +869,14 @@ private[sources] final class GraftDvReaderFactory(
         GraftDvBatchScan.cacheFooter(f, _))
       open = handle
       if (push) {
-        if (plan == null) it else it.map(shape(_, null, -1L))
+        val kept = if (keyAt < 0) it else it.filterNot(deleted)
+        if (plan == null) kept else kept.map(shape(_, null, -1L))
       } else {
+        // positions count every row, so the key test follows the walk
         val file = UTF8String.fromString(f.key)
-        DvMaskCodec.walk(it, mask, keepMasked = false)((r, pos) =>
-          if (plan == null) r else shape(r, file, pos))
+        val walked = DvMaskCodec.walk(it, mask, keepMasked = false)((r, pos) =>
+          if (deleted(r)) null else if (plan == null) r else shape(r, file, pos))
+        if (keyAt < 0) walked else walked.filter(_ != null)
       }
     }
 
@@ -753,8 +892,8 @@ private[sources] final class GraftDvReaderFactory(
       if (open != null) { open.close(); open = null }
     override def currentMetricsValues(): Array[CustomTaskMetric] =
       GraftDvScanMetrics.values(
-        GraftDvScanMetrics.TaskFooterReads -> (footerReads + masks.footerReads),
-        GraftDvScanMetrics.TaskConfCopies -> (task.confCopies + masks.confCopies))
+        GraftDvScanMetrics.TaskFooterReads -> (footerReads + load.footerReads),
+        GraftDvScanMetrics.TaskConfCopies -> (task.confCopies + load.confCopies))
   }
 }
 

@@ -87,11 +87,11 @@ final class GraftLakeCatalog extends TableCatalog
     val known = LakeTable.versions(spark, root)
     val meta = version.orElse(known.lastOption).filter(known.contains)
       .map(LakeTable.manifestMetaAt(spark, root, _))
-    // deletion-vector snapshots stay fully READABLE through the catalog
-    // (Delta semantics — a DV table is not degraded): the raw parquet
-    // delegate would resurrect masked rows, so scans go to the masked
-    // [[GraftDvLakeTable]]. Works for time travel too (each version's
-    // own dv state). Equality deletes keep the delegate's gate below.
+    // snapshots with deletion vectors or equality deletes stay fully
+    // READABLE through the catalog (Delta semantics — a masked table is
+    // not degraded): the raw parquet delegate would resurrect deleted
+    // rows, so scans go to the masked [[GraftDvLakeTable]], at the
+    // latest version and under time travel (each version's own state)
     if (meta.exists(LakeTable.nativeDvOk))
       return new GraftDvLakeTable(ident.toString, root, version)
     try new GraftLakeTable(GraftLakeSource.delegate(spark, root, version,
@@ -101,14 +101,6 @@ final class GraftLakeCatalog extends TableCatalog
       case _: IllegalStateException =>
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           ident.namespace() :+ ident.name())
-      case e: UnsupportedOperationException if version.isEmpty =>
-        // reader-gated state (metadata-only rename/drop, MOR deletes):
-        // the table still RESOLVES — name, logical schema, appends, and
-        // further DDL (including the materializing compact) all work —
-        // only scan building refuses, with the original gate message.
-        // Without this, one RENAME COLUMN would brick every subsequent
-        // catalog statement at analysis time.
-        new GatedLakeTable(ident.toString, root, e)
     }
   }
 
@@ -387,7 +379,7 @@ final class GraftLakeCatalog extends TableCatalog
           "append-only — constraints only tighten)")
       case other => readOnly(s"ALTER TABLE $ident ($other)")
     }
-    loadTable(ident) // gated states resolve as GatedLakeTable
+    loadTable(ident)
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -513,24 +505,26 @@ private[sources] final class GraftStagedTable(
   override def abortStagedChanges(): Unit = { batch = None }
 }
 
-/** Catalog table for a snapshot carrying positional deletion vectors —
-  * and the relation [[LakeTable.read]], [[LakeTable.readWithLineage]]
-  * and the range/point reads build for one ([[LakeTable.nativeDvFrame]];
-  * its `__file`/`__pos` metadata columns carry lineage), so the Scala
-  * API and SQL read a dv snapshot through the same scan,
+/** Catalog table for a snapshot carrying deletion vectors or equality
+  * deletes — and the relation [[LakeTable.read]],
+  * [[LakeTable.readWithLineage]], the range/point reads and
+  * [[LakeTable.changes]] build for one ([[LakeTable.dvFrame]]; its
+  * `__file`/`__pos` metadata columns carry lineage, and `dirs`, when
+  * set, limits it to those of the snapshot's file groups), so the Scala
+  * API and SQL read a masked snapshot through the same scan,
   * [[GraftDvBatchScan]], whatever its mask size: pushed filters run the
   * manifest-level admission chain (partition values, min/max stats,
   * bloom indexes — [[LakeTable.pruneDirsForFilters]]) before any
   * parquet footer opens, each task loads and applies its own files'
-  * masks inside the reader, and the column mapping maps physical names
-  * to logical ones, so masked rows never resurface and stacked
-  * updates/time travel each see their own version's state (equality
-  * deletes never reach this table: the catalog gates them). A
-  * compaction ([[LakeTable.rewriteDeletes]] or any COW op) restores the
-  * plain delegate. Appends still land through the commit protocol (dv
-  * state changes are NAMED append conflicts). */
+  * masks and the snapshot's equality-delete keys inside the reader, and
+  * the column mapping maps physical names to logical ones, so deleted
+  * rows never resurface and stacked updates/time travel each see their
+  * own version's state. A compaction ([[LakeTable.rewriteDeletes]] or
+  * any COW op) restores the plain delegate. Appends still land through
+  * the commit protocol (dv state changes are NAMED append conflicts). */
 private[sources] final class GraftDvLakeTable(
-    identName: String, root: String, version: Option[Int])
+    identName: String, root: String, version: Option[Int],
+    dirs: Option[Set[String]] = None)
     extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -552,13 +546,22 @@ private[sources] final class GraftDvLakeTable(
     * (the delta operation's scan skips already-masked rows); copy-on-
     * write refuses until [[LakeTable.rewriteDeletes]] materializes —
     * a COW group replace would read raw files and resurrect masked
-    * rows. */
+    * rows. A snapshot with equality deletes refuses in either mode: its
+    * table-wide key tombstones would also swallow the rows a statement
+    * writes. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(version.isEmpty,
       s"${info.command} requires a latest-version table, got $identName")
     val spark = SparkSession.active
+    val meta = LakeTable.latestVersion(spark, root)
+      .map(v => LakeTable.manifestMetaAt(spark, root, v))
+      .getOrElse(Map.empty[String, String])
+    if (LakeTable.deleteState(meta).nonEmpty)
+      throw new UnsupportedOperationException(
+        s"${info.command}: the table at $root has merge-on-read deletes " +
+          "(equality deletes); run rewriteDeletes first")
     if (!spark.conf.getOption("spark.graft.update.mode").contains("mor"))
       throw new UnsupportedOperationException(
         s"${info.command}: no copy-on-write row-level ops on a " +
@@ -569,9 +572,6 @@ private[sources] final class GraftDvLakeTable(
     // rename/drop mapping reads back under physical ones (the renamed
     // column would read null); refuse until a rewrite materializes the
     // mapping
-    val meta = LakeTable.latestVersion(spark, root)
-      .map(v => LakeTable.manifestMetaAt(spark, root, v))
-      .getOrElse(Map.empty[String, String])
     if (LakeTable.colMapAt(meta).nonEmpty ||
         LakeTable.colDropsAt(meta).nonEmpty)
       throw new UnsupportedOperationException(
@@ -601,20 +601,27 @@ private[sources] final class GraftDvLakeTable(
   override def capabilities(): java.util.Set[TableCapability] =
     if (version.isEmpty)
       java.util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.V1_BATCH_WRITE)
+        TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new GraftDvScanBuilder(root, version, schema())
+      : ScanBuilder = new GraftDvScanBuilder(root, version, schema(), dirs)
+  /** Appends land through the commit protocol; an overwrite (`INSERT
+    * OVERWRITE`, which Spark plans as a truncate) refuses by name. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
+    new WriteBuilder
+        with org.apache.spark.sql.connector.write.SupportsTruncate {
+      override def truncate(): WriteBuilder =
+        throw new UnsupportedOperationException("graft-lake: INSERT " +
+          s"OVERWRITE on $identName, a table with deletion vectors or " +
+          "merge-on-read deletes, is not supported — rewriteDeletes/" +
+          "compact first")
       override def build(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: org.apache.spark.sql.DataFrame,
                                 overwrite: Boolean): Unit = {
-              require(!overwrite, "graft-lake: INSERT OVERWRITE on a " +
-                "table with deletion vectors is not supported — " +
-                "rewriteDeletes/compact first")
+              require(!overwrite, s"graft-lake: an overwrite of $identName " +
+                "is not supported — rewriteDeletes/compact first")
               LakeTable.append(SparkSession.active, root, data)
             }
           }
@@ -622,7 +629,7 @@ private[sources] final class GraftDvLakeTable(
     }
 }
 
-/** ScanBuilder for deletion-vector snapshots: records Spark's pushed
+/** ScanBuilder for masked snapshots: records Spark's pushed
   * source filters and required columns (lineage metadata columns
   * included), then builds the pruned masked scan, [[GraftDvBatchScan]].
   * EVERY filter is also returned as residual, so Spark re-applies the
@@ -630,7 +637,8 @@ private[sources] final class GraftDvLakeTable(
   * optimization (fewer groups opened, parquet row-group pruning), never
   * a correctness dependency. */
 private[sources] final class GraftDvScanBuilder(
-    root: String, version: Option[Int], tableSchema: StructType)
+    root: String, version: Option[Int], tableSchema: StructType,
+    dirs: Option[Set[String]] = None)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
@@ -648,49 +656,6 @@ private[sources] final class GraftDvScanBuilder(
     required = requiredSchema
   }
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq)
-}
-
-/** A resolvable-but-scan-gated table: stands in for a snapshot whose
-  * RAW delegate read is refused (metadata-only rename/drop pending, or
-  * merge-on-read deletes). The logical shape comes from
-  * [[LakeTable.read]] (which honors the column mapping and masks), SQL
-  * `INSERT INTO` still appends through the commit protocol, and any
-  * attempt to build a batch scan rethrows the original gate message —
-  * so DDL chains (rename → drop → compact) keep resolving while reads
-  * stay protected. */
-private[sources] final class GatedLakeTable(
-    identName: String, root: String, gate: UnsupportedOperationException)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.connector.read.ScanBuilder
-  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write,
-    Write, WriteBuilder}
-  import org.apache.spark.sql.sources.InsertableRelation
-
-  override def name(): String = identName
-  override def schema(): StructType =
-    LakeTable.read(SparkSession.active, root).schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    throw new UnsupportedOperationException(gate.getMessage)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: org.apache.spark.sql.DataFrame,
-                                overwrite: Boolean): Unit = {
-              require(!overwrite, "graft-lake: INSERT OVERWRITE on a " +
-                "gated table (pending rename/drop or MOR deletes) is " +
-                "not supported — compact/rewriteDeletes first")
-              LakeTable.append(SparkSession.active, root, data)
-            }
-          }
-      }
-    }
+    new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq,
+      dirs)
 }

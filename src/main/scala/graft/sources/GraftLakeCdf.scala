@@ -403,40 +403,18 @@ private[sources] object GraftLakeCdfStream {
   /** The masks of the sidecars `rels`, per (data file key, op tag) and
     * built on the driver: the feed classifies each masked row by its
     * own 'U'/'D' tag (update preimage vs delete), so a clause-matrix
-    * MERGE's mixed masks stay apart. `.bin`-only sets decode from the
-    * decoded-sidecar cache with no Spark job; others take one
-    * group-collect over [[LakeTable.dvMaskFrame]]. Callers bound the
+    * MERGE's mixed masks stay apart. Each `.bin` sidecar and parquet
+    * sidecar part decodes through the per-JVM sidecar cache
+    * ([[GraftDvSidecars]]), with no Spark job. Callers bound the
     * sidecar bytes first ([[MaxMaskBytes]]). */
   def masksByOp(spark: SparkSession, root: String, rels: Seq[String])
       : Map[(String, String), Array[Byte]] =
     if (rels.isEmpty) Map.empty
-    else if (rels.forall(_.endsWith(".bin"))) {
-      val f = LakeTable.fileSystem(spark, root)
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), scala.collection.mutable.ArrayBuilder.ofLong]
-      rels.foreach { r =>
-        LakeTable.readBinSidecar(f, root, r).foreach { case (fp, op, mask) =>
-          val buf = acc.getOrElseUpdate((fp, op),
-            new scala.collection.mutable.ArrayBuilder.ofLong)
-          val c = new DvMaskCodec.Cursor(mask)
-          while (c.hasNext) buf += c.next()
-        }
-      }
-      acc.iterator.map { case (k, buf) =>
-        val ps = buf.result()
-        java.util.Arrays.sort(ps)
-        k -> DvMaskCodec.encode(ps)
-      }.toMap
-    } else {
-      import org.apache.spark.sql.functions.{col, collect_set, sort_array}
-      LakeTable.dvMaskFrame(spark, root, rels)
-        .groupBy(col(LakeTable.FileCol), col("__op"))
-        .agg(sort_array(collect_set(col(LakeTable.PosCol))).as("ps"))
-        .collect()
-        .map { r =>
-          (r.getString(0), r.getString(1)) -> DvMaskCodec.encode(
-            r.getSeq[Long](2).toArray)
-        }.toMap
+    else {
+      val sidecars = GraftDvBatchScan.sidecars(spark, root, rels, None)
+      val load = GraftDvBatchScan.load(spark, sidecars)
+      sidecars.dv.toSeq.flatMap(load.entries).groupBy(e => (e._1, e._2))
+        .map { case (k, es) => k -> GraftDvSidecars.union(es.map(_._3)) }
     }
 }
 

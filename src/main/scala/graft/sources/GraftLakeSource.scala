@@ -90,10 +90,11 @@ private[sources] object GraftLakeSource {
                                 version: Option[Int],
                                 userSchema: Option[StructType],
                                 options: JMap[String, String]): ParquetTable = {
-    // merge-on-read delete masks are applied by LakeTable.read's
-    // anti-join; the raw-parquet delegate would silently resurrect
-    // deleted rows, so fail fast instead (Delta-protocol spirit: a
-    // reader that can't honor deletion vectors must not read)
+    // merge-on-read deletes are applied by the dv reader
+    // (GraftDvBatchScan, behind LakeTable.read and the catalog); the
+    // raw-parquet delegate would silently resurrect deleted rows, so
+    // fail fast instead (Delta-protocol spirit: a reader that can't
+    // honor deletion vectors must not read)
     // (an unknown requested version skips the check and fails below in
     // dataDirPaths with the available-versions message)
     val known = LakeTable.versions(spark, root)

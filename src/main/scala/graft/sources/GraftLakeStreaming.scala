@@ -111,15 +111,15 @@ private[sources] final class GraftLakeMicroBatchStream(
   override def stop(): Unit = ()
 
   /** Delete mask for the batch being planned: the END version's
-    * accumulated MOR delete keys in CATALYST form (UTF8String/Long/…),
+    * accumulated MOR delete keys ([[GraftDvBatchScan.deleteKeys]]: the
+    * per-JVM key decode the batch scan's tasks use, no Spark job),
     * applied row-by-row in the readers. Set by [[planInputPartitions]],
     * consumed by [[createReaderFactory]] — the driver plans one batch
     * at a time, so the handoff is sequential. Rows already emitted by
     * earlier batches are NOT retracted (an append-only stream cannot
     * retract — Delta's ignoreDeletes posture); rows a mask catches
-    * BEFORE they are emitted never appear. The key list is the same
-    * bounded sidecar set the batch anti-join broadcasts. */
-  @volatile private var currentMask: Option[(String, Set[Any])] = None
+    * BEFORE they are emitted never appear. */
+  @volatile private var currentMask: Option[(String, DeleteKeys)] = None
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -141,15 +141,8 @@ private[sources] final class GraftLakeMicroBatchStream(
     }
     currentMask =
       if (e < 1) None
-      else LakeTable.deleteState(LakeTable.manifestMetaAt(spark, root, e))
-        .map { case (k, rels) =>
-          val keyDf = spark.read
-            .parquet(rels.map(r => new Path(root, r).toString): _*)
-            .select(org.apache.spark.sql.functions.col(k)).distinct()
-          val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(keyDf.schema.head.dataType)
-          (k, keyDf.collect().map(r => conv(r.get(0))).toSet)
-        }
+      else GraftDvBatchScan.deleteKeys(spark, root,
+        LakeTable.manifestMetaAt(spark, root, e), tableSchema)
     (s + 1 to e).flatMap { v =>
       val cur = LakeTable.dataDirsAt(spark, root, v)
       val prev = if (v <= 1) Seq.empty else LakeTable.dataDirsAt(spark, root, v - 1)
@@ -191,7 +184,7 @@ private[sources] final class GraftLakeMicroBatchStream(
     // when a delete mask is live, read the key column too (appended to
     // the schema if the query didn't project it; dropped again after
     // the filter) so the reader can test membership row-by-row
-    val mask = currentMask.filter(_._2.nonEmpty)
+    val mask = currentMask
     val (readSchema, keyIdx) = mask match {
       case Some((k, _)) =>
         requiredSchema.fields.zipWithIndex
@@ -237,13 +230,13 @@ private[sources] final case class GraftLakeFilePartition(
     path: String, length: Long) extends InputPartition
 
 /** Per-file reader factory. When `deletedKeys` is set, rows whose key
-  * (at `keyIdx` in `readSchema`, catalyst-typed values) is in the set
-  * are dropped, and — if the key column was appended only for the
-  * filter (`nOut < readSchema.size`) — the row is projected back to
-  * the query's shape before being returned. */
+  * (at `keyIdx` in `readSchema`) is in the set are dropped, and — if
+  * the key column was appended only for the filter
+  * (`nOut < readSchema.size`) — the row is projected back to the
+  * query's shape before being returned. */
 private[sources] final class GraftLakeFileReaderFactory(
     readFn: PartitionedFile => Iterator[InternalRow],
-    deletedKeys: Option[Set[Any]] = None, keyIdx: Int = -1,
+    deletedKeys: Option[DeleteKeys] = None, keyIdx: Int = -1,
     readSchema: StructType = StructType(Nil), nOut: Int = 0)
     extends PartitionReaderFactory {
 
@@ -254,10 +247,7 @@ private[sources] final class GraftLakeFileReaderFactory(
       SparkPath.fromPathString(fp.path), 0, fp.length))
     val keyType = if (keyIdx >= 0) readSchema(keyIdx).dataType else null
     val masked = deletedKeys match {
-      case Some(keys) => raw.filter { r =>
-        val k = r.get(keyIdx, keyType)
-        k == null || !keys.contains(k) // null keys are never deletable
-      }
+      case Some(keys) => raw.filterNot(r => keys.contains(r.get(keyIdx, keyType)))
       case None => raw
     }
     val it = if (deletedKeys.isDefined && nOut < readSchema.length) {

@@ -2365,35 +2365,30 @@ object LakeTable {
   /** Data-skipping read: scans only the file groups whose stats admit
     * `column ∈ [lo, hi]`, then applies the exact filter. At scale this is
     * the manifest-level pruning layer ABOVE parquet row-group pruning —
-    * skipped groups cost zero file opens. A snapshot the dv reader
-    * serves ([[nativeDvOk]]) is [[read]]'s frame with the band on top,
-    * its bounds pushed into [[pruneDirsForFilters]]' admission chain;
-    * other snapshots read the admitted groups through
-    * [[readDirsSubset]]. Either way a renamed filter column finds no
-    * physical stat keys and admits every group (no pruning, still
-    * correct), and pruning stays CONSERVATIVE under masks: a mask only
-    * removes rows, so a group admitted by its (pre-mask) stats
-    * over-admits, never lies. */
+    * skipped groups cost zero file opens. The admitted groups read
+    * through [[readDirsSubset]]; on a masked snapshot ([[nativeDvOk]])
+    * that is the dv reader, where the band also pushes into its footer
+    * skipping. A renamed filter column finds no physical stat keys and
+    * admits every group (no pruning, still correct), and pruning stays
+    * CONSERVATIVE under masks: a mask only removes rows, so a group
+    * admitted by its (pre-mask) stats over-admits, never lies. */
   def readWhere(spark: SparkSession, root: String, column: String,
                 lo: Double, hi: Double): DataFrame = {
     val v = latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(s"no table at $root"))
+    val df = readDirsSubset(spark, root, Some(v),
+      selectGroups(spark, root, column, lo, hi).toSet)
     val band = col(column).cast("double").between(lo, hi)
-    nativeDvFrame(spark, root, v, manifestMeta(spark, root, v)) match {
-      case Some(df) =>
-        // Catalyst unwraps the cast for narrower integral and float
-        // columns, so the band pushes as is; a long column's cast is
-        // lossy and stays put, but below 2^53 every long converts
-        // exactly, so long bounds select the same rows and push
-        val exact = Seq(lo, hi).forall(b => math.abs(b) < (1L << 53))
-        val long = df.schema.find(_.name.equalsIgnoreCase(column))
-          .exists(_.dataType == org.apache.spark.sql.types.LongType)
-        if (long && exact) df.filter(col(column) >= math.ceil(lo).toLong &&
-          col(column) <= math.floor(hi).toLong && band)
-        else df.filter(band)
-      case None => readDirsSubset(spark, root, Some(v),
-        selectGroups(spark, root, column, lo, hi).toSet).filter(band)
-    }
+    // Catalyst unwraps the cast for narrower integral and float
+    // columns, so the band pushes as is; a long column's cast is
+    // lossy and stays put, but below 2^53 every long converts
+    // exactly, so long bounds select the same rows and push
+    val exact = Seq(lo, hi).forall(b => math.abs(b) < (1L << 53))
+    val long = df.schema.find(_.name.equalsIgnoreCase(column))
+      .exists(_.dataType == org.apache.spark.sql.types.LongType)
+    if (long && exact) df.filter(col(column) >= math.ceil(lo).toLong &&
+      col(column) <= math.floor(hi).toLong && band)
+    else df.filter(band)
   }
 
   /** Build per-file-group Bloom-filter indexes for `cols` over the
@@ -2497,10 +2492,10 @@ object LakeTable {
     * AND bloom index admit `column = value`, then applies the exact
     * filter — the needle-in-100TB path: manifest stats bound the range,
     * the bloom disproves membership group by group, and only the
-    * surviving group(s) open a parquet footer. A snapshot the dv reader
-    * serves ([[nativeDvOk]]) is [[read]]'s frame with the filter on top:
-    * the pushed `EqualTo` runs the same partition/stats/bloom admission
-    * in [[pruneDirsForFilters]] and the masks apply inside the reader. */
+    * surviving group(s) open a parquet footer. The admitted groups read
+    * through [[readDirsSubset]]; on a masked snapshot ([[nativeDvOk]])
+    * that is the dv reader, where the deletes apply inside the reader
+    * and the pushed `EqualTo` also skips files by footer stats. */
   def readWhereEq(spark: SparkSession, root: String, column: String,
                   value: Any): DataFrame = {
     val v = latestVersion(spark, root)
@@ -2508,9 +2503,8 @@ object LakeTable {
     // a renamed column simply finds no physical stat/bloom keys and
     // admits every group — no pruning, still correct; the subset read
     // restores the logical shape before the exact filter
-    nativeDvFrame(spark, root, v, manifestMeta(spark, root, v))
-      .getOrElse(readDirsSubset(spark, root, Some(v),
-        selectGroupsEq(spark, root, column, value).toSet))
+    readDirsSubset(spark, root, Some(v),
+      selectGroupsEq(spark, root, column, value).toSet)
       .filter(col(column) === lit(value))
   }
 
@@ -2869,13 +2863,13 @@ object LakeTable {
     * mergeSchema handles additive schema evolution: groups written
     * before a column existed read it as null; an ALTER-declared schema
     * additionally projects columns no parquet group carries yet (typed
-    * nulls, declared order). A deletion-vector snapshot without
-    * equality deletes ([[nativeDvOk]] — every mask size, column mapping
-    * and declared schema included) reads as ONE scan of the relation SQL
-    * reads too ([[GraftDvLakeTable]]): each task applies its files'
-    * masks in the reader and pushed filters prune groups by partition,
-    * stats and bloom; only equality-delete snapshots anti-join their
-    * masks. */
+    * nulls, declared order). A snapshot with deletion vectors or
+    * equality deletes ([[nativeDvOk]] — every mask and key-set size,
+    * column mapping and declared schema included) reads as ONE scan of
+    * the relation SQL reads too ([[GraftDvLakeTable]]): each task
+    * applies its files' masks and the snapshot's delete keys in the
+    * reader, and pushed filters prune groups by partition, stats and
+    * bloom. */
   def read(spark: SparkSession, root: String,
            version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = false)
@@ -2885,9 +2879,9 @@ object LakeTable {
     * that file) — the positional identity deletion vectors key on. A
     * snapshot inside [[nativeDvOk]] serves them from the dv reader's
     * `__file`/`__pos` metadata columns (the relation merge-on-read
-    * staging and the SQL row-level scan share); the rest from Spark's
-    * `_metadata` pseudo-column. Masks and projections apply exactly as
-    * in [[read]]. */
+    * staging and the SQL row-level scan share); a plain one from Spark's
+    * `_metadata` pseudo-column. Deletes and projections apply exactly
+    * as in [[read]]. */
   private[graft] def readWithLineage(spark: SparkSession, root: String,
       version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = true)
@@ -2898,12 +2892,10 @@ object LakeTable {
     val v = existingVersion(spark, root, version)
     val rels = readManifest(spark, root, v)
     val meta = manifestMeta(spark, root, v)
-    // a non-empty snapshot the dv reader serves needs no data-dir
-    // paths (an empty one takes the declared-schema branch)
-    if (keepDirs.isEmpty && rels.nonEmpty) {
-      val native = nativeDvFrame(spark, root, v, meta, keepLineage)
-      if (native.isDefined) return native.get
-    }
+    // a non-empty masked snapshot needs no data-dir paths (an empty one
+    // takes the declared-schema branch)
+    if (rels.nonEmpty && nativeDvOk(meta))
+      return dvFrame(spark, root, v, keepLineage, keepDirs)
     val dirs = keepDirs.fold(rels)(rels.filter).map(groupDir(root, _))
     // a PRUNED read of a non-empty snapshot that kept zero groups is an
     // empty frame in the full read's shape (the empty-snapshot branch
@@ -2925,53 +2917,46 @@ object LakeTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], shaped)
     }
-    val lineage = keepLineage || dvState(meta).nonEmpty
     val raw0 = scanDirs(spark, dirs)
     // lineage stamps FIRST (only the raw scan frame exposes _metadata)
-    val raw = if (lineage) withLineageCols(raw0) else raw0
+    val raw = if (keepLineage) withLineageCols(raw0) else raw0
     // physical→logical rename mapping applies next, so the declared-
-    // schema projection and the delete masks all see the snapshot's
-    // LOGICAL shape
+    // schema projection sees the snapshot's LOGICAL shape
     val df = applyColMap(meta, raw)
-    val shaped = override_.fold(df) { target =>
+    override_.fold(df) { target =>
       val cols = target.fields.map { f =>
         if (df.columns.map(_.toLowerCase).contains(f.name.toLowerCase))
           col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }.toIndexedSeq
       df.select(
-        (if (lineage) cols ++ Seq(col(FileCol), col(PosCol)) else cols): _*)
+        (if (keepLineage) cols ++ Seq(col(FileCol), col(PosCol)) else cols): _*)
     }
-    val masked =
-      applyDvMask(spark, root, meta, applyDeleteMask(spark, root, meta, shaped))
-    if (lineage && !keepLineage) masked.drop(FileCol, PosCol) else masked
   }
 
   /** Whether the deletion-vector reader ([[GraftDvBatchScan]]) serves
-    * a snapshot: it has deletion vectors and no equality deletes,
-    * whatever its mask size (each task loads its own files' masks).
-    * Column mappings and declared schemas are the reader's schema
-    * mapping. Equality-delete snapshots keep [[read]]'s anti-join
-    * path. */
+    * a snapshot: it has deletion vectors or equality deletes, whatever
+    * their size (each task loads its own files' masks and the
+    * snapshot's delete keys). Column mappings and declared schemas are
+    * the reader's schema mapping. */
   private[sources] def nativeDvOk(meta: Map[String, String]): Boolean =
-    dvState(meta).nonEmpty && deleteState(meta).isEmpty
+    dvState(meta).nonEmpty || deleteState(meta).nonEmpty
 
   /** Snapshot `v` as ONE scan of the deletion-vector reader — each
-    * file's mask applied inside the reader, no anti-join, plus the
-    * reader's `__file`/`__pos` columns when `lineage` — when the reader
-    * serves it ([[nativeDvOk]]); None otherwise. The relation is pinned
-    * to `v`: the frame serves the snapshot it was built on, whatever
+    * file's mask and the delete keys applied inside the reader, plus
+    * the reader's `__file`/`__pos` columns when `lineage` — over the
+    * file groups `dirs` (relative manifest entries) when set, else all
+    * of them. The relation is pinned to
+    * `v`: the frame serves the snapshot it was built on, whatever
     * commits land before it runs. */
-  private def nativeDvFrame(spark: SparkSession, root: String, v: Int,
-      meta: Map[String, String], lineage: Boolean = false): Option[DataFrame] =
-    if (!nativeDvOk(meta)) None
-    else {
-      val rel = org.apache.spark.sql.execution.datasources.v2
-        .DataSourceV2Relation.create(new GraftDvLakeTable(root, root, Some(v)),
-          None, None)
-      Some(org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
-        if (lineage) rel.withMetadataColumns() else rel))
-    }
+  private def dvFrame(spark: SparkSession, root: String, v: Int,
+      lineage: Boolean, dirs: Option[Set[String]] = None): DataFrame = {
+    val rel = org.apache.spark.sql.execution.datasources.v2
+      .DataSourceV2Relation.create(
+        new GraftDvLakeTable(root, root, Some(v), dirs), None, None)
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+      if (lineage) rel.withMetadataColumns() else rel)
+  }
 
   /** File groups of snapshot `version` admitted by EVERY filter under
     * the manifest's partition values, min/max stats and bloom indexes —
@@ -3005,9 +2990,9 @@ object LakeTable {
 
   /** [[read]] restricted to a subset of the snapshot's file groups
     * (relative manifest entries) — column mapping, declared-schema
-    * projection and BOTH merge-on-read masks apply exactly as in the
-    * full read, so a stats-pruned scan of a deletion-vector snapshot
-    * serves the same masked frame over fewer bytes. */
+    * projection and the delete state apply exactly as in the full read,
+    * so a stats-pruned scan of a masked snapshot serves the same frame
+    * over fewer bytes. */
   private[sources] def readDirsSubset(spark: SparkSession, root: String,
       version: Option[Int], keptRel: Set[String]): DataFrame =
     readInternal(spark, root, version, keepLineage = false,
@@ -3053,52 +3038,48 @@ object LakeTable {
     * rows tagged `insert` / `update_preimage` / `update_postimage` /
     * `delete` in a `_change_type` column, keyed on `key`.
     *
-    * Scale design: the diff never reads file groups SHARED by the two
-    * manifests — a row can only have changed if its file group was added
-    * or removed between the versions, so the scan is bounded by the
-    * churn, not the table (a pure append diffs only the appended files;
-    * zero old rows are read). Copy-on-write rewrites land everything in
-    * "added"+"removed", where the row-level `exceptAll` cancels the
-    * unchanged rows exactly (duplicate-preserving set difference). */
+    * Scale design: a row can only have changed if its file group was
+    * added or removed between the versions, or if the window added
+    * delete state (equality deletes, deletion vectors) that hides it, so
+    * the diff reads groups SHARED by the two manifests only for the
+    * latter and the scan is bounded by the churn, not the table (a pure
+    * append diffs only the appended files; zero old rows are read).
+    * Copy-on-write rewrites land everything in "added"+"removed", where
+    * the signed multiset diff cancels the unchanged rows exactly. Every
+    * side reads through the dv reader ([[dvFrame]]). */
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int,
               key: String): DataFrame = {
-    val beforeDirs = dataDirPaths(spark, root, Some(fromV)).toSet
-    val afterDirs = dataDirPaths(spark, root, Some(toV)).toSet
+    val beforeDirs = readManifest(spark, root, fromV).toSet
+    val afterDirs = readManifest(spark, root, toV).toSet
+    val shared = beforeDirs intersect afterDirs
     val metaBefore = manifestMeta(spark, root, fromV)
     val metaAfter = manifestMeta(spark, root, toV)
-    // BOTH sides project through the TO version's rename mapping, so a
-    // change feed crossing a rename commit emits one consistent
-    // (current-logical) shape; each side still masks with ITS OWN
-    // delete state. The mask's key column predates any rename that
-    // could cross the window (renameColumn refuses the deletekey), so
-    // it resolves identically before and after the projection.
-    def readDirs(dirs: Set[String], schemaOf: Seq[String],
-                 maskMeta: Map[String, String]): DataFrame =
-      if (dirs.nonEmpty) {
-        // each side masks with ITS OWN version's state — equality keys
-        // AND deletion vectors (a second MOR update inside the window
-        // can mask rows of the first update's replacement group)
-        val hasDv = dvState(maskMeta).nonEmpty
-        val raw0 = scanDirs(spark, dirs.toSeq)
-        val raw = if (hasDv) withLineageCols(raw0) else raw0
-        val m = applyDvMask(spark, root, maskMeta,
-          applyDeleteMask(spark, root, maskMeta,
-            applyColMap(metaAfter, raw)))
-        if (hasDv) m.drop(FileCol, PosCol) else m
-      } else {
-        val ref = applyColMap(metaAfter,
-          spark.read.parquet(schemaOf: _*)).schema
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ref)
-      }
-    val allDirs = (beforeDirs ++ afterDirs).toSeq
-    // churned file groups, each side masked by ITS version's MOR delete
-    // state (rows already deleted at fromV never re-emit)
-    val added = readDirs(afterDirs -- beforeDirs, allDirs, metaAfter)
-    val removed = readDirs(beforeDirs -- afterDirs, allDirs, metaBefore)
-    // a MOR delete commit churns NO dirs — its change rows are the
-    // before-image rows of SURVIVING groups whose keys joined the delete
-    // list in the window (sidecar lists are append-only until a rewrite
-    // drops them with the old dirs, so the path-set diff is the delta)
+    // every side is one dv-reader scan of ITS version over its groups,
+    // so each masks with its own delete state (rows already gone at
+    // fromV never re-emit; a second MOR update inside the window masks
+    // rows of the first update's replacement group). The TO version's
+    // shape is the feed's: fromV's sides take toV's logical names
+    // through the physical names (a rename crossing the window), with
+    // typed nulls for columns fromV lacks (an ADD COLUMNS)
+    val added = dvFrame(spark, root, toV, lineage = false,
+      Some(afterDirs -- beforeDirs))
+    def asAfter(df: DataFrame, keep: String*): DataFrame = df.select(
+      added.schema.fields.toSeq.map { f =>
+        physicalName(metaAfter, f.name).flatMap(logicalName(metaBefore, _))
+          .flatMap(n => df.schema.fieldNames.find(_.equalsIgnoreCase(n)))
+          .fold(lit(null).cast(f.dataType))(col).as(f.name)
+      } ++ keep.map(col): _*)
+    val removed = asAfter(dvFrame(spark, root, fromV, lineage = false,
+      Some(beforeDirs -- afterDirs)))
+    // rows of the SHARED groups visible at fromV, with lineage: a MOR
+    // delete or update churns no shared dir, so its removed rows are
+    // these rows that toV's new delete state hides
+    lazy val before = asAfter(dvFrame(spark, root, fromV, lineage = true,
+      Some(shared)), FileCol, PosCol)
+    // a MOR delete commit's change rows are the rows whose keys joined
+    // the delete list in the window (sidecar lists are append-only until
+    // a rewrite drops them with the old dirs, so the path-set diff is
+    // the delta)
     val beforePaths = deleteState(metaBefore).map(_._2.toSet)
       .getOrElse(Set.empty[String])
     val newDeletePaths = deleteState(metaAfter).map(_._2.toSet)
@@ -3110,32 +3091,23 @@ object LakeTable {
         val keys = spark.read.parquet(
             newDeletePaths.toSeq.map(r => new Path(root, r).toString): _*)
           .select(col(k)).distinct()
-        Some(readDirs(beforeDirs intersect afterDirs, allDirs, metaBefore)
-          .join(keys, Seq(k), "left_semi"))
+        Some(before.join(keys, Seq(k), "left_semi").drop(FileCol, PosCol))
       }
     // a MOR UPDATE churns only its replacement dir — its PREIMAGE rows
-    // live at dv-masked positions of SHARED dirs: read those rows with
-    // lineage (masked by the BEFORE state, so rows already gone at
-    // fromV never re-emit), semi-join the window's NEW dv keys, and
-    // feed them to the REMOVED side — the key-window classification
-    // below then pairs them with the replacement rows as
+    // sit at the window's NEW dv positions of shared groups: semi-join
+    // them and feed them to the REMOVED side — the key-window
+    // classification below then pairs them with the replacement rows as
     // update_preimage/update_postimage (or emits a lone positional
     // delete as `delete`) with no special-casing.
     val newDvPaths = dvState(metaAfter).toSet -- dvState(metaBefore).toSet
-    val dvPre: Option[DataFrame] = {
-      val shared = beforeDirs intersect afterDirs
+    val dvPre: Option[DataFrame] =
       if (newDvPaths.isEmpty || shared.isEmpty) None
       else {
         val keys = dvMaskFrame(spark, root, newDvPaths.toSeq)
           .select(col(FileCol), col(PosCol)).distinct()
-        val raw = withLineageCols(scanDirs(spark, shared.toSeq))
-        val masked = applyDvMask(spark, root, metaBefore,
-          applyDeleteMask(spark, root, metaBefore,
-            applyColMap(metaAfter, raw)))
-        Some(masked.join(keys, Seq(FileCol, PosCol), "left_semi")
+        Some(before.join(keys, Seq(FileCol, PosCol), "left_semi")
           .drop(FileCol, PosCol))
       }
-    }
     // single-pass signed multiset diff: one aggregation over the churned
     // rows replaces the exceptAll-per-tag formulation, whose diff subtree
     // Catalyst would re-evaluate once per change-type branch (6× the
@@ -3532,18 +3504,20 @@ object LakeTable {
     * (copy-on-write — [[deleteWhere]]), record the DELETED KEYS in a
     * tiny sidecar parquet under `_deletes/` and commit metadata only —
     * the data files are untouched, the delete costs O(matches), and
-    * readers anti-join the key list at scan time ([[read]] applies the
-    * mask for every snapshot automatically, so time travel sees each
-    * version's own delete state). Semantics: a TABLE-WIDE equality
+    * the dv reader drops rows whose key is in the list at scan time
+    * ([[GraftDvBatchScan]]: [[read]], SQL and time travel alike, each
+    * version with its own delete state). Semantics: a TABLE-WIDE equality
     * delete on `keyCol` — the key stays deleted (even across later
     * appends) until a rewrite materializes the masks
     * ([[rewriteDeletes]]/[[compact]]/any COW op, which all read through
     * the masked [[read]] and drop the sidecar metadata with the old
     * dirs). All MOR deletes on one table must share one `keyCol`.
     * At 100 TB this is the GDPR-delete path: removing one user costs a
-    * key-list append, not a table rewrite; the anti-join build side is
-    * the (small) accumulated key list. Returns the committed version,
-    * or the current one unchanged when nothing matches. */
+    * key-list append, not a table rewrite; each reading JVM decodes the
+    * (small) accumulated key list once. Keys match as a join's do: a
+    * null never matches, `-0.0` equals `0.0` and NaN equals NaN; the key
+    * column must not be a struct, array or map. Returns the committed
+    * version, or the current one unchanged when nothing matches. */
   def deleteWhereMor(spark: SparkSession, root: String,
                      predicate: org.apache.spark.sql.Column,
                      keyCol: String): Int = {
@@ -3557,6 +3531,8 @@ object LakeTable {
     val doomed = read(spark, root)
       .filter(coalesce(predicate, lit(false)))
       .select(col(keyCol)).distinct()
+    require(!Set("struct", "array", "map")(doomed.schema.head.dataType.typeName),
+      s"merge-on-read delete key '$keyCol' must not be a struct, array or map")
     if (doomed.isEmpty) return v
     val rel = s"_deletes/del-${java.util.UUID.randomUUID()}"
     doomed.coalesce(1).write.parquet(new Path(root, rel).toString)
@@ -3842,68 +3818,38 @@ object LakeTable {
     * parquet so writes, reads and folds stay distributed. */
   private val DvBinaryMaxRows = 100000L
 
-  /** [[DvBinarySidecar.read]] of `rel` under `root` through the
-    * decoded-sidecar cache ([[GraftDvSidecars.decoded]]); a missing
-    * sidecar fails with [[sidecarMissing]]. */
-  private[sources] def readBinSidecar(f: FileSystem, root: String,
-      rel: String): Seq[(String, String, Array[Byte])] = {
-    val p = new Path(root, rel)
-    val st = try f.getFileStatus(p)
-      catch { case e: java.io.FileNotFoundException =>
-        throw sidecarMissing(root, rel, e)
-      }
-    GraftDvSidecars.decoded(GraftDvBatchScan.Listed(st))(
-      DvBinarySidecar.read(f, p))
-  }
-
-  /** The (file, pos, op) rows of a snapshot's dv sidecars — parquet
-    * dirs read distributed, compact `.bin` sidecars decoded driver-side
-    * (small by the write threshold) — as ONE DataFrame. */
+  /** The (file, pos, op) rows of a snapshot's dv sidecars as ONE
+    * DataFrame, each sidecar file decoded through the per-JVM sidecar
+    * cache ([[GraftDvSidecars]]): compact `.bin` sidecars (small by the
+    * write threshold) on the driver into a LocalRelation — no Spark job,
+    * and the planner sees its EXACT size — and parquet sidecars one task
+    * per part, whatever the session's file-split settings. */
   private[sources] def dvMaskFrame(spark: SparkSession, root: String,
       rels: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType,
       StructField, StructType}
-    val (bins, parqs) = rels.partition(_.endsWith(".bin"))
+    import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(
       StructField(FileCol, StringType, nullable = false),
       StructField(PosCol, LongType, nullable = false),
       StructField("__op", StringType, nullable = false)))
-    val binDf =
-      if (bins.isEmpty) None
-      else {
-        val f = fs(spark, root)
-        val rows = bins.flatMap { r =>
-          readBinSidecar(f, root, r).flatMap {
-            case (fp, op, mask) =>
-              val c = new DvMaskCodec.Cursor(mask)
-              val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-              while (c.hasNext) buf += Row(fp, c.next(), op)
-              buf
-          }
-        }
-        // small masks become a LocalRelation: zero Spark jobs to build,
-        // and the planner sees its EXACT size so the anti-join
-        // broadcasts without an estimate; only an accumulation past
-        // the write threshold pays a parallelize
-        Some(
-          if (rows.size <= 500000) {
-            import scala.jdk.CollectionConverters._
-            spark.createDataFrame(rows.asJava, schema)
-          } else spark.createDataFrame(
-            spark.sparkContext.parallelize(rows,
-              math.max(1, (rows.size / 500000) + 1)), schema))
-      }
-    val pqDf =
-      if (parqs.isEmpty) None
-      else Some(spark.read
-        .parquet(parqs.map(r => new Path(root, r).toString): _*)
-        .select(col(FileCol), col(PosCol), col("__op")))
-    (binDf, pqDf) match {
-      case (Some(b), Some(p)) => b.unionByName(p)
-      case (Some(b), None)    => b
-      case (None, Some(p))    => p
-      case (None, None) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val sidecars = GraftDvBatchScan.sidecars(spark, root, rels, None)
+    val (bins, parts) = sidecars.dv.toSeq.partition(_.key.endsWith(".bin"))
+    def rowsOf(es: GraftDvSidecars.Entries): Iterator[Row] =
+      es.iterator.flatMap { case (fp, op, mask) =>
+        new DvMaskCodec.Cursor(mask).map(Row(fp, _, op)) }
+    val load = GraftDvBatchScan.load(spark, sidecars)
+    val local = spark.createDataFrame(
+      bins.flatMap(f => rowsOf(load.entries(f))).asJava, schema)
+    if (parts.isEmpty) local
+    else {
+      val conf = GraftDvBatchScan.confBroadcast(spark)._1
+      local.unionByName(spark.createDataFrame(spark.sparkContext
+        .parallelize(parts, parts.size).setName("dv sidecar parts")
+        .mapPartitions { it =>
+          val task = new sidecars.Load(conf.value.value)
+          it.flatMap(f => rowsOf(task.entries(f)))
+        }, schema))
     }
   }
 
@@ -3966,16 +3912,13 @@ object LakeTable {
         s"sidecars to fold, have ${rels.size}")
     // size the fold's write without a count job: binary sidecars know
     // their exact row counts (cheap driver decode), parquet inputs
-    // bound at DvSidecarRowsPerFile per file (dedup only shrinks) —
+    // bound at DvSidecarRowsPerFile per part (dedup only shrinks) —
     // an all-binary accumulation folds back to one binary file
-    val f = fs(spark, root)
-    val (bins, parqs) = rels.partition(_.endsWith(".bin"))
-    val nParquetFiles = parqs.map(r => f.listStatus(new Path(root, r))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))).sum
-    val binRows = bins.map(r =>
-      readBinSidecar(f, root, r)
-        .map { case (_, _, m) => DvMaskCodec.count(m).toLong }.sum).sum
-    val nRows = nParquetFiles.toLong * DvSidecarRowsPerFile + binRows
+    val sidecars = GraftDvBatchScan.sidecars(spark, root, rels, None)
+    val (bins, parts) = sidecars.dv.partition(_.key.endsWith(".bin"))
+    val load = GraftDvBatchScan.load(spark, sidecars)
+    val nRows = parts.length * DvSidecarRowsPerFile + bins.map(
+      load.entries(_).map(e => DvMaskCodec.count(e._3).toLong).sum).sum
     // (file, pos) is unique across sidecars — a masked row never
     // reappears in a later masked read, so no later commit can re-mask
     // it — making dedup a safety net for hand-edited state. A `.bin`
@@ -4035,39 +3978,6 @@ object LakeTable {
   private def withLineageCols(df: DataFrame): DataFrame = df
     .withColumn(FileCol, col("_metadata.file_path"))
     .withColumn(PosCol, col("_metadata.row_index"))
-
-  /** Anti-join a lineage-carrying frame against the snapshot's
-    * deletion vectors — a no-op for tables without them. The dv list
-    * is tiny (O(masked rows)); the planner broadcasts it. Only
-    * equality-delete snapshots (outside [[nativeDvOk]]) and
-    * [[changes]]' churn reads take it; every other masked frame is the
-    * dv reader's. */
-  private def applyDvMask(spark: SparkSession, root: String,
-                          meta: Map[String, String],
-                          df: DataFrame): DataFrame =
-    dvState(meta) match {
-      case Seq() => df
-      case rels =>
-        val keys = dvMaskFrame(spark, root, rels)
-          .select(col(FileCol), col(PosCol)).distinct()
-        df.join(keys, Seq(FileCol, PosCol), "left_anti")
-    }
-
-  /** Anti-join `df` against the snapshot's accumulated delete keys (a
-    * no-op for tables without MOR deletes — the common path pays
-    * nothing). The key list is a handful of tiny parquet sidecars, so
-    * the planner's size estimate broadcasts the build side. */
-  private def applyDeleteMask(spark: SparkSession, root: String,
-                              meta: Map[String, String],
-                              df: DataFrame): DataFrame =
-    deleteState(meta) match {
-      case Some((k, rels)) =>
-        val keys = spark.read
-          .parquet(rels.map(r => new Path(root, r).toString): _*)
-          .select(col(k)).distinct()
-        df.join(keys, Seq(k), "left_anti")
-      case None => df
-    }
 
   /** OPTIMIZE-style compaction: rewrite all current file groups as one
     * group of `targetPartitions` files, optionally sorted within files

@@ -423,6 +423,68 @@ class DvReadSpec extends SparkSpec {
     }
   }
 
+  /** `body`'s result and the most tasks a stage of it runs to read
+    * parquet dv sidecar parts (the partitions of its RDD named "dv
+    * sidecar parts"); 0 when no stage reads them. */
+  private def sidecarTasksDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val prop = "graft.dvreadspec.phase"
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.name == "dv sidecar parts")
+          .foreach(r => tasks.accumulateAndGet(r.numPartitions, (a, b) => math.max(a, b)))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(prop) == "marker"))
+          marker.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // the marker job's start follows every stage body submitted
+      sc.setLocalProperty(prop, "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(prop, null)
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, tasks.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("under 1-byte file splits, changes() and compactDeletes read a " +
+    "108,000-row parquet dv sidecar beside a .bin one in no more tasks " +
+    "than the sidecar has parts") {
+    withWarehouse("lakeDvp") { wh =>
+      val root = s"$wh/t"
+      LakeTable.create(spark, root, keyed(0L, 60000L, 2))
+      LakeTable.append(spark, root, keyed(60000L, 120000L, 2))
+      LakeTable.append(spark, root, keyed(120000L, 180000L, 2))
+      LakeTable.updateWhereMor(spark, root, col("k") === 7L,
+        Map("s" -> lit("U")))
+      val v = LakeTable.deleteWhereDv(spark, root, col("k") % 10L < 6L)
+      val Seq(bin, pq) = dvRels(root, v)
+      assert(bin.endsWith(".bin") && !pq.endsWith(".bin"), Seq(bin, pq))
+      val parts = new java.io.File(s"$root/$pq").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      def feed() = LakeTable.changes(spark, root, 3, v, "k")
+        .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val want = feed()
+      assert(want.size == 108000 + 2, want.take(3))
+      withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+        val (got, feedTasks) = sidecarTasksDuring(feed())
+        assert(got == want)
+        assert(feedTasks >= 1 && feedTasks <= parts, s"$feedTasks tasks, $parts parts")
+        val (_, foldTasks) = sidecarTasksDuring(LakeTable.compactDeletes(spark, root))
+        assert(foldTasks >= 1 && foldTasks <= parts, s"$foldTasks tasks, $parts parts")
+      }
+      val kept = (0L until 180000L).filterNot(_ % 10L < 6L)
+        .map(k => k -> (if (k == 7L) "U" else s"a$k"))
+      assert(sorted(LakeTable.read(spark, root)) == kept)
+    }
+  }
+
   test("a missing .bin or parquet dv sidecar fails API, SQL and change " +
     "feed reads with an error naming it") {
     withWarehouse("lakeDvg") { wh =>

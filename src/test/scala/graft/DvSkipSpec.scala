@@ -127,6 +127,10 @@ class DvSkipSpec extends SparkSpec {
       LakeTable.append(spark, root, rowsOf(3200, 3300)
         .withColumn("extra", col("i").cast("long") % 10L).coalesce(1))
       LakeTable.deleteWhereDv(spark, root, col("i") === 3250)
+      // equality deletes keyed on the double column d, stacked on the
+      // dvs: the key of i = 0 is NaN, so every NaN row goes too
+      LakeTable.deleteWhereMor(spark, root,
+        col("i") % 11 === 0 && col("i") < 1100, "d")
       LakeTable.renameColumn(spark, root, "lbl", "label")
       // the update staged its row through a lineage read: the row's
       // null columns stay null

@@ -1190,6 +1190,76 @@ class LakeTableSpec extends SparkSpec {
       val v1Dirs = LakeTable.dataDirPaths(spark, root, Some(1)).toSet
       assert(scanned.forall(p => !v1Dirs.exists(p.startsWith)),
         s"CDC scan touched an unchanged file group: $scanned")
+      // the feed's sides are dv-reader scans: together they admit the
+      // appended group alone
+      val dvScans = graft.sources.GraftDvScanMetrics.scans(
+        cdc.queryExecution.executedPlan)
+      assert(dvScans.map(_.metrics(
+        graft.sources.GraftDvScanMetrics.GroupsAdmitted).value).sum == 1,
+        cdc.queryExecution.executedPlan)
+    }
+  }
+
+  test("changes across an equality delete, dv updates and deletes, a " +
+    "RENAME COLUMN and an ADD COLUMNS equals a model snapshot diff") {
+    withTable { root =>
+      LakeTable.create(spark, root, spark.range(0, 30, 1, 2).select(
+        col("id"), format_string("t%d", col("id")).as("tag"),
+        (col("id") * 10L).as("v")))
+      LakeTable.deleteWhereMor(spark, root, col("id").isin(3L, 4L), "id") // 2
+      LakeTable.updateWhereMor(spark, root, col("id") === 7L,
+        Map("v" -> lit(700L)))                                           // 3
+      LakeTable.evolveSchema(spark, root,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("extra",
+            org.apache.spark.sql.types.LongType))))                       // 4
+      LakeTable.append(spark, root, spark.range(30, 32).select(col("id"),
+        format_string("t%d", col("id")).as("tag"),
+        (col("id") * 10L).as("v"), lit(1L).as("extra")))                 // 5
+      LakeTable.updateWhereMor(spark, root, col("id") === 12L,
+        Map("extra" -> lit(5L)))                                          // 6
+      LakeTable.deleteWhereDv(spark, root, col("id") === 9L)              // 7
+      LakeTable.renameColumn(spark, root, "tag", "label")                 // 8
+      LakeTable.deleteWhereMor(spark, root, col("id") === 15L, "id")      // 9
+      LakeTable.append(spark, root, spark.range(32, 33).select(col("id"),
+        format_string("t%d", col("id")).as("label"),
+        (col("id") * 10L).as("v"), lit(2L).as("extra")))                 // 10
+      assert(LakeTable.versions(spark, root).last == 10)
+      // the model: both snapshots read whole, the older one under the
+      // newer one's names (tag was renamed label; extra is null before
+      // it existed), diffed as multisets and classified by id
+      def rowsAt(v: Int, names: Seq[String]): Seq[Seq[Any]] = {
+        val df = LakeTable.read(spark, root, Some(v))
+        val cols = df.columns.toSeq
+        df.collect().toSeq.map { r =>
+          names.map { n =>
+            val from = if (n == "label" && !cols.contains(n)) "tag" else n
+            if (cols.contains(from)) r.get(cols.indexOf(from)) else null
+          }
+        }
+      }
+      def model(a: Int, b: Int): Seq[String] = {
+        val names = LakeTable.read(spark, root, Some(b)).columns.toSeq
+        val net = (rowsAt(b, names).map(_ -> 1) ++ rowsAt(a, names).map(_ -> -1))
+          .groupBy(_._1).map { case (r, xs) => r -> xs.map(_._2).sum }
+          .filter(_._2 != 0)
+        val byId = net.groupBy(_._1.head)
+        net.toSeq.flatMap { case (r, n) =>
+          val both = byId(r.head).exists(_._2 > 0) && byId(r.head).exists(_._2 < 0)
+          val tag =
+            if (n > 0) (if (both) "update_postimage" else "insert")
+            else if (both) "update_preimage" else "delete"
+          Seq.fill(math.abs(n))((r :+ tag).mkString("|"))
+        }.sorted
+      }
+      Seq(1 -> 2, 2 -> 3, 3 -> 5, 4 -> 6, 1 -> 7, 6 -> 8, 7 -> 9, 1 -> 10,
+          5 -> 10, 8 -> 10).foreach { case (a, b) =>
+        val feed = LakeTable.changes(spark, root, a, b, "id")
+        assert(feed.columns.toSeq ==
+          LakeTable.read(spark, root, Some(b)).columns.toSeq :+ "_change_type")
+        assert(feed.collect().map(_.toSeq.mkString("|")).toSeq.sorted ==
+          model(a, b), s"changes($a, $b)")
+      }
     }
   }
 
@@ -1312,6 +1382,118 @@ class LakeTableSpec extends SparkSpec {
       val cdc = LakeTable.changes(spark, root, 1, 2, "n_nationkey")
       assert(cdc.filter(col("_change_type") === "delete").count() == 5)
       assert(cdc.count() == 5)
+
+      // keys of type long, string, binary, date and double (-0.0, NaN
+      // and null keys among them): every read equals an independent
+      // left-anti join of the raw files against the sidecar keys, and
+      // SQL reads through one dv scan with no join, at the latest
+      // version (equality deletes and a dv) and VERSION AS OF (equality
+      // deletes only)
+      val base = spark.range(0, 40, 1, 3).select(col("id"),
+        when(col("id") % 9 === 0, lit(null)).otherwise(col("id") % 19).as("k"),
+        when(col("id") % 9 === 1, lit(null))
+          .otherwise(format_string("s%02d", col("id") % 17)).as("s"),
+        when(col("id") % 9 === 2, lit(null))
+          .otherwise(format_string("b%d", col("id") % 13).cast("binary")).as("b"),
+        when(col("id") % 9 === 3, lit(null)).otherwise(date_add(
+          lit(java.sql.Date.valueOf("2024-01-01")), (col("id") % 11).cast("int")))
+          .as("dt"),
+        when(col("id") % 10 === 0, lit(-0.0)).when(col("id") % 10 === 1, lit(0.0))
+          .when(col("id") % 10 === 2, lit(Double.NaN))
+          .when(col("id") % 10 === 3, lit(null).cast("double"))
+          .otherwise(col("id") / 7.0).as("d"))
+      def lines(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toSeq.map {
+          case a: Array[Byte] => a.mkString("[", ",", "]")
+          case v => String.valueOf(v)
+        }.mkString("|")).toSeq.sorted
+      def oneScan(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+        val out = lines(df)
+        val plan = df.queryExecution.executedPlan
+        assert(graft.sources.GraftDvScanMetrics.scans(plan).size == 1, plan)
+        assert(!plan.toString.contains("Join"), plan)
+        out
+      }
+      spark.conf.set("spark.sql.catalog.lakeEq", "graft.sources.GraftLakeCatalog")
+      spark.conf.set("spark.sql.catalog.lakeEq.warehouse", root)
+      try Seq("k" -> 4, "s" -> 5, "b" -> 6, "dt" -> 7, "d" -> 10).foreach {
+        case (key, m) =>
+          val t = s"$root/eq_$key"
+          LakeTable.create(spark, t, base)
+          val vEq = LakeTable.deleteWhereMor(spark, t,
+            col("id") % m === 0 || col("id") % m === 2 || col("id") === 3, key)
+          // re-appended keys stay deleted; a second part joins the list
+          LakeTable.append(spark, t, base.filter(col("id") < 10))
+          LakeTable.deleteWhereMor(spark, t, col("id") === 39, key)
+          val v = LakeTable.deleteWhereDv(spark, t, col("id") % 8 === 5)
+          def model(at: Int) = {
+            val rels = LakeTable.manifestMetaAt(spark, t, at)("deletes")
+              .split(",").map(r => s"$t/$r")
+            spark.read.parquet(LakeTable.dataDirPaths(spark, t, Some(at)): _*)
+              .join(spark.read.parquet(rels: _*).select(col(key)).distinct(),
+                Seq(key), "left_anti")
+              .select(base.columns.map(col): _*)
+          }
+          val want = model(v).filter(col("id") % 8 =!= 5)
+          assert(oneScan(LakeTable.read(spark, t)) == lines(want), key)
+          assert(oneScan(spark.sql(s"SELECT * FROM lakeEq.eq_$key")) ==
+            lines(want), key)
+          assert(oneScan(spark.sql(s"SELECT * FROM lakeEq.eq_$key " +
+            s"VERSION AS OF $vEq")) == lines(model(vEq)), key)
+          assert(oneScan(LakeTable.read(spark, t, Some(vEq))) ==
+            lines(model(vEq)), key)
+          val lineage = LakeTable.readWithLineage(spark, t)
+          assert(oneScan(lineage.drop("__file", "__pos")) == lines(want), key)
+          // each lineage row sits at its own (file, position)
+          val raw = spark.read.parquet(LakeTable.dataDirPaths(spark, t): _*)
+            .select(col("_metadata.file_path").as("__file"),
+              col("_metadata.row_index").as("__pos"), col("id"))
+          assert(lineage.join(raw, Seq("__file", "__pos", "id"), "left_anti")
+            .count() == 0, key)
+          // point reads of a deleted key, a kept key and a null key
+          val deletedKey = base.filter(col("id") % m === 2 && col(key).isNotNull)
+            .select(col(key)).head().get(0)
+          val keptKey = want.filter(col(key).isNotNull).select(col(key)).head().get(0)
+          Seq(deletedKey, keptKey).foreach { value =>
+            assert(oneScan(LakeTable.readWhereEq(spark, t, key, value)) ==
+              lines(want.filter(col(key) === lit(value))), s"$key = $value")
+          }
+          assert(lines(want.filter(col(key).isNull)).nonEmpty, key)
+          assert(lines(LakeTable.read(spark, t).filter(col(key).isNull)) ==
+            lines(want.filter(col(key).isNull)), key)
+          if (key == "k") {
+            // row-level SQL refuses in both update modes, naming the
+            // deletes and the way out; INSERT INTO still appends
+            def refusal(sql: String): String =
+              Iterator.iterate(intercept[Exception](spark.sql(sql).collect()): Throwable)(
+                _.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+                .mkString("\n")
+            val merge = "MERGE INTO lakeEq.eq_k t USING (SELECT CAST(1 AS BIGINT) " +
+              "AS id) s ON t.id = s.id WHEN MATCHED AND t.id > 5 THEN DELETE " +
+              "WHEN MATCHED THEN UPDATE SET s = 'M' " +
+              "WHEN NOT MATCHED BY SOURCE AND t.id = 38 THEN DELETE"
+            Seq(None, Some("mor")).foreach { mode =>
+              mode.foreach(spark.conf.set("spark.graft.update.mode", _))
+              try {
+                val stmts = Seq(merge, "INSERT OVERWRITE lakeEq.eq_k " +
+                  "SELECT * FROM lakeEq.eq_k") ++ (if (mode.isEmpty) Seq(
+                  "DELETE FROM lakeEq.eq_k WHERE id = 1",
+                  "UPDATE lakeEq.eq_k SET s = 'U' WHERE id = 1") else Nil)
+                stmts.foreach { sql =>
+                  val m = refusal(sql)
+                  assert(m.contains("merge-on-read deletes") &&
+                    m.contains("rewriteDeletes"), s"$mode $sql: $m")
+                }
+              } finally spark.conf.unset("spark.graft.update.mode")
+            }
+            spark.sql("INSERT INTO lakeEq.eq_k SELECT * FROM lakeEq.eq_k WHERE id = 1")
+            assert(lines(LakeTable.read(spark, t)) ==
+              lines(want.unionByName(want.filter(col("id") === 1))))
+          }
+      } finally {
+        spark.conf.unset("spark.sql.catalog.lakeEq")
+        spark.conf.unset("spark.sql.catalog.lakeEq.warehouse")
+      }
     }
   }
 
