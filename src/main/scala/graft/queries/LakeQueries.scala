@@ -363,11 +363,11 @@ object LakeQueries {
 
   /** q169: manifest-stats data skipping through PLAIN SQL — the DSv2
     * read path's planning-time pruning
-    * ([[graft.sources.GraftLakeStreamScanBuilder]]): a key-clustered
+    * ([[graft.sources.GraftDvBatchScan]]): a key-clustered
     * stats table queried with `SELECT … WHERE o_custkey BETWEEN …`
     * through the catalog must (a) answer exactly (SQL-restatable) and
-    * (b) plan a scan whose file index holds FEWER paths than the table
-    * has groups — the pinned boolean. Unlike q133 this never calls the
+    * (b) run a scan that admits FEWER groups than the table has — the
+    * pinned boolean. Unlike q133 this never calls the
     * readWhere API: the pruning rides the ordinary SQL WHERE. */
   def sqlStatsPruning(s: SparkSession, dir: String): DataFrame = {
     val orders = graft.Tables.load(s, dir, "orders")
@@ -375,7 +375,6 @@ object LakeQueries {
       val wh = whPath.toString
       LakeTable.createClustered(s, s"$wh/orders_t", orders, "o_custkey",
         numGroups = 8, statsCols = Seq("o_custkey"))
-      val nGroups = LakeTable.dataDirPaths(s, s"$wh/orders_t").size
       val cat = "lake_" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftLakeCatalog")
@@ -387,14 +386,12 @@ object LakeQueries {
              |            AS DOUBLE) AS revenue
              |FROM $cat.orders_t
              |WHERE o_custkey BETWEEN 0 AND 99""".stripMargin)
-        val plannedPaths =
-          "InMemoryFileIndex\\((\\d+) paths?\\)".r
-            .findFirstMatchIn(q.queryExecution.executedPlan.toString)
-            .map(_.group(1).toInt)
-        val row = q.head()
+        val row = q.collect().head
+        // the lake scan's metrics, posted once the query has run
+        val pruned = GraftDvScanMetrics.of(q).exists(m =>
+          m(GraftDvScanMetrics.GroupsAdmitted) < m(GraftDvScanMetrics.GroupsTotal))
         import s.implicits._
-        Seq((row.getLong(0), row.getDouble(1),
-          plannedPaths.exists(_ < nGroups)))
+        Seq((row.getLong(0), row.getDouble(1), pruned))
           .toDF("n", "revenue", "pruned")
       } finally {
         s.conf.unset(s"spark.sql.catalog.$cat")
@@ -958,8 +955,8 @@ object LakeQueries {
 
   /** q189: aggregate pushdown through the DSv2 scan — COUNT/MIN/MAX
     * answered from parquet FOOTER STATISTICS instead of scanning rows
-    * (`spark.sql.parquet.aggregatePushdown`; the graft-lake scan
-    * builder forwards `pushAggregation` to the parquet delegate). At
+    * (`spark.sql.parquet.aggregatePushdown`; the lake scan's builder,
+    * [[graft.sources.GraftDvScanBuilder]], answers it from footers). At
     * 100 TB a table-level COUNT(*) touches only file metadata — the
     * difference between milliseconds and a full scan. The
     * `agg_pushed` gate reads the executed plan for the
@@ -2857,11 +2854,16 @@ object LakeQueries {
           case e: org.apache.spark.sql.execution.exchange
             .ShuffleExchangeLike => e }.size.toLong
       }
+      // broadcast off: the lake scan reports its byte size, so the
+      // small year_totals side would otherwise broadcast with the flag
+      // on or off, and the plan facts would not pin the SPJ machinery
       def withFlags[A](on: Boolean)(body: => A): A =
         graft.util.LocalFrame.withConf(s,
           "spark.sql.sources.v2.bucketing.enabled", on.toString) {
           graft.util.LocalFrame.withConf(s,
-            "spark.sql.adaptive.enabled", "false") { body }
+            "spark.sql.adaptive.enabled", "false") {
+            graft.util.LocalFrame.withConf(s,
+              "spark.sql.autoBroadcastJoinThreshold", "-1") { body } }
         }
       val t1 = s.read.format("graft-lake").load(t1r)
       val t2 = s.read.format("graft-lake").load(t2r)
@@ -3016,8 +3018,9 @@ object LakeQueries {
     * stat honestly — over-scan, never a wrong prune); an equality probe
     * keeps exactly ONE group ([[LakeTable.selectGroupsEq]], zero file
     * opens for the rest), and range (`lang <= 'en'`) and prefix
-    * (`lang LIKE 'e%'`) predicates pushed through the DSv2 scan plan
-    * strictly fewer parquet paths than the full table. Row results
+    * (`lang LIKE 'e%'`) predicates pushed through the DSv2 scan admit
+    * strictly fewer groups than the table holds (the lake scan's
+    * metrics). Row results
     * value-check against plain predicates. At 100 TB this is the
     * high-cardinality string dimension (status, country, tenant) that
     * numeric stats can't serve and a bloom index only serves for
@@ -3037,28 +3040,27 @@ object LakeQueries {
         .size.toLong
       val es = LakeTable.readWhereEq(s, root, "lang", "es")
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c")).head()
-      def plannedPaths(df: org.apache.spark.sql.DataFrame): Option[Long] =
-        "InMemoryFileIndex\\((\\d+) paths?\\)".r
-          .findFirstMatchIn(df.queryExecution.executedPlan.toString)
-          .map(_.group(1).toLong)
+      // (count, 1 iff the lake scan admitted fewer groups than the
+      // snapshot holds), off the scan's metrics once the query has run
+      def prunedCount(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+        val n = df.collect().head.getLong(0)
+        (n, GraftDvScanMetrics.of(df).fold(0L)(m =>
+          if (m(GraftDvScanMetrics.GroupsAdmitted) <
+              m(GraftDvScanMetrics.GroupsTotal)) 1L else 0L))
+      }
       val t = s.read.format("graft-lake").load(root)
-      val full = plannedPaths(t.groupBy().agg(count(lit(1)).as("n")))
-      val le = t.filter(col("lang") <= "en")
-        .groupBy().agg(count(lit(1)).as("n"))
-      val pre = t.filter(col("lang").startsWith("e"))
-        .groupBy().agg(count(lit(1)).as("n"))
-      val prunedLe = (plannedPaths(le), full) match {
-        case (Some(a), Some(b)) if a < b => 1L; case _ => 0L }
-      val prunedPre = (plannedPaths(pre), full) match {
-        case (Some(a), Some(b)) if a < b => 1L; case _ => 0L }
+      val (nLe, prunedLe) = prunedCount(t.filter(col("lang") <= "en")
+        .groupBy().agg(count(lit(1)).as("n")))
+      val (nPre, prunedPre) = prunedCount(t.filter(col("lang").startsWith("e"))
+        .groupBy().agg(count(lit(1)).as("n")))
       import s.implicits._
       graft.util.LocalFrame.materialize(Seq(
         ("chars_es", es.getLong(1)),
         ("kept_groups_eq", keptEq),
         ("n_es", es.getLong(0)),
         ("n_groups", nGroups),
-        ("n_le_en", le.head().getLong(0)),
-        ("n_prefix_e", pre.head().getLong(0)),
+        ("n_le_en", nLe),
+        ("n_prefix_e", nPre),
         ("pruned_le_en", prunedLe),
         ("pruned_prefix_e", prunedPre)
       ).toDF("fact", "n").orderBy(col("fact")))
@@ -3865,14 +3867,15 @@ object LakeQueries {
     * keeps a MOR table indexed: after a SQL point update commits a dv
     * sidecar, catalog reads route through
     * [[graft.sources.GraftDvBatchScan]],
-    * which runs the SAME manifest stats admission as the normal
-    * delegate before opening any parquet footer. On a 4-group clustered
+    * which runs the manifest stats admission before opening any
+    * parquet footer. On a 4-group clustered
     * table + 1 stats-less replacement group, a point probe scans 2 of 5
     * groups (hit group + replacement), a miss scans 1 (replacement
     * only), the unfiltered aggregate scans all 5 — pinned exactly. The
     * masked values themselves restate from `documents` (min-doc_id row
     * updated, max-doc_id untouched, total shifted once); time travel
-    * serves the pre-update value through the PLAIN indexed delegate.
+    * serves the pre-update value through the same scan at version 1
+    * (`tt_plain_delegate`: its scan sees v1's 4 groups).
     * At 100 TB this is the difference between one point update
     * degrading every subsequent SQL read to a full-table scan and the
     * read staying O(probed groups) until the next rewrite. */
@@ -3917,12 +3920,13 @@ object LakeQueries {
           s"SELECT sum(n_chars) FROM $cat.t")
         val nTotal = s.sql(s"SELECT count(*) FROM $cat.t")
           .head().getLong(0)
-        // the pre-update snapshot takes the PLAIN indexed delegate: no
-        // dv scan in its plan
+        // the pre-update snapshot reads through the same scan, at v1:
+        // its 4 groups against the latest 5
         val tt = s.sql(s"SELECT n_chars FROM $cat.t VERSION AS OF 1 " +
           s"WHERE doc_id = $minId")
         val ttMin = tt.collect().head.getLong(0)
-        val ttPlain = GraftDvScanMetrics.of(tt).isEmpty
+        val ttPlain = GraftDvScanMetrics.of(tt)
+          .exists(_(GraftDvScanMetrics.GroupsTotal) == 4L)
         // NATIVE statistics (the r14 weak item's companion fix): the dv
         // snapshot reports its kept bytes through the native DSv2
         // Batch, so with AQE DISABLED the STATIC planner broadcasts the

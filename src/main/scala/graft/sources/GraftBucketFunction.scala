@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
 /** The V2 `bucket` function [[GraftLakeCatalog]] exposes as a
   * FunctionCatalog entry, so Spark's storage-partitioned-join planner
   * can RESOLVE the `bucket(n, col)` transform two bucketed lake tables
-  * report ([[GraftLakeStreamableScan.outputPartitioning]]) — the same
+  * report ([[GraftDvBatchScan.outputPartitioning]]) — the same
   * mechanism Iceberg uses for its system functions. The function IS
   * the write-side routing function ([[LakeTable.createBucketed]]):
   * `pmod(murmur3_seed42(value), n)`, hashing the column's NATIVE type

@@ -8,24 +8,33 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Expression => V2Expression}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileRead
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import java.util.OptionalLong
 
-/** The deletion-vector (dv) reader: the one scan that applies a
-  * snapshot's delete state — positional masks and equality-delete keys
-  * — for SQL reads ([[GraftDvLakeTable]]), the Scala API
+/** The lake scan: the one scan under every batch read of a snapshot,
+  * whatever it holds (no delete state, deletion-vector masks,
+  * equality-delete keys, a column mapping, a declared schema, or no
+  * groups at all) — SQL and path-format reads at any version
+  * ([[GraftLakeTable]], [[GraftDvLakeTable]]), the Scala API
   * ([[LakeTable.read]], [[LakeTable.readWithLineage]], the range/point
-  * reads and [[LakeTable.changes]] build the same relation) and the SQL
+  * reads and [[LakeTable.changes]] build the same relation), the SQL
+  * copy-on-write group replace ([[GraftGroupScan]]) and the SQL
   * merge-on-read operations' row scan ([[GraftDeltaScanBuilder]]):
   *
   *  - the SAME manifest admission chain prunes file groups before any
@@ -79,8 +88,21 @@ import java.util.OptionalLong
   *    conf and Spark context, not per scan
   *    ([[GraftDvBatchScan.confBroadcast]]);
   *  - [[SupportsReportStatistics]] reports the kept files' byte size,
-  *    so the STATIC planner broadcasts a small dv dimension — no AQE
+  *    so the STATIC planner broadcasts a small dimension — no AQE
   *    needed;
+  *  - runtime filtering ([[SupportsRuntimeV2Filtering]], the DSv2 form
+  *    of dynamic partition pruning): a join's runtime key set re-runs
+  *    the admission chain over the admitted groups, and the kept files
+  *    and partitions follow;
+  *  - under Spark's V2 bucketing a partitioned snapshot reports its
+  *    storage-partitioned layout ([[GraftKeyGrouping]]), one keyed
+  *    partition per whole file, so co-partitioned tables join without a
+  *    shuffle;
+  *  - a pushed COUNT/MIN/MAX ([[GraftDvScanBuilder.pushAggregation]])
+  *    reads one row per file from its footer's statistics
+  *    ([[GraftDvAggReaderFactory]]);
+  *  - a latest-snapshot table's scan also starts its micro-batch
+  *    stream ([[GraftLakeMicroBatchStream]]);
   *  - metrics on the executed scan ([[GraftDvScanMetrics]]): groups
   *    admitted by the manifest and in the snapshot, files after manifest
   *    admission, files kept by footer stats, driver footer-cache misses
@@ -96,9 +118,12 @@ import java.util.OptionalLong
 private[sources] final class GraftDvBatchScan(
     root: String, version: Option[Int], tableSchema: StructType,
     requiredSchema: StructType, filters: Seq[Filter],
-    dirs: Option[Set[String]] = None)
-    extends Scan with Batch with SupportsReportStatistics {
-  import GraftDvBatchScan.Listed
+    dirs: Option[Set[String]] = None,
+    agg: Option[GraftDvAggregate] = None,
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    extends Scan with Batch with SupportsReportStatistics
+    with SupportsRuntimeV2Filtering with SupportsReportPartitioning {
+  import GraftDvBatchScan.{Listed, Planned}
 
   private def spark = SparkSession.active
 
@@ -130,90 +155,133 @@ private[sources] final class GraftDvBatchScan(
     (dirs.fold(kept)(ds => kept.filter(ds)), total)
   }
 
-  private lazy val admitted: Seq[Listed] = pruned._1.flatMap(d =>
-    GraftDvBatchScan.listGroup(spark, LakeTable.groupDir(root, d)))
+  // the storage-partitioned layout of a whole-snapshot row scan
+  private lazy val keyGroups: Option[GraftKeyGroups] =
+    if (agg.isDefined || dirs.isDefined) None
+    else GraftKeyGrouping.of(spark, meta, tableSchema, requiredSchema, pruned._1)
 
   @volatile private var footerMisses = 0
   @volatile private var confBroadcasts = 0
 
-  private lazy val files: Seq[Listed] =
-    if (parquetFilters.isEmpty) admitted
-    else {
-      val (kept, misses) =
-        GraftDvBatchScan.footerSkip(spark, admitted, parquetFilters)
-      footerMisses = misses
-      kept
+  // the statically admitted groups' plan until a runtime filter
+  // narrows the groups ([[filter]])
+  private var planned: Planned = _
+  private def plan: Planned = synchronized {
+    if (planned == null) planned = planFor(pruned._1)
+    planned
+  }
+
+  /** The files of `groups` (footer-skipped unless the scan reports key
+    * groups: one keyed partition per admitted file) and their
+    * partitions. */
+  private def planFor(groups: Seq[String]): Planned = {
+    val listed = groups.map(d =>
+      d -> GraftDvBatchScan.listGroup(spark, LakeTable.groupDir(root, d)))
+    val admitted = listed.flatMap(_._2)
+    keyGroups match {
+      case Some(kg) =>
+        val keyed = listed.flatMap { case (d, fs) => fs.map(kg.keyOf(d) -> _) }
+          .sortBy { case ((order, _), f) => (order, f.key) }
+        Planned(groups, admitted.size, admitted,
+          keyed.map { case ((_, key), f) =>
+            new GraftDvKeyedPartition(Array(f), key): InputPartition }.toArray,
+          keyed.map(_._1._1).distinct.size)
+      case None =>
+        val files =
+          if (parquetFilters.isEmpty) admitted
+          else {
+            val (kept, misses) =
+              GraftDvBatchScan.footerSkip(spark, admitted, parquetFilters)
+            footerMisses += misses
+            kept
+          }
+        Planned(groups, admitted.size, files,
+          GraftDvBatchScan.pack(spark, files).toArray, 0)
     }
+  }
 
-  private lazy val partitions: Array[InputPartition] =
-    GraftDvBatchScan.pack(spark, files).toArray
-
-  override def readSchema(): StructType = requiredSchema
+  override def readSchema(): StructType = agg.fold(requiredSchema)(_.schema)
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftDvBatchScan `$root`" + version.fold("")(v => s"@v$v") +
-      (if (filters.isEmpty) "" else filters.mkString(" [", ", ", "]"))
+      (if (filters.isEmpty) "" else filters.mkString(" [", ", ", "]")) +
+      agg.fold("")(a => " PushedAggregation: " +
+        a.aggregation.aggregateExpressions.mkString("[", ", ", "]"))
 
   /** Kept bytes — after manifest admission and footer skipping, so a
     * dim pruned to a sliver reports a sliver; numRows left empty (the
     * byte size is what the broadcast threshold consumes). */
   override def estimateStatistics(): Statistics = {
-    val bytes = math.max(1L, files.map(_.length).sum)
+    val bytes = math.max(1L, plan.files.map(_.length).sum)
     new Statistics {
       override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
       override def numRows(): OptionalLong = OptionalLong.empty()
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = partitions
+  override def planInputPartitions(): Array[InputPartition] = plan.partitions
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  /** Columns a runtime filter (dynamic partition pruning) can prune
+    * groups on: those the manifest holds partition values, min/max
+    * stats or a bloom index for, and the scan reads under their own
+    * name. */
+  override def filterAttributes(): Array[NamedReference] = {
+    val indexed = meta.toSeq.flatMap {
+      case (k, _) if k.startsWith("stat:") || k.startsWith("bloom:") =>
+        Seq(k.split(':').last)
+      case ("partcol", pc) => pc.split(",", -1).toSeq
+      case _ => Nil
+    }
+    readSchema().fieldNames.filter(n =>
+      physical(n).contains(n) && indexed.exists(_.equalsIgnoreCase(n)))
+      .map(Expressions.column)
+  }
+
+  /** A runtime filter re-runs the manifest admission chain over the
+    * admitted groups; the kept files and partitions follow. */
+  override def filter(predicates: Array[Predicate]): Unit = {
+    val runtime = org.apache.spark.sql.graftbridge.ColumnBridge
+      .predicatesToV1(predicates).toSeq
+      .filter(_.references.forall(r => physical(r).contains(r)))
+    if (runtime.nonEmpty) synchronized {
+      val groups = plan.groups
+      val kept = LakeTable.admittedDirs(spark, root, meta, groups, runtime)
+      if (kept.size < groups.size) planned = planFor(kept)
+    }
+  }
+
+  override def outputPartitioning(): Partitioning = keyGroups match {
+    case Some(kg) => new KeyGroupedPartitioning(kg.report, plan.keys)
+    case None => new UnknownPartitioning(0)
+  }
+
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new GraftLakeMicroBatchStream(root, requiredSchema, tableSchema,
+      options.getBoolean("ignoreChanges", false),
+      Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
+      Option(options.get("startingVersion")).map(_.toInt))
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     GraftDvScanMetrics.all
 
-  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val p = plan
     GraftDvScanMetrics.values(
-      GraftDvScanMetrics.GroupsAdmitted -> pruned._1.size.toLong,
+      GraftDvScanMetrics.GroupsAdmitted -> p.groups.size.toLong,
       GraftDvScanMetrics.GroupsTotal -> pruned._2.toLong,
-      GraftDvScanMetrics.FilesAdmitted -> admitted.size.toLong,
-      GraftDvScanMetrics.FilesKept -> files.size.toLong,
+      GraftDvScanMetrics.FilesAdmitted -> p.admitted.toLong,
+      GraftDvScanMetrics.FilesKept -> p.files.size.toLong,
       GraftDvScanMetrics.FooterMisses -> footerMisses.toLong,
       GraftDvScanMetrics.ConfBroadcasts -> confBroadcasts.toLong)
+  }
 
-  private lazy val readerFactory: GraftDvReaderFactory = {
+  private lazy val readerFactory: PartitionReaderFactory = {
     import GraftDvReaderFactory.{File, Missing, Pos}
-    def lineage(f: StructField) =
-      (f.name.equalsIgnoreCase(LakeTable.FileCol) ||
-        f.name.equalsIgnoreCase(LakeTable.PosCol)) &&
-        !tableSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))
-    // the parquet read: every mapped data column under its physical
-    // name, all nullable (an ALTER-added column is absent from older
-    // files); output column i is parquet column plan(i), a lineage
-    // value, or a column the mapping hides (typed null)
-    val asked = requiredSchema.fields.filterNot(lineage).flatMap(f =>
-      physical(f.name).map(p => StructField(p, f.dataType, nullable = true)))
-    // the equality-delete key (never renamed or dropped: the manifest
-    // binds it), read at parquet ordinal keyAt under its physical name
-    // and appended when the query does not ask for it
-    val deletes = GraftDvBatchScan.deletesOf(root, meta, tableSchema)
-    val key = deletes.map(d =>
-      StructField(physical(d._1.name).get, d._1.dataType, nullable = true))
-    val read = key.fold(asked)(k =>
-      if (asked.exists(_.name.equalsIgnoreCase(k.name))) asked else asked :+ k)
-    val keyAt = key.fold(-1)(k => read.indexWhere(_.name.equalsIgnoreCase(k.name)))
-    var next = 0
-    val plan = requiredSchema.fields.map { f =>
-      if (lineage(f))
-        if (f.name.equalsIgnoreCase(LakeTable.FileCol)) File else Pos
-      else if (physical(f.name).isEmpty) Missing
-      else { next += 1; next - 1 }
-    }
-    // unmasked files take row-group pruning; masked files (and every
-    // file of a lineage read) read FULLY so the sequential row counter
-    // equals the dv position space. A scan that kept no file runs no
-    // task and needs neither conf nor sidecars.
-    val lineageRead = plan.exists(c => c == File || c == Pos)
+    val files = plan.files
+    // a scan that kept no file runs no task and needs neither conf nor
+    // sidecars
     val conf =
       if (files.isEmpty) null
       else {
@@ -221,18 +289,60 @@ private[sources] final class GraftDvBatchScan(
         if (made) confBroadcasts = 1
         b
       }
-    val sidecars =
-      if (files.isEmpty) null
-      else GraftDvBatchScan.sidecars(spark, root, LakeTable.dvState(meta), deletes)
-    new GraftDvReaderFactory(
-      GraftParquetFileRead(spark.sessionState.conf, StructType(read)), conf,
-      if (lineageRead) Nil else parquetFilters,
-      if (plan.sameElements(read.indices)) null else plan,
-      requiredSchema.fields.map(_.dataType), sidecars, keyAt)
+    agg match {
+      case Some(a) =>
+        new GraftDvAggReaderFactory(
+          GraftParquetFileRead(spark.sessionState.conf, a.schema), conf, a)
+      case None =>
+        def lineage(f: StructField) =
+          (f.name.equalsIgnoreCase(LakeTable.FileCol) ||
+            f.name.equalsIgnoreCase(LakeTable.PosCol)) &&
+            !tableSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))
+        // the parquet read: every mapped data column under its physical
+        // name, all nullable (an ALTER-added column is absent from older
+        // files); output column i is parquet column plan(i), a lineage
+        // value, or a column the mapping hides (typed null)
+        val asked = requiredSchema.fields.filterNot(lineage).flatMap(f =>
+          physical(f.name).map(p => StructField(p, f.dataType, nullable = true)))
+        // the equality-delete key (never renamed or dropped: the
+        // manifest binds it), read at parquet ordinal keyAt under its
+        // physical name and appended when the query does not ask for it
+        val deletes = GraftDvBatchScan.deletesOf(root, meta, tableSchema)
+        val key = deletes.map(d =>
+          StructField(physical(d._1.name).get, d._1.dataType, nullable = true))
+        val read = key.fold(asked)(k =>
+          if (asked.exists(_.name.equalsIgnoreCase(k.name))) asked else asked :+ k)
+        val keyAt = key.fold(-1)(k => read.indexWhere(_.name.equalsIgnoreCase(k.name)))
+        var next = 0
+        val columns = requiredSchema.fields.map { f =>
+          if (lineage(f))
+            if (f.name.equalsIgnoreCase(LakeTable.FileCol)) File else Pos
+          else if (physical(f.name).isEmpty) Missing
+          else { next += 1; next - 1 }
+        }
+        // unmasked files take row-group pruning; masked files (and every
+        // file of a lineage read) read FULLY so the sequential row
+        // counter equals the dv position space
+        val lineageRead = columns.exists(c => c == File || c == Pos)
+        val sidecars =
+          if (files.isEmpty) null
+          else GraftDvBatchScan.sidecars(spark, root, LakeTable.dvState(meta), deletes)
+        new GraftDvReaderFactory(
+          GraftParquetFileRead(spark.sessionState.conf, StructType(read)), conf,
+          if (lineageRead) Nil else parquetFilters,
+          if (columns.sameElements(read.indices)) null else columns,
+          requiredSchema.fields.map(_.dataType), sidecars, keyAt)
+    }
   }
 }
 
 private[graft] object GraftDvBatchScan {
+
+  /** A scan's plan: its groups, the files they list, the files kept
+    * by footer stats, their partitions and (keyed plans) the distinct
+    * partition keys among them. */
+  private final case class Planned(groups: Seq[String], admitted: Int,
+      files: Seq[Listed], partitions: Array[InputPartition], keys: Int)
 
   /** A listed data file: its key ([[LakeTable.fileKey]]), byte length
     * and modification time — together the identity its footer is cached
@@ -389,20 +499,22 @@ private[graft] object GraftDvBatchScan {
   private[graft] def footers(spark: SparkSession, files: Seq[Listed])
       : (Seq[ParquetMetadata], Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    def read(f: Listed) = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f.status, conf),
-        opts)
-      val footer = try r.getFooter finally r.close()
-      cacheFooter(f, footer)
-      f -> footer
-    }
     val cached = files.map(f => f -> footerCache.get(f))
     val misses = cached.collect { case (f, null) => f }
-    val fresh = LakeTable.onDriver(misses)(read).toMap
+    val fresh = LakeTable.onDriver(misses)(f => f -> readFooter(f, conf)).toMap
     (cached.map { case (f, m) => if (m == null) fresh(f) else m },
       misses.size)
+  }
+
+  /** Reads and caches `f`'s footer over `conf`. */
+  private[sources] def readFooter(f: Listed,
+      conf: org.apache.hadoop.conf.Configuration): ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f.status, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    val footer = try r.getFooter finally r.close()
+    cacheFooter(f, footer)
+    footer
   }
 
   /** The files of `files` whose footer row-group stats admit `filters`
@@ -453,7 +565,7 @@ private[graft] object GraftDvBatchScan {
       new GenericInternalRow(Array.empty[Any]),
       SparkPath.fromUrlString(f.key), 0, f.length))
     FilePartition.getFilePartitions(spark, whole, maxSplit).map(p =>
-      GraftDvFilePartition(p.files.map(pf => byPath(pf.filePath))))
+      new GraftDvFilePartition(p.files.map(pf => byPath(pf.filePath))))
   }
 }
 
@@ -461,8 +573,145 @@ private[graft] object GraftDvBatchScan {
   * each one's key ([[LakeTable.fileKey]]), length and mtime — its
   * footer's cache identity. The dv position space is a file's
   * whole-file row index, so no file is split. */
-private[sources] final case class GraftDvFilePartition(
-    files: Array[GraftDvBatchScan.Listed]) extends InputPartition
+private[sources] class GraftDvFilePartition(
+    val files: Array[GraftDvBatchScan.Listed]) extends InputPartition
+
+/** One whole file of a key-grouped scan, with its group's partition
+  * key — the [[HasPartitionKey]] contract storage-partitioned joins
+  * need. Grouping the files of one key into one task is left to Spark
+  * (`BatchScanExec.groupPartitions`), which keeps them apart under
+  * `v2.bucketing.partiallyClusteredDistribution` (the skew path). */
+private[sources] final class GraftDvKeyedPartition(
+    files: Array[GraftDvBatchScan.Listed], key: InternalRow)
+    extends GraftDvFilePartition(files) with HasPartitionKey {
+  override def partitionKey(): InternalRow = key
+}
+
+/** An aggregate the scan answers from parquet footers
+  * ([[GraftDvScanBuilder.pushAggregation]]): Spark's pushed
+  * `aggregation`, its output `schema`, and `dataSchema`, the columns
+  * every file of the snapshot holds, in file order. */
+private[sources] final case class GraftDvAggregate(aggregation: Aggregation,
+    schema: StructType, dataSchema: StructType)
+
+/** Reader factory of a footer-answered aggregate: one row per file of
+  * the partition, the partial COUNT/MIN/MAX its footer's row-group
+  * statistics give (Spark's own footer aggregation,
+  * [[GraftParquetFileRead.aggRow]]); Spark merges the rows above the
+  * scan. Footers come from [[GraftDvBatchScan.footerCache]]; a miss
+  * reads the footer alone. */
+private[sources] final class GraftDvAggReaderFactory(
+    read: GraftParquetFileRead, conf: Broadcast[SerializableConfiguration],
+    agg: GraftDvAggregate) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition)
+      : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private val files = p.asInstanceOf[GraftDvFilePartition].files.iterator
+    private var footerReads = 0L
+    private var cur: InternalRow = _
+    override def next(): Boolean = files.hasNext && {
+      val f = files.next()
+      val footer = Option(GraftDvBatchScan.footerCache.get(f)).getOrElse {
+        footerReads += 1
+        GraftDvBatchScan.readFooter(f, conf.value.value)
+      }
+      cur = read.aggRow(footer, f.key, agg.dataSchema, agg.aggregation,
+        agg.schema)
+      true
+    }
+    override def get(): InternalRow = cur
+    override def close(): Unit = ()
+    override def currentMetricsValues(): Array[CustomTaskMetric] =
+      GraftDvScanMetrics.values(
+        GraftDvScanMetrics.TaskFooterReads -> footerReads)
+  }
+}
+
+/** A storage-partitioned layout ([[GraftKeyGrouping.of]]): the
+  * transforms the scan reports, and each group's partition key with
+  * the string its files sort by. */
+private[sources] final case class GraftKeyGroups(report: Array[V2Expression],
+    keyOf: Map[String, (String, InternalRow)])
+
+/** Storage-partitioned-join support (Spark's V2 bucketing, the
+  * Iceberg/Delta shuffle-elimination path): a partitioned
+  * [[LakeTable]] holds exactly ONE partition-value tuple per file
+  * group, which is precisely the layout
+  * [[org.apache.spark.sql.connector.read.partitioning
+  * .KeyGroupedPartitioning]] describes — so two lake tables
+  * partitioned on the same key JOIN WITHOUT A SHUFFLE (and a groupBy
+  * on the partition key aggregates without one). */
+private[sources] object GraftKeyGrouping {
+
+  /** Partition-key types the manifest's string values re-type
+    * losslessly (the same family partition declarations admit). */
+  def supported(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | StringType |
+         BooleanType => true
+    case _ => false
+  }
+
+  private def keyValue(raw: String, dt: DataType): Any = dt match {
+    case LongType    => raw.toLong
+    case IntegerType => raw.toInt
+    case ShortType   => raw.toShort
+    case ByteType    => raw.toByte
+    case BooleanType => raw.toBoolean
+    case StringType  => UTF8String.fromString(raw)
+    case other => throw new IllegalStateException(
+      s"unsupported partition key type $other")
+  }
+
+  /** The layout of a scan of `groups` of snapshot `meta` reading
+    * `required` of `tableSchema`, when storage-partitioned joins are on
+    * (`spark.sql.sources.v2.bucketing.enabled`) and the layout claim can
+    * be TOTAL: the snapshot has no equality deletes, every group is
+    * value-tagged, the scan reads every partition column, and the
+    * layout is a bucket layout (key = the INT bucket id, reported as
+    * `bucket(n, col)` — what makes high-cardinality keys SPJ-able) or
+    * identity/bucket components of re-typable values. Time/trunc
+    * layouts record DERIVED values, so claiming identity(col) over them
+    * would be a wrong planner promise; they and anything else report no
+    * layout. */
+  def of(spark: SparkSession, meta: Map[String, String],
+      tableSchema: StructType, required: StructType,
+      groups: Seq[String]): Option[GraftKeyGroups] = {
+    def field(c: String) = tableSchema.fields.find(_.name.equalsIgnoreCase(c))
+    def reads(c: String) = required.fieldNames.exists(_.equalsIgnoreCase(c))
+    val eligible = spark.sessionState.conf.v2BucketingEnabled &&
+      LakeTable.deleteState(meta).isEmpty && groups.nonEmpty &&
+      groups.forall(d => meta.contains(s"part:$d"))
+    def layout(types: Seq[DataType], vals: String => Seq[String],
+        report: Array[V2Expression]) =
+      GraftKeyGroups(report, groups.map { d =>
+        val vs = vals(meta(s"part:$d"))
+        d -> (vs.mkString(LakeTable.PartSep) ->
+          InternalRow.fromSeq(vs.zip(types).map { case (v, t) => keyValue(v, t) }))
+      }.toMap)
+    if (!eligible) None
+    else LakeTable.bucketSpecAt(meta) match {
+      case Some((bc, n)) =>
+        field(bc).filter(_ => reads(bc)).map(f => layout(Seq(IntegerType),
+          Seq(_), Array(Expressions.bucket(n, f.name))))
+      case None =>
+        val pcs = LakeTable.partColsAt(meta)
+        val trs0 = LakeTable.parttransAt(meta)
+        val trs = if (trs0.size == pcs.size) trs0 else pcs.map(_ => "id")
+        val fields = pcs.map(field)
+        val ok = pcs.nonEmpty && pcs.forall(reads) &&
+          fields.zip(trs).forall { case (f, t) =>
+            f.exists(f => t.startsWith("bucket:") ||
+              (t == "id" && supported(f.dataType))) }
+        if (!ok) None
+        else Some(layout(fields.zip(trs).map { case (f, t) =>
+            if (t.startsWith("bucket:")) IntegerType else f.get.dataType },
+          LakeTable.partValsAt,
+          fields.zip(trs).map { case (f, t) =>
+            if (t.startsWith("bucket:"))
+              Expressions.bucket(t.drop("bucket:".length).toInt, f.get.name)
+            else Expressions.identity(f.get.name): V2Expression }.toArray))
+    }
+  }
+}
 
 /** Varint(LEB128)-encoded gaps of a strictly-increasing non-negative
   * position list: gap₀ = p₀ + 1, gapᵢ = pᵢ − pᵢ₋₁ (all ≥ 1). Point
@@ -809,7 +1058,8 @@ private[sources] object DeleteKeys {
   * when `keyAt` names the parquet column of an equality-delete key,
   * rows whose key the snapshot deletes are dropped after the walk.
   * Each file's footer comes from [[GraftDvBatchScan.footerCache]]; a
-  * miss reads it off the file's open stream and caches it. `plan` (null = parquet rows pass
+  * miss reads it off the file's open stream and caches it; the open
+  * file is the one `input_file_name()` names. `plan` (null = parquet rows pass
   * through) names each output column's source: a parquet column
   * ordinal, [[GraftDvReaderFactory.File]]/[[GraftDvReaderFactory.Pos]]
   * lineage, or [[GraftDvReaderFactory.Missing]] (typed null). */
@@ -868,6 +1118,7 @@ private[sources] final class GraftDvReaderFactory(
       val (it, handle) = task.open(f.status, cached, push)(
         GraftDvBatchScan.cacheFooter(f, _))
       open = handle
+      GraftParquetFileRead.setInputFile(f.key, f.length)
       if (push) {
         val kept = if (keyAt < 0) it else it.filterNot(deleted)
         if (plan == null) kept else kept.map(shape(_, null, -1L))
@@ -889,7 +1140,11 @@ private[sources] final class GraftDvReaderFactory(
     }
     override def get(): InternalRow = cur
     override def close(): Unit =
-      if (open != null) { open.close(); open = null }
+      if (open != null) {
+        open.close()
+        open = null
+        GraftParquetFileRead.unsetInputFile()
+      }
     override def currentMetricsValues(): Array[CustomTaskMetric] =
       GraftDvScanMetrics.values(
         GraftDvScanMetrics.TaskFooterReads -> (footerReads + load.footerReads),

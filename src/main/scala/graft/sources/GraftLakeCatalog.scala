@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.{Collections, Map => JMap}
+import java.util.{Map => JMap}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -33,8 +33,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * version immutable once written.
   *
   * Scale note: resolution cost is one directory listing + one manifest
-  * read at planning time; the scan is the same delegated vectorized
-  * parquet as the format path — the catalog adds zero per-row overhead.
+  * read at planning time; the scan is the same lake scan
+  * ([[GraftDvBatchScan]]) as the format path and the Scala API.
   */
 final class GraftLakeCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.StagingTableCatalog
@@ -84,24 +84,18 @@ final class GraftLakeCatalog extends TableCatalog
   private def load(ident: Identifier, version: Option[Int]): Table = {
     val spark = SparkSession.active
     val root = rootOf(ident)
-    val known = LakeTable.versions(spark, root)
-    val meta = version.orElse(known.lastOption).filter(known.contains)
-      .map(LakeTable.manifestMetaAt(spark, root, _))
-    // snapshots with deletion vectors or equality deletes stay fully
-    // READABLE through the catalog (Delta semantics — a masked table is
-    // not degraded): the raw parquet delegate would resurrect deleted
-    // rows, so scans go to the masked [[GraftDvLakeTable]], at the
-    // latest version and under time travel (each version's own state)
-    if (meta.exists(LakeTable.nativeDvOk))
-      return new GraftDvLakeTable(ident.toString, root, version)
-    try new GraftLakeTable(GraftLakeSource.delegate(spark, root, version,
-      None, Collections.emptyMap[String, String]()),
-      root = Some(root), version = version, streamRoot = Some(root))
-    catch {
-      case _: IllegalStateException =>
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-          ident.namespace() :+ ident.name())
-    }
+    val v = try LakeTable.existingVersion(spark, root, version)
+      catch {
+        case _: IllegalStateException =>
+          throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
+            ident.namespace() :+ ident.name())
+      }
+    // both tables read through the lake scan; a snapshot with deletion
+    // vectors or equality deletes takes the table whose row-level DML
+    // stacks merge-on-read commits ([[GraftDvLakeTable]])
+    if (LakeTable.nativeDvOk(LakeTable.manifestMetaAt(spark, root, v)))
+      new GraftDvLakeTable(ident.toString, root, version)
+    else new GraftLakeTable(root, version, catalog = true)
   }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
@@ -506,22 +500,24 @@ private[sources] final class GraftStagedTable(
 }
 
 /** Catalog table for a snapshot carrying deletion vectors or equality
-  * deletes — and the relation [[LakeTable.read]],
-  * [[LakeTable.readWithLineage]], the range/point reads and
-  * [[LakeTable.changes]] build for one ([[LakeTable.dvFrame]]; its
-  * `__file`/`__pos` metadata columns carry lineage, and `dirs`, when
-  * set, limits it to those of the snapshot's file groups), so the Scala
-  * API and SQL read a masked snapshot through the same scan,
-  * [[GraftDvBatchScan]], whatever its mask size: pushed filters run the
-  * manifest-level admission chain (partition values, min/max stats,
-  * bloom indexes — [[LakeTable.pruneDirsForFilters]]) before any
-  * parquet footer opens, each task loads and applies its own files'
-  * masks and the snapshot's equality-delete keys inside the reader, and
-  * the column mapping maps physical names to logical ones, so deleted
-  * rows never resurface and stacked updates/time travel each see their
-  * own version's state. A compaction ([[LakeTable.rewriteDeletes]] or
-  * any COW op) restores the plain delegate. Appends still land through
-  * the commit protocol (dv state changes are NAMED append conflicts). */
+  * deletes — and the relation every Scala API read builds
+  * ([[LakeTable.read]], [[LakeTable.readWithLineage]], the range/point
+  * reads and [[LakeTable.changes]], through [[LakeTable.dvFrame]], for
+  * every snapshot; its `__file`/`__pos` metadata columns carry lineage,
+  * and `dirs`, when set, limits it to those of the snapshot's file
+  * groups). It reads through the one lake scan, [[GraftDvBatchScan]],
+  * as [[GraftLakeTable]] does: pushed filters run the manifest-level
+  * admission chain (partition values, min/max stats, bloom indexes —
+  * [[LakeTable.pruneDirsForFilters]]) before any parquet footer opens,
+  * each task loads and applies its own files' masks and the snapshot's
+  * equality-delete keys inside the reader, and the column mapping maps
+  * physical names to logical ones, so deleted rows never resurface and
+  * stacked updates/time travel each see their own version's state. The
+  * two tables differ in DML: here row-level statements stack as
+  * merge-on-read commits and overwrites refuse until a compaction
+  * ([[LakeTable.rewriteDeletes]] or any COW op) clears the delete
+  * state. Appends still land through the commit protocol (dv state
+  * changes are NAMED append conflicts). */
 private[sources] final class GraftDvLakeTable(
     identName: String, root: String, version: Option[Int],
     dirs: Option[Set[String]] = None)
@@ -604,7 +600,8 @@ private[sources] final class GraftDvLakeTable(
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new GraftDvScanBuilder(root, version, schema(), dirs)
+      : ScanBuilder =
+    new GraftDvScanBuilder(root, version, schema(), dirs, options)
   /** Appends land through the commit protocol; an overwrite (`INSERT
     * OVERWRITE`, which Spark plans as a truncate) refuses by name. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -629,23 +626,31 @@ private[sources] final class GraftDvLakeTable(
     }
 }
 
-/** ScanBuilder for masked snapshots: records Spark's pushed
-  * source filters and required columns (lineage metadata columns
-  * included), then builds the pruned masked scan, [[GraftDvBatchScan]].
-  * EVERY filter is also returned as residual, so Spark re-applies the
-  * full predicate above the scan — the pushdown here is a strict
-  * optimization (fewer groups opened, parquet row-group pruning), never
-  * a correctness dependency. */
+/** ScanBuilder of every lake scan ([[GraftDvBatchScan]]): records
+  * Spark's pushed source filters and required columns (lineage metadata
+  * columns included), then builds the pruned scan. EVERY filter is also
+  * returned as residual, so Spark re-applies the full predicate above
+  * the scan — the pushdown here is a strict optimization (fewer groups
+  * opened, parquet row-group pruning), never a correctness dependency.
+  * Under `spark.sql.parquet.aggregatePushdown` an unfiltered
+  * COUNT/MIN/MAX is answered from parquet footers when the snapshot has
+  * no delete state, its aggregated columns are unmapped and every file
+  * holds them (the snapshot's footers share one schema); the scan is
+  * then pinned to the version this was decided on. `options` carries
+  * the micro-batch stream's options ([[GraftDvBatchScan.toMicroBatchStream]]). */
 private[sources] final class GraftDvScanBuilder(
     root: String, version: Option[Int], tableSchema: StructType,
-    dirs: Option[Set[String]] = None)
+    dirs: Option[Set[String]], options: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
+    with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
+    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+  import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
   import org.apache.spark.sql.sources.Filter
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
+  private var aggregate: Option[(Int, GraftDvAggregate)] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -655,7 +660,34 @@ private[sources] final class GraftDvScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit = {
     required = requiredSchema
   }
+
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    val spark = SparkSession.active
+    val columns = agg.aggregateExpressions.toSeq
+      .flatMap(_.references).map(_.fieldNames.mkString("."))
+    aggregate =
+      if (!spark.sessionState.conf.parquetAggregatePushDown ||
+          pushed.nonEmpty || dirs.nonEmpty) None
+      else for {
+        v <- version.orElse(LakeTable.latestVersion(spark, root))
+        meta = LakeTable.manifestMetaAt(spark, root, v)
+        if !LakeTable.nativeDvOk(meta) &&
+          columns.forall(c => LakeTable.physicalName(meta, c).contains(c))
+        data <- LakeTable.uniformSchemaOf(spark,
+          LakeTable.dataDirPaths(spark, root, Some(v)))
+        if columns.forall(data.fieldNames.contains)
+        schema <- org.apache.spark.sql.execution.datasources
+          .AggregatePushDownUtils.getSchemaForPushedAggregation(
+            agg, tableSchema, Set.empty, Nil)
+      } yield v -> GraftDvAggregate(agg, schema, data)
+    aggregate.isDefined
+  }
+
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    new GraftDvBatchScan(root, version, tableSchema, required, pushed.toSeq,
-      dirs)
+    aggregate match {
+      case Some((v, a)) => new GraftDvBatchScan(root, Some(v), tableSchema,
+        a.schema, Nil, None, Some(a), options)
+      case None => new GraftDvBatchScan(root, version, tableSchema, required,
+        pushed.toSeq, dirs, None, options)
+    }
 }

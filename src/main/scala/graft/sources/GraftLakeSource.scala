@@ -6,8 +6,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -21,14 +19,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * This is the architecture Delta Lake's own connector uses (reference
   * workshop reads `format("delta")` paths — DS_cust_lifetime_value.py:152):
-  * the format resolves the transaction metadata into a concrete file
-  * list, then DELEGATES the scan to Spark's native vectorized parquet
-  * machinery — so snapshot resolution costs one manifest read at
-  * planning time and the data path keeps every built-in optimization
-  * (whole-stage codegen over columnar batches, predicate pushdown to
-  * row groups, column pruning, partition coalescing). Nothing here is
-  * per-row; at 100 TB the connector's overhead is unchanged from
-  * reading the parquet paths directly.
+  * the format resolves the snapshot's transaction metadata itself — its
+  * file groups, column mapping, deletion vectors and equality deletes —
+  * and reads it with the engine's one lake scan, [[GraftDvBatchScan]],
+  * the same scan the Scala API and the catalog read through. Snapshot
+  * resolution costs one manifest read at planning time; groups prune by
+  * partition values, min/max stats and bloom indexes before any footer
+  * opens, files by their footers' row-group stats, and rows by the
+  * snapshot's delete state inside the reader.
   *
   * The PATH-based format is deliberately WRITE-FREE
   * ([[TableCapability.BATCH_READ]] + [[TableCapability.MICRO_BATCH_READ]]
@@ -41,20 +39,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * single source of truth. MERGE/UPDATE/OVERWRITE stay API-only.
   */
 final class GraftLakeSource extends TableProvider with DataSourceRegister {
-  import GraftLakeSource.delegate
 
   override def shortName(): String = "graft-lake"
 
   override def supportsExternalMetadata(): Boolean = false
 
   // Spark calls inferSchema then getTable on the SAME provider instance
-  // for one read; caching the resolved delegate makes the pair atomic
-  // (one snapshot resolution — a commit landing between the two calls
-  // cannot pair vN's schema with vN+1's files) and halves the manifest
-  // + file-listing planning cost.
-  @volatile private var cached: (String, Option[Int], ParquetTable) = _
+  // for one read; caching the table resolves the snapshot's schema once
+  // for both calls
+  @volatile private var cached: (String, Option[Int], GraftLakeTable) = _
 
-  private def fromOptions(options: JMap[String, String]): ParquetTable = {
+  private def fromOptions(options: JMap[String, String]): GraftLakeTable = {
     val opts = new CaseInsensitiveStringMap(options)
     val root = Option(opts.get("path")).getOrElse(throw new IllegalArgumentException(
       "graft-lake requires a table root: spark.read.format(\"graft-lake\").load(<root>)"))
@@ -62,7 +57,9 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
     val c = cached
     if (c != null && c._1 == root && c._2 == version) c._3
     else {
-      val t = delegate(SparkSession.active, root, version, None, options)
+      // a missing table or version fails here, naming what exists
+      LakeTable.existingVersion(SparkSession.active, root, version)
+      val t = new GraftLakeTable(root, version)
       cached = (root, version, t)
       t
     }
@@ -71,137 +68,29 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     fromOptions(options).schema
 
+  // path reads stay DML-free; a latest-snapshot path IS streamable:
+  // `spark.readStream.format("graft-lake").load(root)`
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    // path reads stay DML-free (no `root`), but a latest-snapshot path
-    // IS streamable: `spark.readStream.format("graft-lake").load(root)`
-    val streamRoot =
-      if (opts.containsKey("versionAsOf")) None else Option(opts.get("path"))
-    new GraftLakeTable(fromOptions(properties), streamRoot = streamRoot)
-  }
+                        properties: JMap[String, String]): Table =
+    fromOptions(properties)
 }
 
-private[sources] object GraftLakeSource {
-  /** Resolve a snapshot into the vectorized-parquet delegate table —
-    * shared by the format path ([[GraftLakeSource]]) and the catalog
-    * path ([[GraftLakeCatalog]]). */
-  private[sources] def delegate(spark: SparkSession, root: String,
-                                version: Option[Int],
-                                userSchema: Option[StructType],
-                                options: JMap[String, String]): ParquetTable = {
-    // merge-on-read deletes are applied by the dv reader
-    // (GraftDvBatchScan, behind LakeTable.read and the catalog); the
-    // raw-parquet delegate would silently resurrect deleted rows, so
-    // fail fast instead (Delta-protocol spirit: a reader that can't
-    // honor deletion vectors must not read)
-    // (an unknown requested version skips the check and fails below in
-    // dataDirPaths with the available-versions message)
-    val known = LakeTable.versions(spark, root)
-    val maskDeletes = java.lang.Boolean.parseBoolean(
-      new CaseInsensitiveStringMap(options).getOrDefault("maskDeletes", "false"))
-    version.orElse(known.lastOption).filter(known.contains).foreach { v =>
-      // maskDeletes=true (streaming opt-in): the micro-batch stream
-      // applies the delete mask per batch, so a MOR table may load;
-      // BATCH scans under the option still refuse at toBatch
-      // ([[GraftLakeStreamableScan]]) — raw parquet cannot honor masks.
-      // The opt-in only applies to latest-version loads: time-travel
-      // loads get no stream wrapper (streamRoot=None), so honoring it
-      // there would leave NOTHING to re-gate the batch read and deleted
-      // rows would silently resurrect — keep the hard throw.
-      if (!(maskDeletes && version.isEmpty) && LakeTable.deleteState(
-          LakeTable.manifestMetaAt(spark, root, v)).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"table at $root has merge-on-read deletes (version $v); " +
-            "materialize them first (LakeTable.rewriteDeletes/compact), " +
-            "read via LakeTable.read, or stream with " +
-            "option(\"maskDeletes\", \"true\")")
-      // positional deletion vectors gate the raw delegate the same way
-      // (raw parquet would resurrect masked rows); the CATALOG path
-      // never gets here for them — GraftLakeCatalog.load serves dv
-      // snapshots through its masked GraftDvLakeTable — so only the
-      // pathless format("graft-lake") read refuses
-      if (LakeTable.dvState(
-          LakeTable.manifestMetaAt(spark, root, v)).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"table at $root has deletion vectors (version $v); " +
-            "materialize them first (LakeTable.rewriteDeletes/compact), " +
-            "read via LakeTable.read, or query through a graft-lake " +
-            "catalog (its scan patches deletion vectors)")
-      // metadata-only column rename/drop: the raw-parquet delegate
-      // would expose PHYSICAL names and silently mis-shape the table.
-      // TIME-TRAVEL loads fail fast here (no scan wrapper to gate);
-      // latest-version loads resolve with the LOGICAL schema instead —
-      // batch scans then refuse at toBatch ([[GraftLakeStreamableScan]])
-      // while the micro-batch stream reads files under translated
-      // physical names (positional rows, logical shape)
-      val vMeta = LakeTable.manifestMetaAt(spark, root, v)
-      if (version.isDefined &&
-          (LakeTable.colMapAt(vMeta).nonEmpty ||
-            LakeTable.colDropsAt(vMeta).nonEmpty))
-        throw new UnsupportedOperationException(
-          s"table at $root has a metadata-only column rename/drop " +
-            s"(version $v); materialize it first (LakeTable.compact) " +
-            "or read via LakeTable.read")
-    }
-    val logicalOverride = for {
-      v <- known.lastOption if version.isEmpty
-      vMeta = LakeTable.manifestMetaAt(spark, root, v)
-      if LakeTable.colMapAt(vMeta).nonEmpty ||
-        LakeTable.colDropsAt(vMeta).nonEmpty
-    } yield LakeTable.read(spark, root).schema
-    val paths = LakeTable.dataDirPaths(spark, root, version)
-    // additive schema evolution: groups written before a column existed
-    // read it as null (same contract as LakeTable.read); an ALTER-
-    // declared schema override becomes the user schema, so columns no
-    // group carries yet exist as typed nulls in declared order
-    val withMerge = new java.util.HashMap[String, String](options)
-    withMerge.put("mergeSchema", "true")
-    val effSchema = userSchema.orElse(logicalOverride)
-      .orElse(LakeTable.schemaOverrideAt(spark, root, version))
-      // uniform footer schema (cached per immutable group) — hands
-      // ParquetTable its schema up front, skipping the mergeSchema
-      // inference job; mixed-schema snapshots fall through to it
-      .orElse(LakeTable.uniformSchemaOf(spark, paths))
-    ParquetTable(
-      s"graft-lake `$root`" + version.fold("")(v => s"@v$v"),
-      spark, new CaseInsensitiveStringMap(withMerge), paths.toList,
-      effSchema, classOf[ParquetFileFormat])
-  }
-
-  /** A delegate over an explicit subset of the snapshot's data dirs —
-    * the manifest-stats pruning path ([[GraftLakeStreamScanBuilder]]).
-    * The table schema pins the shape (a pruned subset may lack evolved
-    * columns' files entirely). */
-  private[sources] def delegateForDirs(spark: SparkSession, root: String,
-                                       dirs: Seq[String],
-                                       tableSchema: StructType,
-                                       options: JMap[String, String])
-      : ParquetTable = {
-    val withMerge = new java.util.HashMap[String, String](options)
-    withMerge.put("mergeSchema", "true")
-    ParquetTable(
-      s"graft-lake `$root` (stats-pruned ${dirs.size} group(s))",
-      spark, new CaseInsensitiveStringMap(withMerge),
-      dirs.map(d => new org.apache.hadoop.fs.Path(root, d).toString).toList,
-      Some(tableSchema), classOf[ParquetFileFormat])
-  }
-}
-
-/** Scan wrapper: exposes the delegate's schema and scan builder, plus —
-  * when constructed by the catalog with its root — filter-based
-  * `DELETE FROM` ([[org.apache.spark.sql.connector.catalog.SupportsDelete]]):
-  * Spark pushes the WHERE clause down as source filters, they translate
-  * to a Column predicate, and the delete lands as a normal
+/** A plain lake snapshot as a DSv2 table — its schema the snapshot's
+  * logical one ([[LakeTable.snapshotSchema]]), its reads the lake scan
+  * ([[GraftDvScanBuilder]]), and, at the latest version, the
+  * micro-batch stream. When the catalog loads it (`catalog`), it also
+  * takes filter-based `DELETE FROM`
+  * ([[org.apache.spark.sql.connector.catalog.SupportsDelete]]): Spark
+  * pushes the WHERE clause down as source filters, they translate to a
+  * Column predicate, and the delete lands as a normal
   * [[LakeTable.deleteWhere]] copy-on-write commit — SQL DML without
   * bypassing the commit protocol. Catalog tables also take SQL
   * INSERT/INSERT OVERWRITE through [[newWriteBuilder]]; the bare
   * FORMAT path stays read-only (`df.write.format("graft-lake")` still
   * fails analysis — writes need the catalog's root), and a
   * time-travel snapshot refuses deletes (history is immutable). */
-private[sources] final class GraftLakeTable(delegate: ParquetTable,
-    root: Option[String] = None, version: Option[Int] = None,
-    streamRoot: Option[String] = None)
+private[sources] final class GraftLakeTable(lake: String,
+    version: Option[Int] = None, catalog: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -215,12 +104,19 @@ private[sources] final class GraftLakeTable(delegate: ParquetTable,
     RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo,
     V1Write, Write, WriteBuilder}
 
-  override def name(): String = delegate.name
-  override def schema(): StructType = delegate.schema
+  // the table root DML commits to: catalog tables only
+  private val root = if (catalog) Some(lake) else None
+
+  override def name(): String =
+    s"graft-lake `$lake`" + version.fold("")(v => s"@v$v")
+
+  private lazy val tableSchema =
+    LakeTable.snapshotSchema(SparkSession.active, lake, version)
+  override def schema(): StructType = tableSchema
 
   /** Row LINEAGE metadata columns — the identity the delta row-level
-    * operation's rowId names ([[GraftDeltaOperation]]). Served by the
-    * delta operation's own scan; plain reads never request them. */
+    * operation's rowId names ([[GraftDeltaOperation]]), served by the
+    * lake scan. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     GraftLakeTable.LineageMetadataColumns
@@ -388,25 +284,12 @@ private[sources] final class GraftLakeTable(delegate: ParquetTable,
       // unknown source column still refuses at analysis.
       caps.add(TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     }
-    if (streamRoot.isDefined && version.isEmpty)
-      caps.add(TableCapability.MICRO_BATCH_READ)
+    if (version.isEmpty) caps.add(TableCapability.MICRO_BATCH_READ)
     caps
   }
 
-  /** Batch scans delegate untouched (full parquet pushdown); when the
-    * table is streamable, the BUILT scan is wrapped so
-    * `toMicroBatchStream` resolves to the commit-log source
-    * ([[GraftLakeMicroBatchStream]]) — the builder subclass keeps every
-    * pushdown interface of [[ParquetScanBuilder]] itself, so the batch
-    * plan shape is byte-identical with or without streaming support. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    streamRoot match {
-      case None => delegate.newScanBuilder(options)
-      case Some(sr) =>
-        new GraftLakeStreamScanBuilder(delegate.newScanBuilder(options),
-          sr, delegate.schema,
-          options.getBoolean("ignoreChanges", false), options)
-    }
+    new GraftDvScanBuilder(lake, version, schema(), None, options)
 
   /** SQL `MERGE INTO` / `UPDATE` (and non-pushable `DELETE`s) via the
     * group-replace protocol — see [[GraftRowLevelOperation]]. Pushable
@@ -415,10 +298,9 @@ private[sources] final class GraftLakeTable(delegate: ParquetTable,
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     require(root.isDefined && version.isEmpty,
       s"${info.command} requires a latest-version catalog table, got ${name()}")
-    // group-replace reads parquet files directly, which expose PHYSICAL
-    // column names: under a pending metadata-only rename/drop the
-    // renamed column would read as all-NULL and the replace commit would
-    // persist those nulls — refuse, mirroring the toBatch gate
+    // the replace write lands its rows under LOGICAL names, which a
+    // pending metadata-only rename/drop reads back under physical ones
+    // (the renamed column would read as all-NULL) — refuse
     val spark = SparkSession.active
     LakeTable.versions(spark, root.get).lastOption.foreach { v =>
       val vMeta = LakeTable.manifestMetaAt(spark, root.get, v)

@@ -33,8 +33,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * planned, so at 100 TB an `UPDATE … WHERE k BETWEEN a AND b` over a
   * key-clustered table rewrites only the affected groups. Dirs without
   * stats (or non-range conditions) are conservatively read — plain
-  * correctness, today's write amplification. Executor-side parquet
-  * reading and writing both reuse Spark's own machinery
+  * correctness, today's write amplification. The planned groups read
+  * through the lake scan ([[GraftDvBatchScan]]); executor-side parquet
+  * writing reuses Spark's own machinery
   * ([[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]]),
   * so files are byte-compatible with every other commit path. */
 private[sources] final class GraftRowLevelOperation(
@@ -87,67 +88,46 @@ private[sources] final class GraftGroupScanBuilder(
     new GraftGroupScan(op, root, tableSchema, required, pushed)
 }
 
-/** The group-replace scan/batch: resolves the current snapshot ONCE,
-  * splits its dirs into kept (stats prove no match) vs scanned, records
-  * the scanned set on the operation for the commit, and plans one
-  * partition per parquet file of the scanned dirs — read through
-  * Spark's own parquet row machinery (same reader the streaming source
-  * uses). */
+/** The group-replace scan: resolves the current snapshot ONCE, splits
+  * its dirs into kept (stats prove no match) vs scanned, records the
+  * scanned set on the operation for the commit, and reads every row of
+  * the scanned dirs through the lake scan ([[GraftDvBatchScan]]) with
+  * no filter, so no footer skipping drops a file of a planned group.
+  * It is deliberately not runtime-filterable: Spark's runtime group
+  * filter would narrow the groups read below the recorded set the
+  * commit replaces. */
 private[sources] final class GraftGroupScan(
     op: GraftRowLevelOperation, root: String, tableSchema: StructType,
     required: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter])
-    extends org.apache.spark.sql.connector.read.Scan
-    with org.apache.spark.sql.connector.read.Batch {
-  import org.apache.spark.sql.sources._
+    extends org.apache.spark.sql.connector.read.Scan {
 
-  private val spark = SparkSession.active
-
-  private lazy val planned: Seq[String] = {
+  // (version, planned groups)
+  private lazy val planned: (Int, Seq[String]) = {
+    val spark = SparkSession.active
     val v = LakeTable.latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no table at $root"))
-    val dirs = LakeTable.dataDirsAt(spark, root, v)
     val meta = LakeTable.manifestMetaAt(spark, root, v)
-    val scan = dirs.filter { dir =>
-      filters.isEmpty ||
-        filters.forall(f => LakeTable.partAdmit(meta, dir, f) &&
-          LakeTable.statsAdmit(meta, dir, f))
-    }
-    op.scannedDirs = scan
-    scan
+    val groups = LakeTable.dataDirsAt(spark, root, v).filter(dir =>
+      filters.forall(f => LakeTable.partAdmit(meta, dir, f) &&
+        LakeTable.statsAdmit(meta, dir, f)))
+    op.scannedDirs = groups
+    (v, groups)
   }
+
+  private lazy val scan = new GraftDvBatchScan(root, Some(planned._1),
+    tableSchema, required, Nil, Some(planned._2.toSet))
 
   override def readSchema(): StructType = required
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
+  override def toBatch: org.apache.spark.sql.connector.read.Batch = scan
   override def description(): String =
-    s"graft-lake group-replace scan `$root` (${planned.size} group(s))"
-
-  override def planInputPartitions()
-      : Array[org.apache.spark.sql.connector.read.InputPartition] = {
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    planned.flatMap { dirRel =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(root, dirRel))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-        .map(f => GraftLakeFilePartition(f.getPath.toString, f.getLen))
-    }.toArray
-  }
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory = {
-    val readFn = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat().buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = tableSchema,
-        partitionSchema = StructType(Nil),
-        requiredSchema = required,
-        filters = Nil, // group semantics: every row of a planned dir
-        options = Map(org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConf())
-    new GraftLakeFileReaderFactory(readFn)
-  }
+    s"graft-lake group-replace scan `$root` (${planned._2.size} group(s))"
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    scan.supportedCustomMetrics()
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    scan.reportDriverMetrics()
 }
 
 /** The replacing write: executors stream InternalRows into parquet

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * re-indexing is O(churn).
   *
   * Sketches cannot subtract, so a table with merge-on-read deletes
-  * refuses to estimate (materialize first) — the same reader gate the
-  * DSv2 delegate applies. lgK is fixed at 14 (~0.8% rse) so committed
+  * refuses to estimate (materialize first). lgK is fixed at 14 (~0.8% rse) so committed
   * and live sketches always union without config drift. */
 object LakeHllIndex {
 

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * re-indexing is O(churn).
   *
   * Sketches cannot subtract, so a table with merge-on-read deletes
-  * refuses to estimate (materialize first) — the same reader gate the
-  * HLL index and the DSv2 delegate apply. k is fixed at 200 (~1.65%
+  * refuses to estimate (materialize first), as the HLL index does. k is fixed at 200 (~1.65%
   * rank error) so committed and live sketches always merge without
   * config drift; values are sketched as doubles (the widest numeric
   * the column casts to losslessly for rank purposes at this k).

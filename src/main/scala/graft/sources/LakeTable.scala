@@ -639,7 +639,9 @@ object LakeTable {
   /** One parquet scan frame over a snapshot's group dirs: uniform
     * footer schema → explicit schema (no footer job) + driver-side
     * listing; otherwise Spark's mergeSchema inference (additive
-    * evolution). Every read path funnels here. */
+    * evolution). The physical rewrites (compaction, z-order, index
+    * builds, UNIQUE re-checks) read raw groups here; snapshot reads go
+    * through the lake scan ([[read]]). */
   private[sources] def scanDirs(spark: SparkSession,
       absDirs: Seq[String]): DataFrame =
     uniformSchemaOf(spark, absDirs) match {
@@ -1903,7 +1905,7 @@ object LakeTable {
   /** Conservative stats check for one source filter against one dir's
     * recorded [min,max]: false ONLY when the stats PROVE no row can
     * match. Shared by the DSv2 scan pruning
-    * ([[GraftLakeStreamScanBuilder]]) and the row-level group-replace
+    * ([[GraftDvBatchScan.filter]]) and the row-level group-replace
     * scan ([[GraftGroupScan]]). */
   private[sources] def statsAdmit(
       meta: Map[String, String], dir: String,
@@ -2366,10 +2368,10 @@ object LakeTable {
     * `column ∈ [lo, hi]`, then applies the exact filter. At scale this is
     * the manifest-level pruning layer ABOVE parquet row-group pruning —
     * skipped groups cost zero file opens. The admitted groups read
-    * through [[readDirsSubset]]; on a masked snapshot ([[nativeDvOk]])
-    * that is the dv reader, where the band also pushes into its footer
-    * skipping. A renamed filter column finds no physical stat keys and
-    * admits every group (no pruning, still correct), and pruning stays
+    * through [[readDirsSubset]] (the lake scan), where the band also
+    * pushes into its footer skipping. A renamed filter column finds no
+    * physical stat keys and admits every group (no pruning, still
+    * correct), and pruning stays
     * CONSERVATIVE under masks: a mask only removes rows, so a group
     * admitted by its (pre-mask) stats over-admits, never lies. */
   def readWhere(spark: SparkSession, root: String, column: String,
@@ -2493,9 +2495,9 @@ object LakeTable {
     * filter — the needle-in-100TB path: manifest stats bound the range,
     * the bloom disproves membership group by group, and only the
     * surviving group(s) open a parquet footer. The admitted groups read
-    * through [[readDirsSubset]]; on a masked snapshot ([[nativeDvOk]])
-    * that is the dv reader, where the deletes apply inside the reader
-    * and the pushed `EqualTo` also skips files by footer stats. */
+    * through [[readDirsSubset]] (the lake scan), where the deletes apply
+    * inside the reader and the pushed `EqualTo` also skips files by
+    * footer stats. */
   def readWhereEq(spark: SparkSession, root: String, column: String,
                   value: Any): DataFrame = {
     val v = latestVersion(spark, root)
@@ -2522,8 +2524,7 @@ object LakeTable {
   }
 
   /** Resolved absolute data-dir paths of a snapshot (`version = None` →
-    * latest) — the metadata half of the read path, shared by [[read]]
-    * and the DSv2 connector ([[GraftLakeSource]]). */
+    * latest). */
   def dataDirPaths(spark: SparkSession, root: String,
                    version: Option[Int] = None): Seq[String] =
     readManifest(spark, root, existingVersion(spark, root, version))
@@ -2547,7 +2548,7 @@ object LakeTable {
 
   /** `version`, or the latest when None; fails when there is no table
     * at `root` or no such version. */
-  private def existingVersion(spark: SparkSession, root: String,
+  private[sources] def existingVersion(spark: SparkSession, root: String,
       version: Option[Int]): Int = {
     val vs = versions(spark, root)
     if (vs.isEmpty) throw new IllegalStateException(s"no table at $root")
@@ -2620,19 +2621,8 @@ object LakeTable {
         val Array(p, l) = kv.split("=", 2); (p, l)
       }
 
-  /** Physical → logical projection of a raw frame ([[logicalName]]):
-    * renamed columns take their logical names, metadata-only-dropped
-    * columns (recorded by PHYSICAL name, which a drop removes from the
-    * rename map) are projected out. No-op without renames/drops — the
-    * common path pays nothing. */
-  private def applyColMap(meta: Map[String, String],
-                          df: DataFrame): DataFrame =
-    if (colMapAt(meta).isEmpty && colDropsAt(meta).isEmpty) df
-    else df.select(df.columns.toSeq.flatMap(c => logicalName(meta, c)
-      .map(df.col("`" + c.replace("`", "``") + "`").as(_))): _*)
-
   /** Logical → physical projection of an incoming batch (the write-side
-    * inverse of [[applyColMap]]) — appended files always carry PHYSICAL
+    * inverse of [[logicalName]]) — appended files always carry PHYSICAL
     * names so every file group in the table shares one on-disk schema. */
   private def toPhysical(meta: Map[String, String],
                          df: DataFrame): DataFrame =
@@ -2659,7 +2649,7 @@ object LakeTable {
   /** The inverse of [[logicalName]]: the parquet column a LOGICAL column
     * reads from. None when the mapping took that physical name away (it
     * was renamed from or dropped) — the column then reads as typed
-    * nulls, as [[read]]'s declared-schema projection has it. */
+    * nulls. */
   private[sources] def physicalName(meta: Map[String, String],
       logical: String): Option[String] = {
     val renamed = colMapAt(meta)
@@ -2839,110 +2829,61 @@ object LakeTable {
     * O(groups) file listing at analysis time. Without one, the groups'
     * scan schema ([[scanDirs]]: the uniform footer schema, cached per
     * group, else Spark's merged one) under the column mapping — renamed
-    * columns take their logical names, metadata-only drops leave — the
-    * schema [[read]] returns. Only an empty snapshot asks [[read]]
-    * (which demands a declared schema); the native dv reader's table
-    * ([[GraftDvLakeTable]]) therefore never calls back into [[read]]. */
+    * columns take their logical names, metadata-only drops leave. An
+    * empty snapshot without a declared schema has none. Every read's
+    * table ([[GraftLakeTable]], [[GraftDvLakeTable]]) takes its schema
+    * from here, so this never builds a read frame. */
   private[graft] def snapshotSchema(spark: SparkSession, root: String,
       version: Option[Int] = None)
       : org.apache.spark.sql.types.StructType =
     schemaOverrideAt(spark, root, version).getOrElse {
       val dirs = dataDirPaths(spark, root, version)
-      if (dirs.isEmpty) read(spark, root, version).schema
-      else {
-        val meta = manifestMeta(spark, root,
-          version.getOrElse(versions(spark, root).last))
-        val footers =
-          uniformSchemaOf(spark, dirs).getOrElse(scanDirs(spark, dirs).schema)
-        org.apache.spark.sql.types.StructType(footers.fields.flatMap(f =>
-          logicalName(meta, f.name).map(n => f.copy(name = n))))
-      }
+      if (dirs.isEmpty) throw new IllegalStateException(
+        s"empty snapshot at $root has no declared schema")
+      val meta = manifestMeta(spark, root,
+        version.getOrElse(versions(spark, root).last))
+      val footers =
+        uniformSchemaOf(spark, dirs).getOrElse(scanDirs(spark, dirs).schema)
+      org.apache.spark.sql.types.StructType(footers.fields.flatMap(f =>
+        logicalName(meta, f.name).map(n => f.copy(name = n))))
     }
 
   /** Snapshot read; `version = None` → latest (time travel otherwise).
-    * mergeSchema handles additive schema evolution: groups written
-    * before a column existed read it as null; an ALTER-declared schema
-    * additionally projects columns no parquet group carries yet (typed
-    * nulls, declared order). A snapshot with deletion vectors or
-    * equality deletes ([[nativeDvOk]] — every mask and key-set size,
-    * column mapping and declared schema included) reads as ONE scan of
-    * the relation SQL reads too ([[GraftDvLakeTable]]): each task
-    * applies its files' masks and the snapshot's delete keys in the
-    * reader, and pushed filters prune groups by partition, stats and
-    * bloom. */
+    * Every snapshot — plain, masked by deletion vectors or equality
+    * deletes, renamed or dropped columns, a declared schema, or no
+    * groups at all — reads as ONE lake scan ([[GraftDvBatchScan]]),
+    * the relation SQL reads too: groups written
+    * before a column existed read it as null, a declared schema's
+    * columns no group carries read as typed nulls, each task applies
+    * its files' masks and the snapshot's delete keys in the reader, and
+    * pushed filters prune groups by partition, stats and bloom. */
   def read(spark: SparkSession, root: String,
            version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = false)
 
   /** [[read]] plus row LINEAGE: every row also carries `__file` (its
     * parquet file's key, [[fileKey]]) and `__pos` (its row index within
-    * that file) — the positional identity deletion vectors key on. A
-    * snapshot inside [[nativeDvOk]] serves them from the dv reader's
-    * `__file`/`__pos` metadata columns (the relation merge-on-read
-    * staging and the SQL row-level scan share); a plain one from Spark's
-    * `_metadata` pseudo-column. Deletes and projections apply exactly
-    * as in [[read]]. */
+    * that file) — the positional identity deletion vectors key on —
+    * from the lake scan's `__file`/`__pos` metadata columns (the
+    * relation merge-on-read staging and the SQL row-level scan share).
+    * Deletes and projections apply exactly as in [[read]]. */
   private[graft] def readWithLineage(spark: SparkSession, root: String,
       version: Option[Int] = None): DataFrame =
     readInternal(spark, root, version, keepLineage = true)
 
   private def readInternal(spark: SparkSession, root: String,
       version: Option[Int], keepLineage: Boolean,
-      keepDirs: Option[Set[String]] = None): DataFrame = {
-    val v = existingVersion(spark, root, version)
-    val rels = readManifest(spark, root, v)
-    val meta = manifestMeta(spark, root, v)
-    // a non-empty masked snapshot needs no data-dir paths (an empty one
-    // takes the declared-schema branch)
-    if (rels.nonEmpty && nativeDvOk(meta))
-      return dvFrame(spark, root, v, keepLineage, keepDirs)
-    val dirs = keepDirs.fold(rels)(rels.filter).map(groupDir(root, _))
-    // a PRUNED read of a non-empty snapshot that kept zero groups is an
-    // empty frame in the full read's shape (the empty-snapshot branch
-    // below demands a declared schema the table may not have)
-    if (dirs.isEmpty && rels.nonEmpty) {
-      val schema = readInternal(spark, root, version, keepLineage).schema
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    }
-    val override_ = schemaOverrideAt(spark, root, version)
-    if (dirs.isEmpty) {
-      // a created-empty snapshot: zero rows in the declared shape
-      val schema = override_.getOrElse(throw new IllegalStateException(
-        s"empty snapshot at $root has no declared schema"))
-      val shaped =
-        if (!keepLineage) schema
-        else schema
-          .add(FileCol, org.apache.spark.sql.types.StringType)
-          .add(PosCol, org.apache.spark.sql.types.LongType)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], shaped)
-    }
-    val raw0 = scanDirs(spark, dirs)
-    // lineage stamps FIRST (only the raw scan frame exposes _metadata)
-    val raw = if (keepLineage) withLineageCols(raw0) else raw0
-    // physical→logical rename mapping applies next, so the declared-
-    // schema projection sees the snapshot's LOGICAL shape
-    val df = applyColMap(meta, raw)
-    override_.fold(df) { target =>
-      val cols = target.fields.map { f =>
-        if (df.columns.map(_.toLowerCase).contains(f.name.toLowerCase))
-          col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq
-      df.select(
-        (if (keepLineage) cols ++ Seq(col(FileCol), col(PosCol)) else cols): _*)
-    }
-  }
+      keepDirs: Option[Set[String]] = None): DataFrame =
+    dvFrame(spark, root, existingVersion(spark, root, version), keepLineage,
+      keepDirs)
 
-  /** Whether the deletion-vector reader ([[GraftDvBatchScan]]) serves
-    * a snapshot: it has deletion vectors or equality deletes, whatever
-    * their size (each task loads its own files' masks and the
-    * snapshot's delete keys). Column mappings and declared schemas are
-    * the reader's schema mapping. */
+  /** Whether a snapshot has deletion vectors or equality deletes — the
+    * snapshots the catalog serves as [[GraftDvLakeTable]], whose
+    * row-level DML stacks merge-on-read commits. */
   private[sources] def nativeDvOk(meta: Map[String, String]): Boolean =
     dvState(meta).nonEmpty || deleteState(meta).nonEmpty
 
-  /** Snapshot `v` as ONE scan of the deletion-vector reader — each
+  /** Snapshot `v` as ONE lake scan ([[GraftDvBatchScan]]) — each
     * file's mask and the delete keys applied inside the reader, plus
     * the reader's `__file`/`__pos` columns when `lineage` — over the
     * file groups `dirs` (relative manifest entries) when set, else all
@@ -2960,8 +2901,8 @@ object LakeTable {
 
   /** File groups of snapshot `version` admitted by EVERY filter under
     * the manifest's partition values, min/max stats and bloom indexes —
-    * the same admission chain the DSv2 stats-pruning path runs
-    * ([[GraftLakeStreamScanBuilder.build]]). Returns (kept relative
+    * the admission chain of every lake scan ([[GraftDvBatchScan]]).
+    * Returns (kept relative
     * dirs, total group count). Conservative by construction: groups
     * without the needed metadata are kept, so a pruned read over-scans
     * but never lies. */
@@ -2971,15 +2912,21 @@ object LakeTable {
       : (Seq[String], Int) = {
     val v = version.getOrElse(versions(spark, root).lastOption.getOrElse(
       throw new IllegalStateException(s"no table at $root")))
-    val meta = manifestMeta(spark, root, v)
     val dirs = readManifest(spark, root, v)
-    val kept =
-      if (filters.isEmpty) dirs
-      else dirs.filter(d => filters.forall(f =>
-        partAdmit(meta, d, f) && statsAdmit(meta, d, f) &&
-          bloomAdmit(spark, root, meta, d, f)))
-    (kept, dirs.size)
+    (admittedDirs(spark, root, manifestMeta(spark, root, v), dirs, filters),
+      dirs.size)
   }
+
+  /** The groups of `dirs` admitted by every filter of `filters` under
+    * snapshot `meta`'s partition values, min/max stats and bloom
+    * indexes. */
+  private[sources] def admittedDirs(spark: SparkSession, root: String,
+      meta: Map[String, String], dirs: Seq[String],
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
+    if (filters.isEmpty) dirs
+    else dirs.filter(d => filters.forall(f =>
+      partAdmit(meta, d, f) && statsAdmit(meta, d, f) &&
+        bloomAdmit(spark, root, meta, d, f)))
 
   /** Test/inspection forwarder for [[pruneDirsForFilters]]. */
   private[graft] def pruneProbe(spark: SparkSession, root: String,
@@ -3969,15 +3916,6 @@ object LakeTable {
 
   private[sources] def pathOfKey(key: String): Path =
     org.apache.spark.paths.SparkPath.fromUrlString(key).toPath
-
-  /** Stamp row lineage onto a frame read DIRECTLY from parquet files:
-    * the file's key ([[fileKey]]) and the row index within it, from
-    * Spark's `_metadata` pseudo-column — zero extra I/O, and exactly the
-    * identity the deletion-vector sidecars key on. Must run on the raw
-    * scan frame, before any projection hides the metadata column. */
-  private def withLineageCols(df: DataFrame): DataFrame = df
-    .withColumn(FileCol, col("_metadata.file_path"))
-    .withColumn(PosCol, col("_metadata.row_index"))
 
   /** OPTIMIZE-style compaction: rewrite all current file groups as one
     * group of `targetPartitions` files, optionally sorted within files

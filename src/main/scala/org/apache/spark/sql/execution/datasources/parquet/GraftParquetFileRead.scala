@@ -13,10 +13,12 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.InputFileBlockHolder
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, RecordReaderIterator}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
@@ -55,6 +57,14 @@ final case class GraftParquetFileRead(
     (DataSourceUtils.datetimeRebaseSpec(kv.get, datetimeRebaseMode),
       DataSourceUtils.int96RebaseSpec(kv.get, int96RebaseMode))
   }
+
+  /** The row of the pushed aggregate `agg` (output `aggSchema`) that
+    * one file's footer statistics answer — Spark's own footer
+    * aggregation, `dataSchema` naming the file's columns in file order. */
+  def aggRow(footer: ParquetMetadata, path: String, dataSchema: StructType,
+      agg: Aggregation, aggSchema: StructType): InternalRow =
+    ParquetUtils.createAggInternalRowFromFooter(footer, path, dataSchema,
+      new StructType(), agg, aggSchema, InternalRow.empty, rebaseSpecs(footer)._1)
 
   /** Spark's parquet predicate for `filters` over a file schema, None
     * when no filter translates. */
@@ -185,6 +195,15 @@ object GraftParquetFileRead {
       conf.parquetFilterPushDownStringPredicate,
       conf.parquetFilterPushDownInFilterThreshold, conf.caseSensitiveAnalysis)
   }
+
+  /** Names the file whose rows the task reads next (`key`, its
+    * URL-encoded path, and its length) for `input_file_name()`, as
+    * Spark's own file readers do per file; [[unsetInputFile]] clears
+    * it. */
+  def setInputFile(key: String, length: Long): Unit =
+    InputFileBlockHolder.set(key, 0, length)
+
+  def unsetInputFile(): Unit = InputFileBlockHolder.unset()
 
   /** The session-wide keys Spark's parquet reader sets on its Hadoop
     * conf (everything but the read schema, which [[Task]] sets on its

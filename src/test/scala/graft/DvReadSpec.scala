@@ -251,6 +251,9 @@ class DvReadSpec extends SparkSpec {
             .filter(!(col("k") === 11L && col("s") =!= "U"))
           assert(triples(lin.select("k", "__file", "__pos")) ==
             triples(want.select("k", "f", "p")), s"filter $p")
+          // input_file_name() names each row's file, as __file does
+          assert(lin.filter(input_file_name() =!= col("__file")).isEmpty,
+            s"filter $p")
         }
       }
     } finally {

@@ -79,6 +79,60 @@ class DvSkipSpec extends SparkSpec {
   private def lines(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
+  // d: seeded doubles in [0, 1) with NaN every 97th row
+  private lazy val skipDoubles = {
+    val rnd = new scala.util.Random(17)
+    (0 until 3300).map(i => if (i % 97 == 0) Double.NaN else rnd.nextDouble())
+  }
+
+  /** Rows `lo` until `hi` of the skipping-equivalence tables: columns
+    * of every pushable type, an all-null one and a label. */
+  private def skipRows(lo: Int, hi: Int): DataFrame = spark.range(lo, hi).select(
+    col("id").cast("int").as("i"),
+    (col("id") * 7L).as("l"),
+    element_at(typedLit(skipDoubles), (col("id") + 1L).cast("int")).as("d"),
+    date_add(lit(java.sql.Date.valueOf("2020-01-01")),
+      (col("id") / 30L).cast("int")).as("dt"),
+    timestamp_seconds(lit(1577836800L) + col("id") * 60L).as("ts"),
+    (col("id") / 3L).cast("decimal(10,2)").as("dec"),
+    format_string("%s%04d", when(col("id") % 2L === 0L, "p")
+      .otherwise("q"), col("id")).as("s"),
+    lit(null).cast("int").as("nul"),
+    format_string("x%d", col("id")).as("lbl"))
+
+  /** Creates the table at `root` from rows 0 until 3000 in a
+    * distributed write of range-partitioned, sorted files with small
+    * row groups (TIMESTAMP_MICROS, so ts filters push too). */
+  private def createSkipTable(root: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blockSize = conf.get("parquet.block.size")
+    conf.setInt("parquet.block.size", 2048)
+    try withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      LakeTable.create(spark, root, skipRows(0, 3000)
+        .repartitionByRange(4, col("i")).sortWithinPartitions("i"))
+    } finally {
+      if (blockSize == null) conf.unset("parquet.block.size")
+      else conf.set("parquet.block.size", blockSize)
+    }
+  }
+
+  private val skipFilters = Seq(
+    "i = 17", "i < 40", "i <= 40", "i > 3290", "i >= 2990",
+    "l = 7007", "l IN (7, 14, 21)",
+    s"l IN (${(300 until 320).map(_ * 7).mkString(", ")})",
+    "d > 0.99", "d < 0.01", "d > 1e300", "d = double('NaN')",
+    "d <= 0.5 AND i > 2500",
+    "dt = DATE'2020-02-01'", "dt >= DATE'2020-04-01'",
+    "ts < TIMESTAMP'2020-01-01 01:00:00'",
+    "ts > TIMESTAMP'2020-01-03 00:00:00'",
+    "dec > 1090.00", "dec = 12.33",
+    "s = 'p0042'", "s = 'p1500u'", "s LIKE 'p1%'", "s LIKE 'q29%'",
+    "nul IS NULL AND i < 30", "nul IS NOT NULL", "nul = 3",
+    "extra IS NULL AND i > 3190", "extra IS NOT NULL", "extra = 5",
+    "extra > 7 OR i < 5",
+    "label = 'x17'", "label LIKE 'x1%' AND i < 100",
+    "i < 10 OR i > 3295", "i IS NOT NULL AND i < 3")
+
   test("footer-stats skipping never drops a matching row: API, SQL and " +
     "lineage reads equal the same reads with parquet pushdown off") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dv_skipeq")
@@ -89,32 +143,9 @@ class DvSkipSpec extends SparkSpec {
     val blockSize = conf.get("parquet.block.size")
     try {
       val root = s"$wh/t"
-      val rnd = new scala.util.Random(17)
-      // d: seeded doubles in [0, 1) with NaN every 97th row
-      val ds = (0 until 3300).map(i => if (i % 97 == 0) Double.NaN else rnd.nextDouble())
-      def rowsOf(lo: Int, hi: Int) = spark.range(lo, hi).select(
-        col("id").cast("int").as("i"),
-        (col("id") * 7L).as("l"),
-        element_at(typedLit(ds), (col("id") + 1L).cast("int")).as("d"),
-        date_add(lit(java.sql.Date.valueOf("2020-01-01")),
-          (col("id") / 30L).cast("int")).as("dt"),
-        timestamp_seconds(lit(1577836800L) + col("id") * 60L).as("ts"),
-        (col("id") / 3L).cast("decimal(10,2)").as("dec"),
-        format_string("%s%04d", when(col("id") % 2L === 0L, "p")
-          .otherwise("q"), col("id")).as("s"),
-        lit(null).cast("int").as("nul"),
-        format_string("x%d", col("id")).as("lbl"))
-      // a distributed write of range-partitioned, sorted files with
-      // small row groups (TIMESTAMP_MICROS, so ts filters push too)
-      conf.setInt("parquet.block.size", 2048)
-      withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
-        LakeTable.create(spark, root, rowsOf(0, 3000)
-          .repartitionByRange(4, col("i")).sortWithinPartitions("i"))
-      }
-      if (blockSize == null) conf.unset("parquet.block.size")
-      else conf.set("parquet.block.size", blockSize)
+      createSkipTable(root)
       (3000 until 3200 by 50).foreach(lo =>
-        LakeTable.append(spark, root, rowsOf(lo, lo + 50).coalesce(1)))
+        LakeTable.append(spark, root, skipRows(lo, lo + 50).coalesce(1)))
       // masks in the first range file and one appended file; the
       // update adds a group
       LakeTable.deleteWhereDv(spark, root,
@@ -124,7 +155,7 @@ class DvSkipSpec extends SparkSpec {
       // an ALTER-added column the older files lack, then a rename
       LakeTable.evolveSchema(spark, root,
         StructType(Seq(StructField("extra", LongType))))
-      LakeTable.append(spark, root, rowsOf(3200, 3300)
+      LakeTable.append(spark, root, skipRows(3200, 3300)
         .withColumn("extra", col("i").cast("long") % 10L).coalesce(1))
       LakeTable.deleteWhereDv(spark, root, col("i") === 3250)
       // equality deletes keyed on the double column d, stacked on the
@@ -149,22 +180,7 @@ class DvSkipSpec extends SparkSpec {
         finally r.close()
       }
 
-      val aboveIn = (300 until 320).map(_ * 7).mkString(", ")
-      val filters = Seq(
-        "i = 17", "i < 40", "i <= 40", "i > 3290", "i >= 2990",
-        "l = 7007", "l IN (7, 14, 21)", s"l IN ($aboveIn)",
-        "d > 0.99", "d < 0.01", "d > 1e300", "d = double('NaN')",
-        "d <= 0.5 AND i > 2500",
-        "dt = DATE'2020-02-01'", "dt >= DATE'2020-04-01'",
-        "ts < TIMESTAMP'2020-01-01 01:00:00'",
-        "ts > TIMESTAMP'2020-01-03 00:00:00'",
-        "dec > 1090.00", "dec = 12.33",
-        "s = 'p0042'", "s = 'p1500u'", "s LIKE 'p1%'", "s LIKE 'q29%'",
-        "nul IS NULL AND i < 30", "nul IS NOT NULL", "nul = 3",
-        "extra IS NULL AND i > 3190", "extra IS NOT NULL", "extra = 5",
-        "extra > 7 OR i < 5",
-        "label = 'x17'", "label LIKE 'x1%' AND i < 100",
-        "i < 10 OR i > 3295", "i IS NOT NULL AND i < 3")
+      val filters = skipFilters
       var skipped = 0
       filters.foreach { f =>
         def reads(): Seq[Seq[String]] = {
@@ -193,13 +209,69 @@ class DvSkipSpec extends SparkSpec {
     }
   }
 
+  test("footer-stats skipping never drops a matching row on a plain " +
+    "snapshot and on one with a metadata-only RENAME and DROP COLUMN: " +
+    "API, SQL latest, VERSION AS OF and path reads equal the same reads " +
+    "with parquet pushdown off") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dv_skipplain")
+    val wh = dir.toString
+    spark.conf.set("spark.sql.catalog.lakePlain", "graft.sources.GraftLakeCatalog")
+    spark.conf.set("spark.sql.catalog.lakePlain.warehouse", wh)
+    try {
+      val root = s"$wh/t"
+      createSkipTable(root)
+      (3000 until 3300 by 50).foreach(lo =>
+        LakeTable.append(spark, root, skipRows(lo, lo + 50).coalesce(1)))
+      // every read of snapshot v, all of which must agree
+      def check(v: Int, filters: Seq[String]): Unit = {
+        var skipped = 0
+        filters.foreach { f =>
+          def reads(): Seq[Seq[String]] = {
+            val api = LakeTable.read(spark, root, Some(v)).filter(expr(f))
+            val got = Seq(api,
+              spark.sql(s"SELECT * FROM lakePlain.t WHERE $f"),
+              spark.sql(s"SELECT * FROM lakePlain.t VERSION AS OF $v WHERE $f"),
+              spark.read.format("graft-lake").load(root).filter(expr(f)),
+              spark.read.format("graft-lake").option("versionAsOf", v)
+                .load(root).filter(expr(f))).map(lines)
+            val m = metrics(api)
+            if (m(GraftDvScanMetrics.FilesKept) < m(GraftDvScanMetrics.FilesAdmitted))
+              skipped += 1
+            got
+          }
+          val on = reads()
+          val off = withConf("spark.sql.parquet.filterPushdown" -> "false")(reads())
+          assert(on == off, s"v$v filter $f")
+          assert(on.distinct.size == 1, s"v$v reads differ under $f")
+        }
+        assert(skipped >= filters.size / 2,
+          s"v$v: only $skipped of ${filters.size} filters skipped a file")
+      }
+      val plainFilters = skipFilters.filterNot(_.contains("extra"))
+      check(LakeTable.latestVersion(spark, root).get,
+        plainFilters.map(_.replace("label", "lbl")))
+      LakeTable.renameColumn(spark, root, "lbl", "label")
+      LakeTable.dropColumn(spark, root, "nul")
+      assert(LakeTable.read(spark, root).columns.toSeq ==
+        Seq("i", "l", "d", "dt", "ts", "dec", "s", "label"))
+      check(LakeTable.latestVersion(spark, root).get,
+        plainFilters.filterNot(_.contains("nul")))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.lakePlain")
+      spark.conf.unset("spark.sql.catalog.lakePlain.warehouse")
+      graft.util.Tmp.deleteRecursively(dir)
+    }
+  }
+
   test("a point read opens only its files and each scan builds only " +
     "the readers it uses") {
     withRoot { root =>
+      // the delete's staging read (a lake scan) reads the one file it
+      // masks, so the appended files' footers stay unread
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
       (1 until 41).foreach(g => LakeTable.append(spark, root,
         rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
-      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
       val files = LakeTable.dataDirPaths(spark, root).map(d =>
         new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))).sum
       assert(files == 41)
@@ -213,7 +285,7 @@ class DvSkipSpec extends SparkSpec {
       assert(m(GraftDvScanMetrics.FilesAdmitted) == 41, m)
       assert(m(GraftDvScanMetrics.FilesKept) >= 1 &&
         m(GraftDvScanMetrics.FilesKept) <= 2, m)
-      assert(m(GraftDvScanMetrics.FooterMisses) == 41, m)
+      assert(m(GraftDvScanMetrics.FooterMisses) == 40, m)
       // the tasks open the kept files on the footers skipping read
       assert(m(GraftDvScanMetrics.TaskFooterReads) == 0, m)
       assert(m(GraftDvScanMetrics.TaskConfCopies) == m(Partitions), m)
@@ -303,12 +375,10 @@ class DvSkipSpec extends SparkSpec {
       // the table level: a dropped and recreated table at one root
       val root = dir.resolve("t").toString
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
-      LakeTable.deleteWhereDv(spark, root, col("k") === 1L)
       assert(LakeTable.readWhereEq(spark, root, "k", 7L).collect()
         .map(_.getString(1)).toSeq == Seq("a7"))
       graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
       LakeTable.create(spark, root, rows(0L until 20L, k => s"b$k"))
-      LakeTable.deleteWhereDv(spark, root, col("k") === 1L)
       val again = LakeTable.readWhereEq(spark, root, "k", 7L)
       assert(again.collect().map(_.getString(1)).toSeq == Seq("b7"))
       assert(metrics(again)(GraftDvScanMetrics.FooterMisses) == 1)
@@ -417,14 +487,15 @@ class DvSkipSpec extends SparkSpec {
   test("each read of one snapshot honors its own conf: parquet filter " +
     "pushdown and the INT96 rebase mode") {
     withRoot { root =>
-      // a conf no other read shares, so this test's broadcasts are its
-      // own; pushdown set explicitly, as withConf restores it
+      LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      (1 until 6).foreach(g => LakeTable.append(spark, root,
+        rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
+      // a conf no other read shares (the delete's staging read included),
+      // so this test's broadcasts are its own; pushdown set explicitly,
+      // as withConf restores it
       withConf("spark.graft.dvskipspec.nonce" -> java.util.UUID.randomUUID().toString,
           "spark.sql.parquet.filterPushdown" -> "true") {
-        LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
-        (1 until 6).foreach(g => LakeTable.append(spark, root,
-          rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
-        LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
         def point() = {
           val df = LakeTable.readWhereEq(spark, root, "k", 63L)
           assert(df.collect().map(_.getString(1)).toSeq == Seq("a63"))
@@ -485,16 +556,18 @@ class DvSkipSpec extends SparkSpec {
   test("a second read of a snapshot reads no footer in its tasks and " +
     "makes no conf broadcast") {
     withRoot { root =>
+      // the delete's staging read (a lake scan) reads the first file's
+      // footer; the appended files' footers stay unread
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
       (1 until 6).foreach(g => LakeTable.append(spark, root,
         rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
-      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
       // an unfiltered read skips nothing, so its tasks read the footers
       val first = LakeTable.read(spark, root)
-      assert(first.collect().length == 102)
+      assert(first.collect().length == 117)
       val m1 = metrics(first)
       assert(m1(GraftDvScanMetrics.FooterMisses) == 0, m1)
-      assert(m1(GraftDvScanMetrics.TaskFooterReads) == 6, m1)
+      assert(m1(GraftDvScanMetrics.TaskFooterReads) == 5, m1)
       val second = LakeTable.read(spark, root)
       assert(lines(second) == lines(first))
       val m2 = metrics(second)

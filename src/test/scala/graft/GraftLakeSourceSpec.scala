@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.LakeTable
+import graft.sources.{GraftDvScanMetrics, LakeTable}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DSv2 connector ([[graft.sources.GraftLakeSource]]): format-string
@@ -8,6 +9,12 @@ import org.apache.spark.sql.functions._
   * option, the scan must keep parquet pushdown/pruning, and writes must
   * be rejected (the commit protocol is API-only). */
 class GraftLakeSourceSpec extends SparkSpec {
+
+  /** Groups the lake scan of `df` admitted, off its metrics once `df`
+    * has run. */
+  private def admitted(df: DataFrame): Long =
+    GraftDvScanMetrics.of(df).getOrElse(fail("no lake scan in the plan"))(
+      GraftDvScanMetrics.GroupsAdmitted)
 
   private def withTable(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_lake_ds").toString
@@ -44,11 +51,13 @@ class GraftLakeSourceSpec extends SparkSpec {
         .filter(col("n_nationkey") < 5)
         .select("n_name")
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters: [IsNotNull(n_nationkey), LessThan(n_nationkey,5)]"),
+      assert(plan.contains("GraftDvBatchScan") &&
+        plan.contains("[IsNotNull(n_nationkey), LessThan(n_nationkey,5)]"),
         s"filter not pushed:\n$plan")
       // column pruning reached the scan: only the two referenced columns
-      assert(plan.contains("ReadSchema: struct<n_nationkey:int,n_name:string>"),
-        s"columns not pruned:\n$plan")
+      val scan = GraftDvScanMetrics.scans(df.queryExecution.executedPlan)
+      assert(scan.map(_.scan.readSchema().simpleString) ==
+        Seq("struct<n_nationkey:int,n_name:string>"), s"columns not pruned:\n$plan")
       assert(df.collect().map(_.getString(0)).length == 5)
     }
   }
@@ -130,19 +139,17 @@ class GraftLakeSourceSpec extends SparkSpec {
       LakeTable.create(spark, root,
         (1L to 6L).map(i => (i, s"t$i")).toDF("id", "tag"))
       LakeTable.deleteWhereMor(spark, root, col("id") <= 2L, "id")
-      // without the opt-in, loading the MOR table still fails fast
-      intercept[UnsupportedOperationException] {
-        spark.read.format("graft-lake").load(root).collect()
-      }
-      // a fresh stream with maskDeletes emits exactly the masked
+      // a batch read of the MOR table serves the masked snapshot
+      assert(spark.read.format("graft-lake").load(root).collect().toSet ==
+        LakeTable.read(spark, root).collect().toSet)
+      // a fresh stream emits exactly the masked
       // snapshot (deletes applied before first emission); parquet sink
       // + checkpoint so the stream can stop and resume deterministically
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_mor_ckpt").toString
       val out = java.nio.file.Files
         .createTempDirectory("graft_mor_out").toString
-      def start() = spark.readStream.format("graft-lake")
-        .option("maskDeletes", "true").load(root)
+      def start() = spark.readStream.format("graft-lake").load(root)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -173,8 +180,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       }
       // a SECOND fresh stream now emits exactly the masked snapshot —
       // exactly-once rows match LakeTable.read
-      val q2 = spark.readStream.format("graft-lake")
-        .option("maskDeletes", "true").load(root)
+      val q2 = spark.readStream.format("graft-lake").load(root)
         .writeStream.format("memory").queryName("lake_mor_stream2")
         .outputMode("append").start()
       try {
@@ -185,16 +191,12 @@ class GraftLakeSourceSpec extends SparkSpec {
         q2.stop()
         spark.catalog.dropTempView("lake_mor_stream2")
       }
-      // batch read under the option: loads, but executing refuses
-      val e = intercept[Exception] {
-        spark.read.format("graft-lake").option("maskDeletes", "true")
-          .load(root).collect()
-      }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(e).exists(c =>
-        c.isInstanceOf[UnsupportedOperationException] &&
-          c.getMessage.contains("batch reads cannot honor")), e.toString)
+      // the batch read serves the masked snapshot, latest and v1
+      assert(spark.read.format("graft-lake").load(root).collect().toSet ==
+        LakeTable.read(spark, root).collect().toSet)
+      assert(spark.read.format("graft-lake").option("versionAsOf", 1)
+        .load(root).collect().toSet ==
+        LakeTable.read(spark, root, Some(1)).collect().toSet)
     }
   }
 
@@ -206,16 +208,12 @@ class GraftLakeSourceSpec extends SparkSpec {
         Seq((1L, 10L), (2L, 20L)).toDF("id", "amount"))
       LakeTable.renameColumn(spark, root, "amount", "price")
       LakeTable.append(spark, root, Seq((3L, 30L)).toDF("id", "price"))
-      // batch reads still refuse while the mapping is metadata-only
-      // (now at scan execution rather than load — same contract)
-      val eb = intercept[Exception] {
-        spark.read.format("graft-lake").load(root).collect()
-      }
+      // batch reads serve the logical shape through the mapping
+      val batch = spark.read.format("graft-lake").load(root)
+      assert(batch.columns.toSeq == Seq("id", "price"))
+      assert(batch.collect().toSet == LakeTable.read(spark, root).collect().toSet)
       def causes(t: Throwable): Seq[Throwable] =
         if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(eb).exists(c =>
-        c.isInstanceOf[UnsupportedOperationException] &&
-          c.getMessage.contains("rename/drop")), eb.toString)
       // a fresh stream resolves the LOGICAL schema and decodes the
       // physical files under the translated names
       val q = spark.readStream.format("graft-lake").load(root)
@@ -359,15 +357,13 @@ class GraftLakeSourceSpec extends SparkSpec {
       val df = spark.read.format("graft-lake").load(root)
         .filter(col("id") >= 100L)
       assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(100L, 200L))
-      // the plan's file index holds ONLY the high-id group's path
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("InMemoryFileIndex(1 paths)"), plan.take(800))
+      // the scan admits ONLY the high-id group
+      assert(admitted(df) == 1)
       // an unprunable predicate keeps both groups
       val full = spark.read.format("graft-lake").load(root)
         .filter(col("tag") =!= "x")
-      assert(full.count() == 4)
-      assert(full.queryExecution.executedPlan.toString
-        .contains("InMemoryFileIndex(2 paths)"))
+      assert(full.collect().length == 4)
+      assert(admitted(full) == 2)
     }
   }
 
@@ -390,8 +386,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       val df = spark.read.format("graft-lake").load(root)
         .filter(col("id") === 100L)
       assert(df.collect().map(_.getString(1)).toSeq == Seq("a"))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("InMemoryFileIndex(1 paths)"), plan.take(800))
+      assert(admitted(df) == 1)
       // absent-but-in-range key: bloom prunes everything, zero rows
       assert(LakeTable.readWhereEq(spark, root, "id", 150L).count() == 0)
       // the index commit is metadata-only: same groups, version bumped
@@ -412,16 +407,14 @@ class GraftLakeSourceSpec extends SparkSpec {
       val df = spark.read.format("graft-lake").load(root)
         .filter(col("month") === "1998-02")
       assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 4L))
-      // directory-level pruning: the plan's file index holds ONLY the
-      // matching partition's path
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("InMemoryFileIndex(1 paths)"), plan.take(800))
+      // directory-level pruning: the scan admits ONLY the matching
+      // partition's group
+      assert(admitted(df) == 1)
       // IN-list keeps exactly the named partitions
       val in2 = spark.read.format("graft-lake").load(root)
         .filter(col("month").isin("1998-01", "1998-03"))
       assert(in2.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
-      assert(in2.queryExecution.executedPlan.toString
-        .contains("InMemoryFileIndex(2 paths)"))
+      assert(admitted(in2) == 2)
       // appends route rows per value; a value accumulates one group
       // per batch and the scan reads exactly that value's groups
       LakeTable.append(spark, root,
@@ -431,19 +424,23 @@ class GraftLakeSourceSpec extends SparkSpec {
         .filter(col("month") === "1998-02")
       assert(after.collect().map(_.getLong(0)).sorted.toSeq ==
         Seq(2L, 4L, 5L))
-      assert(after.queryExecution.executedPlan.toString
-        .contains("InMemoryFileIndex(2 paths)"))
+      assert(admitted(after) == 2)
     }
   }
 
   test("runtime filtering: a filtered dim join re-prunes the fact scan mid-execution") {
-    withTable { root =>
+    // the plain fact, then the same fact with a deletion vector: the
+    // masked snapshot prunes the same way and still masks its row
+    for (masked <- Seq(false, true)) withTable { root =>
       import spark.implicits._
       // fact: 4 range-clustered groups with key stats; dim keeps ONE key
-      val fact = (0L until 400L).map(i => (i % 100, s"f$i")).toDF("k", "payload")
-      LakeTable.createClustered(spark, root, fact, "k",
+      val rows = (0L until 400L).map(i => (i % 100, s"f$i"))
+      LakeTable.createClustered(spark, root, rows.toDF("k", "payload"), "k",
         numGroups = 4, statsCols = Seq("k"))
       assert(LakeTable.dataDirPaths(spark, root).size == 4)
+      if (masked) LakeTable.deleteWhereDv(spark, root, col("payload") === "f105")
+      val model = rows.filter(r => r._1 == 5L && !(masked && r._2 == "f105"))
+        .map(r => (r._1, r._2, "keep"))
       // DPP requires a SELECTIVE PREDICATE on the pruning side (an
       // unfiltered dim can't prune anything) — and it must survive as
       // a plan node, so the dim comes from parquet (a LocalRelation
@@ -461,7 +458,8 @@ class GraftLakeSourceSpec extends SparkSpec {
         // collect() (not count(), which plans a sibling QueryExecution
         // whose own scan would be the filtered one) so the plan we
         // inspect below is the plan that executed
-        assert(j.collect().length == 4) // k=5 occurs 4x in fact
+        assert(j.collect().map(r => (r.getLong(0), r.getString(1),
+          r.getString(2))).sorted.toSeq == model.sorted)
         j
       }
       // the optimizer injected a dynamic-pruning runtime filter on the
@@ -474,29 +472,9 @@ class GraftLakeSourceSpec extends SparkSpec {
       // re-prune through the DSv2 DRIVER custom-metric channel —
       // BatchScanExec.postDriverMetrics() reads the very scan instance
       // execution filtered, so this observes the prune that actually ran
-      val scanExecs = collectScans(joined.queryExecution.executedPlan)
-        .filter(_.scan.isInstanceOf[graft.sources.GraftLakeStreamableScan])
-      assert(scanExecs.nonEmpty, "no graft-lake BatchScanExec in final plan")
-      val prunedMetric = scanExecs
-        .flatMap(_.metrics.get(graft.sources.GraftRuntimePruneMetric.Name))
-        .map(_.value)
-      assert(prunedMetric == Seq(1L), s"prunedGroupsMetric=$prunedMetric")
+      assert(admitted(joined) == 1, s"masked=$masked")
     }
   }
-
-  /** Collects v2 scan execs, descending into AQE wrappers: the final
-    * plan nests materialized stages as LEAF [[QueryStageExec]] nodes, so
-    * a plain collect never reaches the scan that executed. */
-  private def collectScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-    p.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        Seq(b)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        collectScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        collectScans(q.plan)
-    }.flatten
 
   test("CDF across compactDeletes: the fold is a zero-change version, " +
     "no prior change sidecar is re-served, and the fold's manifest " +

@@ -606,10 +606,9 @@ class LakeTableSpec extends SparkSpec {
         LakeTable.append(spark, root,
           Seq((9L, -1L, 1L)).toDF("id", "price", "qty"))
       }
-      // DSv2 raw delegate fails fast instead of exposing physical names
-      intercept[UnsupportedOperationException] {
-        spark.read.format("graft-lake").load(root).collect()
-      }
+      // the DSv2 read serves the logical names through the mapping
+      assert(spark.read.format("graft-lake").load(root).collect().toSet ==
+        LakeTable.read(spark, root).collect().toSet)
       // compact materializes: mapping cleared, everything ungated
       LakeTable.compact(spark, root, 1)
       assert(spark.read.format("graft-lake").load(root)
@@ -873,10 +872,10 @@ class LakeTableSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         LakeTable.dropColumn(spark, root, "id")
       }
-      // DSv2 raw delegate gated; COW compact materializes and ungates
-      intercept[UnsupportedOperationException] {
-        spark.read.format("graft-lake").load(root).collect()
-      }
+      // the DSv2 read serves the mapped snapshot; COW compact
+      // materializes the drop
+      assert(spark.read.format("graft-lake").load(root).collect().toSet ==
+        LakeTable.read(spark, root).collect().toSet)
       LakeTable.compact(spark, root, 1)
       assert(spark.read.option("mergeSchema", "true")
         .parquet(LakeTable.dataDirPaths(spark, root): _*)
@@ -1645,11 +1644,9 @@ class LakeTableSpec extends SparkSpec {
       val vBefore = LakeTable.versions(spark, root).last
       assert(LakeTable.deleteWhereMor(spark, root,
         col("id") === 99L, "id") == vBefore)
-      // the DSv2 path cannot honor the masks → fails fast
-      val e = intercept[UnsupportedOperationException] {
-        spark.read.format("graft-lake").load(root).collect()
-      }
-      assert(e.getMessage.contains("merge-on-read"))
+      // the DSv2 path serves the masked snapshot
+      assert(spark.read.format("graft-lake").load(root).select("id")
+        .as[Long].collect().sorted.toSeq == Seq(1L, 4L))
       // rewrite materializes: same rows, delete metadata gone, DSv2 ok
       LakeTable.rewriteDeletes(spark, root)
       assert(LakeTable.read(spark, root).select("id").as[Long].collect()

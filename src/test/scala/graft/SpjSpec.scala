@@ -23,6 +23,10 @@ class SpjSpec extends SparkSpec {
       }
     }
 
+  private def noBroadcast[A](body: => A): A =
+    graft.util.LocalFrame.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
   private def shuffles(df: DataFrame): Int = {
     // execute without a driver transfer (plan finalizes on execution)
     df.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
@@ -48,7 +52,9 @@ class SpjSpec extends SparkSpec {
       val t2 = spark.read.format("graft-lake").load(s"$dir/t2")
       val nation = left
 
-      withSpj(on = true) {
+      // the scan reports its byte size, so a join of these small
+      // tables would broadcast either way: broadcast stays off
+      withSpj(on = true) { noBroadcast {
         val j = t1.join(t2, "r")
         assert(shuffles(j) == 0,
           s"SPJ expected, plan:\n${j.queryExecution.executedPlan}")
@@ -61,12 +67,12 @@ class SpjSpec extends SparkSpec {
         assert(a.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
           nation.groupBy("r").count().collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      }
-      withSpj(on = false) {
+      } }
+      withSpj(on = false) { noBroadcast {
         val j = t1.join(t2, "r")
         assert(shuffles(j) > 0,
           "with V2 bucketing off the join must shuffle as before")
-      }
+      } }
     } finally graft.util.Tmp.deleteRecursively(
       java.nio.file.Paths.get(dir))
   }
@@ -105,11 +111,12 @@ class SpjSpec extends SparkSpec {
           .head() == org.apache.spark.sql.Row(60L, "n6"))
        }
       }
-      withSpj(on = false) {
+      // broadcast off as in the flag-on branch above
+      withSpj(on = false) { noBroadcast {
         val j = t1.join(t2, "k")
         assert(shuffles(j) > 0,
           "with V2 bucketing off the bucketed join must shuffle")
-      }
+      } }
       // manifest-level bucket pruning: an equality probe keeps only
       // dirs tagged with the literal's bucket (plus none others)
       val probe = org.apache.spark.sql.sources.EqualTo("k", 6L)
@@ -130,5 +137,34 @@ class SpjSpec extends SparkSpec {
       spark.conf.unset("spark.sql.catalog.spjb.warehouse")
       graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(dir))
     }
+  }
+
+  test("a partitioned pair with a deletion vector on one side still " +
+    "joins without a shuffle and masks the deleted rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_spjdv").toString
+    try {
+      import spark.implicits._
+      val left = (1L to 60L).map(i => (i, i % 5, s"n$i"))
+      val right = (0L until 5L).map(r => (r, r * 100L))
+      LakeTable.createEmpty(spark, s"$dir/t1",
+        left.toDF("k", "r", "name").schema, Seq("r"))
+      LakeTable.append(spark, s"$dir/t1", left.toDF("k", "r", "name"))
+      LakeTable.createEmpty(spark, s"$dir/t2",
+        right.toDF("r", "v").schema, Seq("r"))
+      LakeTable.append(spark, s"$dir/t2", right.toDF("r", "v"))
+      LakeTable.deleteWhereDv(spark, s"$dir/t1", col("k") % 7 === 0L)
+      val model = (for {
+        (k, r, _) <- left if k % 7 != 0
+        (r2, v) <- right if r2 == r
+      } yield (r, k, v)).sorted
+      val t1 = spark.read.format("graft-lake").load(s"$dir/t1")
+      val t2 = spark.read.format("graft-lake").load(s"$dir/t2")
+      withSpj(on = true) { noBroadcast {
+        val j = t1.join(t2, "r").select("r", "k", "v")
+        assert(shuffles(j) == 0,
+          s"SPJ expected, plan:\n${j.queryExecution.executedPlan}")
+        assert(j.as[(Long, Long, Long)].collect().sorted.toSeq == model)
+      } }
+    } finally graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }
