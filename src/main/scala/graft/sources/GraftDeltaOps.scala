@@ -103,7 +103,7 @@ private[sources] final class GraftDeltaScanBuilder(root: String)
   override def build(): Scan = {
     val v = LakeTable.latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no table at $root"))
-    new GraftDvBatchScan(root, Some(v), tableSchema, required, pushed.toSeq)
+    new GraftDvBatchScan(root, v, tableSchema, required, pushed.toSeq)
   }
 }
 

@@ -116,7 +116,7 @@ import java.util.OptionalLong
   * filesystem lacks fails the read with an error naming it.
   */
 private[sources] final class GraftDvBatchScan(
-    root: String, version: Option[Int], tableSchema: StructType,
+    root: String, snapshot: Int, tableSchema: StructType,
     requiredSchema: StructType, filters: Seq[Filter],
     dirs: Option[Set[String]] = None,
     agg: Option[GraftDvAggregate] = None,
@@ -127,11 +127,8 @@ private[sources] final class GraftDvBatchScan(
 
   private def spark = SparkSession.active
 
-  // resolved once, so groups, masks and column mapping come from one
-  // snapshot even when a commit lands between planning steps
-  private lazy val snapshot: Int =
-    version.orElse(LakeTable.latestVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no table at $root"))
+  // groups, masks and column mapping all come from `snapshot`, which
+  // the table or operation building the scan resolved
   private lazy val meta: Map[String, String] =
     LakeTable.manifestMetaAt(spark, root, snapshot)
 
@@ -203,7 +200,7 @@ private[sources] final class GraftDvBatchScan(
   override def readSchema(): StructType = agg.fold(requiredSchema)(_.schema)
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftDvBatchScan `$root`" + version.fold("")(v => s"@v$v") +
+    s"GraftDvBatchScan `$root`@v$snapshot" +
       (if (filters.isEmpty) "" else filters.mkString(" [", ", ", "]")) +
       agg.fold("")(a => " PushedAggregation: " +
         a.aggregation.aggregateExpressions.mkString("[", ", ", "]"))

@@ -577,8 +577,13 @@ private[sources] final class GraftDvLakeTable(
     () => new GraftDeltaOperation(root, info.command)
   }
 
+  // the snapshot this table reads, resolved once when it loads (see
+  // [[GraftLakeTable]]); `version` still gates the DML
+  private val pinned =
+    version.getOrElse(LakeTable.existingVersion(SparkSession.active, root, None))
+
   private lazy val tableSchema =
-    LakeTable.snapshotSchema(SparkSession.active, root, version)
+    LakeTable.snapshotSchema(SparkSession.active, root, Some(pinned))
   override def schema(): StructType = tableSchema
   /** `SHOW TBLPROPERTIES` / DESCRIBE EXTENDED keep working while
     * deletion-vector state pends (and on time-travel snapshots): the
@@ -601,7 +606,7 @@ private[sources] final class GraftDvLakeTable(
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new GraftDvScanBuilder(root, version, schema(), dirs, options)
+    new GraftDvScanBuilder(root, pinned, schema(), dirs, options)
   /** Appends land through the commit protocol; an overwrite (`INSERT
     * OVERWRITE`, which Spark plans as a truncate) refuses by name. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -635,11 +640,11 @@ private[sources] final class GraftDvLakeTable(
   * Under `spark.sql.parquet.aggregatePushdown` an unfiltered
   * COUNT/MIN/MAX is answered from parquet footers when the snapshot has
   * no delete state, its aggregated columns are unmapped and every file
-  * holds them (the snapshot's footers share one schema); the scan is
-  * then pinned to the version this was decided on. `options` carries
+  * holds them (the snapshot's footers share one schema). `version` is
+  * the snapshot the table resolved when it loaded. `options` carries
   * the micro-batch stream's options ([[GraftDvBatchScan.toMicroBatchStream]]). */
 private[sources] final class GraftDvScanBuilder(
-    root: String, version: Option[Int], tableSchema: StructType,
+    root: String, version: Int, tableSchema: StructType,
     dirs: Option[Set[String]], options: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -650,7 +655,7 @@ private[sources] final class GraftDvScanBuilder(
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
-  private var aggregate: Option[(Int, GraftDvAggregate)] = None
+  private var aggregate: Option[GraftDvAggregate] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -665,27 +670,25 @@ private[sources] final class GraftDvScanBuilder(
     val spark = SparkSession.active
     val columns = agg.aggregateExpressions.toSeq
       .flatMap(_.references).map(_.fieldNames.mkString("."))
+    lazy val meta = LakeTable.manifestMetaAt(spark, root, version)
     aggregate =
       if (!spark.sessionState.conf.parquetAggregatePushDown ||
-          pushed.nonEmpty || dirs.nonEmpty) None
+          pushed.nonEmpty || dirs.nonEmpty || LakeTable.nativeDvOk(meta) ||
+          !columns.forall(c => LakeTable.physicalName(meta, c).contains(c))) None
       else for {
-        v <- version.orElse(LakeTable.latestVersion(spark, root))
-        meta = LakeTable.manifestMetaAt(spark, root, v)
-        if !LakeTable.nativeDvOk(meta) &&
-          columns.forall(c => LakeTable.physicalName(meta, c).contains(c))
         data <- LakeTable.uniformSchemaOf(spark,
-          LakeTable.dataDirPaths(spark, root, Some(v)))
+          LakeTable.dataDirPaths(spark, root, Some(version)))
         if columns.forall(data.fieldNames.contains)
         schema <- org.apache.spark.sql.execution.datasources
           .AggregatePushDownUtils.getSchemaForPushedAggregation(
             agg, tableSchema, Set.empty, Nil)
-      } yield v -> GraftDvAggregate(agg, schema, data)
+      } yield GraftDvAggregate(agg, schema, data)
     aggregate.isDefined
   }
 
   override def build(): org.apache.spark.sql.connector.read.Scan =
     aggregate match {
-      case Some((v, a)) => new GraftDvBatchScan(root, Some(v), tableSchema,
+      case Some(a) => new GraftDvBatchScan(root, version, tableSchema,
         a.schema, Nil, None, Some(a), options)
       case None => new GraftDvBatchScan(root, version, tableSchema, required,
         pushed.toSeq, dirs, None, options)

@@ -45,8 +45,8 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = false
 
   // Spark calls inferSchema then getTable on the SAME provider instance
-  // for one read; caching the table resolves the snapshot's schema once
-  // for both calls
+  // for one read; caching the table resolves the snapshot (its version
+  // and schema) once for both calls
   @volatile private var cached: (String, Option[Int], GraftLakeTable) = _
 
   private def fromOptions(options: JMap[String, String]): GraftLakeTable = {
@@ -57,8 +57,6 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
     val c = cached
     if (c != null && c._1 == root && c._2 == version) c._3
     else {
-      // a missing table or version fails here, naming what exists
-      LakeTable.existingVersion(SparkSession.active, root, version)
       val t = new GraftLakeTable(root, version)
       cached = (root, version, t)
       t
@@ -110,8 +108,16 @@ private[sources] final class GraftLakeTable(lake: String,
   override def name(): String =
     s"graft-lake `$lake`" + version.fold("")(v => s"@v$v")
 
+  // the snapshot this table reads, resolved once when it loads: schema
+  // and files come from one version, so a commit landing between
+  // analysis and planning, or between two actions on one DataFrame,
+  // cannot pair vN's schema with vN+1's files (`version` still tells a
+  // latest-version table, which streams and takes DML, from time
+  // travel). A missing table or version fails here, naming what exists
+  private val pinned = LakeTable.existingVersion(SparkSession.active, lake, version)
+
   private lazy val tableSchema =
-    LakeTable.snapshotSchema(SparkSession.active, lake, version)
+    LakeTable.snapshotSchema(SparkSession.active, lake, Some(pinned))
   override def schema(): StructType = tableSchema
 
   /** Row LINEAGE metadata columns — the identity the delta row-level
@@ -289,7 +295,7 @@ private[sources] final class GraftLakeTable(lake: String,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftDvScanBuilder(lake, version, schema(), None, options)
+    new GraftDvScanBuilder(lake, pinned, schema(), None, options)
 
   /** SQL `MERGE INTO` / `UPDATE` (and non-pushable `DELETE`s) via the
     * group-replace protocol — see [[GraftRowLevelOperation]]. Pushable

@@ -115,7 +115,7 @@ private[sources] final class GraftGroupScan(
     (v, groups)
   }
 
-  private lazy val scan = new GraftDvBatchScan(root, Some(planned._1),
+  private lazy val scan = new GraftDvBatchScan(root, planned._1,
     tableSchema, required, Nil, Some(planned._2.toSet))
 
   override def readSchema(): StructType = required

@@ -266,12 +266,10 @@ class DvSkipSpec extends SparkSpec {
   test("a point read opens only its files and each scan builds only " +
     "the readers it uses") {
     withRoot { root =>
-      // the delete's staging read (a lake scan) reads the one file it
-      // masks, so the appended files' footers stay unread
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
-      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
       (1 until 41).foreach(g => LakeTable.append(spark, root,
         rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
       val files = LakeTable.dataDirPaths(spark, root).map(d =>
         new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))).sum
       assert(files == 41)
@@ -285,7 +283,10 @@ class DvSkipSpec extends SparkSpec {
       assert(m(GraftDvScanMetrics.FilesAdmitted) == 41, m)
       assert(m(GraftDvScanMetrics.FilesKept) >= 1 &&
         m(GraftDvScanMetrics.FilesKept) <= 2, m)
-      assert(m(GraftDvScanMetrics.FooterMisses) == 40, m)
+      // the delete staged its match through this scan, a point read
+      // of k = 5 whose footer skipping read all 41 footers: they are
+      // cached
+      assert(m(GraftDvScanMetrics.FooterMisses) == 0, m)
       // the tasks open the kept files on the footers skipping read
       assert(m(GraftDvScanMetrics.TaskFooterReads) == 0, m)
       assert(m(GraftDvScanMetrics.TaskConfCopies) == m(Partitions), m)
@@ -375,13 +376,24 @@ class DvSkipSpec extends SparkSpec {
       // the table level: a dropped and recreated table at one root
       val root = dir.resolve("t").toString
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 1L)
       assert(LakeTable.readWhereEq(spark, root, "k", 7L).collect()
         .map(_.getString(1)).toSeq == Seq("a7"))
       graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
       LakeTable.create(spark, root, rows(0L until 20L, k => s"b$k"))
+      LakeTable.deleteWhereDv(spark, root, col("k") === 1L)
       val again = LakeTable.readWhereEq(spark, root, "k", 7L)
       assert(again.collect().map(_.getString(1)).toSeq == Seq("b7"))
-      assert(metrics(again)(GraftDvScanMetrics.FooterMisses) == 1)
+      // the delete's staging read (this scan, filtered on k) read the
+      // recreated file's footer
+      assert(metrics(again)(GraftDvScanMetrics.FooterMisses) == 0)
+      // recreated once more, with nothing reading it before: the read
+      // takes no footer of the earlier tables
+      graft.util.Tmp.deleteRecursively(java.nio.file.Paths.get(root))
+      LakeTable.create(spark, root, rows(0L until 20L, k => s"c$k"))
+      val third = LakeTable.readWhereEq(spark, root, "k", 7L)
+      assert(third.collect().map(_.getString(1)).toSeq == Seq("c7"))
+      assert(metrics(third)(GraftDvScanMetrics.FooterMisses) == 1)
     } finally graft.util.Tmp.deleteRecursively(dir)
   }
 
@@ -487,15 +499,14 @@ class DvSkipSpec extends SparkSpec {
   test("each read of one snapshot honors its own conf: parquet filter " +
     "pushdown and the INT96 rebase mode") {
     withRoot { root =>
-      LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
-      (1 until 6).foreach(g => LakeTable.append(spark, root,
-        rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
-      LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
-      // a conf no other read shares (the delete's staging read included),
-      // so this test's broadcasts are its own; pushdown set explicitly,
-      // as withConf restores it
+      // a conf no other read shares, so this test's broadcasts are its
+      // own; pushdown set explicitly, as withConf restores it
       withConf("spark.graft.dvskipspec.nonce" -> java.util.UUID.randomUUID().toString,
           "spark.sql.parquet.filterPushdown" -> "true") {
+        LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
+        (1 until 6).foreach(g => LakeTable.append(spark, root,
+          rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
+        LakeTable.deleteWhereDv(spark, root, col("k") === 5L)
         def point() = {
           val df = LakeTable.readWhereEq(spark, root, "k", 63L)
           assert(df.collect().map(_.getString(1)).toSeq == Seq("a63"))
@@ -503,7 +514,9 @@ class DvSkipSpec extends SparkSpec {
         }
         val on = point()
         assert(on(GraftDvScanMetrics.FilesKept) < on(GraftDvScanMetrics.FilesAdmitted), on)
-        assert(on(GraftDvScanMetrics.ConfBroadcasts) == 1, on)
+        // the delete's staging read, a lake scan under this same conf,
+        // made the broadcast this read takes
+        assert(on(GraftDvScanMetrics.ConfBroadcasts) == 0, on)
         val off = withConf("spark.sql.parquet.filterPushdown" -> "false")(point())
         assert(off(GraftDvScanMetrics.FilesKept) == 6, off)
         assert(off(GraftDvScanMetrics.ConfBroadcasts) == 1, off)
@@ -556,24 +569,35 @@ class DvSkipSpec extends SparkSpec {
   test("a second read of a snapshot reads no footer in its tasks and " +
     "makes no conf broadcast") {
     withRoot { root =>
-      // the delete's staging read (a lake scan) reads the first file's
-      // footer; the appended files' footers stay unread
       LakeTable.create(spark, root, rows(0L until 20L, k => s"a$k"))
-      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
       (1 until 6).foreach(g => LakeTable.append(spark, root,
         rows((g * 20L) until (g * 20L + 20L), k => s"a$k")))
-      // an unfiltered read skips nothing, so its tasks read the footers
+      LakeTable.deleteWhereDv(spark, root, col("k") % 7L === 0L)
+      // an unfiltered read skips nothing; the delete's staging read
+      // (this scan, its filter not pushable) read all six footers in
+      // its tasks, so this first read finds them cached
       val first = LakeTable.read(spark, root)
-      assert(first.collect().length == 117)
+      assert(first.collect().length == 102)
       val m1 = metrics(first)
       assert(m1(GraftDvScanMetrics.FooterMisses) == 0, m1)
-      assert(m1(GraftDvScanMetrics.TaskFooterReads) == 5, m1)
+      assert(m1(GraftDvScanMetrics.TaskFooterReads) == 0, m1)
       val second = LakeTable.read(spark, root)
       assert(lines(second) == lines(first))
       val m2 = metrics(second)
       assert(m2(GraftDvScanMetrics.TaskFooterReads) == 0, m2)
       assert(m2(GraftDvScanMetrics.ConfBroadcasts) == 0, m2)
       assert(m2(GraftDvScanMetrics.TaskConfCopies) == m2(Partitions), m2)
+      // a group no read has opened: the next read's tasks read its
+      // footer, the read after it none
+      LakeTable.append(spark, root, rows(120L until 140L, k => s"a$k"))
+      val third = LakeTable.read(spark, root)
+      assert(third.collect().length == 122)
+      assert(metrics(third)(GraftDvScanMetrics.TaskFooterReads) == 1)
+      val fourth = LakeTable.read(spark, root)
+      assert(lines(fourth) == lines(third))
+      val m4 = metrics(fourth)
+      assert(m4(GraftDvScanMetrics.TaskFooterReads) == 0, m4)
+      assert(m4(GraftDvScanMetrics.ConfBroadcasts) == 0, m4)
     }
   }
 }

@@ -1624,4 +1624,37 @@ class GraftLakeCatalogSpec extends SparkSpec {
       refused(spark.sql("SELECT * FROM lakeEmpty.bare"))
     }
   }
+
+  test("a DataFrame serves the snapshot its table loaded: a later append, " +
+    "RENAME and DROP COLUMN leave its rows unchanged") {
+    withWarehouse("lakePin") { wh =>
+      def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+        (col("id") * 10L).as("price"),
+        concat(lit("n"), col("id").cast("string")).as("note")).coalesce(1)
+      LakeTable.create(spark, s"$wh/plain", rows(0L, 6L))
+      LakeTable.create(spark, s"$wh/masked", rows(0L, 6L))
+      LakeTable.deleteWhereDv(spark, s"$wh/masked", col("id") === 2L)
+      // path and SQL frames over a plain and a masked snapshot
+      val frames = Seq(
+        spark.read.format("graft-lake").load(s"$wh/plain"),
+        spark.read.format("graft-lake").load(s"$wh/masked"),
+        spark.table("lakePin.plain"), spark.table("lakePin.masked"))
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("id").collect().toSeq
+      val before = frames.map(sorted)
+      assert(before.map(_.size) == Seq(6, 5, 6, 5))
+      Seq("plain", "masked").foreach { t =>
+        LakeTable.append(spark, s"$wh/$t", rows(6L, 8L))
+        LakeTable.renameColumn(spark, s"$wh/$t", "price", "cost")
+        LakeTable.dropColumn(spark, s"$wh/$t", "note")
+      }
+      assert(frames.map(sorted) == before)
+      // a new load reads the latest snapshot
+      val latest = spark.table("lakePin.masked")
+      assert(latest.columns.toSeq == Seq("id", "cost"))
+      assert(sorted(latest) == sorted(LakeTable.read(spark, s"$wh/masked")))
+      assert(sorted(latest).size == 7)
+      assert(spark.read.format("graft-lake").load(s"$wh/plain").count() == 8)
+    }
+  }
 }
